@@ -104,8 +104,8 @@ object Main {
     var id = 0
     val windowStart = System.nanoTime()
     var busy = 0.0
-    while ((busy < seconds || ops.size < MinTimedOps ||
-            ops.size % wl.cycle != 0) &&
+    val target = wl.timedOps(seconds)
+    while (target.fold(busy < seconds || ops.size < MinTimedOps)(ops.size < _) &&
            (System.nanoTime() - windowStart) / 1e9 < 4 * seconds) {
       val t0 = System.nanoTime(); val c0 = cpuSec(); val g0 = gcSec()
       val ok = try wl.op(id) catch { case e: Exception =>

@@ -30,10 +30,10 @@ trait Workload {
   def label(i: Int): String
   /** Untimed ops run after [[setup]], still part of set-up. */
   def warmupOps: Int = 0
-  /** The window ends on a multiple of this many ops, so that every query
-    * of a sample has the same weight in the latency percentiles.
+  /** A fixed op count for a window of `seconds`, or None to run ops until
+    * they have taken `seconds`.
     */
-  def cycle: Int = 1
+  def timedOps(seconds: Double): Option[Int] = None
   /** Workload-specific per-layer metrics over the timed ops. */
   def layerMetrics(ops: Seq[Main.Op]): Map[String, Double] = Map.empty
   /** Extra facts for the artifact, as JSON members. */
@@ -269,7 +269,14 @@ final class QueryMix(spark: SparkSession, seed: Long, spans: Spans,
   private val queries = SparkEntry.queries
   val sample: Seq[String] = QueryMix.sample(queries.keySet.toSeq)
   private val order = QueryPool.opOrder(sample, new scala.util.Random(seed))
-  override def cycle: Int = sample.size
+
+  /** Whole cycles of the sample, one per [[QueryMix.CycleSeconds]] of the
+    * window, so every query weighs the same in the percentiles and every run
+    * does the same work. Ending on whichever cycle the clock reached instead
+    * split runs into 4- and 5-cycle ones whose medians sat 20 % apart.
+    */
+  override def timedOps(seconds: Double): Option[Int] =
+    Some(sample.size * math.max(2, (seconds / QueryMix.CycleSeconds).toInt))
   private val names = mutable.Map[Int, String]()
   private val resultsDir = runDir.resolve("results")
   private val released = mutable.Map[Int, Int]()
@@ -366,6 +373,8 @@ object QueryMix {
     * the 6th, so neither sits on the edge between two queries.
     */
   val LightStrata = 5
+  /** About one cycle of the sample, warm, on a 4-core host. */
+  val CycleSeconds = 5.0
 
   /** Five light queries, one graph and one streaming query. */
   def sample(all: Seq[String]): Seq[String] = {
