@@ -35,6 +35,15 @@ END_TO_END = {"setup_s": "s", "op_p50_s": "s", "op_tail_s": "s",
 # fixed heap: with a growable one, VmHWM follows G1's sizing decisions
 JVM_HEAP = "1g"
 RUN_LIMIT_S = 170
+# etl_daily runs the JIT's C1 tier only, with room for its larger code (the
+# 48 MB default fills and the flushing shows as slow ticks). With C2 on, its
+# compile decisions in a young JVM moved a tick's median by up to 30 %
+# between identical runs and kept ~0.6 cores busy compiling. query_mix keeps
+# the default JIT: its graph and streaming queries compute, and C1 code ran
+# them ~3x slower.
+JIT_FLAGS = {"etl_daily": ["-XX:TieredStopAtLevel=1",
+                           "-XX:ReservedCodeCacheSize=512m"],
+             "query_mix": []}
 # Spark on JDK 17 outside spark-submit needs these module openings.
 ADD_OPENS = [
     "java.base/java.lang", "java.base/java.lang.invoke",
@@ -129,6 +138,7 @@ def run_jvm(cp, workload, seed, seconds, trace, run_dir, deadline):
     env = dict(os.environ)
     env["SPARK_LOCAL_DIRS"] = os.path.join(run_dir, "spark-local")
     cmd = (["java"] + [f"--add-opens={m}=ALL-UNNAMED" for m in ADD_OPENS] +
+           JIT_FLAGS[workload] +
            [f"-Xms{JVM_HEAP}", f"-Xmx{JVM_HEAP}", f"-Djava.io.tmpdir={tmp}", "-cp", cp,
             "graftbench.Main", workload, str(seed), str(seconds),
             "1" if trace else "0", run_dir, DATA_DIR])

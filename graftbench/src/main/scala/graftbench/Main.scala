@@ -37,6 +37,13 @@ object Main {
       .find(_.startsWith("VmHWM:"))
       .map(_.split("\\s+")(1).toDouble / 1024).getOrElse(0.0)
 
+  /** (steal, total) jiffies over all CPUs, from `/proc/stat`. */
+  def cpuJiffies(): (Long, Long) = {
+    val f = Files.readAllLines(Paths.get("/proc/stat")).get(0).trim
+      .split("\\s+").drop(1).take(8).map(_.toLong)
+    (if (f.length == 8) f(7) else 0L, f.sum)
+  }
+
   def loadavg(): String =
     new String(Files.readAllBytes(Paths.get("/proc/loadavg")), UTF_8).trim
 
@@ -87,13 +94,20 @@ object Main {
     val jvmStartMs = ManagementFactory.getRuntimeMXBean.getStartTime
     val cpus = Runtime.getRuntime.availableProcessors
 
+    val marks = mutable.ArrayBuffer[(String, Double)]()
+    def mark(phase: String): Unit =
+      marks += phase -> (System.currentTimeMillis() - jvmStartMs) / 1e3
+
     val spark = session(cpus)
+    mark("session")
     val tracer = if (trace) Some(new Tracer(spark)) else None
     val wl = Workload(workload, spark, seed, tracer.getOrElse(Spans.Off),
       runDir, dataDir)
     calibrate(spark) // first run compiles the calibration path
     val before = (loadavg(), calibrate(spark))
+    mark("calibration")
     wl.setup()
+    mark("workload_setup")
     // warm-up ops get negative ids, so no timed aggregate counts them
     for (k <- 1 to wl.warmupOps) {
       require(wl.op(-k) && wl.check(-k), s"warm-up op ${-k} failed")
@@ -102,6 +116,7 @@ object Main {
 
     val ops = mutable.ArrayBuffer[Op]()
     var id = 0
+    val jiffies0 = cpuJiffies()
     val windowStart = System.nanoTime()
     var busy = 0.0
     val target = wl.timedOps(seconds)
@@ -123,6 +138,7 @@ object Main {
       busy += wall
       id += 1
     }
+    val jiffies1 = cpuJiffies()
     val after = (loadavg(), calibrate(spark))
     val lateFailures = wl.finish(ops.map(_.id).toSeq)
     val timed = ops.map(o => if (lateFailures(o.id)) o.copy(ok = false) else o)
@@ -172,6 +188,12 @@ object Main {
         .map { case (k, v) => k -> num(v) }),
       "before_window" -> calib(before),
       "after_window" -> calib(after),
+      // the host's share of CPU time it withheld from this VM's runnable
+      // threads over the window (0 outside a VM)
+      "window_steal_frac" -> num((jiffies1._1 - jiffies0._1).toDouble /
+        math.max(1L, jiffies1._2 - jiffies0._2)),
+      // seconds from JVM start at the end of each set-up phase
+      "setup_marks" -> obj(marks.toSeq.map { case (k, v) => k -> num(v) }),
       "spark_sql_conf" -> obj(sqlConf.toSeq.sortBy(_._1)
         .map { case (k, v) => k -> Workload.json(v) }),
       "workload_info" -> obj(wl.artifact),

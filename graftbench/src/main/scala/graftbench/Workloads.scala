@@ -199,7 +199,7 @@ final class EtlDaily(spark: SparkSession, seed: Long, spans: Spans,
     if (EtlDaily.sameReport(got, want)) Set.empty else Set(ops.max)
   }
 
-  override def warmupOps: Int = 4
+  override def warmupOps: Int = 6
 
   override def layerMetrics(timed: Seq[Main.Op]): Map[String, Double] = {
     val ops = timed.map(_.id)

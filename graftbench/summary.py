@@ -8,8 +8,10 @@ For every workload (traced and untraced runs apart) and every metric, prints
 the median, the quartiles and the spread (interquartile range / median), as
 statistics.quantiles(values, n=4) gives them. The host's state rides along:
 the 1-minute load average and graft.Bench's calibration query (wall and
-process CPU) before and after each timed window. The tracing overhead is the
-traced runs' op_p50_s and ops_per_s next to the untraced ones.
+process CPU) before and after each timed window, the share of CPU time the
+host withheld (steal) over the window, and when each set-up phase ended.
+The tracing overhead is the traced runs' op_p50_s and ops_per_s next to the
+untraced ones.
 """
 import glob
 import json
@@ -56,6 +58,12 @@ def main(paths):
                       [float(r[when]["loadavg"].split()[0]) for r in rs]))
             for m in ("calib_wall_s", "calib_cpu_s"):
                 print(row(f"{when}.{m}", [r[when][m] for r in rs]))
+        if all("window_steal_frac" in r for r in rs):
+            print(row("window_steal_frac",
+                      [r["window_steal_frac"] for r in rs]))
+            for m in rs[0]["setup_marks"]:
+                print(row(f"setup_marks.{m}",
+                          [r["setup_marks"][m] for r in rs]))
         plain = runs.get((wl, False))
         if trace and plain:
             for traced, untraced in (("trace.op_p50_s", "op_p50_s"),
