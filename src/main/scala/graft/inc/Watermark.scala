@@ -1,5 +1,12 @@
 package graft.inc
 
+import java.io.FileNotFoundException
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -61,17 +68,65 @@ object Watermark {
         (Seq(tsCol, tieCol) ++ payloadCols).map(c => col(s"b.$c").as(c)): _*)
   }
 
-  /** Full idempotent parquet append: first write creates the sink, later
-    * writes append only unseen keys. Retry semantics (av_etl.py:138) stay
-    * driver-side, as in the reference.
+  /** Full idempotent parquet append: the first write creates the sink,
+    * later writes append only unseen keys. Retry semantics (av_etl.py:138)
+    * stay driver-side, as in the reference. Appending to an existing sink
+    * runs two Spark jobs: the broadcast of the sink's keys and the write.
+    *
+    * Existence is one filesystem listing, not a read: the sink exists when
+    * its directory holds an entry whose name does not start with `_` or
+    * `.`. An absent directory, an empty one or one holding only
+    * `_temporary` (an aborted writer's leftovers) takes the create write.
+    * Nothing else ever does — a read failure on an existing sink (corrupt
+    * footer, permissions, interrupt) propagates instead of turning into an
+    * overwrite of the sink's history.
+    *
+    * Before the anti-join, one top-level data file's parquet footer is
+    * read on the driver and must hold every key column; a sink without one
+    * (or with no top-level data file at all, e.g. a `k=v/` partitioned
+    * layout) raises an `IllegalArgumentException` naming the sink and the
+    * column rather than appending silent duplicates. The anti-join then
+    * reads only the key columns, under the key schema of `incoming`, so no
+    * schema-inference job runs.
+    *
+    * The sink's keys are not `distinct`ed: this function only ever appends
+    * unseen keys, so they are unique already, and a left-anti result does
+    * not depend on build-side duplicates anyway — the `distinct` would only
+    * add a shuffle job before the broadcast. [[dedupAgainst]] keeps its
+    * own, because its callers pass frames with repeated keys.
     */
   def appendIdempotent(spark: SparkSession, incoming: DataFrame,
                        path: String, keys: Seq[String]): Unit = {
-    val exists = try {
-      spark.read.parquet(path).limit(1).count() >= 0
-    } catch { case _: Throwable => false }
-    if (!exists) incoming.write.mode("overwrite").parquet(path)
-    else dedupAgainst(incoming, spark.read.parquet(path), keys)
-      .write.mode("append").parquet(path)
+    val conf = spark.sessionState.newHadoopConf()
+    val dir = new Path(path)
+    val entries =
+      try dir.getFileSystem(conf).listStatus(dir).toSeq
+      catch { case _: FileNotFoundException => Seq.empty }
+    val data = entries.filterNot { e =>
+      val n = e.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    if (data.isEmpty) incoming.write.mode("overwrite").parquet(path)
+    else {
+      val keySchema = incoming.select(keys.map(col): _*).schema
+      val file = data.filter(_.isFile).sortBy(_.getPath.getName).headOption
+        .getOrElse(throw new IllegalArgumentException(
+          s"sink $path holds no top-level data file to check key column(s) " +
+            s"${keySchema.fieldNames.mkString(", ")} against"))
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf))
+      val stored =
+        try reader.getFooter.getFileMetaData.getSchema.getFields.asScala
+          .map(_.getName)
+        finally reader.close()
+      val resolver = spark.sessionState.conf.resolver
+      keySchema.fieldNames.find(k => !stored.exists(resolver(_, k)))
+        .foreach { k =>
+          throw new IllegalArgumentException(
+            s"sink $path has no key column $k (checked ${file.getPath})")
+        }
+      incoming.join(spark.read.schema(keySchema).parquet(path), keys,
+          "left_anti")
+        .write.mode("append").parquet(path)
+    }
   }
 }

@@ -45,16 +45,18 @@ object KCore {
     * peels at k = median degree of round 0. Output: (round, n_nodes,
     * n_edges), nodes = distinct endpoints of surviving edges.
     *
-    * EAGER by design: each round's survivor frame is materialized into its
-    * own cache by the round's 1-row stat collect, after which the previous
-    * round's cache is released — the driver only ever sees one (round,
-    * n_nodes, n_edges) triple per round, and cached edge frames no longer
-    * accumulate across invocations (bench runs every query twice). This is
-    * the same per-round scalar-collect discipline as
-    * [[graft.dedup.Components]].
+    * Each round's survivor edges are `localCheckpoint`ed (eager) and its
+    * degree frame is persisted through [[graft.CacheRegistry.cached]]; the
+    * per-round stat rows stay lazy and read those caches.
+    *
+    * Caller contract: this function does NOT release the degree caches it
+    * registers — one per round, `rounds + 1` in all. The caller must run
+    * [[graft.CacheRegistry.releaseAll]] after materializing the result,
+    * as the harnesses (Bench, Verify, graftbench, the spec helpers) do
+    * after every query. A caller outside a harness that skips it leaks
+    * the cached degree frames until the session ends.
     */
   def peelStats(e0: DataFrame, rounds: Int): DataFrame = {
-    val spark = e0.sparkSession
     // The degree frame is the round's ONLY full edge scan, and it is
     // CACHED: it yields the round's stats (n_nodes = rows, n_edges = Σd/2
     // — d counts each endpoint occurrence), the median histogram (round 0),

@@ -20,13 +20,6 @@ import graft.ts.{Indicators, Intervals, Ohlc}
   */
 object Shared {
 
-  /** THE trailing-7-day volume z gate shared by `dq_volume_anomaly`
-    * (batch daily counts) and `stream_volume_anomaly` (the watermarked
-    * tumbling counts) — ONE definition of the window, the lattice
-    * z = (7n−Σn)/√(7Σn²−(Σn)²) and the |z|>3 flag, so the
-    * streamed == batch bitwise pin is structural rather than maintained.
-    * Input schema: (event_type, dt, n).
-    */
   /** Pinned full-corpus near-dup PAIRS under the standard banding
     * (SimHash banded, Hamming ≤ 1, 2 bands) — the candidate-verify step
     * every simhash dedup consumer starts from. At production scale this
@@ -99,7 +92,7 @@ object Shared {
     }
   }
 
-  /** Pinned POSITIONAL tokenized corpus `(doc_id, lang, source, pos, w)`
+  /** Pinned POSITIONAL tokenized corpus `(doc_id, lang, pos, w)`
     * — the regex-tokenize + explode pass, built once per process+SF with
     * the docs spread across the default parallelism BEFORE the explode
     * (the single-row-group fixture file otherwise scans as ONE task and
@@ -121,12 +114,19 @@ object Shared {
   def corpusTokens(s: SparkSession, dir: String): DataFrame =
     CacheRegistry.pinned(s"corpus_tokens:$dir") {
       Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), col("source"), col("text"))
+        .select(col("doc_id"), col("lang"), col("text"))
         .repartition(s.sparkContext.defaultParallelism)
-        .select(col("doc_id"), col("lang"), col("source"),
+        .select(col("doc_id"), col("lang"),
           posexplode(TextAnalysis.tokens("text")).as(Seq("pos", "w")))
     }
 
+  /** THE trailing-7-day volume z gate shared by `dq_volume_anomaly`
+    * (batch daily counts) and `stream_volume_anomaly` (the watermarked
+    * tumbling counts) — ONE definition of the window, the lattice
+    * z = (7n−Σn)/√(7Σn²−(Σn)²) and the |z|>3 flag, so the
+    * streamed == batch bitwise pin is structural rather than maintained.
+    * Input schema: (event_type, dt, n).
+    */
   def trailing7VolumeGate(daily: DataFrame): DataFrame = {
     val tw = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type").orderBy("dt").rowsBetween(-7, -1)
