@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: one JSON line with per-query and total seconds.
   *
   * Each query is fully materialized through the noop sink — `count()` would
@@ -12,51 +10,11 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Base shuffle-partition count: threads/4 (floor 8), NOT thread
-    // count. The suite's shuffles are mostly dimension-sized (bars,
-    // nodes, sketch cells), where 32 post-shuffle partitions are pure
-    // per-task overhead — measured at sf0.1/local[32]: shuffle=8 cut the
-    // graph group 58->35 s and total process CPU 1650->720 s with zero
-    // per-query regressions. Corpus-sized stages keep their parallelism
-    // via explicit repartition at the cpu-dense seams, and AQE still
-    // splits skew. (A real deployment sizes this by data volume, not by
-    // core count — the same principle.)
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(8, cpus.toInt / 4).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // coalesce post-shuffle partitions by SIZE, not up to core count:
-      // the default parallelismFirst=true pads every dimension-sized
-      // shuffle to 32 partitions, and the iterative graph loops (one
-      // node-sized shuffle per round) were paying ~3x pure per-task
-      // overhead for it (measured: pagerank 3.0->1.5s, random-walk
-      // 8.8->1.9s at sf0.1). Heavy post-shuffle stages keep their
-      // parallelism explicitly (repartition at the cpu-dense seams).
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARFIRST", "false"))
-      // ... with a small advisory size so a moderately-sized shuffle
-      // (the 1.2M-row edge frames ~ tens of MB) still fans out over
-      // several tasks instead of collapsing to one
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "4m"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // root presentation sorts execute single-partition when provably
-    // small — kills the range-exchange sampling re-execution (see
-    // graft.plans.PresentSortRule; Verify runs the same rule so the
-    // oracle gate certifies the rewritten plans)
-    if (sys.env.getOrElse("SPARK_GRAFT_PRESENTSORT", "true") != "false")
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.plans.PresentSortRule)
+    val spark = GraftSession.build(GraftSession.cpus())
     // JIT/classload warmup outside the timed region (tiny SF)
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] warm-up failed: ${e.getMessage}") }
     // min of 2 runs per query: steady-state timing, robust to shared-host
     // noise and first-run JIT of query-specific generated code
     // optional arg: comma list of query-name substrings (dev loop only;

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -66,17 +65,9 @@ object Verify {
     }
     def keep(name: String): Boolean =
       only.forall(_.exists(name.contains))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // same plan surface as Bench: the oracle gate must certify exactly
-    // the plans the bench times (PresentSortRule rewrites root sorts)
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.PresentSortRule)
+    // the bench's own session (GraftSession): the oracle gate certifies
+    // exactly the plans and partitionings graft.Bench times
+    val spark = GraftSession.build(GraftSession.cpus())
     new java.io.File(outDir).mkdirs()
     val ran = SparkEntry.queries.filter(e => keep(e._1)).toSeq.map {
       case (name, fn) =>

@@ -86,19 +86,7 @@ object Components {
       .localCheckpoint()
     // initial frontier: nodes the seed already improved past self-label
     var frontier = labels.filter(col("label") =!= col("node"))
-    // per-round observability for the scaling study (env-gated: the
-    // count is an extra action, so it must never run in production)
-    val dbg = sys.env.get("GRAFT_CC_DEBUG").contains("true")
-    var round = 0
     while (!frontier.isEmpty) {
-      if (dbg) {
-        round += 1
-        val t0 = System.nanoTime()
-        val n = frontier.count()
-        println(f"[cc] round $round frontier=$n probe=" +
-          f"${(System.nanoTime() - t0) / 1e9}%.2fs")
-      }
-      val rt0 = if (dbg) System.nanoTime() else 0L
       // 1. propagate ONLY from the frontier: keyed join of frontier-
       // incident edges + partial-aggregable min (the frontier is the
       // small side — broadcast or tiny-shuffle; sym never re-exchanges)
@@ -135,8 +123,6 @@ object Components {
       // strictly cheaper than the old full decimal-sum aggregate
       frontier = next.filter(col("label") < col("old"))
         .select(col("node"), col("label"))
-      if (dbg) println(f"[cc] round $round" +
-        f" wall=${(System.nanoTime() - rt0) / 1e9}%.2fs")
     }
     if (!symInput) sym.unpersist()
     labels.select(col("node").as("doc_id"), col("label").as("canonical_id"))

@@ -45,7 +45,6 @@ object VecOps {
 case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private val ok = ArrayType(FloatType, containsNull = true)
   override def checkInputDataTypes(): TypeCheckResult =
     if (Seq(left, right).forall(e => e.dataType match {
       case ArrayType(FloatType, _) => true

@@ -73,7 +73,7 @@ object PresentSortRule extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     // bare query root (collect / noop-sink paths where the sort is root)
     case s: Sort => rewrite(s)
-    case r @ Repartition(1, false, s: Sort) =>
+    case r @ Repartition(1, false, _: Sort) =>
       rewriteQuery(r)
     // v2 write sinks (noop): the ordered query hangs off the write command
     case w: V2WriteCommand =>

@@ -5,14 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
-import graft.cal.BusdayCount
-import graft.dedup.{MinHash, NgramJaccard, SimHash}
-import graft.inc.Watermark
-import graft.ingest.AvJson
-import graft.olap.{Exact, Skyline}
-import graft.similarity.Similarity
-import graft.text.TextAnalysis
-import graft.ts.{Indicators, Intervals, Ohlc}
+import graft.olap.Exact
 import Shared._
 
 /** Statistical aggregate (agg_*) family — query + oracle definitions, mechanically split
@@ -1139,7 +1132,6 @@ object AggQueries {
     // frame (rank pick + spread moments), both keyed by type.
     "agg_levene_bf" -> ((s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val v = Tables.events(s, dir)
         .select(col("event_type"), Exact.cents(col("value")).as("c"))
         .tracked // median ranks + spread moments read it

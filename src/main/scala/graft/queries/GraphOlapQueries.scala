@@ -3,17 +3,9 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
-import graft.cal.BusdayCount
-import graft.dedup.{MinHash, NgramJaccard, SimHash}
-import graft.inc.Watermark
-import graft.ingest.AvJson
 import graft.olap.{Exact, Skyline}
-import graft.similarity.Similarity
 import graft.text.TextAnalysis
-import graft.ts.{Indicators, Intervals, Ohlc}
-import Shared._
 
 /** Graph, OLAP, mining, sketch and layout families — query + oracle definitions, mechanically split
   * out of SparkEntry (round 7, VERDICT r6 item 7): entry text is
@@ -1636,19 +1628,12 @@ object GraphOlapQueries {
           col("n").cast("long").as("node"))
       var frontier = seeds
       var visits: DataFrame = null
-      // per-step observability for the scaling study (env-gated, the
-      // GRAFT_CC_DEBUG pattern): each step is already eagerly
-      // materialized by the localCheckpoint, so timing it is free
-      val dbg = sys.env.get("GRAFT_WALK_DEBUG").contains("true")
       for (t <- 1 to 6) {
         // eager localCheckpoint: each ≤64-row frontier feeds BOTH the
         // next step AND the visits union — truncate the lineage so the
         // union doesn't re-derive every earlier round
-        val t0 = if (dbg) System.nanoTime() else 0L
         frontier = graft.olap.GraphFrames
           .walkStep(s, dir, frontier, t.toLong).localCheckpoint(true)
-        if (dbg) println(f"[walk] step $t" +
-          f" wall=${(System.nanoTime() - t0) / 1e9}%.2fs")
         visits = if (visits == null) frontier.select("node")
           else visits.unionAll(frontier.select("node"))
       }

@@ -3,16 +3,10 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
-import graft.cal.BusdayCount
-import graft.dedup.{MinHash, NgramJaccard, SimHash}
-import graft.inc.Watermark
-import graft.ingest.AvJson
-import graft.olap.{Exact, Skyline}
-import graft.similarity.Similarity
+import graft.dedup.{MinHash, SimHash}
+import graft.olap.Exact
 import graft.text.TextAnalysis
-import graft.ts.{Indicators, Intervals, Ohlc}
 
 /** Helper frames and DuckDB SQL fragments shared across the
   * graft.queries.* family modules — formerly SparkEntry privates,

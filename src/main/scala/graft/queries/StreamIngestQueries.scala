@@ -6,13 +6,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
 import graft.cal.BusdayCount
-import graft.dedup.{MinHash, NgramJaccard, SimHash}
 import graft.inc.Watermark
 import graft.ingest.AvJson
-import graft.olap.{Exact, Skyline}
-import graft.similarity.Similarity
-import graft.text.TextAnalysis
-import graft.ts.{Indicators, Intervals, Ohlc}
+import graft.olap.Exact
+import graft.ts.Ohlc
 import Shared._
 
 /** Streaming, ingest, incremental, watermark, calendar and DQ families — query + oracle definitions, mechanically split

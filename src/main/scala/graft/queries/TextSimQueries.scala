@@ -3,16 +3,11 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
-import graft.cal.BusdayCount
 import graft.dedup.{MinHash, NgramJaccard, SimHash}
-import graft.inc.Watermark
-import graft.ingest.AvJson
-import graft.olap.{Exact, Skyline}
+import graft.olap.Exact
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
-import graft.ts.{Indicators, Intervals, Ohlc}
 import Shared._
 
 /** Text analysis, dedup, similarity and embedding families — query + oracle definitions, mechanically split

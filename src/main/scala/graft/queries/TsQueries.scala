@@ -3,17 +3,9 @@ package queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
-import graft.cal.BusdayCount
-import graft.dedup.{MinHash, NgramJaccard, SimHash}
-import graft.inc.Watermark
-import graft.ingest.AvJson
-import graft.olap.{Exact, Skyline}
-import graft.similarity.Similarity
-import graft.text.TextAnalysis
+import graft.olap.Exact
 import graft.ts.{Indicators, Intervals, Ohlc}
-import Shared._
 
 /** Time-series (ts_*) family — query + oracle definitions, mechanically split
   * out of SparkEntry (round 7, VERDICT r6 item 7): entry text is

@@ -5,14 +5,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
-import graft.cal.BusdayCount
-import graft.dedup.{MinHash, NgramJaccard, SimHash}
-import graft.inc.Watermark
-import graft.ingest.AvJson
-import graft.olap.{Exact, Skyline}
-import graft.similarity.Similarity
+import graft.olap.Exact
 import graft.text.TextAnalysis
-import graft.ts.{Indicators, Intervals, Ohlc}
+import graft.ts.Ohlc
 import Shared._
 
 /** Warehouse surface: sampling, multimodal, joins, windows, packing and the composed pipelines — query + oracle definitions, mechanically split

@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** JDBC store adapter — the reference's actual persistence layer
   * (`/root/reference/av_etl.py:30-38,161-185`: a PostgreSQL table with a
@@ -45,7 +44,7 @@ object JdbcStore {
     */
   private def tableExists(spark: SparkSession, url: String,
                           table: String,
-                          opts: Map[String, String] = Map.empty): Boolean = {
+                          opts: Map[String, String]): Boolean = {
     val (schemaPat, namePat) = table.lastIndexOf('.') match {
       case -1 => (null: String, table)
       case i  => (table.substring(0, i), table.substring(i + 1))

@@ -305,8 +305,6 @@ class SeriesAggReader(p: SeriesPartition, aggs: Seq[SeriesAgg])
 
 class SeriesScan(options: Map[String, String], pushed: Array[Filter],
                  required: StructType) extends Scan with Batch {
-  import SeriesGen._
-
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   override def description(): String =
@@ -385,8 +383,6 @@ case class DayOffset(day: Int) extends Offset {
 class SeriesMicroBatchStream(options: Map[String, String],
                              pushed: Array[Filter], required: StructType)
     extends MicroBatchStream {
-  import SeriesGen._
-
   private val startDay = LocalDate.parse(options("start")).toEpochDay.toInt
   private val endDay = LocalDate.parse(options("end")).toEpochDay.toInt
   private val chunk = options.get("maxdayspertrigger").map(_.toInt)

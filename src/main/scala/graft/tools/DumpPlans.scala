@@ -3,16 +3,15 @@ package graft.tools
 import java.nio.file.{Files, Paths}
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Plan-evidence dumper for the optimization rounds: writes each named
   * query's `explain("formatted")` output to `<outDir>/<query>_<tag>.txt`
   * so before/after plan claims in OPTIMIZATION_r{N}.md are committed
   * artifacts (plans/r10/...), checkable without running Spark.
   *
-  * The session mirrors graft.Bench exactly (shuffle partitions, AQE
-  * posture, PresentSortRule) — the dumped plan is the plan the bench
-  * times, not a default-config lookalike. With AQE on, this is the
+  * The session is graft.GraftSession, the one graft.Bench times under —
+  * the dumped plan is the plan the bench times, not a default-config
+  * lookalike. With AQE on, this is the
   * initial plan (`AdaptiveSparkPlan isFinalPlan=false`): join strategies,
   * exchanges, pushed filters and read schemas are all decided here;
   * AQE's runtime re-optimization only coalesces/splits partitions and
@@ -25,22 +24,7 @@ object DumpPlans {
     require(args.length == 4,
       "usage: DumpPlans <sfDir> <outDir> <tag> <q1,q2,...>")
     val Array(sfDir, outDir, tag, qcsv) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-          math.max(8, cpus.toInt / 4).toString))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++=
-      Seq(graft.plans.PresentSortRule)
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus())
     Files.createDirectories(Paths.get(outDir))
     import org.apache.spark.sql.functions.col
     // virtual entry: the walk query eagerly localCheckpoints each step,

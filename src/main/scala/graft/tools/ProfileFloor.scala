@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev-loop floor profiler: where does the fixed per-query bench cost
   * go? Runs each named query a few times with Bench's session config
@@ -13,16 +12,7 @@ import org.apache.spark.sql.SparkSession
 object ProfileFloor {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.experimental.extraOptimizations ++= Seq(graft.plans.PresentSortRule)
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus())
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0
@@ -41,7 +31,7 @@ object ProfileFloor {
         jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0L
         val t0 = System.nanoTime()
         val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        val plan = df.queryExecution.executedPlan // force planning
+        df.queryExecution.executedPlan // force planning
         val t1 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val t2 = System.nanoTime()

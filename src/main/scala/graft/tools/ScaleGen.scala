@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic local scale-up generator for the scaling study
@@ -50,13 +50,7 @@ object ScaleGen {
     val Array(baseDir, outDir, repStr) = args
     val k = repStr.toInt
     require(k >= 1 && k <= 1000, s"replicas out of range: $k")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus())
 
     val KEY = 10000000L // entity-key stride between replicas
     val OKEY = 100000000L // orderkey stride (orderkeys outgrow 10^7 first)

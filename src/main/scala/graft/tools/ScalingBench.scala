@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.{CacheRegistry, SparkEntry}
-import org.apache.spark.sql.SparkSession
 
 /** Scaling-curve runner (VERDICT r7 item 2): times the headline
   * scale-sensitive queries at each supplied SF directory and prints one
@@ -9,6 +8,12 @@ import org.apache.spark.sql.SparkSession
   * the raw material for SCALING.md. Single-run (not min-of-2): the
   * curve's signal is the SHAPE across SFs, and at the top SF a second
   * run doubles a multi-minute sweep for one significant digit.
+  *
+  * The session is graft.GraftSession, the one graft.Bench times under,
+  * so the sf0.1 point of the curve is comparable with the committed bench
+  * artifact. `$SPARK_GRAFT_SHUFFLE` overrides its shuffle width (the sf10
+  * sweep runs at 64); `$SPARK_GRAFT_STREAM_SINKDIR` sets the streaming
+  * sink directory.
   *
   * Usage:
   *   runMain graft.tools.ScalingBench <dir1,dir2,...> [q1,q2,...]
@@ -25,36 +30,24 @@ object ScalingBench {
     val dirs = args(0).split(",").toSeq
     val queries =
       if (args.length > 1) args(1).split(",").toSeq else defaultQueries
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // same session posture as graft.Bench so the sf0.1 point of the
-      // curve is comparable with the committed bench artifact
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.ui.enabled", "false")
-      // bounded micro-batches over the multi-part scaled stream fixtures
-      // (VERDICT r8 item 5): 4 files per trigger so the watermark
-      // advances between batches and state evicts mid-run instead of the
-      // whole scaled table landing as one batch. Single-file fixtures
-      // are unaffected (1 file = 1 batch either way).
-      .config("spark.graft.stream.maxFilesPerTrigger",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_MAXFILES", "4"))
-      // streaming measured through a foreachBatch parquet sink instead
-      // of format("memory") (VERDICT r9 item 5): the memory sink holds
-      // the FULL emitted row set at the driver, which is what blocked
-      // the sf10 sessionize point at the 8 GiB protocol — a harness
-      // artifact, not state growth. Driver runs (Bench/Verify) never
-      // set this conf and keep the memory sink.
-      .config("spark.graft.stream.scalingSink",
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_SINKDIR",
-          "/tmp/graft_scaling_sink"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(graft.GraftSession.cpus())
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
+    // bounded micro-batches over the multi-part scaled stream fixtures
+    // (VERDICT r8 item 5): 4 files per trigger so the watermark
+    // advances between batches and state evicts mid-run instead of the
+    // whole scaled table landing as one batch. Single-file fixtures
+    // are unaffected (1 file = 1 batch either way).
+    spark.conf.set("spark.graft.stream.maxFilesPerTrigger", "4")
+    // streaming measured through a foreachBatch parquet sink instead
+    // of format("memory") (VERDICT r9 item 5): the memory sink holds
+    // the FULL emitted row set in the Spark driver, which is what
+    // blocked the sf10 sessionize point at the 8 GiB protocol — a
+    // harness artifact, not state growth. Bench and Verify never set
+    // this conf and keep the memory sink.
+    spark.conf.set("spark.graft.stream.scalingSink",
+      sys.env.getOrElse("SPARK_GRAFT_STREAM_SINKDIR",
+        "/tmp/graft_scaling_sink"))
     val osBean = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]

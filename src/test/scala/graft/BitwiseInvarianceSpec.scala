@@ -50,21 +50,32 @@ class BitwiseInvarianceSpec extends AnyFunSuite {
     "sim_mmr_rerank", "text_ccnet_buckets", "text_dsir_weights",
     "dedup_semdedup", "text_boilerplate_spans")
 
+  /** Runs `q` with `confs` set, then restores the session's values and
+    * releases the run's tracked caches.
+    */
+  private def run(q: String, confs: (String, String)*): Seq[String] = {
+    val old = confs.map { case (k, _) => k -> spark.conf.get(k) }
+    def set(kvs: Seq[(String, String)]): Unit =
+      kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try { set(confs); rows(SparkEntry.queries(q)(spark, sf)) }
+    finally { set(old); CacheRegistry.releaseAll() }
+  }
+
   test("new operator families are bitwise partitioning-invariant") {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
     for (q <- targets) {
       // release the narrow run's tracked caches BEFORE the wide run:
       // Spark's CacheManager substitutes cached InMemoryRelations into
       // identical plan subtrees, so without the release the wide run
       // would read the width-1 caches instead of re-executing — making
       // the invariance check vacuous for exactly the cached stages
-      val narrow =
-        try { spark.conf.set(key, "1"); rows(SparkEntry.queries(q)(spark, sf)) }
-        finally { spark.conf.set(key, old); CacheRegistry.releaseAll() }
-      val wide =
-        try { spark.conf.set(key, "13"); rows(SparkEntry.queries(q)(spark, sf)) }
-        finally { spark.conf.set(key, old); CacheRegistry.releaseAll() }
+      val narrow = run(q, "spark.sql.shuffle.partitions" -> "1")
+      // the wide run also puts GraftSession's AQE coalescing back to
+      // Spark's defaults (parallelismFirst=true, 64 MB advisory size):
+      // the session change the oracle gate went through when Verify
+      // moved onto GraftSession
+      val wide = run(q, "spark.sql.shuffle.partitions" -> "13",
+        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "true",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64MB")
       assert(narrow == wide, s"$q differs across shuffle widths")
       assert(narrow.nonEmpty, s"$q returned no rows")
     }

@@ -132,7 +132,7 @@ class CaptureFlatnessSpec extends AnyFunSuite {
     }
     val picks = withH.groupBy(_._3 % 8).toSeq.flatMap { case (_, bucket) =>
       val ordered = bucket.sortBy(t => (t._3, t._1)).toIndexedSeq
-      ordered.zipWithIndex.map { case ((id, src, _), i) =>
+      ordered.zipWithIndex.map { case ((_, src, _), i) =>
         val negs = (i + 1 to math.min(i + 6, ordered.size - 1))
           .map(ordered(_)).filter(_._2 != src).take(2).map(_._1)
         (src, negs)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-8 session-2 additions — boilerplate-span census, CCNet

@@ -159,7 +159,6 @@ class DedupSimSpec extends AnyFunSuite {
   test("streaming LSH detector: pair set invariant to micro-batch split") {
     import spark.implicits._
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import org.apache.spark.sql.functions.col
     // batch ground truth over the fixture corpus
     val batchPairs = graft.dedup.SimHash
       .bandedNearDupPairs(Tables.documents(spark, sf), "doc_id", "text",

@@ -30,7 +30,6 @@ class ExtensionsSpec extends AnyFunSuite {
   }
 
   test("optimizer rule rewrites size(array_intersect) over gram hashes") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     import graft.dedup.NgramJaccard
     if (!spark.experimental.extraOptimizations

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.olap.{Frequent, TypedAgg}
+import graft.olap.Frequent
 
 /** Pins the Misra-Gries prune-then-verify contract (candidate superset,
   * partitioning invariance, exactness of the verified output) and the
@@ -43,7 +43,6 @@ class FrequentTypedSpec extends AnyFunSuite {
   }
 
   test("typed Aggregator is bitwise-equal to the untyped cents formulation") {
-    import spark.implicits._
     val sfDir = "/root/testdata/sf0.001"
     val typed = SparkEntry.queries("ds_typed_agg")(spark, sfDir).collect()
     val untyped = Tables.lineitem(spark, sfDir)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Golden end-to-end (SURVEY.md §5.2 layer 2): the full reference pipeline

@@ -99,7 +99,7 @@ class MipsOlsSpanSpec extends AnyFunSuite {
       sp -> xs.map(_._1).distinct.size
     }
     assert(out.size == docs.length)
-    docs.foreach { case (id, t) =>
+    docs.foreach { case (id, _) =>
       val mine = spans.filter(_._1 == id)
       val nDup = mine.count(s => docsOf(s._2) > 1).toLong
       val r = out(id)

@@ -1,24 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-
-object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // specs exercise the same plan surface Bench/Verify run
-    s.experimental.extraOptimizations ++= Seq(graft.plans.PresentSortRule)
-    s
-  }
-}
 
 class OhlcSpec extends AnyFunSuite {
   import graft.ts.Ohlc

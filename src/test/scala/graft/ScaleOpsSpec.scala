@@ -28,7 +28,6 @@ class ScaleOpsSpec extends AnyFunSuite {
   }
 
   test("SCD2 history partitions each key's timeline") {
-    import spark.implicits._
     val h = graft.inc.Scd2.history(
       Tables.events(spark, sf)
         .filter(col("event_type") === "purchase" && col("user_id") < 50)

@@ -26,7 +26,6 @@ class SimilarityRecallSpec extends AnyFunSuite {
   }
 
   test("hyperplane near-dup = exact pairwise restricted to shared buckets") {
-    import graft.similarity.HyperplaneLsh
     val emb = Tables.embeddings(spark, sf)
     val viaLsh = SparkEntry.queries("sim_hyperplane_neardup")(spark, sf)
       .select("vec_a", "vec_b").collect()

@@ -155,7 +155,6 @@ class TaIndicatorsSpec extends AnyFunSuite {
   }
 
   test("turning points: strict extrema alternate on a hand series") {
-    import spark.implicits._
     // closes: 1 3 2 4 4 1 5 — strict maxima at 3 (idx1), strict minima at
     // 2 (idx2) and 1 (idx5); the 4,4 plateau is one flat step, and the
     // plateau's second 4 is NOT a strict max (prev == c)
