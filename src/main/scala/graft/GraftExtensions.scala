@@ -106,10 +106,15 @@ object GraftExtensions {
         s"expected integer literal argument, got $other")
     }
 
-  /** Install all functions into an already-built session. */
-  def registerAll(spark: SparkSession): Unit =
+  /** Install the functions an already-built session is missing; a name
+    * the session already has is left as it is (a second call replaces
+    * nothing and logs nothing).
+    */
+  def registerAll(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     functions.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "scala_udf")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
     }
+  }
 }

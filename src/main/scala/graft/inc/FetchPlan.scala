@@ -13,6 +13,12 @@ import graft.cal.{BusdayCount, NyseCalendar}
   * business-day arithmetic is [[BusdayCount.count]] over the
   * [[NyseCalendar]], and the resulting fetch flows through the idempotent
   * keyed append (I2) so a crashed-and-retried step cannot double-load.
+  *
+  * Scale posture: on a parquet sink the probe reads the watermark from the
+  * data files' footer statistics on the driver and runs no Spark job, so
+  * deciding a tick costs one footer read per sink file, not a scan of the
+  * sink's history; a sink whose footers cannot answer exactly falls back
+  * to the scan and says so in its log.
   */
 object FetchPlan {
 

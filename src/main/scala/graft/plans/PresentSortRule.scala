@@ -53,7 +53,10 @@ object PresentSortRule extends Rule[LogicalPlan] {
   private def rewrite(s: Sort): LogicalPlan = {
     val st = s.child.stats
     val rowsOk = st.rowCount.forall(_ <= BigInt(maxRows))
-    if (s.global && st.sizeInBytes <= maxBytes && rowsOk)
+    // a child already in one partition needs no exchange under the global
+    // sort; the rewrite would only add a second single-partition shuffle
+    if (s.global && !OnePartition.endsIn(s.child) &&
+        st.sizeInBytes <= maxBytes && rowsOk)
       Sort(s.order, global = false,
         Repartition(1, shuffle = true, s.child), s.hint)
     else s

@@ -63,18 +63,28 @@ object Ohlc {
     * *partitioned* WindowExec — same one-partition distribution, but the
     * plan shape stays uniform with the multi-series form and Spark's
     * "No Partition Defined" degradation warning can't fire.
+    *
+    * The single-series case also moves its input to one partition with
+    * `repartition(1)`, unless the input already ends in one
+    * ([[graft.plans.OnePartition]]). Each call's constant key is a fresh
+    * expression, so without it every window of an SMA chain would shuffle
+    * again, and a global sort above would add a range exchange; with it
+    * the chain and the sort share that one exchange.
     */
   def withSma(bars: DataFrame, n: Int, partitionCols: Seq[String] = Nil,
               orderCol: String = "date", closeCol: String = "close"): DataFrame = {
-    val partKeys =
-      if (partitionCols.isEmpty)
-        Seq(graft.olap.Exact.onePartition(col(orderCol)))
-      else partitionCols.map(col)
+    val (input, partKeys) =
+      if (partitionCols.nonEmpty) (bars, partitionCols.map(col))
+      else {
+        val inOne = graft.plans.OnePartition.endsIn(bars.queryExecution.analyzed)
+        (if (inOne) bars else bars.repartition(1),
+         Seq(graft.olap.Exact.onePartition(col(orderCol))))
+      }
     val base = Window.partitionBy(partKeys: _*).orderBy(col(orderCol))
     val w = base.rowsBetween(-n, -1)
     val cnt = count(col(closeCol)).over(w)
     val sumDec = sum(col(closeCol).cast(DecimalType(18, 4))).over(w)
-    bars.withColumn(s"sma_$n",
+    input.withColumn(s"sma_$n",
       when(cnt === n, sumDec.cast("double") / lit(n).cast("double")))
   }
 

@@ -66,6 +66,22 @@ class ExtensionsSpec extends AnyFunSuite {
       graft.dedup.NgramJaccard.gram_hashes(c, 2)
   }
 
+  test("registerAll installs only missing functions") {
+    GraftExtensions.registerAll(spark)
+    // a second call (two queries of one Verify run both register) must
+    // replace nothing, so Spark logs no "replaced a previously registered
+    // function" warning
+    val (_, log) = SparkProbes.captureLog(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry") {
+      GraftExtensions.registerAll(spark)
+    }
+    assert(log.isEmpty, log)
+    val registry = spark.sessionState.functionRegistry
+    assert(GraftExtensions.functions.forall { case (name, _, _) =>
+      registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)) })
+  }
+
   test("SQL and DataFrame APIs produce identical fingerprints") {
     GraftExtensions.registerAll(spark)
     val viaSql = spark.sql(

@@ -44,6 +44,51 @@ class OhlcSpec extends AnyFunSuite {
     assert(got.toSeq == Seq(None, None, Some(1.5), Some(2.5), Some(3.5)))
   }
 
+  test("single-series SMA chain and its sort share one exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.DecimalType
+    val dir = java.nio.file.Files.createTempDirectory("graft_sma").toString
+    val day0 = java.time.LocalDate.parse("2024-01-01")
+    def series(name: String, f: Int => Double): String = {
+      val path = s"$dir/$name"
+      (0 until 60).map(i => (java.sql.Date.valueOf(day0.plusDays(i)), f(i)))
+        .toDF("date", "close").repartition(3).write.parquet(path)
+      path
+    }
+    val price = series("price", i => 100.0 + (i * 37 % 11) * 1.25)
+    val fx = series("fx", i => 3.5 + (i * 13 % 7) * 0.0125)
+    val d = Ohlc.ccyDerive(spark.read.parquet(price), spark.read.parquet(fx))
+    val got = Ohlc.withSma(Ohlc.withSma(d, 5, Nil, "date", "close_price_ccy"),
+      20, Nil, "date", "close_price_ccy").orderBy("date")
+    // the same SMAs planned the old way: each window keyed by its own
+    // constant, with no repartition(1) under the chain
+    def oldSma(df: org.apache.spark.sql.DataFrame, n: Int) = {
+      val w = Window.partitionBy(graft.olap.Exact.onePartition(col("date")))
+        .orderBy(col("date")).rowsBetween(-n, -1)
+      df.withColumn(s"sma_$n", when(count(col("close_price_ccy")).over(w) === n,
+        sum(col("close_price_ccy").cast(DecimalType(18, 4))).over(w)
+          .cast("double") / lit(n).cast("double")))
+    }
+    val want = oldSma(oldSma(d, 5), 20).orderBy("date")
+    // the initial adaptive plan, exchanges inserted, before any stage runs
+    def shuffles(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          a.executedPlan.collect {
+            case e: org.apache.spark.sql.execution.exchange
+              .ShuffleExchangeExec => e }
+        case p => fail(s"not an adaptive plan: $p")
+      }
+    val ex = shuffles(got)
+    assert(ex.size == 1, got.queryExecution.executedPlan)
+    assert(ex.head.outputPartitioning.numPartitions == 1)
+    // the old plan: an exchange per window, and one for the sort
+    assert(shuffles(want).size == 3)
+    assert(got.collect().toSeq == want.collect().toSeq)
+    assert(got.filter(col("sma_20").isNotNull).count() == 40)
+  }
+
   test("ccyDerive: inner join semantics + banker's rounding on exact ties") {
     import spark.implicits._
     val p = Seq(("2024-01-01", 56.78), ("2024-01-02", 10.0))

@@ -113,6 +113,28 @@ class PresentSortSpec extends AnyFunSuite {
     assert(!p.contains("rangepartitioning"), p)
   }
 
+  test("a sort over a single-partition child is left alone") {
+    // known-small rows clear both gates, so only the child's single
+    // partition keeps the rule from adding a second one-partition shuffle
+    val df = spark.range(0L, 1000L, 1L, 8).toDF("id")
+      .repartition(1)
+      .withColumn("x", col("id") * 2)
+      .filter(col("x") > 10)
+      .orderBy(col("id").desc)
+    val lp = df.queryExecution.optimizedPlan
+    val sort = lp.collectFirst {
+      case s: org.apache.spark.sql.catalyst.plans.logical.Sort => s }.get
+    assert(sort.global, lp.toString)
+    assert(lp.collect {
+      case r: org.apache.spark.sql.catalyst.plans.logical.Repartition => r
+    }.size == 1, lp.toString)
+    val p = planOf(df)
+    assert("Exchange".r.findAllIn(p).size == 1, p)
+    assert(!p.contains("rangepartitioning"), p)
+    assert(df.collect().map(_.getLong(0)).toSeq ==
+      (999L to 6L by -1L))
+  }
+
   test("rewritten output order is bitwise the range-sorted order") {
     val q = Tables.documents(spark, sfDir)
       .groupBy("source").agg(count(lit(1)).as("n"),

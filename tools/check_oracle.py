@@ -2,6 +2,7 @@
 """Dev-loop comparator mimicking the driver's DuckDB oracle check.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [--json out.json]
+           [--timeout SECONDS] [--memory-limit SIZE]
 
 For each query dumped by graft.Verify: load the Spark parquet result, run the
 oracle SQL in DuckDB with each fixture table registered as a view, sort
@@ -10,8 +11,17 @@ typed arrow data, so DuckDB HUGEINT vs Spark BIGINT fails even with identical
 values) and every cell (exact for non-floats; exact-ish 1e-12 relative for
 floats so a true bitwise mismatch is still flagged loudly).
 
-Exit is nonzero on any FAIL *or* any OK~ float near-miss — OK~ would fail the
-driver's hash compare, so automation must treat it as red.
+Each query is checked in its own DuckDB process, bounded by a wall-clock
+limit (`--timeout`, default 120 s) and a DuckDB `memory_limit`
+(`--memory-limit`, default 2GB); two such processes run at once.
+A query whose check does not finish inside its bounds — killed at the time
+limit, out of DuckDB memory, or its process died — is reported as
+UNFINISHED, never as passed, and one heavy oracle no longer stalls the
+checks after it.
+
+Exit is nonzero on any FAIL, any OK~ float near-miss or any UNFINISHED —
+OK~ would fail the driver's hash compare, and an unfinished check proves
+nothing, so automation must treat both as red.
 
 `--json out.json` additionally writes a per-query artifact in the driver's
 CORRECTNESS schema (rows_match / schema_match / hash_match / spark_rows /
@@ -23,18 +33,12 @@ is reported as hash_match=false — it would fail the driver's hash compare).
 """
 import json
 import math
+import subprocess
 import sys
-
-import duckdb
+from concurrent.futures import ThreadPoolExecutor
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
-
-
-def norm(v):
-    if isinstance(v, float):
-        return v
-    return v
 
 
 def _types_compatible(s_type, d_type):
@@ -65,131 +69,174 @@ def cells_equal(a, b):
     return a == b
 
 
-def main(sf_dir, out_dir, json_out=None):
-    con = duckdb.connect()
+def record(rows_match=False, schema_match=False, hash_match=False,
+           spark_rows=-1, oracle_rows=-1, err=None):
+    """One query's record in the driver's CORRECTNESS schema."""
+    return {"rows_match": rows_match, "schema_match": schema_match,
+            "hash_match": hash_match, "spark_rows": spark_rows,
+            "oracle_rows": oracle_rows, "err": err}
+
+
+def _pass_oom(e):
+    """Re-raises DuckDB running out of memory: that check did not finish,
+    it did not fail."""
+    if type(e).__name__ == "OutOfMemoryException":
+        raise e
+
+
+def check_one(con, out_dir, name, sql):
+    """Compares one query's Spark dump with its oracle on `con`; returns
+    (status, message, record) with status "ok", "near" or "fail"."""
+    try:
+        spark_rel = con.sql(f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
+        spark_cols = sorted(spark_rel.columns)
+        spark_rows = con.sql(
+            "SELECT " + ", ".join(f'"{c}"' for c in spark_cols)
+            + " FROM spark_rel").fetchall()
+    except Exception as e:
+        _pass_oom(e)
+        return ("fail", f"FAIL {name}: spark result unreadable: {e}",
+                record(err=f"spark result unreadable: {e}"))
+    try:
+        duck_rel = con.sql(sql)
+        duck_cols = sorted(duck_rel.columns)
+        duck_rows = con.sql(
+            "SELECT " + ", ".join(f'"{c}"' for c in duck_cols)
+            + " FROM duck_rel").fetchall()
+    except Exception as e:
+        _pass_oom(e)
+        return ("fail", f"FAIL {name}: oracle sql error: {e}",
+                record(spark_rows=len(spark_rows),
+                       err=f"oracle sql error: {e}"))
+    counts = dict(spark_rows=len(spark_rows), oracle_rows=len(duck_rows))
+    if spark_cols != duck_cols:
+        msg = f"columns spark={spark_cols} duck={duck_cols}"
+        return ("fail", f"FAIL {name}: {msg}",
+                record(rows_match=len(spark_rows) == len(duck_rows),
+                       err=msg, **counts))
+    # type-strict: the driver hashes typed arrow batches, so a DuckDB
+    # HUGEINT (decimal128) against a Spark int64 is a red row even when
+    # every value matches. Compare arrow types column-by-column.
+    try:
+        s_schema = con.sql(
+            "SELECT " + ", ".join(f'"{c}"' for c in spark_cols)
+            + " FROM spark_rel LIMIT 0").arrow().schema
+        d_schema = con.sql(
+            "SELECT " + ", ".join(f'"{c}"' for c in duck_cols)
+            + " FROM duck_rel LIMIT 0").arrow().schema
+        type_mism = [
+            (c, str(s_schema.field(c).type), str(d_schema.field(c).type))
+            for c in spark_cols
+            if not _types_compatible(s_schema.field(c).type,
+                                     d_schema.field(c).type)]
+    except Exception as e:
+        _pass_oom(e)
+        return ("fail", f"FAIL {name}: arrow schema fetch error: {e}",
+                record(rows_match=len(spark_rows) == len(duck_rows),
+                       err=f"arrow schema fetch error: {e}", **counts))
+    if type_mism:
+        c, st, dt = type_mism[0]
+        msg = f"arrow type mismatch col {c}: spark={st} duck={dt}"
+        return ("fail", f"FAIL {name}: {msg}",
+                record(rows_match=len(spark_rows) == len(duck_rows),
+                       err=msg, **counts))
+    if len(spark_rows) != len(duck_rows):
+        msg = f"rows spark={len(spark_rows)} duck={len(duck_rows)}"
+        return ("fail", f"FAIL {name}: {msg}",
+                record(schema_match=True, err=msg, **counts))
+    bad = None
+    exact = True
+    for i, (sr, dr) in enumerate(zip(spark_rows, duck_rows)):
+        for c, (sv, dv) in enumerate(zip(sr, dr)):
+            if not cells_equal(sv, dv):
+                bad = (i, spark_cols[c], sv, dv)
+                break
+            if sv != dv and not (
+                    sv is None or dv is None
+                    or (isinstance(sv, float) and math.isnan(sv))):
+                exact = False
+        if bad:
+            break
+    if bad:
+        msg = f"row {bad[0]} col {bad[1]}: spark={bad[2]!r} duck={bad[3]!r}"
+        return ("fail", f"FAIL {name}: {msg}",
+                record(rows_match=True, schema_match=True, err=msg,
+                       **counts))
+    tag = "OK  " if exact else "OK~ (float near-miss — NOT bitwise!)"
+    return ("ok" if exact else "near",
+            f"{tag} {name}: {len(spark_rows)} rows, {len(spark_cols)} cols",
+            record(rows_match=True, schema_match=True, hash_match=exact,
+                   err=None if exact else "float near-miss (not bitwise)",
+                   **counts))
+
+
+def worker(sf_dir, out_dir, name, memory_limit):
+    """Checks one query in this process; prints its result as one JSON
+    line."""
+    import duckdb
+    con = duckdb.connect(config={"memory_limit": memory_limit,
+                                 "threads": 2})
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    sql = json.load(open(f"{out_dir}/oracle_sql.json"))[name]
+    try:
+        status, msg, rec = check_one(con, out_dir, name, sql)
+    except duckdb.OutOfMemoryException as e:
+        status, msg = "unfinished", f"UNFINISHED {name}: out of memory: {e}"
+        rec = record(err=f"unfinished: out of memory ({memory_limit}): {e}")
+    print(json.dumps({"status": status, "msg": msg, "rec": rec}))
+
+
+def run_bounded(sf_dir, out_dir, name, timeout, memory_limit):
+    """Runs [[worker]] for one query in its own process under `timeout`
+    seconds; an unfinished check comes back with status "unfinished"."""
+    cmd = [sys.executable, __file__, "--worker", sf_dir, out_dir, name,
+           memory_limit]
+    try:
+        p = subprocess.run(cmd, capture_output=True, text=True,
+                           timeout=timeout)
+    except subprocess.TimeoutExpired:
+        return ("unfinished",
+                f"UNFINISHED {name}: killed at the {timeout:g} s time limit",
+                record(err=f"unfinished: time limit {timeout:g} s"))
+    lines = p.stdout.strip().splitlines()
+    try:
+        r = json.loads(lines[-1])
+        return r["status"], r["msg"], r["rec"]
+    except (IndexError, ValueError, KeyError):
+        why = (p.stderr.strip().splitlines() or [f"exit {p.returncode}"])[-1]
+        return ("unfinished", f"UNFINISHED {name}: checker died: {why}",
+                record(err=f"unfinished: checker died: {why}"))
+
+
+def main(sf_dir, out_dir, json_out=None, timeout=120.0,
+         memory_limit="2GB"):
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
-    n_bad = 0
-    n_near = 0
+    names = sorted(oracle)
     # per-query records in the driver's CORRECTNESS schema; written (with
     # --json) even when a query fails, so the artifact names the failure
     report = {}
-
-    def rec(name, rows_match=False, schema_match=False, hash_match=False,
-            spark_rows=-1, oracle_rows=-1, err=None):
-        report[name] = {"rows_match": rows_match,
-                        "schema_match": schema_match,
-                        "hash_match": hash_match,
-                        "spark_rows": spark_rows,
-                        "oracle_rows": oracle_rows,
-                        "err": err}
-
-    for name, sql in sorted(oracle.items()):
-        try:
-            spark_rel = con.sql(
-                f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
-            spark_cols = sorted(spark_rel.columns)
-            spark_rows = con.sql(
-                "SELECT " + ", ".join(f'"{c}"' for c in spark_cols)
-                + f" FROM spark_rel").fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: spark result unreadable: {e}")
-            rec(name, err=f"spark result unreadable: {e}")
-            n_bad += 1
-            continue
-        try:
-            duck_rel = con.sql(sql)
-            duck_cols = sorted(duck_rel.columns)
-            duck_rows = con.sql(
-                "SELECT " + ", ".join(f'"{c}"' for c in duck_cols)
-                + " FROM duck_rel").fetchall()
-        except Exception as e:
-            print(f"FAIL {name}: oracle sql error: {e}")
-            rec(name, spark_rows=len(spark_rows),
-                err=f"oracle sql error: {e}")
-            n_bad += 1
-            continue
-        if spark_cols != duck_cols:
-            print(f"FAIL {name}: columns spark={spark_cols} duck={duck_cols}")
-            rec(name, spark_rows=len(spark_rows), oracle_rows=len(duck_rows),
-                rows_match=len(spark_rows) == len(duck_rows),
-                err=f"columns spark={spark_cols} duck={duck_cols}")
-            n_bad += 1
-            continue
-        # type-strict: the driver hashes typed arrow batches, so a DuckDB
-        # HUGEINT (decimal128) against a Spark int64 is a red row even when
-        # every value matches. Compare arrow types column-by-column.
-        try:
-            s_schema = con.sql(
-                "SELECT " + ", ".join(f'"{c}"' for c in spark_cols)
-                + " FROM spark_rel LIMIT 0").arrow().schema
-            d_schema = con.sql(
-                "SELECT " + ", ".join(f'"{c}"' for c in duck_cols)
-                + " FROM duck_rel LIMIT 0").arrow().schema
-            type_mism = [
-                (c, str(s_schema.field(c).type), str(d_schema.field(c).type))
-                for c in spark_cols
-                if not _types_compatible(s_schema.field(c).type,
-                                         d_schema.field(c).type)]
-        except Exception as e:
-            print(f"FAIL {name}: arrow schema fetch error: {e}")
-            rec(name, spark_rows=len(spark_rows), oracle_rows=len(duck_rows),
-                rows_match=len(spark_rows) == len(duck_rows),
-                err=f"arrow schema fetch error: {e}")
-            n_bad += 1
-            continue
-        if type_mism:
-            c, st, dt = type_mism[0]
-            print(f"FAIL {name}: arrow type mismatch col {c}: "
-                  f"spark={st} duck={dt}")
-            rec(name, spark_rows=len(spark_rows), oracle_rows=len(duck_rows),
-                rows_match=len(spark_rows) == len(duck_rows),
-                err=f"arrow type mismatch col {c}: spark={st} duck={dt}")
-            n_bad += 1
-            continue
-        if len(spark_rows) != len(duck_rows):
-            print(f"FAIL {name}: rows spark={len(spark_rows)} "
-                  f"duck={len(duck_rows)}")
-            rec(name, spark_rows=len(spark_rows), oracle_rows=len(duck_rows),
-                schema_match=True,
-                err=f"rows spark={len(spark_rows)} duck={len(duck_rows)}")
-            n_bad += 1
-            continue
-        bad = None
-        exact = True
-        for i, (sr, dr) in enumerate(zip(spark_rows, duck_rows)):
-            for c, (sv, dv) in enumerate(zip(sr, dr)):
-                if not cells_equal(sv, dv):
-                    bad = (i, spark_cols[c], sv, dv)
-                    break
-                if sv != dv and not (
-                        sv is None or dv is None
-                        or (isinstance(sv, float) and math.isnan(sv))):
-                    exact = False
-            if bad:
-                break
-        if bad:
-            print(f"FAIL {name}: row {bad[0]} col {bad[1]}: "
-                  f"spark={bad[2]!r} duck={bad[3]!r}")
-            rec(name, spark_rows=len(spark_rows), oracle_rows=len(duck_rows),
-                rows_match=True, schema_match=True,
-                err=f"row {bad[0]} col {bad[1]}: "
-                    f"spark={bad[2]!r} duck={bad[3]!r}")
-            n_bad += 1
-        else:
-            if not exact:
-                n_near += 1
-            tag = "OK  " if exact else "OK~ (float near-miss — NOT bitwise!)"
-            print(f"{tag} {name}: {len(spark_rows)} rows, "
-                  f"{len(spark_cols)} cols")
-            rec(name, spark_rows=len(spark_rows), oracle_rows=len(duck_rows),
-                rows_match=True, schema_match=True, hash_match=exact,
-                err=None if exact else "float near-miss (not bitwise)")
-    print(f"\n{len(oracle) - n_bad}/{len(oracle)} queries match"
+    counts = {"ok": 0, "near": 0, "fail": 0, "unfinished": 0}
+    unfinished = []
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        results = pool.map(
+            lambda n: run_bounded(sf_dir, out_dir, n, timeout, memory_limit),
+            names)
+        for name, (status, msg, rec) in zip(names, results):
+            print(msg, flush=True)
+            counts[status] += 1
+            if status == "unfinished":
+                rec["unfinished"] = True
+                unfinished.append(name)
+            report[name] = rec
+    n_bad, n_near = counts["fail"], counts["near"]
+    n_unf = counts["unfinished"]
+    print(f"\n{len(oracle) - n_bad - n_unf}/{len(oracle)} queries match"
           + (f" ({n_near} only approximately — treated as FAILING)"
-             if n_near else ""))
+             if n_near else "")
+          + (f"; {n_unf} UNFINISHED (not checked): {', '.join(unfinished)}"
+             if n_unf else ""))
     if json_out:
         summary = {
             "n_queries": len(oracle),
@@ -198,19 +245,32 @@ def main(sf_dir, out_dir, json_out=None):
                           and r["hash_match"]),
             "n_fail": n_bad,
             "n_near": n_near,
+            "n_unfinished": n_unf,
             "sf": sf_dir,
             "queries": report,
         }
         with open(json_out, "w") as f:
             json.dump(summary, f, indent=1, sort_keys=True)
         print(f"wrote {json_out}: {summary['n_pass']}/{len(oracle)} pass")
-    return 1 if (n_bad or n_near) else 0
+    return 1 if (n_bad or n_near or n_unf) else 0
+
+
+def option(flag, default, cast=str):
+    """The value after `flag` in argv (removed from it), else `default`."""
+    if flag not in sys.argv:
+        return default
+    i = sys.argv.index(flag)
+    v = sys.argv[i + 1]
+    del sys.argv[i:i + 2]
+    return cast(v)
 
 
 if __name__ == "__main__":
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    jout = None
-    if "--json" in sys.argv:
-        jout = sys.argv[sys.argv.index("--json") + 1]
-        args.remove(jout)
-    sys.exit(main(args[0], args[1], jout))
+    if sys.argv[1:2] == ["--worker"]:
+        worker(*sys.argv[2:6])
+        sys.exit(0)
+    jout = option("--json", None)
+    tlim = option("--timeout", 120.0, float)
+    mlim = option("--memory-limit", "2GB")
+    args = sys.argv[1:]
+    sys.exit(main(args[0], args[1], jout, tlim, mlim))
