@@ -224,8 +224,7 @@ object Bench {
     // THE canonical committed per-round artifact (VERDICT r7 item 5):
     // one file, written by Bench itself, noise stats inline. Committed
     // as BENCH_r{N}_perquery.json (SPARK_GRAFT_ROUND names the round);
-    // bench_out.json stays as the driver's unframed channel and
-    // bench_out_r7.json is superseded.
+    // bench_out.json stays as the driver's unframed channel.
     val roundName = sys.env.get("SPARK_GRAFT_ROUND")
       .map(r => s"BENCH_r${r}_perquery.json")
       .getOrElse("BENCH_perquery.json")

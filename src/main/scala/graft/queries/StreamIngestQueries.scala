@@ -9,6 +9,7 @@ import graft.cal.BusdayCount
 import graft.inc.Watermark
 import graft.ingest.AvJson
 import graft.olap.Exact
+import graft.streaming.BoundedRun
 import graft.ts.Ohlc
 import Shared._
 
@@ -239,13 +240,8 @@ object StreamIngestQueries {
     // revealed 10 days per trigger (a bounded replay of a live feed),
     // complete-mode monthly aggregate converges to the batch answer —
     // one declarative transform, two execution modes.
-    "stream_dsv2_source" -> ((s, dir) => {
-      val name = "graft_stream_dsv2"
-      val key = "spark.sql.shuffle.partitions"
-      val old = s.conf.get(key)
-      s.conf.set(key, "8")
-      try {
-        val q = s.readStream.format("graft-series")
+    "stream_dsv2_source" -> ((s, dir) =>
+      BoundedRun.toMemory(s.readStream.format("graft-series")
           .option("symbols", "SPY,QQQ")
           .option("start", "2026-01-05")
           .option("end", "2026-02-27")
@@ -258,14 +254,9 @@ object StreamIngestQueries {
                sum(Exact.cents(col("close"))).cast("double")./(lit(100.0))
                  .as("sum_close"),
                min(col("low")).as("min_low"),
-               max(col("high")).as("max_high"))
-          .writeStream.outputMode("complete")
-          .format("memory").queryName(name)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set(key, old)
-      s.table(name).orderBy("symbol", "month")
-    }),
+               max(col("high")).as("max_high")),
+        "graft_stream_dsv2", "complete")
+        .orderBy("symbol", "month")),
 
     // JSON field extraction over a data column (events.props) + group-agg;
     // long sums are exact integer arithmetic on both engines.
@@ -839,17 +830,11 @@ object StreamIngestQueries {
       ev.write.partitionBy("day").mode("overwrite").parquet(base)
       val d0 = Exact.boundedCollect(ev.agg(min(col("day"))), 1,
         "min-day scalar probe")(0).getLong(0)
-      val old = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        ev.filter(col("day") === d0 && col("event_id") % 2 === 0)
-          .write.partitionBy("day").mode("overwrite").parquet(base)
-      } finally old match {
-        case Some(v) =>
-          s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-        case None =>
-          s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-      }
+      // the writer option scopes dynamic mode to this one write; the
+      // session conf stays as it is
+      ev.filter(col("day") === d0 && col("event_id") % 2 === 0)
+        .write.option("partitionOverwriteMode", "dynamic")
+        .partitionBy("day").mode("overwrite").parquet(base)
       s.read.parquet(base)
         // partition-column inference narrows day to INT32 on read-back;
         // restore the BIGINT the rest of the engine (and oracle) uses

@@ -27,22 +27,6 @@ object EventStream {
   def rawSchema(spark: SparkSession, dir: String): StructType =
     graft.Tables.load(spark, dir, "events").schema // memoized, glob-safe
 
-  /** Streaming state partitions are fixed per query at start (they live
-    * in the checkpoint for the query's lifetime), and every state store
-    * pays a per-partition commit on every micro-batch — so they must be
-    * sized to the STATE volume, not the session's core count. The bounded
-    * fixture replays carry a few thousand state rows; 8 partitions keeps
-    * the per-batch commit cost proportionate (32 was pure overhead). A
-    * production deployment sizes this once per query the same way.
-    */
-  private[streaming] def withStatePartitions[T](spark: SparkSession,
-                                                n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try f finally spark.conf.set(key, old)
-  }
-
   /** Unbounded events source from a fixture dir. The glob admits both
     * the driver's single-file layout (`events.parquet`) and the scaled
     * multi-part layout (`events-0000.parquet`…) ScaleGen emits so the
@@ -90,29 +74,24 @@ object EventStream {
     * shape a 100 TB ingest job checkpoints).
     */
   def runQualityGate(spark: SparkSession, dir: String,
-                     sinkDir: String): DataFrame =
-      withStatePartitions(spark, 8) {
+                     sinkDir: String): DataFrame = {
     import graft.text.TextAnalysis
     val docsSchema = graft.Tables.documents(spark, dir).schema
     val src = spark.readStream.schema(docsSchema)
       .option("pathGlobFilter", "documents*.parquet")
       .parquet(dir)
-    val q = src.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        TextAnalysis.withLangId(TextAnalysis.withQuality(batch))
-          .withColumn("reason",
-            when(col("n_chars") < 50, "too_short")
-              .when(col("quality_score") < 0.5, "low_quality")
-              .when(col("predicted_lang") =!= col("lang"), "lang_mismatch")
-              .otherwise("accept"))
-          .groupBy("lang", "reason")
-          .agg(count(lit(1)).as("n_docs"),
-               sum(col("n_chars")).as("sum_chars"))
-          .write.mode("append").parquet(sinkDir)
-      }
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    BoundedRun.foreachBatch(src) { (batch, _) =>
+      TextAnalysis.withLangId(TextAnalysis.withQuality(batch))
+        .withColumn("reason",
+          when(col("n_chars") < 50, "too_short")
+            .when(col("quality_score") < 0.5, "low_quality")
+            .when(col("predicted_lang") =!= col("lang"), "lang_mismatch")
+            .otherwise("accept"))
+        .groupBy("lang", "reason")
+        .agg(count(lit(1)).as("n_docs"),
+             sum(col("n_chars")).as("sum_chars"))
+        .write.mode("append").parquet(sinkDir)
+    }
     // partial per-batch summaries are mergeable: counts and exact sums add
     spark.read.parquet(sinkDir)
       .groupBy("lang", "reason")
@@ -140,15 +119,8 @@ object EventStream {
               graft.olap.Hll.zeroRegs(col("sk")).as("zero_regs"))
 
   def runHllDaily(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_hll"
-    val q = hllDaily(readEvents(spark, dir), "1 hour")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+    BoundedRun.toMemory(hllDaily(readEvents(spark, dir), "1 hour"),
+      "graft_stream_hll", "complete")
 
   /** Streaming quantiles — the production "p95 latency per window" need:
     * the STREAM maintains only DDSketch-style bucket counts per
@@ -159,9 +131,7 @@ object EventStream {
     * on the sketch-cardinality table. Same estimator definition as the
     * batch `sketch_ddsketch_quantiles`, so one oracle covers both.
     */
-  def runDdsketchDaily(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_ddsk"
+  def runDdsketchDaily(spark: SparkSession, dir: String): DataFrame = {
     val L = graft.functions.FixedLog2.log2_fp _
     val src = readEvents(spark, dir)
       .select(col("ts"), col("event_type"),
@@ -174,15 +144,11 @@ object EventStream {
     // State is bounded by the SKETCH cardinality (day cells × types ×
     // ~40 log2 buckets), independent of event volume — the same posture
     // as runHllDaily's register table.
-    val q = src
+    val sketch = src
       .groupBy(window(col("ts"), "1 day"), col("event_type"),
         col("bucket"))
       .agg(count(lit(1)).as("cnt"), min("cents").as("lo"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    val t = spark.table(name)
+    val t = BoundedRun.toMemory(sketch, "graft_stream_ddsk", "complete")
       .select(to_date(col("window.start")).as("date"), col("event_type"),
         col("bucket"), col("cnt"), col("lo"))
     // post-stream pick over the day-cell × type × bucket sketch table.
@@ -213,22 +179,15 @@ object EventStream {
     * (listing, schema, per-batch planning) twice for identical semantics,
     * and at 24 s it dominated the round-1 bench.
     */
-  def runDedupedCounts(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_dedup"
+  def runDedupedCounts(spark: SparkSession, dir: String): DataFrame = {
     val doubled = readEvents(spark, dir)
       .withColumn("attempt", explode(array(lit(1), lit(2))))
       .drop("attempt")
-    val q = doubled
+    BoundedRun.toMemory(doubled
       .withWatermark("ts", "1 hour")
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_unique"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+      .agg(count(lit(1)).as("n_unique")), "graft_stream_dedup", "complete")
   }
 
   /** Watermark-TTL'd streaming dedup: `dropDuplicatesWithinWatermark`
@@ -242,21 +201,15 @@ object EventStream {
     * event_id; the per-day report aggregates the emitted rows post-sink
     * — the operator under test is the dedup, not the count.
     */
-  def runDedupTtl(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_dedup_ttl"
+  def runDedupTtl(spark: SparkSession, dir: String): DataFrame = {
     val doubled = readEvents(spark, dir)
       .select("event_id", "ts", "event_type")
       .withColumn("attempt", explode(array(lit(1), lit(2))))
       .drop("attempt")
-    val q = doubled
+    BoundedRun.toMemory(doubled
       .withWatermark("ts", "1 hour")
-      .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+      .dropDuplicatesWithinWatermark("event_id"),
+      "graft_stream_dedup_ttl", "append")
       .groupBy(to_date(col("ts")).as("date"), col("event_type"))
       .agg(count(lit(1)).as("n_unique"))
   }
@@ -272,9 +225,7 @@ object EventStream {
     * this pins its STREAMING state machine (merge + watermark eviction).
     */
   def runSessionWindow(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_session_window"
-    val q = readEvents(spark, dir)
+    BoundedRun.toMemory(readEvents(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"),
         session_window(col("ts"), "30 minutes").as("sw"))
@@ -283,13 +234,8 @@ object EventStream {
              .as("sum_value"))
       .select(col("user_id"), col("sw.start").as("session_start"),
               col("sw.end").as("session_end_gap"),
-              col("n_events"), col("sum_value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+              col("n_events"), col("sum_value")),
+      "graft_stream_session_window", "append")
 
   /** Stream-stream time-bounded inner join: each purchase pairs with the
     * same user's views from the trailing hour. Both sides carry event-time
@@ -299,9 +245,7 @@ object EventStream {
     * the bounded replay every pair lands in the data micro-batch before
     * eviction, so the emitted set is exactly the batch join (the oracle).
     */
-  def runStreamStreamJoin(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_join"
+  def runStreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = readEvents(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id").as("p_user"),
@@ -311,17 +255,13 @@ object EventStream {
       .select(col("user_id"), col("ts").as("view_ts"),
               col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    val q = p.join(v,
+    BoundedRun.toMemory(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"))
       .select(col("event_id"), col("user_id"), col("p_ts").as("ts"),
-              col("view_ts"), col("view_value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+              col("view_ts"), col("view_value")),
+      "graft_stream_join", "append")
   }
 
   /** Stream-stream LEFT SEMI join — "purchases that HAD a view in their
@@ -336,9 +276,7 @@ object EventStream {
     * independent of watermark position and batch boundaries. State stays
     * bounded by the 1 h range condition on the view side as usual.
     */
-  def runStreamStreamSemiJoin(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_semi_join"
+  def runStreamStreamSemiJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = readEvents(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id").as("p_user"),
@@ -347,18 +285,14 @@ object EventStream {
     val v = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    val q = p.join(v,
+    BoundedRun.toMemory(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"),
         "left_semi")
       .select(col("event_id"), col("p_user").as("user_id"),
-              col("p_ts").as("ts"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+              col("p_ts").as("ts")),
+      "graft_stream_semi_join", "append")
   }
 
   /** Stream-stream LEFT OUTER join — the inner join above plus state
@@ -375,9 +309,7 @@ object EventStream {
     * outer-join completeness/latency trade every streaming engine makes,
     * mirrored by the oracle's threshold predicate.
     */
-  def runStreamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_left_join"
+  def runStreamStreamLeftJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = readEvents(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id").as("p_user"),
@@ -387,18 +319,14 @@ object EventStream {
       .select(col("user_id"), col("ts").as("view_ts"),
               col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    val q = p.join(v,
+    BoundedRun.toMemory(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"),
         "leftOuter")
       .select(col("event_id"), col("p_user").as("user_id"),
-              col("p_ts").as("ts"), col("view_ts"), col("view_value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+              col("p_ts").as("ts"), col("view_ts"), col("view_value")),
+      "graft_stream_left_join", "append")
   }
 
   /** Stream-stream FULL OUTER join — completes the join family: BOTH
@@ -413,9 +341,7 @@ object EventStream {
     * coalesce(purchase_id, view_id) is always defined, and engines
     * disagree on NULLS FIRST/LAST defaults.
     */
-  def runStreamStreamFullJoin(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_full_join"
+  def runStreamStreamFullJoin(spark: SparkSession, dir: String): DataFrame = {
     val ev = readEvents(spark, dir)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("purchase_id"),
@@ -425,19 +351,15 @@ object EventStream {
       .select(col("event_id").as("view_id"), col("user_id"),
               col("ts").as("view_ts"), col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    val q = p.join(v,
+    BoundedRun.toMemory(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"),
         "fullOuter")
       .select(col("purchase_id"), col("view_id"),
               coalesce(col("p_user"), col("user_id")).as("user_id"),
-              col("p_ts"), col("view_ts"), col("view_value"))
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+              col("p_ts"), col("view_ts"), col("view_value")),
+      "graft_stream_full_join", "append")
   }
 
   /** Stream-static enrichment: the unbounded event stream joined to a
@@ -448,22 +370,15 @@ object EventStream {
     * cheapest streaming join shape and the default way to attach
     * dimensions at scale.
     */
-  def runStaticEnrich(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_enrich"
+  def runStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     val dim = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    val q = readEvents(spark, dir)
+    BoundedRun.toMemory(readEvents(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"),
            sum(col("value").cast(DecimalType(18, 2))).cast("double")
-             .as("sum_value"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
+             .as("sum_value")), "graft_stream_enrich", "complete")
   }
 
   /** End-to-end exactly-once SINK: an at-least-once stream (every event
@@ -478,23 +393,18 @@ object EventStream {
     * upsert-less storage.
     */
   def runForeachBatchUpsert(spark: SparkSession, dir: String,
-                            sinkDir: String): DataFrame =
-      withStatePartitions(spark, 8) {
+                            sinkDir: String): DataFrame = {
     val doubled = readEvents(spark, dir)
       .withColumn("attempt", explode(array(lit(1), lit(2))))
       .drop("attempt")
       .select("event_id", "ts", "event_type", "value")
-    val q = doubled.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // in-batch dedup first (the doubled deliveries share a micro-
-        // batch), then the keyed anti-join against the sink handles
-        // cross-batch replays — together: exactly-once landing
-        graft.inc.Watermark.appendIdempotent(spark,
-          batch.dropDuplicates("event_id"), sinkDir, Seq("event_id"))
-      }
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    BoundedRun.foreachBatch(doubled) { (batch, _) =>
+      // in-batch dedup first (the doubled deliveries share a micro-
+      // batch), then the keyed anti-join against the sink handles
+      // cross-batch replays — together: exactly-once landing
+      graft.inc.Watermark.appendIdempotent(spark,
+        batch.dropDuplicates("event_id"), sinkDir, Seq("event_id"))
+    }
     spark.read.parquet(sinkDir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n_rows"),
@@ -517,42 +427,37 @@ object EventStream {
     * storage analog of the state store's delta files.
     */
   def runCdcApply(spark: SparkSession, dir: String,
-                  workDir: String): DataFrame =
-      withStatePartitions(spark, 8) {
+                  workDir: String): DataFrame = {
     val schema = rawSchema(spark, dir)
     val raw = spark.read.schema(schema).parquet(s"$dir/events*.parquet")
     for (k <- 0 to 2)
       raw.filter(pmod(col("event_id"), lit(3)) === k).coalesce(1)
         .write.mode("overwrite").parquet(s"$workDir/src/c$k")
     var lastVersion = -1L
-    val q = graft.Tables.normalizeTs(
+    val src = graft.Tables.normalizeTs(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(s"$workDir/src/c*"), "ts")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val ops = batch.select(col("user_id"), col("ts"), col("event_id"),
-          col("event_type").as("et"),
-          round(col("value") * 100, 0).cast("long").as("vc"),
-          lit(1L).as("n_ops"))
-        val all =
-          if (lastVersion < 0) ops
-          else spark.read.parquet(s"$workDir/state/v$lastVersion")
-            .unionByName(ops)
-        all.groupBy("user_id")
-          .agg(sum(col("n_ops")).as("n_ops"),
-            max_by(struct(col("ts"), col("event_id"), col("et"),
-                          col("vc")),
-                   struct(col("ts"), col("event_id"))).as("last"))
-          .select(col("user_id"), col("n_ops"), col("last.ts").as("ts"),
-                  col("last.event_id").as("event_id"),
-                  col("last.et").as("et"), col("last.vc").as("vc"))
-          .write.mode("overwrite").parquet(s"$workDir/state/v$batchId")
-        lastVersion = batchId
-      }
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    BoundedRun.foreachBatch(src) { (batch, batchId) =>
+      val ops = batch.select(col("user_id"), col("ts"), col("event_id"),
+        col("event_type").as("et"),
+        round(col("value") * 100, 0).cast("long").as("vc"),
+        lit(1L).as("n_ops"))
+      val all =
+        if (lastVersion < 0) ops
+        else spark.read.parquet(s"$workDir/state/v$lastVersion")
+          .unionByName(ops)
+      all.groupBy("user_id")
+        .agg(sum(col("n_ops")).as("n_ops"),
+          max_by(struct(col("ts"), col("event_id"), col("et"),
+                        col("vc")),
+                 struct(col("ts"), col("event_id"))).as("last"))
+        .select(col("user_id"), col("n_ops"), col("last.ts").as("ts"),
+                col("last.event_id").as("event_id"),
+                col("last.et").as("et"), col("last.vc").as("vc"))
+        .write.mode("overwrite").parquet(s"$workDir/state/v$batchId")
+      lastVersion = batchId
+    }
     spark.read.parquet(s"$workDir/state/v$lastVersion")
       .filter(col("et") =!= "error")
       .select(col("user_id"), col("n_ops"),
@@ -570,24 +475,19 @@ object EventStream {
     * picks up the feature value that was current at its event time.
     */
   def runAsOfEnrich(spark: SparkSession, dir: String,
-                    sinkDir: String): DataFrame =
-      withStatePartitions(spark, 8) {
+                    sinkDir: String): DataFrame = {
     val views = graft.Tables.events(spark, dir)
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("ts"), col("value"))
     val purchases = readEvents(spark, dir)
       .filter(col("event_type") === "purchase")
       .select("event_id", "user_id", "ts")
-    val q = purchases.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ts.AsOfJoin.asOf(batch, views, Seq("user_id"), "ts",
-            Seq("value"))
-          .select("event_id", "user_id", "ts", "asof_ts", "asof_value")
-          .write.mode("append").parquet(sinkDir)
-      }
-      .outputMode("append")
-      .start()
-    try q.processAllAvailable() finally q.stop()
+    BoundedRun.foreachBatch(purchases) { (batch, _) =>
+      graft.ts.AsOfJoin.asOf(batch, views, Seq("user_id"), "ts",
+          Seq("value"))
+        .select("event_id", "user_id", "ts", "asof_ts", "asof_value")
+        .write.mode("append").parquet(sinkDir)
+    }
     spark.read.parquet(sinkDir)
   }
 
@@ -597,15 +497,8 @@ object EventStream {
     * 2-batch replay.
     */
   def runTumblingDaily(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_daily"
-    val q = tumblingDaily(readEvents(spark, dir), "1 hour")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+    BoundedRun.toMemory(tumblingDaily(readEvents(spark, dir), "1 hour"),
+      "graft_stream_daily", "complete")
 
   /** Windowed top-k in streaming: the stream maintains per-(day, series)
     * counts (the same watermark-bounded tumbling aggregation as
@@ -615,17 +508,13 @@ object EventStream {
     * once the window is final, and sink-side it is a keyed window over
     * day-sized groups — never global state in the stream.
     */
-  def runWindowedTopk(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_wtopk"
-    val q = tumblingDaily(readEvents(spark, dir), "1 hour")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+  def runWindowedTopk(spark: SparkSession, dir: String): DataFrame = {
+    val counts = BoundedRun.toMemory(
+      tumblingDaily(readEvents(spark, dir), "1 hour"),
+      "graft_stream_wtopk", "complete")
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("date").orderBy(col("n").desc, col("event_type").asc)
-    spark.table(name)
+    counts
       .select(col("date"), col("event_type"), col("n"),
               row_number().over(w).cast("long").as("rnk"))
       .filter(col("rnk") <= 3)
@@ -639,22 +528,16 @@ object EventStream {
     * derivation is the identical lattice identity as the batch
     * agg_entropy_by_group, so streamed == batch bitwise.
     */
-  def runEntropyDaily(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_entropy"
-    val q = readEvents(spark, dir)
+  def runEntropyDaily(spark: SparkSession, dir: String): DataFrame = {
+    val counts = BoundedRun.toMemory(readEvents(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("c"))
       .select(to_date(col("window.start")).as("date"), col("event_type"),
-              col("c"))
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+              col("c")), "graft_stream_entropy", "complete")
     def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
     val L = graft.functions.FixedLog2.log2_fp _
-    spark.table(name)
+    counts
       .groupBy("date")
       .agg(sum(col("c")).as("n_events"),
            count(lit(1)).as("n_types"),
@@ -685,13 +568,6 @@ object EventStream {
               col("event_type"), col("n"), col("sum_value"))
 
   def runSlidingTwoDay(spark: SparkSession, dir: String): DataFrame =
-      withStatePartitions(spark, 8) {
-    val name = "graft_stream_sliding"
-    val q = slidingTwoDay(readEvents(spark, dir), "1 hour")
-      .writeStream.outputMode("complete")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
-    spark.table(name)
-  }
+    BoundedRun.toMemory(slidingTwoDay(readEvents(spark, dir), "1 hour"),
+      "graft_stream_sliding", "complete")
 }

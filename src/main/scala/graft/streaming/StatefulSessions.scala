@@ -103,8 +103,7 @@ object StatefulSessions {
     * This emitted set is deterministic and SQL-expressible (see the
     * stream_sessionize_stateful oracle in SparkEntry).
     */
-  def runOverFixture(spark: SparkSession, dir: String): DataFrame =
-      EventStream.withStatePartitions(spark, 8) {
+  def runOverFixture(spark: SparkSession, dir: String): DataFrame = {
     val emitted = sessions(EventStream.readEvents(spark, dir), 1800).toDF()
     spark.conf.getOption("spark.graft.stream.scalingSink")
         .filter(_.nonEmpty) match {
@@ -115,7 +114,7 @@ object StatefulSessions {
         // the MEMORY SINK holds the full emitted session set"). A
         // foreachBatch parquet append keeps each batch's rows on the
         // executors' write path instead; the emitted row SET is
-        // identical (StreamSpec pins it at fixture scale), and the
+        // identical (StatefulSessionsSpec pins it at fixture scale), and the
         // driver holds nothing. The driver surface never sets this
         // conf, so Bench/Verify/oracle runs use the memory sink
         // unchanged.
@@ -123,21 +122,12 @@ object StatefulSessions {
         val fs = org.apache.hadoop.fs.FileSystem.get(
           spark.sparkContext.hadoopConfiguration)
         fs.delete(new org.apache.hadoop.fs.Path(out), true)
-        val q = emitted.writeStream.outputMode("append")
-          .foreachBatch { (b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(out)
-          }
-          .start()
-        try q.processAllAvailable() finally q.stop()
+        BoundedRun.foreachBatch(emitted) { (b, _) =>
+          b.write.mode("append").parquet(out)
+        }
         spark.read.parquet(out)
       case None =>
-        val name = "graft_stream_sessions"
-        val q = emitted
-          .writeStream.outputMode("append")
-          .format("memory").queryName(name)
-          .start()
-        try q.processAllAvailable() finally q.stop()
-        spark.table(name)
+        BoundedRun.toMemory(emitted, "graft_stream_sessions", "append")
     }
   }
 }

@@ -93,20 +93,13 @@ object StreamNearDup {
     * return the distinct near-dup pair set (Hamming ≤ 1, 2×16-bit bands —
     * identical banding constants to the batch operator).
     */
-  def pairs(spark: SparkSession, dir: String): DataFrame =
-      EventStream.withStatePartitions(spark, 8) {
-    val name = "graft_stream_neardup"
+  def pairs(spark: SparkSession, dir: String): DataFrame = {
     val docsSchema = graft.Tables.documents(spark, dir).schema
     val src = spark.readStream.schema(docsSchema)
       .option("pathGlobFilter", "documents*.parquet")
       .parquet(dir)
-    val q = detect(banded(src))
-      .toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName(name)
-      .start()
-    try q.processAllAvailable() finally q.stop()
     // a pair whose members share BOTH bands emits once per band group
-    spark.table(name).distinct()
+    BoundedRun.toMemory(detect(banded(src)).toDF(), "graft_stream_neardup",
+      "append").distinct()
   }
 }

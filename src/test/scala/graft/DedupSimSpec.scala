@@ -170,6 +170,7 @@ class DedupSimSpec extends AnyFunSuite {
     val docs = Tables.documents(spark, sf)
       .select("doc_id", "text").as[(Long, String)].collect()
     implicit val sqlCtx = spark.sqlContext
+    // hand-run, not BoundedRun: two batches are added to one running query
     val mem = MemoryStream[(Long, String)]
     val src = mem.toDF().toDF("doc_id", "text")
     val q = graft.streaming.StreamNearDup

@@ -352,6 +352,29 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(oracleNames.toSet == SparkEntry.oracleSql.keySet)
   }
 
+  test("bounded streams start, drain and stop only in BoundedRun") {
+    // one lifecycle for every bounded stream: outside comments, the
+    // stream-writing calls occur once each in src/main, all in
+    // streaming/BoundedRun.scala — a hand-written lifecycle anywhere
+    // else fails here
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    val calls = Seq("writeStream", "processAllAvailable", "format(\"memory\")")
+    val hits = for {
+      p <- files
+      code = comment.replaceAllIn(new String(java.nio.file.Files
+        .readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8), "")
+      c <- calls
+      n = code.split(java.util.regex.Pattern.quote(c), -1).length - 1
+      if n > 0
+    } yield (root.relativize(p).toString, c, n)
+    assert(hits.sortBy(_._2) ==
+      calls.map(c => ("graft/streaming/BoundedRun.scala", c, 1)).sortBy(_._2))
+  }
+
   test("kcore median is a degree histogram pick — no window over the node frame") {
     import spark.implicits._
     // degrees of the PackRankSpec hand graph: (d,n)-sorted

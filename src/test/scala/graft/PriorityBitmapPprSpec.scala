@@ -607,8 +607,11 @@ class PriorityBitmapPprSpec extends AnyFunSuite {
       dst.setLastModified(1700000000000L + i * 60000L)
       i += 1
     }
+    // one file per micro-batch, so join state and watermark eviction
+    // carry across batches
     val ev = spark.readStream.schema(
-      org.apache.spark.sql.types.StructType.fromDDL(schema)).parquet(data)
+      org.apache.spark.sql.types.StructType.fromDDL(schema))
+      .option("maxFilesPerTrigger", 1).parquet(data)
     val p = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id").as("p_user"),
         col("ts").as("p_ts"))
@@ -617,17 +620,12 @@ class PriorityBitmapPprSpec extends AnyFunSuite {
       .select(col("user_id"), col("ts").as("view_ts"),
         col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    val q = p.join(v,
+    val got = graft.streaming.BoundedRun.toMemory(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"), "leftOuter")
       .select(col("event_id"), col("p_user"), col("p_ts"),
-        col("view_ts"), col("view_value"))
-      .writeStream.outputMode("append")
-      .option("maxFilesPerTrigger", 1)
-      .format("memory").queryName("sslj_mem").start()
-    try q.processAllAvailable() finally q.stop()
-    val got = spark.table("sslj_mem").collect()
+        col("view_ts"), col("view_value")), "sslj_mem", "append").collect()
       .map(r => (r.getLong(0), Option(r.get(3)).map(_.toString)))
       .toSet
     // final watermark = min(max p_ts, max view_ts) - 1h

@@ -60,6 +60,7 @@ class SourceSpec extends AnyFunSuite {
   }
 
   test("micro-batch stream runs in chunks and converges to the batch answer") {
+    // hand-run, not BoundedRun: it sets a trigger and reads recentProgress
     import org.apache.spark.sql.streaming.Trigger
     val q = spark.readStream.format("graft-series")
       .option("symbols", "SPY,QQQ")

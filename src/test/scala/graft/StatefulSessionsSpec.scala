@@ -68,11 +68,9 @@ class StatefulSessionsSpec extends AnyFunSuite {
         .toDF("ts", "user_id", "value").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/b*")
-    val q = StatefulSessions.sessions(src, 1800).toDF()
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_ss_timeout_test").start()
-    try q.processAllAvailable() finally q.stop()
-    val emitted = spark.table("graft_ss_timeout_test").collect()
+    val emitted = graft.streaming.BoundedRun.toMemory(
+      StatefulSessions.sessions(src, 1800).toDF(), "graft_ss_timeout_test",
+      "append").collect()
     // user 1's session must have been closed by timeout, not by a gap event
     assert(emitted.exists(r => r.getAs[Long]("user_id") == 1L
       && r.getAs[Double]("sum_value") == 5.0))

@@ -154,11 +154,9 @@ class StreamAsofSpec extends AnyFunSuite {
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/b*")
-    val q = EventStream.tumblingDaily(src, "1 hour")
-      .writeStream.outputMode("append")
-      .format("memory").queryName("graft_stream_append_test").start()
-    try q.processAllAvailable() finally q.stop()
-    val emitted = spark.table("graft_stream_append_test")
+    val emitted = graft.streaming.BoundedRun.toMemory(
+        EventStream.tumblingDaily(src, "1 hour"), "graft_stream_append_test",
+        "append")
       .select("date").collect().map(_.getDate(0).toString).sorted
     // day 3's window is still open (watermark = day3 10:00 - 1h), so only
     // days 1 and 2 may be emitted; day 1 must be (watermark passed it)
