@@ -1,9 +1,9 @@
 package graft.olap
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
+
+import graft.io.WorkDir
 
 /** Bucketed-table layout — the batch analog of co-partitioning.
   *
@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions.col
   */
 object Layout {
 
-  /** Persist `df` as an external bucketed+sorted table (under a fresh temp
-    * dir) and return the catalog-backed frame.
+  /** Persist `df` as an external bucketed+sorted table (under a fresh
+    * `WorkDir`) and return the catalog-backed frame.
     *
     * The `repartition(buckets, key)` aligns write-task partitioning with
     * the bucket function (both Murmur3 pmod), yielding ONE file per bucket
@@ -30,7 +30,7 @@ object Layout {
     */
   def writeBucketed(spark: SparkSession, df: DataFrame, table: String,
                     key: String, buckets: Int): DataFrame = {
-    val path = Files.createTempDirectory(s"graft_bucket_$table").toString
+    val path = WorkDir.create(s"graft_bucket_$table").toString
     spark.sql(s"DROP TABLE IF EXISTS $table")
     df.repartition(buckets, col(key))
       .write.mode(SaveMode.Overwrite)

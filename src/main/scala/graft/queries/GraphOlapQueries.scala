@@ -21,8 +21,7 @@ object GraphOlapQueries {
     // assertions live in BucketingSpec; the oracle checks the data
     // survived the rewrite bit-for-bit.
     "layout_compact_small_files" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_compact").toString
+      val base = graft.io.WorkDir.create("graft_compact").toString
       Tables.events(s, dir).select("event_id", "event_type", "value")
         .repartition(64)
         .write.mode("overwrite").parquet(s"$base/frag")
@@ -89,8 +88,7 @@ object GraphOlapQueries {
     // BucketingSpec pins both). At 100 TB this is THE first-line scan
     // reducer: partition by the column every query filters on.
     "layout_partition_prune" -> ((s, dir) => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_part_events").toString
+      val path = graft.io.WorkDir.create("graft_part_events").toString
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
         .write.mode("overwrite").partitionBy("event_type").parquet(path)
@@ -1259,8 +1257,7 @@ object GraphOlapQueries {
     // against the full per-day source counts. A partition the sweep
     // should have dropped but didn't (or vice versa) fails the oracle.
     "layout_ttl_sweep" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_ttl").toString
+      val base = graft.io.WorkDir.create("graft_ttl").toString
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("ts"),
           date_format(to_date(col("ts")), "yyyy-MM-dd").as("dt"))

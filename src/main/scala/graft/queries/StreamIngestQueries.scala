@@ -635,8 +635,7 @@ object StreamIngestQueries {
     // into parquet; the sink holds each event exactly once (n_rows ==
     // n_unique is part of the checked output).
     "stream_foreach_upsert" -> ((s, dir) => {
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft_upsert_sink").toString
+      val sink = graft.io.WorkDir.create("graft_upsert_sink").toString
       graft.streaming.EventStream.runForeachBatchUpsert(s, dir, sink)
         .orderBy("event_type")
     }),
@@ -649,15 +648,13 @@ object StreamIngestQueries {
     // stream: row-local rules mean per-batch partial summaries ADD, so
     // streamed == batch bitwise — same oracle as pipeline_quality_gate.
     "stream_quality_gate" -> ((s, dir) => {
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft_gate_sink").toString
+      val sink = graft.io.WorkDir.create("graft_gate_sink").toString
       graft.streaming.EventStream.runQualityGate(s, dir, sink)
         .orderBy("lang", "reason")
     }),
 
     "stream_asof_enrich" -> ((s, dir) => {
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft_asof_sink").toString
+      val sink = graft.io.WorkDir.create("graft_asof_sink").toString
       graft.streaming.EventStream.runAsOfEnrich(s, dir, sink)
         .orderBy("event_id")
     }),
@@ -743,8 +740,7 @@ object StreamIngestQueries {
     // The append-only schema-drift story every long-lived 100 TB table
     // eventually needs.
     "inc_schema_evolution" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_schema_evo").toString
+      val base = graft.io.WorkDir.create("graft_schema_evo").toString
       val o = Tables.orders(s, dir)
       o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
@@ -821,8 +817,7 @@ object StreamIngestQueries {
     // overwrite would truncate the whole table). The read-back report
     // certifies exactly one day changed.
     "inc_dynamic_partition_overwrite" -> ((s, dir) => {
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_dyn_overwrite").toString
+      val base = graft.io.WorkDir.create("graft_dyn_overwrite").toString
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("user_id"),
                 Exact.cents(col("value")).as("cents"),
@@ -849,8 +844,7 @@ object StreamIngestQueries {
     // compare itself pins streamed == batch (see EventStream.runCdcApply
     // for why deletes must stay in state until read time).
     "stream_cdc_apply" -> ((s, dir) => {
-      val work = java.nio.file.Files
-        .createTempDirectory("graft_cdc_stream").toString
+      val work = graft.io.WorkDir.create("graft_cdc_stream").toString
       graft.streaming.EventStream.runCdcApply(s, dir, work)
         .orderBy("user_id")
     }),

@@ -352,27 +352,56 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(oracleNames.toSet == SparkEntry.oracleSql.keySet)
   }
 
+  /** Every source file under src/main/scala, by path relative to it, with
+    * its comments removed.
+    */
+  private lazy val mainCode: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .map(p => root.relativize(p).toString -> comment.replaceAllIn(
+        new String(java.nio.file.Files.readAllBytes(p),
+          java.nio.charset.StandardCharsets.UTF_8), ""))
+  }
+
   test("bounded streams start, drain and stop only in BoundedRun") {
     // one lifecycle for every bounded stream: outside comments, the
     // stream-writing calls occur once each in src/main, all in
     // streaming/BoundedRun.scala — a hand-written lifecycle anywhere
     // else fails here
-    import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
-    val files = java.nio.file.Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
     val calls = Seq("writeStream", "processAllAvailable", "format(\"memory\")")
     val hits = for {
-      p <- files
-      code = comment.replaceAllIn(new String(java.nio.file.Files
-        .readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8), "")
+      (path, code) <- mainCode
       c <- calls
       n = code.split(java.util.regex.Pattern.quote(c), -1).length - 1
       if n > 0
-    } yield (root.relativize(p).toString, c, n)
+    } yield (path, c, n)
     assert(hits.sortBy(_._2) ==
       calls.map(c => ("graft/streaming/BoundedRun.scala", c, 1)).sortBy(_._2))
+  }
+
+  test("src/main starts no process and makes temp directories only in WorkDir") {
+    // a fork costs milliseconds and books as no Spark layer; work
+    // directories go through the one helper that deletes them at exit
+    val fork = """ProcessBuilder|sys\.process|Runtime\.getRuntime(\(\))?\.exec""".r
+    val forks = mainCode.filter(c => fork.findFirstIn(c._2).isDefined)
+      .map(_._1)
+    assert(forks.isEmpty, s"process starts in ${forks.mkString(", ")}")
+    val temp = mainCode.filter(_._2.contains("createTempDirectory")).map(_._1)
+    assert(temp == Seq("graft/io/WorkDir.scala"))
+  }
+
+  test("every class core-site.xml names loads") {
+    import scala.jdk.CollectionConverters._
+    val conf = new org.apache.hadoop.conf.Configuration(false)
+    conf.addResource("core-site.xml")
+    val entries = conf.iterator().asScala.map(e => e.getKey -> e.getValue)
+      .toMap
+    assert(entries.keySet == Set("fs.file.impl",
+      "fs.AbstractFileSystem.file.impl"))
+    for (cls <- entries.values) assert(conf.getClassByName(cls) != null, cls)
   }
 
   test("kcore median is a degree histogram pick — no window over the node frame") {

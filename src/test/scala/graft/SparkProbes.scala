@@ -1,9 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Path}
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
 
 import org.apache.logging.log4j.{Level, LogManager}
 import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
@@ -13,7 +18,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** Spec helpers that observe a session from outside: the Spark jobs a
-  * block starts, and the log lines it writes.
+  * block starts, the log lines it writes, and the file-system subprocesses
+  * it forks.
   */
 object SparkProbes {
 
@@ -73,6 +79,39 @@ object SparkProbes {
       logger.removeAppender(appender)
       logger.setLevel(prev)
       appender.stop()
+    }
+  }
+
+  /** The commands Hadoop's local file system forks when it has no native
+    * library: permission, link and status checks.
+    */
+  private val FsCommands = Set("chmod", "readlink", "ls", "stat")
+
+  /** Runs `body` and returns its result with the `chmod`, `readlink`,
+    * `ls` and `stat` commands started while it ran on paths under `dir`,
+    * recorded as JFR `jdk.ProcessStart` events. JFR sees the whole JVM, so
+    * the directory filter keeps out other work running meanwhile.
+    */
+  def subprocesses[T](dir: Path)(body: => T): (T, Seq[String]) = {
+    val roots = Seq(dir.toString, dir.toRealPath().toString).distinct
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val r = try body finally rec.stop()
+    val dump = Files.createTempFile("graft_probe", ".jfr")
+    try {
+      rec.dump(dump)
+      val commands = RecordingFile.readAllEvents(dump).asScala.toSeq
+        .map(_.getString("command"))
+        .filter { c =>
+          val exe = c.takeWhile(_ != ' ')
+          FsCommands(exe.substring(exe.lastIndexOf('/') + 1)) &&
+            roots.exists(c.contains)
+        }
+      (r, commands)
+    } finally {
+      rec.close()
+      Files.deleteIfExists(dump)
     }
   }
 }
