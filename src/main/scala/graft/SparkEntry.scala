@@ -40,37 +40,40 @@ object SparkEntry {
       .orderBy("date")
   }
 
-  /** One entry per implemented operator from SURVEY.md §2 — definitions
-    * live in the graft.queries.* family modules (mechanical split, round
-    * 7); merged here so the driver contract is unchanged.
+  /** Every query, one `Query` record each, from the graft.queries.* family
+    * modules. A name may occur once; the contract maps below are
+    * derived from this Seq, so each query's closure and oracle cannot fall
+    * out of step.
     */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.TsQueries.queries ++
-      graft.queries.AggQueries.queries ++
-      graft.queries.TextSimQueries.queries ++
-      graft.queries.GraphOlapQueries.queries ++
-      graft.queries.StreamIngestQueries.queries ++
-      graft.queries.WarehouseQueries.queries
+  private[graft] lazy val all: Seq[Query] = Query.requireDistinct(
+    graft.queries.TsQueries.all ++
+      graft.queries.AggQueries.all ++
+      graft.queries.TextSimQueries.all ++
+      graft.queries.GraphOlapQueries.all ++
+      graft.queries.StreamIngestQueries.all ++
+      graft.queries.WarehouseQueries.all)
 
-  /** The oracle-exemption REGISTRY — queries exempt BY DESIGN, not by
-    * omission: the lossy JPEG round-trips (JPEG's IDCT is spec'd with a
-    * tolerance, so no SQL can replay the decoded pixels bitwise) carry
-    * the spec-checked determinism/fidelity contract instead
-    * (PropertySpec). Lives in main code so graft.Verify can write it
-    * into each round's ledger (VERIFY_r{N}.json) and OhlcSpec pins
-    * `oracleSql.keySet == queries.keySet -- oracleExempt` against it —
-    * one registry, three consumers.
-    */
-  val oracleExempt: Set[String] = Set("mm_jpeg_decode", "mm_mjpeg_scene_cut")
+  private lazy val byName = all.map(q => q.name -> q.run).toMap
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  private lazy val sqlByName =
+    all.collect { case Query(n, _, Some(sql)) => n -> sql }.toMap
+
+  /** Each query's closure `(spark, sfDir) => DataFrame`, by name. */
+  def queries: Map[String, (SparkSession, String) => DataFrame] = byName
+
+  /** The queries exempt from the oracle BY DESIGN, not by omission — the
+    * records whose oracle is `None`: the lossy JPEG round-trips (JPEG's
+    * IDCT is spec'd with a tolerance, so no SQL can replay the decoded
+    * pixels bitwise) carry the spec-checked determinism/fidelity contract
+    * instead (PropertySpec). graft.Verify writes it into each round's
+    * ledger (VERIFY_r{N}.json), and OhlcSpec pins the set exactly, so an
+    * omitted oracle fails a test.
     */
-  def oracleSql: Map[String, String] =
-    graft.queries.TsQueries.oracles ++
-      graft.queries.AggQueries.oracles ++
-      graft.queries.TextSimQueries.oracles ++
-      graft.queries.GraphOlapQueries.oracles ++
-      graft.queries.StreamIngestQueries.oracles ++
-      graft.queries.WarehouseQueries.oracles
+  lazy val oracleExempt: Set[String] =
+    all.collect { case Query(n, _, None) => n }.toSet
+
+  /** For each key in queries outside oracleExempt, equivalent ANSI SQL
+    * runnable by DuckDB on the same parquet tables.
+    */
+  def oracleSql: Map[String, String] = sqlByName
 }

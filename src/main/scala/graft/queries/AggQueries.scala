@@ -1,25 +1,24 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.CacheRegistry.QueryCached
 import graft.olap.Exact
 import Shared._
 
-/** Statistical aggregate (agg_*) family — query + oracle definitions, mechanically split
-  * out of SparkEntry (round 7, VERDICT r6 item 7): entry text is
-  * verbatim, zero behavior change; SparkEntry merges the family maps
-  * back into the single driver contract.
+/** Statistical aggregate (agg_*) family — one `Query` record per
+  * query, its DuckDB oracle next to its Spark closure; SparkEntry
+  * concatenates the family Seqs into `queries`/`oracleSql`.
   */
 object AggQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[Query] = Seq(
     // 2-D histogram (value decile band × ISO weekday): the heatmap feed
     // a monitoring dashboard renders — two integer bucketings, one
     // partial-aggregable groupBy, exact cent sums per cell.
-    "agg_heatmap_2d" -> ((s, dir) =>
+    Query("agg_heatmap_2d", (s, dir) =>
       Tables.events(s, dir)
         .withColumn("cc", Exact.cents(col("value")))
         .select(
@@ -29,7 +28,15 @@ object AggQueries {
           col("cc"))
         .groupBy("value_band", "dow")
         .agg(count(lit(1)).as("n"), sum(col("cc")).as("sum_cents"))
-        .orderBy("value_band", "dow")),
+        .orderBy("value_band", "dow"),
+      Some("""WITH c AS (SELECT CAST(round(value * 100, 0) AS BIGINT) AS cc,
+                           isodow(CAST(ts AS DATE)) AS dow
+                    FROM events)
+         SELECT (cc - ((cc % 10000) + 10000) % 10000) // 10000
+                  AS value_band,
+                CAST(dow AS BIGINT) AS dow, count(*) AS n,
+                CAST(sum(cc) AS BIGINT) AS sum_cents
+         FROM c GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // Chi-square independence test, per cell: is event type independent of
     // ISO weekday? Every cell carries its exact rational contribution —
@@ -38,7 +45,7 @@ object AggQueries {
     // for the double. No summed-doubles total (accumulation order is not
     // portable); a consumer sums the rationals. Marginals come from one
     // count pass re-aggregated two ways — all partial-aggregable.
-    "agg_chi2_contingency" -> ((s, dir) => {
+    Query("agg_chi2_contingency", (s, dir) => {
       val cells = Tables.events(s, dir)
         .groupBy(col("event_type"),
           (weekday(col("ts").cast("date")) + 1).cast("long").as("dow"))
@@ -61,13 +68,38 @@ object AggQueries {
         .withColumn("chi2_cell",
           col("chi2_num").cast("double") / col("chi2_den").cast("double"))
         .orderBy("event_type", "dow")
-    }),
+    },
+      Some("""WITH cells AS (SELECT event_type,
+                               CAST(isodow(CAST(ts AS DATE)) AS BIGINT)
+                                 AS dow,
+                               count(*) AS o
+                        FROM events GROUP BY 1, 2),
+              rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS r
+                     FROM cells GROUP BY 1),
+              ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c
+                     FROM cells GROUP BY 1),
+              n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells),
+              j AS (SELECT cells.event_type, cells.dow, cells.o,
+                           rt.r, ct.c, n.n,
+                           cells.o * n.n - rt.r * ct.c AS dev
+                    FROM cells
+                    JOIN rt ON rt.event_type = cells.event_type
+                    JOIN ct ON ct.dow = cells.dow
+                    CROSS JOIN n)
+         SELECT event_type, dow, o, r, c,
+                CAST(CAST(dev AS HUGEINT) * CAST(dev AS HUGEINT)
+                     AS BIGINT) AS chi2_num,
+                n * r * c AS chi2_den,
+                CAST(CAST(CAST(dev AS HUGEINT) * CAST(dev AS HUGEINT)
+                          AS BIGINT) AS DOUBLE)
+                  / CAST(n * r * c AS DOUBLE) AS chi2_cell
+         FROM j ORDER BY event_type, dow""")),
 
     // Herfindahl concentration index per month: Σ share² of event-type
     // revenue — deliberately the RATIONAL concentration metric (entropy
     // needs ln, which is not bit-portable); exact long numerator Σcᵢ²
     // and denominator (Σc)², one division.
-    "agg_concentration_hhi" -> ((s, dir) =>
+    Query("agg_concentration_hhi", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(date_trunc("month", col("ts")).cast("date").as("month"),
                  col("event_type"))
@@ -86,13 +118,25 @@ object AggQueries {
         .select(col("month"), col("n_types"),
           (col("s2").cast("double") / (col("s1") * col("s1")).cast("double"))
             .as("hhi"))
-        .orderBy("month")),
+        .orderBy("month"),
+      Some("""WITH s AS (SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
+                           event_type,
+                           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+                                AS BIGINT) AS c
+                    FROM events GROUP BY 1, 2),
+              m AS (SELECT month, event_type,
+                           (c - (((c % 100) + 100) % 100)) // 100 AS d
+                    FROM s)
+         SELECT month, count(*) AS n_types,
+                CAST(sum(d * d) AS DOUBLE)
+                  / CAST(sum(d) * sum(d) AS DOUBLE) AS hhi
+         FROM m GROUP BY 1 ORDER BY 1""")),
 
     // Gini coefficient per group from the rank formula
     // G = (2·Σ(i·xᵢ) − (n+1)·Σx) / (n·Σx) over ascending cents — the
     // numerator and denominator are exact longs (value-equal rank swaps
     // cannot change Σ i·xᵢ), one final division.
-    "agg_gini" -> ((s, dir) => {
+    Query("agg_gini", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("cents"), col("event_id"))
       Tables.events(s, dir)
@@ -108,13 +152,27 @@ object AggQueries {
             .cast("double") / (col("n") * col("sx")).cast("double"))
             .as("gini"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH v AS (SELECT event_type, event_id,
+                           CAST(round(value * 100, 0) AS BIGINT) AS cents
+                    FROM events),
+              r AS (SELECT event_type, cents,
+                           CAST(row_number() OVER (PARTITION BY event_type
+                             ORDER BY cents, event_id) AS BIGINT) AS rn
+                    FROM v),
+              g AS (SELECT event_type, count(*) AS n, sum(cents) AS sx,
+                           sum(rn * cents) AS six
+                    FROM r GROUP BY 1)
+         SELECT event_type, n,
+                CAST(2 * six - (n + 1) * sx AS DOUBLE)
+                  / CAST(n * sx AS DOUBLE) AS gini
+         FROM g ORDER BY 1""")),
 
     // Winsorization: clamp values at the exact positional p05/p95 per
     // group (k = ceil(q·n) in integer math, same rank both engines) and
     // report clamp counts + the winsorized mean — the outlier-capping
     // cleaning pass, exact end to end.
-    "agg_winsorize" -> ((s, dir) => {
+    Query("agg_winsorize", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
       val v = Tables.events(s, dir)
         .select(col("event_type"), col("event_id"),
@@ -146,12 +204,39 @@ object AggQueries {
           (col("sc").cast("double") / col("n").cast("double") / lit(100.0))
             .as("winsorized_mean"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH v AS (SELECT event_type, event_id,
+                           CAST(round(value * 100, 0) AS BIGINT) AS cents
+                    FROM events),
+              nn AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
+              r AS (SELECT v.event_type, v.cents, nn.n,
+                           row_number() OVER (PARTITION BY v.event_type
+                             ORDER BY cents, event_id) AS rn
+                    FROM v JOIN nn USING (event_type)),
+              b AS (SELECT event_type, min(cents) AS p05_cents,
+                           max(cents) AS p95_cents
+                    FROM r WHERE rn = (n * 5 + 99) // 100
+                       OR rn = (n * 95 + 99) // 100
+                    GROUP BY 1),
+              c AS (SELECT v.event_type, cents, p05_cents, p95_cents,
+                           greatest(least(cents, p95_cents), p05_cents) AS cl
+                    FROM v JOIN b USING (event_type))
+         SELECT event_type, count(*) AS n,
+                CAST(p05_cents AS DOUBLE) / 100.0 AS p05,
+                CAST(p95_cents AS DOUBLE) / 100.0 AS p95,
+                CAST(sum(CASE WHEN cents < p05_cents THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_clamped_low,
+                CAST(sum(CASE WHEN cents > p95_cents THEN 1 ELSE 0 END)
+                     AS BIGINT) AS n_clamped_high,
+                CAST(sum(cl) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 100.0
+                  AS winsorized_mean
+         FROM c GROUP BY event_type, p05_cents, p95_cents
+         ORDER BY event_type""")),
 
     // Ratio-to-report: per (series, month) value share within the month
     // and of the grand total — numerators and denominators all exact long
     // cents (order-independent), one fixed double division each.
-    "agg_share_of_total" -> ((s, dir) => {
+    Query("agg_share_of_total", (s, dir) => {
       val m = Tables.events(s, dir)
         .groupBy(col("event_type"),
                  date_trunc("month", col("ts")).cast("date").as("month"))
@@ -168,12 +253,26 @@ object AggQueries {
           (col("c").cast("double") / col("tc").cast("double"))
             .as("share_of_total"))
         .orderBy("event_type", "month")
-    }),
+    },
+      Some("""WITH m AS (SELECT event_type,
+                           CAST(date_trunc('month', ts) AS DATE) AS month,
+                           count(*) AS n,
+                           sum(CAST(round(value * 100, 0) AS BIGINT)) AS c
+                    FROM events GROUP BY 1, 2),
+              w AS (SELECT event_type, month, n, c,
+                           sum(c) OVER (PARTITION BY month) AS mc,
+                           sum(c) OVER () AS tc
+                    FROM m)
+         SELECT event_type, month, n,
+                CAST(c AS DOUBLE) / 100.0 AS sum_value,
+                CAST(c AS DOUBLE) / CAST(mc AS DOUBLE) AS share_of_month,
+                CAST(c AS DOUBLE) / CAST(tc AS DOUBLE) AS share_of_total
+         FROM w ORDER BY event_type, month""")),
 
     // Wide-scan grouped aggregation (TPC-H Q1 shape): full map-side partial
     // agg, 4-group shuffle, exact decimal sums. The scan reads only the 7
     // referenced columns (check ReadSchema in .explain).
-    "agg_pricing_summary" -> ((s, dir) =>
+    Query("agg_pricing_summary", (s, dir) =>
       Tables.lineitem(s, dir)
         // raw-timestamp filter (ship timestamps are midnight-only): a
         // to_date() wrapper would block parquet predicate pushdown
@@ -189,31 +288,58 @@ object AggQueries {
           (sum(Exact.rate(col("l_discount"))).cast("double")
             / count(lit(1)).cast("double")).as("avg_disc"),
           count(lit(1)).as("n"))
-        .orderBy("l_returnflag", "l_linestatus")),
+        .orderBy("l_returnflag", "l_linestatus"),
+      Some(s"""SELECT l_returnflag, l_linestatus,
+                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                   AS sum_base_price,
+                 CAST(sum(${Exact.revenueSql}) AS DOUBLE) AS sum_disc_price,
+                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+                   / CAST(count(*) AS DOUBLE) AS avg_qty,
+                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+                   / CAST(count(*) AS DOUBLE) AS avg_price,
+                 CAST(sum(CAST(l_discount AS DECIMAL(8,2))) AS DOUBLE)
+                   / CAST(count(*) AS DOUBLE) AS avg_disc,
+                 count(*) AS n
+          FROM lineitem
+          WHERE CAST(l_shipdate AS DATE) <= DATE '2000-12-31'
+          GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // Distinct aggregation (planned as Expand + two-phase agg): exact
     // distinct counts alongside plain counts.
-    "agg_distinct_parts" -> ((s, dir) =>
+    Query("agg_distinct_parts", (s, dir) =>
       Tables.lineitem(s, dir)
         .groupBy("l_returnflag")
         .agg(countDistinct(col("l_partkey")).as("n_parts"),
              countDistinct(col("l_suppkey")).as("n_supps"),
              count(lit(1)).as("n_rows"))
-        .orderBy("l_returnflag")),
+        .orderBy("l_returnflag"),
+      Some("""SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
+                count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
+         FROM lineitem GROUP BY 1 ORDER BY 1""")),
 
     // Exact distributed order statistics: per-series value deciles via a
     // keyed window (rank + per-group count, positions by integer
     // arithmetic — no interpolation, so the decile values are rows that
     // exist and compare bitwise). The window partitions by series; at
     // scale this is one exchange on the series key, like any keyed sort.
-    "agg_value_deciles" -> ((s, dir) =>
+    Query("agg_value_deciles", (s, dir) =>
       graft.olap.OrderStats.deciles(Tables.events(s, dir),
           Seq("event_type"), "value", "event_id")
-        .orderBy("event_type", "decile")),
+        .orderBy("event_type", "decile"),
+      Some("""WITH r AS (SELECT event_type, event_id, value,
+                      CAST(row_number() OVER (PARTITION BY event_type
+                        ORDER BY value, event_id) AS BIGINT) AS rn,
+                      count(*) OVER (PARTITION BY event_type) AS cnt
+                    FROM events)
+         SELECT event_type, CAST(q AS BIGINT) AS decile, value
+         FROM r, unnest(generate_series(1, 9)) AS t(q)
+         WHERE ((cnt - 1) * q) // 10 + 1 = rn
+         ORDER BY event_type, decile""")),
 
     // Rollup (grouping sets): per-(flag,status) + per-flag + grand total
     // in one pass; grouping_id distinguishes the levels.
-    "agg_rollup_counts" -> ((s, dir) =>
+    Query("agg_rollup_counts", (s, dir) =>
       Tables.lineitem(s, dir)
         .rollup(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
@@ -221,7 +347,15 @@ object AggQueries {
                .as("sum_qty"),
              grouping_id().cast("long").as("lvl"))
         .orderBy(col("lvl"), col("l_returnflag").asc_nulls_first,
-                 col("l_linestatus").asc_nulls_first)),
+                 col("l_linestatus").asc_nulls_first),
+      Some("""SELECT l_returnflag, l_linestatus, count(*) AS n,
+                CAST(sum(CAST(round(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
+                  / 100.0 AS sum_qty,
+                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
+                  AS BIGINT) AS lvl
+         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
+         ORDER BY lvl, l_returnflag ASC NULLS FIRST,
+                  l_linestatus ASC NULLS FIRST""")),
 
     // Quantile-forecast evaluation: pinball (quantile) loss of the
     // constant τ-quantile predictor per series, τ ∈ {0.5, 0.9} — the
@@ -232,7 +366,7 @@ object AggQueries {
     // ×10-scaled integer sum (τ=0.9 → 9·over/1·under, τ=0.5 → 5/5), so
     // the whole evaluation is order-free with two final double
     // divisions. One keyed rank window + two partial-aggregable passes.
-    "agg_pinball_loss" -> ((s, dir) => {
+    Query("agg_pinball_loss", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
       val v = Tables.events(s, dir)
         .select(col("event_type"), Exact.cents(col("value")).as("cents"))
@@ -264,13 +398,48 @@ object AggQueries {
           (col("l90").cast("double") / (col("n") * lit(1000L))
             .cast("double")).as("pinball_90"))
         .orderBy("event_type")
-    }),
+    },
+      // same cents lattice + positional quantiles; the ×10-scaled losses
+      // are exact integer sums, HUGEINT routed through BIGINT
+      Some("""WITH v AS (SELECT event_type,
+                      CAST(round(value * 100, 0) AS BIGINT) AS cents
+                    FROM events),
+            r AS (SELECT event_type, cents,
+                    row_number() OVER (PARTITION BY event_type
+                      ORDER BY cents) AS rn,
+                    count(*) OVER (PARTITION BY event_type) AS n
+                  FROM v),
+            q AS (SELECT event_type,
+                    min(CASE WHEN rn = (n + 1) // 2 THEN cents END)
+                      AS q50c,
+                    min(CASE WHEN rn = (9 * n + 9) // 10 THEN cents END)
+                      AS q90c
+                  FROM r GROUP BY 1),
+            l AS (SELECT v.event_type, q.q50c, q.q90c,
+                    count(*) AS n,
+                    CAST(sum(CASE WHEN cents >= q50c
+                                  THEN (cents - q50c) * 5
+                                  ELSE (q50c - cents) * 5 END)
+                      AS BIGINT) AS l50,
+                    CAST(sum(CASE WHEN cents >= q90c
+                                  THEN (cents - q90c) * 9
+                                  ELSE q90c - cents END)
+                      AS BIGINT) AS l90
+                  FROM v JOIN q USING (event_type) GROUP BY 1, 2, 3)
+         SELECT event_type, n,
+                CAST(q50c AS DOUBLE) / 100.0 AS q50,
+                CAST(q90c AS DOUBLE) / 100.0 AS q90,
+                CAST(l50 AS DOUBLE) / CAST(n * 1000 AS DOUBLE)
+                  AS pinball_50,
+                CAST(l90 AS DOUBLE) / CAST(n * 1000 AS DOUBLE)
+                  AS pinball_90
+         FROM l ORDER BY event_type""")),
 
     // Robust statistics: median + MAD (median absolute deviation) per
     // series in exact integer cents — positional selection over keyed
     // ranks, so the "median" is an existing value and every comparison is
     // integer-exact; outliers = |v - med| > 3·MAD.
-    "agg_mad_outliers" -> ((s, dir) => {
+    Query("agg_mad_outliers", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
       val v = Tables.events(s, dir)
         .select(col("event_type"), Exact.cents(col("value")).as("cents"))
@@ -299,7 +468,37 @@ object AggQueries {
           (col("mad_cents").cast("double") / lit(100.0)).as("mad_value"),
           col("n_outliers"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH v AS (SELECT event_type,
+                      CAST(round(value * 100, 0) AS BIGINT) AS cents
+                    FROM events),
+              n AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
+              r AS (SELECT event_type, cents,
+                      row_number() OVER (PARTITION BY event_type
+                                         ORDER BY cents) AS rn
+                    FROM v),
+              med AS (SELECT r.event_type, cents AS med_cents
+                      FROM r JOIN n USING (event_type)
+                      WHERE rn = (n + 1) // 2),
+              dev AS (SELECT v.event_type, v.cents, med.med_cents,
+                        abs(v.cents - med.med_cents) AS adev
+                      FROM v JOIN med USING (event_type)),
+              r2 AS (SELECT event_type, adev,
+                       row_number() OVER (PARTITION BY event_type
+                                          ORDER BY adev) AS rn
+                     FROM dev),
+              mad AS (SELECT r2.event_type, adev AS mad_cents
+                      FROM r2 JOIN n USING (event_type)
+                      WHERE rn = (n + 1) // 2)
+         SELECT dev.event_type, count(*) AS n,
+                CAST(med_cents AS DOUBLE) / CAST(100 AS DOUBLE)
+                  AS median_value,
+                CAST(mad_cents AS DOUBLE) / CAST(100 AS DOUBLE) AS mad_value,
+                CAST(sum(CASE WHEN adev > mad_cents * 3 THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_outliers
+         FROM dev JOIN mad USING (event_type)
+         GROUP BY dev.event_type, med_cents, mad_cents
+         ORDER BY dev.event_type""")),
 
     // Cube (full grouping-sets lattice — rollup's superset): every
     // (flag, status) combination plus both one-dimension margins plus the
@@ -309,7 +508,7 @@ object AggQueries {
     // max → equality join back → min, every stage partial-aggregable;
     // engines disagree on native mode() tie-breaking, so the explicit
     // form is both portable and the scale shape.
-    "agg_mode_per_group" -> ((s, dir) => {
+    Query("agg_mode_per_group", (s, dir) => {
       val c = Tables.orders(s, dir)
         .groupBy(col("o_orderstatus"), col("o_orderpriority"))
         .agg(count(lit(1)).as("cnt"))
@@ -319,7 +518,18 @@ object AggQueries {
         .agg(min(col("o_orderpriority")).as("mode_priority"),
              max(col("mx")).as("n_mode"))
         .orderBy("o_orderstatus")
-    }),
+    },
+      Some("""WITH c AS (SELECT o_orderstatus, o_orderpriority,
+                           count(*) AS cnt
+                    FROM orders GROUP BY 1, 2),
+              m AS (SELECT o_orderstatus, max(cnt) AS mx
+                    FROM c GROUP BY 1)
+         SELECT c.o_orderstatus,
+                min(c.o_orderpriority) AS mode_priority,
+                CAST(max(m.mx) AS BIGINT) AS n_mode
+         FROM c JOIN m ON m.o_orderstatus = c.o_orderstatus
+                      AND c.cnt = m.mx
+         GROUP BY 1 ORDER BY 1""")),
 
     // The general GROUPING SETS form (cube/rollup are its specializations,
     // both covered): an explicit, non-hierarchical set list — exactly the
@@ -328,7 +538,7 @@ object AggQueries {
     // cube would add). grouping() markers disambiguate rollup NULLs from
     // data NULLs; Spark expands the sets into one Expand + one aggregate,
     // so the scan stays single-pass.
-    "agg_grouping_sets" -> ((s, dir) => {
+    Query("agg_grouping_sets", (s, dir) => {
       Tables.documents(s, dir).createOrReplaceTempView("graft_docs_gs")
       s.sql("""SELECT lang, source,
                       CAST(grouping(lang) AS BIGINT) AS g_lang,
@@ -339,9 +549,18 @@ object AggQueries {
                GROUP BY GROUPING SETS ((lang), (source), (lang, source), ())
                ORDER BY g_lang, g_source,
                         coalesce(lang, ''), coalesce(source, '')""")
-    }),
+    },
+      Some("""SELECT lang, source,
+                CAST(grouping(lang) AS BIGINT) AS g_lang,
+                CAST(grouping(source) AS BIGINT) AS g_source,
+                count(*) AS n_docs,
+                CAST(sum(n_chars) AS BIGINT) AS sum_chars
+         FROM documents
+         GROUP BY GROUPING SETS ((lang), (source), (lang, source), ())
+         ORDER BY g_lang, g_source, coalesce(lang, ''),
+                  coalesce(source, '')""")),
 
-    "agg_cube_counts" -> ((s, dir) =>
+    Query("agg_cube_counts", (s, dir) =>
       Tables.lineitem(s, dir)
         .cube(col("l_returnflag"), col("l_linestatus"))
         .agg(count(lit(1)).as("n"),
@@ -349,25 +568,38 @@ object AggQueries {
                .as("sum_qty"),
              grouping_id().cast("long").as("lvl"))
         .orderBy(col("lvl"), col("l_returnflag").asc_nulls_first,
-                 col("l_linestatus").asc_nulls_first)),
+                 col("l_linestatus").asc_nulls_first),
+      Some("""SELECT l_returnflag, l_linestatus, count(*) AS n,
+                CAST(sum(CAST(round(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
+                  / 100.0 AS sum_qty,
+                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
+                  AS BIGINT) AS lvl
+         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
+         ORDER BY lvl, l_returnflag ASC NULLS FIRST,
+                  l_linestatus ASC NULLS FIRST""")),
 
     // Fixed-width histogram per series: fully partial-aggregable (the bin
     // is just a grouping expression), exact decimal mass per bin — the
     // profiling primitive for value distributions at scale.
-    "agg_value_histogram" -> ((s, dir) =>
+    Query("agg_value_histogram", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(col("event_type"),
           floor(col("value") / lit(50.0)).cast("long").as("bin"))
         .agg(count(lit(1)).as("n"),
              sum(col("value").cast(DecimalType(18, 2))).cast("double")
                .as("sum_value"))
-        .orderBy("event_type", "bin")),
+        .orderBy("event_type", "bin"),
+      Some("""SELECT event_type,
+                CAST(floor(value / CAST(50 AS DOUBLE)) AS BIGINT) AS bin,
+                count(*) AS n,
+                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+         FROM events GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // Cohort retention: users bucketed by first-activity date, activity
     // counted per day offset — two keyed aggregations (first-touch, then
     // cohort×offset distincts); the warehouse query behind every
     // retention curve.
-    "agg_retention_cohorts" -> ((s, dir) => {
+    Query("agg_retention_cohorts", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("activity_date"))
         .distinct()
@@ -379,7 +611,16 @@ object AggQueries {
             .as("day_offset"))
         .agg(countDistinct(col("user_id")).as("n_users"))
         .orderBy("cohort_date", "day_offset")
-    }),
+    },
+      Some("""WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE)
+                       AS activity_date FROM events),
+              f AS (SELECT user_id, min(activity_date) AS cohort_date
+                    FROM ev GROUP BY 1)
+         SELECT cohort_date,
+                CAST(activity_date - cohort_date AS BIGINT) AS day_offset,
+                count(DISTINCT ev.user_id) AS n_users
+         FROM ev JOIN f ON ev.user_id = f.user_id
+         GROUP BY 1, 2 ORDER BY 1, 2""")),
 
     // Moment statistics per series from EXACT integer sums (cents and
     // squared cents both fit BIGINT), converted to doubles once in a
@@ -394,7 +635,7 @@ object AggQueries {
     // and loses the last bits. Final formulas are one fixed IEEE chain
     // with m2·sqrt(m2) instead of pow(x, 1.5) — pow is not
     // correctly-rounded across engines, sqrt is.
-    "agg_skew_kurtosis" -> ((s, dir) => {
+    Query("agg_skew_kurtosis", (s, dir) => {
       def dd(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val agg = Tables.events(s, dir)
         .withColumn("cc", Exact.cents(col("value")))
@@ -421,14 +662,43 @@ object AggQueries {
            - lit(3.0) * m * m * m * m) / (m2 * m2) - lit(3.0))
           .as("excess_kurtosis"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH cc AS (SELECT event_type,
+                            CAST(round(value * 100, 0) AS BIGINT) AS cc
+                     FROM events),
+              c AS (SELECT event_type,
+                           (cc - ((cc % 100) + 100) % 100) // 100 AS c
+                    FROM cc),
+              a AS (SELECT event_type,
+                           CAST(count(*) AS BIGINT) AS n,
+                           CAST(sum(c) AS BIGINT) AS s1,
+                           CAST(sum(c * c) AS BIGINT) AS s2,
+                           CAST(sum(c * c * c) AS BIGINT) AS s3,
+                           CAST(sum(c * c * c * c) AS BIGINT) AS s4
+                    FROM c GROUP BY 1),
+              d AS (SELECT event_type, n,
+                           CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS m,
+                           CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS e2,
+                           CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS e3,
+                           CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS e4
+                    FROM a)
+         SELECT event_type, n,
+                (e3 - CAST(3 AS DOUBLE) * m * e2
+                  + CAST(2 AS DOUBLE) * m * m * m)
+                  / ((e2 - m * m) * sqrt(e2 - m * m)) AS skewness,
+                (e4 - CAST(4 AS DOUBLE) * m * e3
+                  + CAST(6 AS DOUBLE) * m * m * e2
+                  - CAST(3 AS DOUBLE) * m * m * m * m)
+                  / ((e2 - m * m) * (e2 - m * m)) - CAST(3 AS DOUBLE)
+                  AS excess_kurtosis
+         FROM d ORDER BY event_type""")),
 
     // Quantity-weighted median price per return flag: the exact weighted
     // order statistic (first value whose cumulative weight reaches half
     // the total) — cumulative weights by a keyed window over a totalized
     // (price, pk) order, the pick a partial-aggregable min over the
     // qualifying suffix. All integers until the final /100.
-    "agg_weighted_median" -> ((s, dir) => {
+    Query("agg_weighted_median", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("flag").orderBy("cents", "ok", "ln")
         .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -449,9 +719,31 @@ object AggQueries {
           (col("median_cents").cast("double") / lit(100.0))
             .as("weighted_median_price"))
         .orderBy("flag")
-    }),
+    },
+      // exact BIGINT moment sums; identical double expression order for the
+      // final mean/variance/stddev projection on both engines
+      Some("""WITH li AS (SELECT l_returnflag AS flag,
+                            CAST(round(l_extendedprice * 100, 0) AS BIGINT)
+                              AS cents,
+                            CAST(l_quantity AS BIGINT) AS qty,
+                            l_orderkey AS ok, l_linenumber AS ln
+                     FROM lineitem),
+              t AS (SELECT flag, CAST(sum(qty) AS BIGINT) AS total_qty
+                    FROM li GROUP BY 1),
+              c AS (SELECT flag, cents,
+                           CAST(sum(qty) OVER (PARTITION BY flag
+                             ORDER BY cents, ok, ln
+                             ROWS BETWEEN UNBOUNDED PRECEDING
+                             AND CURRENT ROW) AS BIGINT) AS cum
+                    FROM li)
+         SELECT c.flag, max(t.total_qty) AS total_qty,
+                CAST(min(c.cents) AS DOUBLE) / CAST(100 AS DOUBLE)
+                  AS weighted_median_price
+         FROM c JOIN t ON t.flag = c.flag
+         WHERE c.cum * 2 >= t.total_qty
+         GROUP BY 1 ORDER BY 1""")),
 
-    "agg_value_stats" -> ((s, dir) => {
+    Query("agg_value_stats", (s, dir) => {
       val c = Exact.cents(col("value"))
       val cd = c.cast("decimal(38,0)")
       Tables.events(s, dir)
@@ -478,7 +770,30 @@ object AggQueries {
                 / (col("n").cast("double") * lit(100.0))))
             .as("stddev"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH a AS (SELECT event_type, count(*) AS n,
+                      sum(CAST(round(value * 100, 0) AS BIGINT)) AS sc,
+                      sum(CAST(round(value * 100, 0) AS BIGINT)
+                          * CAST(round(value * 100, 0) AS BIGINT)) AS ssq
+                    FROM events GROUP BY 1)
+         SELECT event_type, n,
+                CAST(sc AS DOUBLE)
+                  / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)) AS mean_value,
+                CAST(ssq AS DOUBLE)
+                  / (CAST(n AS DOUBLE) * CAST(10000 AS DOUBLE))
+                  - (CAST(sc AS DOUBLE)
+                     / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)))
+                    * (CAST(sc AS DOUBLE)
+                       / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)))
+                  AS variance,
+                sqrt(CAST(ssq AS DOUBLE)
+                  / (CAST(n AS DOUBLE) * CAST(10000 AS DOUBLE))
+                  - (CAST(sc AS DOUBLE)
+                     / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)))
+                    * (CAST(sc AS DOUBLE)
+                       / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE))))
+                  AS stddev
+         FROM a ORDER BY event_type""")),
 
     // Two-sample z-test over every event-type pair: the A/B-experiment
     // readout next to the KS drift test. Per-group moments are ONE
@@ -488,7 +803,7 @@ object AggQueries {
     // order mirrored token-for-token by the oracle, so the doubles are
     // bitwise. Pairs come from a self-join of the GROUP-COUNT-sized
     // stats frame — never of the data.
-    "agg_two_sample_z" -> ((s, dir) => {
+    Query("agg_two_sample_z", (s, dir) => {
       def d(c: org.apache.spark.sql.Column) = c.cast("double")
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val stats = Tables.events(s, dir)
@@ -517,7 +832,33 @@ object AggQueries {
           ((ma - mb) / sqrt(va / d(col("na")) + vb / d(col("nb"))))
             .as("z"))
         .orderBy("et_a", "et_b")
-    }),
+    },
+      Some("""WITH c AS (SELECT event_type,
+                           CAST(round(value * 100, 0) AS BIGINT) AS c
+                    FROM events),
+              s AS (SELECT event_type, count(*) AS n,
+                           CAST(sum(c) AS BIGINT) AS sc,
+                           CAST(sum(c * c) AS BIGINT) AS ss
+                    FROM c GROUP BY 1)
+         SELECT a.event_type AS et_a, b.event_type AS et_b,
+                a.n AS na, b.n AS nb,
+                CAST(a.sc AS DOUBLE) / CAST(a.n AS DOUBLE) / 100.0
+                  AS mean_a,
+                CAST(b.sc AS DOUBLE) / CAST(b.n AS DOUBLE) / 100.0
+                  AS mean_b,
+                (CAST(a.sc AS DOUBLE) / CAST(a.n AS DOUBLE)
+                  - CAST(b.sc AS DOUBLE) / CAST(b.n AS DOUBLE))
+                / sqrt(
+                    (CAST(CAST(CAST(a.n AS HUGEINT) * a.ss
+                          - CAST(a.sc AS HUGEINT) * a.sc AS BIGINT) AS DOUBLE)
+                     / CAST(a.n * (a.n - 1) AS DOUBLE))
+                      / CAST(a.n AS DOUBLE)
+                  + (CAST(CAST(CAST(b.n AS HUGEINT) * b.ss
+                          - CAST(b.sc AS HUGEINT) * b.sc AS BIGINT) AS DOUBLE)
+                     / CAST(b.n * (b.n - 1) AS DOUBLE))
+                      / CAST(b.n AS DOUBLE)) AS z
+         FROM s a JOIN s b ON a.event_type < b.event_type
+         ORDER BY 1, 2""")),
 
     // Two-sample Kolmogorov–Smirnov statistic (click vs view value
     // distributions) — EXACT: D = max|F₁−F₂| is computed on the integer
@@ -527,7 +868,7 @@ object AggQueries {
     // 1 in parallel, #buckets-row level 2 — NEVER a single-partition
     // window over the support. The distribution-drift test a 100 TB
     // feature pipeline runs between snapshots.
-    "agg_ks_statistic" -> ((s, dir) => {
+    Query("agg_ks_statistic", (s, dir) => {
       val ev = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "view"))
         .select(col("event_type"), Exact.cents(col("value")).as("v"))
@@ -556,7 +897,34 @@ object AggQueries {
         .withColumn("d_stat", col("d_num").cast("double")
           / (col("n1") * col("n2")).cast("double"))
         .select("n1", "n2", "d_num", "ks_at_value", "d_stat")
-    }),
+    },
+      Some("""WITH ev AS (SELECT event_type,
+                            CAST(round(value * 100, 0) AS BIGINT) AS v
+                     FROM events WHERE event_type IN ('click', 'view')),
+              c AS (SELECT v,
+                           sum(CASE WHEN event_type = 'click' THEN 1
+                                    ELSE 0 END) AS c1,
+                           sum(CASE WHEN event_type = 'view' THEN 1
+                                    ELSE 0 END) AS c2
+                    FROM ev GROUP BY 1),
+              cc AS (SELECT v, sum(c1) OVER (ORDER BY v) AS cum1,
+                            sum(c2) OVER (ORDER BY v) AS cum2
+                     FROM c),
+              n AS (SELECT CAST(sum(CASE WHEN event_type = 'click' THEN 1
+                                         ELSE 0 END) AS BIGINT) AS n1,
+                           CAST(sum(CASE WHEN event_type = 'view' THEN 1
+                                         ELSE 0 END) AS BIGINT) AS n2
+                    FROM ev),
+              d AS (SELECT n.n1, n.n2, cc.v,
+                           CAST(abs(n.n2 * cc.cum1 - n.n1 * cc.cum2)
+                                AS BIGINT) AS dn,
+                           row_number() OVER (
+                             ORDER BY abs(n.n2 * cc.cum1 - n.n1 * cc.cum2)
+                               DESC, cc.v ASC) AS rn
+                    FROM cc, n)
+         SELECT n1, n2, dn AS d_num, v AS ks_at_value,
+                CAST(dn AS DOUBLE) / CAST(n1 * n2 AS DOUBLE) AS d_stat
+         FROM d WHERE rn = 1""")),
 
     // Deterministic Poisson-style bootstrap: 32 hash-weighted replicates
     // of the mean purchase value in ONE pass (explode the replicate id,
@@ -566,7 +934,7 @@ object AggQueries {
     // means (a constant-bounded 32-row rank, never data-sized). The
     // uncertainty quantification a pipeline attaches to headline metrics
     // without a second data pass.
-    "agg_bootstrap_ci" -> ((s, dir) => {
+    Query("agg_bootstrap_ci", (s, dir) => {
       val reps = Tables.events(s, dir)
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), Exact.cents(col("value")).as("c"))
@@ -592,7 +960,31 @@ object AggQueries {
           max(when(col("rn") === 31, col("rep_mean"))).as("ci_hi"))
         .crossJoin(point)
         .select("n_replicates", "point_mean", "ci_lo", "ci_hi")
-    }),
+    },
+      Some("""WITH p AS (SELECT event_id,
+                           CAST(round(value * 100, 0) AS BIGINT) AS c
+                    FROM events WHERE event_type = 'purchase'),
+              r AS (SELECT t.b, event_id, c,
+                           ((((event_id * 31 + t.b) * 2654435761)
+                             % 2147483647) + 2147483647) % 2147483647 % 3
+                             AS wgt
+                    FROM p, unnest(range(0, 32)) AS t(b)),
+              m AS (SELECT b,
+                           CAST(CAST(sum(wgt * c) AS BIGINT) AS DOUBLE)
+                             / CAST(CAST(sum(wgt) AS BIGINT) AS DOUBLE)
+                             AS rep_mean
+                    FROM r GROUP BY 1),
+              rk AS (SELECT b, rep_mean,
+                            row_number() OVER (ORDER BY rep_mean, b) AS rn
+                     FROM m),
+              pt AS (SELECT CAST(CAST(sum(c) AS BIGINT) AS DOUBLE)
+                              / CAST(count(*) AS DOUBLE) AS point_mean
+                     FROM p)
+         SELECT (SELECT count(*) FROM rk) AS n_replicates,
+                pt.point_mean,
+                (SELECT rep_mean FROM rk WHERE rn = 2) AS ci_lo,
+                (SELECT rep_mean FROM rk WHERE rn = 31) AS ci_hi
+         FROM pt""")),
 
     // Shewhart control chart: flag days whose mean ticket leaves the
     // ±3σ band around the global mean — the out-of-control test done as
@@ -601,7 +993,7 @@ object AggQueries {
     // bit-identical. Two partial-aggregable passes (global + per-day)
     // and a broadcast scalar join; the monitoring primitive behind
     // metric regression alerts.
-    "agg_control_chart" -> ((s, dir) => {
+    Query("agg_control_chart", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(expr("unix_micros(ts) DIV 86400000000").as("day"),
                 Exact.cents(col("value")).as("x"))
@@ -619,7 +1011,24 @@ object AggQueries {
             .as("day_mean_cents"),
           (a * a > rhs).as("ooc"))
         .orderBy("day")
-    }),
+    },
+      Some("""WITH ev AS (SELECT epoch_us(ts) // 86400000000 AS day,
+                            CAST(round(value * 100, 0) AS BIGINT) AS x
+                     FROM events),
+              t AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS s,
+                           CAST(sum(x * x) AS BIGINT) AS ss
+                    FROM ev),
+              d AS (SELECT day, count(*) AS nd,
+                           CAST(sum(x) AS BIGINT) AS sd
+                    FROM ev GROUP BY 1)
+         SELECT day, nd,
+                CAST(sd AS DOUBLE) / CAST(nd AS DOUBLE) AS day_mean_cents,
+                (CAST(t.n AS HUGEINT) * sd - CAST(nd AS HUGEINT) * t.s)
+                  * (CAST(t.n AS HUGEINT) * sd - CAST(nd AS HUGEINT) * t.s)
+                  > 9 * CAST(nd AS HUGEINT) * nd
+                    * (CAST(t.n AS HUGEINT) * t.ss
+                       - CAST(t.s AS HUGEINT) * t.s) AS ooc
+         FROM d, t ORDER BY day""")),
 
     // Conversion lag: per user, first signup → first purchase AT OR
     // AFTER it; exact integer minute deltas, with quartiles as EXACT
@@ -628,7 +1037,7 @@ object AggQueries {
     // — no window over the conversion frame, no triangular join, so the
     // same plan stands when conversions are billions of rows. The
     // time-to-convert funnel metric behind activation dashboards.
-    "agg_time_to_convert" -> ((s, dir) => {
+    Query("agg_time_to_convert", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"),
                 unix_micros(col("ts")).as("us"))
@@ -662,7 +1071,40 @@ object AggQueries {
           (col("n_converted").cast("double")
             / col("n_signup_users").cast("double")).as("conversion_rate"),
           col("q1_m"), col("median_m"), col("q3_m"))
-    }),
+    },
+      Some("""WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us
+                     FROM events),
+              su AS (SELECT user_id, min(us) AS su_us FROM ev
+                     WHERE event_type = 'signup' GROUP BY 1),
+              conv AS (SELECT ev.user_id,
+                              (min(ev.us) - min(su.su_us)) // 60000000
+                                AS delta_m
+                       FROM ev JOIN su ON su.user_id = ev.user_id
+                       WHERE ev.event_type = 'purchase'
+                         AND ev.us >= su.su_us
+                       GROUP BY 1),
+              c AS (SELECT delta_m, count(*) AS cnt FROM conv GROUP BY 1),
+              cum AS (SELECT delta_m,
+                             sum(cnt) OVER (ORDER BY delta_m) AS cum
+                      FROM c),
+              r AS (SELECT count(*) AS n_converted,
+                           (count(*) + 3) // 4 AS r1,
+                           (count(*) + 1) // 2 AS r2,
+                           (3 * count(*) + 3) // 4 AS r3
+                    FROM conv),
+              ns AS (SELECT count(*) AS n_signup_users FROM su),
+              p AS (SELECT min(CASE WHEN cum >= r.r1 THEN delta_m END)
+                             AS q1_m,
+                           min(CASE WHEN cum >= r.r2 THEN delta_m END)
+                             AS median_m,
+                           min(CASE WHEN cum >= r.r3 THEN delta_m END)
+                             AS q3_m
+                    FROM cum, r)
+         SELECT ns.n_signup_users, r.n_converted,
+                CAST(r.n_converted AS DOUBLE)
+                  / CAST(ns.n_signup_users AS DOUBLE) AS conversion_rate,
+                p.q1_m, p.median_m, p.q3_m
+         FROM ns, r, p""")),
 
     // Discount elasticity: exact OLS slope of quantity on discount per
     // return flag — every moment an integer sum on the (discount-bp ×
@@ -670,7 +1112,7 @@ object AggQueries {
     // DECIMAL(38,0) ≡ HUGEINT, one fixed double chain per figure. The
     // price-sensitivity screen, same cleared-fraction OLS as
     // ts_linreg_trend.
-    "agg_discount_elasticity" -> ((s, dir) => {
+    Query("agg_discount_elasticity", (s, dir) => {
       val x = expr("CAST(round(l_discount * 10000, 0) AS BIGINT)")
       val y = expr("CAST(round(l_quantity * 100, 0) AS BIGINT)")
       val agg = Tables.lineitem(s, dir)
@@ -691,7 +1133,31 @@ object AggQueries {
               * (col("sx").cast("double") / col("n").cast("double")))
             .as("intercept_q"))
         .orderBy("l_returnflag")
-    }),
+    },
+      Some("""WITH d AS (SELECT l_returnflag,
+                           CAST(round(l_discount * 10000, 0) AS BIGINT) AS x,
+                           CAST(round(l_quantity * 100, 0) AS BIGINT) AS y
+                    FROM lineitem),
+              a AS (SELECT l_returnflag, count(*) AS n,
+                           CAST(sum(x) AS BIGINT) AS sx,
+                           CAST(sum(y) AS BIGINT) AS sy,
+                           CAST(sum(x * x) AS BIGINT) AS sxx,
+                           CAST(sum(x * y) AS BIGINT) AS sxy
+                    FROM d GROUP BY 1),
+              m AS (SELECT l_returnflag, n,
+                           CAST(CAST(CAST(n AS HUGEINT) * sxy
+                                     - CAST(sx AS HUGEINT) * sy AS BIGINT)
+                                AS DOUBLE) AS num,
+                           CAST(CAST(CAST(n AS HUGEINT) * sxx
+                                     - CAST(sx AS HUGEINT) * sx AS BIGINT)
+                                AS DOUBLE) AS den,
+                           sx, sy
+                    FROM a)
+         SELECT l_returnflag, n, num / den AS slope_q_per_bp,
+                CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
+                  - num / den * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
+                  AS intercept_q
+         FROM m ORDER BY l_returnflag""")),
 
     // Mann–Whitney U (rank-sum) over every event-type pair: the
     // nonparametric companion to agg_two_sample_z. Doubled-U stays on the
@@ -704,7 +1170,7 @@ object AggQueries {
     // tie term in DECIMAL(38,0) and spends ONE fixed IEEE chain. The
     // value-keyed pair join fans each support row to C(k,2) pairs —
     // bounded by the type universe, never by event volume.
-    "agg_mann_whitney_u" -> ((s, dir) => {
+    Query("agg_mann_whitney_u", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       val cnt = Tables.events(s, dir)
         .select(col("event_type").as("et"),
@@ -759,7 +1225,45 @@ object AggQueries {
                         / (dec(nn) * dec(nn - 1)).cast("double"))))))
         .select("et_a", "et_b", "na", "nb", "u2", "z")
         .orderBy("et_a", "et_b")
-    }),
+    },
+      Some("""WITH c AS (SELECT event_type AS et,
+                           CAST(round(value * 100, 0) AS BIGINT) AS v,
+                           count(*) AS c
+                    FROM events GROUP BY 1, 2),
+              grid AS (SELECT e.et, s.v, coalesce(c.c, 0) AS c
+                       FROM (SELECT DISTINCT et FROM c) e
+                       CROSS JOIN (SELECT DISTINCT v FROM c) s
+                       LEFT JOIN c ON c.et = e.et AND c.v = s.v),
+              g AS (SELECT et, v, c,
+                           CAST(coalesce(sum(c) OVER (PARTITION BY et
+                             ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
+                             AND 1 PRECEDING), 0) AS BIGINT) AS cum
+                    FROM grid),
+              p AS (SELECT a.et AS et_a, b.et AS et_b,
+                           CAST(sum(a.c) AS BIGINT) AS na,
+                           CAST(sum(b.c) AS BIGINT) AS nb,
+                           CAST(sum(CAST(a.c AS HUGEINT)
+                             * (CAST(b.cum AS HUGEINT) * 2 + b.c))
+                             AS BIGINT) AS u2,
+                           CAST(sum(CAST(a.c + b.c AS HUGEINT)
+                             * (a.c + b.c) * (a.c + b.c) - (a.c + b.c))
+                             AS HUGEINT) AS tie3
+                    FROM g a JOIN g b ON a.v = b.v AND a.et < b.et
+                    GROUP BY 1, 2)
+         SELECT et_a, et_b, na, nb, u2,
+                CASE WHEN tie3 < CAST(na + nb AS HUGEINT) * (na + nb)
+                                 * (na + nb) - (na + nb) THEN
+                CAST(CAST(CAST(u2 AS HUGEINT) - CAST(na AS HUGEINT) * nb
+                     AS BIGINT) AS DOUBLE)
+                  / (2.0 * sqrt(
+                      CAST(CAST(CAST(na AS HUGEINT) * nb AS BIGINT)
+                           AS DOUBLE) / 12.0
+                      * (CAST(na + nb + 1 AS DOUBLE)
+                         - CAST(CAST(tie3 AS BIGINT) AS DOUBLE)
+                           / CAST(CAST(CAST(na + nb AS HUGEINT)
+                                  * (na + nb - 1) AS BIGINT) AS DOUBLE))))
+                END AS z
+         FROM p ORDER BY 1, 2""")),
 
     // Spearman rank correlation (part size vs retail price, per brand):
     // tie-aware average ranks kept exact by DOUBLING — 2·r̄ = 2·rank_min
@@ -767,7 +1271,7 @@ object AggQueries {
     // lattice with exact DECIMAL(38,0) moments and one fixed IEEE chain.
     // Rank windows partition by brand (keyed, never global); moments are
     // partial-aggregable.
-    "agg_spearman_corr" -> ((s, dir) => {
+    Query("agg_spearman_corr", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val r = Tables.part(s, dir)
@@ -801,14 +1305,46 @@ object AggQueries {
                         - dec(col("sy")) * dec(col("sy"))).cast("double")))))
             .as("rho"))
         .orderBy("brand")
-    }),
+    },
+      Some("""WITH b AS (SELECT p_brand AS brand, CAST(p_size AS BIGINT) AS x,
+                           CAST(round(p_retailprice * 100, 0) AS BIGINT)
+                             AS y
+                    FROM part),
+              r AS (SELECT brand,
+                           CAST(rank() OVER (PARTITION BY brand
+                             ORDER BY x) AS BIGINT) * 2
+                             + count(*) OVER (PARTITION BY brand, x) - 1
+                             AS rx2,
+                           CAST(rank() OVER (PARTITION BY brand
+                             ORDER BY y) AS BIGINT) * 2
+                             + count(*) OVER (PARTITION BY brand, y) - 1
+                             AS ry2
+                    FROM b),
+              m AS (SELECT brand, count(*) AS n,
+                           CAST(sum(rx2) AS HUGEINT) AS sx,
+                           CAST(sum(ry2) AS HUGEINT) AS sy,
+                           CAST(sum(CAST(rx2 AS HUGEINT) * ry2)
+                                AS HUGEINT) AS sxy,
+                           CAST(sum(CAST(rx2 AS HUGEINT) * rx2)
+                                AS HUGEINT) AS sxx,
+                           CAST(sum(CAST(ry2 AS HUGEINT) * ry2)
+                                AS HUGEINT) AS syy
+                    FROM r GROUP BY 1)
+         SELECT brand, n,
+                CASE WHEN n * sxx - sx * sx > 0
+                      AND n * syy - sy * sy > 0 THEN
+                  CAST(n * sxy - sx * sy AS DOUBLE)
+                    / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
+                       * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
+                END AS rho
+         FROM m ORDER BY brand""")),
 
     // Ordered conversion funnel view → click → purchase: a user reaches
     // stage k only via an event at-or-after their stage-(k−1) entry time.
     // Three user-keyed min-aggregates chained by inner joins (each stage
     // frame shrinks), one broadcast of the 1-row top-of-funnel count for
     // the fractions — the product-analytics staple, exact end to end.
-    "agg_funnel_stages" -> ((s, dir) => {
+    Query("agg_funnel_stages", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"))
         .tracked // three stage scans
@@ -838,7 +1374,25 @@ object AggQueries {
           col("n_users").cast("double") / col("n_top").cast("double"))
         .select("stage", "stage_name", "n_users", "frac_of_top")
         .orderBy("stage")
-    }),
+    },
+      Some("""WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+                    WHERE event_type = 'view' GROUP BY 1),
+              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
+                    JOIN v ON v.user_id = e.user_id AND e.ts >= v.t1
+                    WHERE e.event_type = 'click' GROUP BY 1),
+              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
+                    JOIN c ON c.user_id = e.user_id AND e.ts >= c.t2
+                    WHERE e.event_type = 'purchase' GROUP BY 1),
+              s AS (SELECT 1 AS stage, 'view' AS stage_name,
+                           count(*) AS n_users FROM v
+                    UNION ALL
+                    SELECT 2, 'click', count(*) FROM c
+                    UNION ALL
+                    SELECT 3, 'purchase', count(*) FROM p)
+         SELECT CAST(stage AS BIGINT) AS stage, stage_name, n_users,
+                CAST(n_users AS DOUBLE)
+                  / CAST((SELECT count(*) FROM v) AS DOUBLE) AS frac_of_top
+         FROM s ORDER BY stage""")),
 
     // Cramér's V — the χ² total agg_chi2_contingency deliberately refuses
     // to sum (accumulation order of doubles is not portable), made
@@ -848,7 +1402,7 @@ object AggQueries {
     // report can't see them), one IEEE division each, folded in a FIXED
     // (type, dow) order via sort_array→aggregate ≡ list_sort→list_reduce.
     // V = sqrt(χ²/(N·min(R−1,C−1))) on 1-row scalars.
-    "agg_cramers_v" -> ((s, dir) => {
+    Query("agg_cramers_v", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val cells = Tables.events(s, dir)
         .groupBy(col("event_type"),
@@ -878,7 +1432,48 @@ object AggQueries {
           sqrt(col("chi2") / (col("n").cast("double")
             * least(col("nr") - 1, col("nc") - 1).cast("double")))
             .as("cramers_v"))
-    }),
+    },
+      Some("""WITH cells AS (SELECT event_type,
+                               CAST(isodow(CAST(ts AS DATE)) AS BIGINT)
+                                 AS dow,
+                               count(*) AS o
+                        FROM events GROUP BY 1, 2),
+              grid AS (SELECT e.event_type, d.dow, coalesce(c.o, 0) AS o
+                       FROM (SELECT DISTINCT event_type FROM cells) e
+                       CROSS JOIN (SELECT DISTINCT dow FROM cells) d
+                       LEFT JOIN cells c ON c.event_type = e.event_type
+                                        AND c.dow = d.dow),
+              rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS r
+                     FROM cells GROUP BY 1),
+              ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c
+                     FROM cells GROUP BY 1),
+              n AS (SELECT CAST(sum(o) AS BIGINT) AS n,
+                           count(DISTINCT event_type) AS nr,
+                           count(DISTINCT dow) AS nc
+                    FROM cells),
+              j AS (SELECT g.event_type, g.dow, n.n, n.nr, n.nc,
+                           g.o * n.n - rt.r * ct.c AS dev, rt.r, ct.c
+                    FROM grid g
+                    JOIN rt ON rt.event_type = g.event_type
+                    JOIN ct ON ct.dow = g.dow
+                    CROSS JOIN n),
+              t AS (SELECT event_type, dow, n, nr, nc,
+                           CAST(CAST(CAST(dev AS HUGEINT) * dev AS BIGINT) AS DOUBLE)
+                             / CAST(n * r * c AS DOUBLE) AS cell
+                    FROM j),
+              f AS (SELECT n AS n_total, nr AS n_rows, nc AS n_cols,
+                           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+                             list_transform(list_sort(list(struct_pack(
+                               event_type := event_type, dow := dow,
+                               cell := cell))),
+                               x -> x.cell)),
+                             (a, b) -> a + b) AS chi2
+                    FROM t GROUP BY 1, 2, 3)
+         SELECT n_total, n_rows, n_cols, chi2,
+                sqrt(chi2 / (CAST(n_total AS DOUBLE)
+                  * CAST(least(n_rows - 1, n_cols - 1) AS DOUBLE)))
+                  AS cramers_v
+         FROM f""")),
 
     // Cohort LTV curve: cumulative purchase revenue per signup cohort by
     // day-offset, normalized per cohort member — the companion to
@@ -887,7 +1482,7 @@ object AggQueries {
     // running total is a keyed window over those cells (cohort-sized
     // partitions of offset-counted rows, never event volume), and cents
     // stay integers until the one ltv division.
-    "agg_cohort_ltv_curve" -> ((s, dir) => {
+    Query("agg_cohort_ltv_curve", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       val ev = Tables.events(s, dir)
         .select(col("user_id"), to_date(col("ts")).as("d"),
@@ -911,7 +1506,35 @@ object AggQueries {
         .select("cohort_date", "day_offset", "rev_cents", "cum_rev_cents",
                 "n_cohort_users", "ltv_per_user")
         .orderBy("cohort_date", "day_offset")
-    }),
+    },
+      Some("""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d, event_type,
+                            CAST(round(value * 100, 0) AS BIGINT) AS cents
+                     FROM events),
+              firsts AS (SELECT user_id, min(d) AS cohort_date
+                         FROM ev GROUP BY 1),
+              sizes AS (SELECT cohort_date, count(*) AS n_cohort_users
+                        FROM firsts GROUP BY 1),
+              rev AS (SELECT f.cohort_date,
+                             CAST(date_diff('day', f.cohort_date, e.d)
+                                  AS BIGINT) AS day_offset,
+                             CAST(sum(e.cents) AS BIGINT) AS rev_cents
+                      FROM ev e JOIN firsts f ON f.user_id = e.user_id
+                      WHERE e.event_type = 'purchase' GROUP BY 1, 2),
+              c AS (SELECT r.cohort_date, r.day_offset, r.rev_cents,
+                           s.n_cohort_users,
+                           CAST(sum(r.rev_cents) OVER (
+                             PARTITION BY r.cohort_date
+                             ORDER BY r.day_offset
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND
+                             CURRENT ROW) AS BIGINT) AS cum_rev_cents
+                    FROM rev r
+                    JOIN sizes s ON s.cohort_date = r.cohort_date)
+         SELECT cohort_date, day_offset, rev_cents, cum_rev_cents,
+                n_cohort_users,
+                CAST(cum_rev_cents AS DOUBLE)
+                  / (100.0 * CAST(n_cohort_users AS DOUBLE))
+                  AS ltv_per_user
+         FROM c ORDER BY cohort_date, day_offset""")),
 
     // Kruskal–Wallis H (the k-group Mann–Whitney): one GLOBAL combined
     // ranking instead of per-pair ranks — doubled tie-average rank at
@@ -927,7 +1550,7 @@ object AggQueries {
     // →DOUBLE cast routed through BIGINT (the one conversion that is
     // correctly rounded on every build). H rides on every group row via a
     // 1-row broadcast.
-    "agg_kruskal_wallis" -> ((s, dir) => {
+    Query("agg_kruskal_wallis", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val cnt = Tables.events(s, dir)
         .select(col("event_type").as("et"),
@@ -976,7 +1599,50 @@ object AggQueries {
                 when(col("corr") =!= 0.0, col("h") / col("corr"))
                   .as("h_tie_corrected"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH c AS (SELECT event_type AS et,
+                           CAST(round(value * 100, 0) AS BIGINT) AS v,
+                           count(*) AS c
+                    FROM events GROUP BY 1, 2),
+              t0 AS (SELECT v, CAST(sum(c) AS BIGINT) AS ct
+                     FROM c GROUP BY 1),
+              tot AS (SELECT v, ct,
+                             CAST(coalesce(sum(ct) OVER (ORDER BY v
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND
+                               1 PRECEDING), 0) AS BIGINT) AS cum
+                      FROM t0),
+              g AS (SELECT c.et, CAST(sum(c.c) AS BIGINT) AS n,
+                           CAST(sum(CAST(c.c AS HUGEINT)
+                             * (CAST(tot.cum AS HUGEINT) * 2 + tot.ct + 1))
+                             AS DECIMAL(38,0)) AS r2
+                    FROM c JOIN tot ON tot.v = c.v GROUP BY 1),
+              terms AS (SELECT et, n, r2,
+                               CAST(CAST(r2 AS HUGEINT) * CAST(r2 AS HUGEINT)
+                                    * 16 // (4 * CAST(n AS HUGEINT))
+                                    AS BIGINT) AS term_q16
+                        FROM g),
+              ties AS (SELECT CAST(sum(CAST(ct AS HUGEINT) * ct * ct - ct)
+                              AS BIGINT) AS t3
+                       FROM t0),
+              hh AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
+                            CAST(sum(CAST(term_q16 AS HUGEINT)) AS BIGINT)
+                              AS sq
+                     FROM terms),
+              hs AS (SELECT nt,
+                            12.0 / CAST(CAST(CAST(nt AS HUGEINT) * (nt + 1)
+                                        AS BIGINT) AS DOUBLE)
+                              * (CAST(sq AS DOUBLE) / 16.0)
+                              - 3.0 * CAST(nt + 1 AS DOUBLE) AS h,
+                            1.0 - CAST((SELECT t3 FROM ties) AS DOUBLE)
+                              / CAST(CAST(CAST(nt AS HUGEINT) * nt * nt - nt
+                                     AS BIGINT) AS DOUBLE) AS corr
+                     FROM hh)
+         SELECT terms.et AS event_type, terms.n,
+                CAST(terms.r2 AS BIGINT) AS r2,
+                hs.nt AS n_total, hs.h,
+                CASE WHEN hs.corr <> 0.0 THEN hs.h / hs.corr
+                END AS h_tie_corrected
+         FROM terms CROSS JOIN hs ORDER BY event_type""")),
 
     // Shannon entropy of the event-type mix per ISO weekday — the label-
     // balance diagnostic every training pipeline runs over its class/source
@@ -987,7 +1653,7 @@ object AggQueries {
     // BIGINT on any engine — sums stay order-free and partial-aggregable
     // (no sorted-list folds). H_bits = (N·log2fp(N) − Σ c·log2fp(c)) /
     // (N·2^20) via the identity H = log2 N − (1/N)Σ c log2 c.
-    "agg_entropy_by_group" -> ((s, dir) => {
+    Query("agg_entropy_by_group", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val L = graft.functions.FixedLog2.log2_fp _
       val c = Tables.events(s, dir)
@@ -1004,7 +1670,23 @@ object AggQueries {
            / col("n_events").cast("double") / lit(1048576.0))
             .as("entropy_bits"))
         .orderBy("dow")
-    }),
+    },
+      Some {
+      val lc = graft.functions.FixedLog2.sql("c")
+      val ln = graft.functions.FixedLog2.sql("n_events")
+      s"""WITH c AS (SELECT CAST(isodow(CAST(ts AS DATE)) AS BIGINT) AS dow,
+                            event_type, count(*) AS c
+                     FROM events GROUP BY 1, 2),
+               g AS (SELECT dow, CAST(sum(c) AS BIGINT) AS n_events,
+                            count(*) AS n_types,
+                            CAST(sum(CAST(c AS HUGEINT) * $lc) AS HUGEINT)
+                              AS sclog
+                     FROM c GROUP BY 1)
+          SELECT dow, n_events, n_types,
+                 CAST(CAST(CAST(n_events AS HUGEINT) * $ln - sclog AS BIGINT) AS DOUBLE)
+                   / CAST(n_events AS DOUBLE) / 1048576.0 AS entropy_bits
+          FROM g ORDER BY dow"""
+      }),
 
     // Theil T inequality index of order revenue per market segment:
     // T = (1/n)Σ (x/μ)ln(x/μ). On the cents lattice x_i/μ = c_i·n/S
@@ -1012,7 +1694,7 @@ object AggQueries {
     // exact integers, decimal-summed order-free — and one final double
     // conversion applies ln2/(S·2^20). The broadcast join-back of the
     // 5-row segment aggregate is the standard two-pass moment shape.
-    "agg_theil_index" -> ((s, dir) => {
+    Query("agg_theil_index", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val L = graft.functions.FixedLog2.log2_fp _
       val o = Tables.orders(s, dir)
@@ -1037,7 +1719,33 @@ object AggQueries {
             / (col("sc").cast("double") * lit(1048576.0)))
             .as("theil"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      Some {
+      val lcn = graft.functions.FixedLog2.sql("cn")
+      val ls = graft.functions.FixedLog2.sql("s_cents")
+      s"""WITH j AS (SELECT c.c_mktsegment,
+                            CAST(round(o.o_totalprice * 100, 0) AS BIGINT)
+                              AS cents
+                     FROM orders o JOIN customer c
+                       ON o.o_custkey = c.c_custkey),
+               g AS (SELECT c_mktsegment, count(*) AS n,
+                            CAST(sum(cents) AS BIGINT) AS s_cents
+                     FROM j GROUP BY 1),
+               t AS (SELECT j.c_mktsegment, j.cents, g.n, g.s_cents,
+                            j.cents * g.n AS cn
+                     FROM j JOIN g ON j.c_mktsegment = g.c_mktsegment),
+               u AS (SELECT c_mktsegment,
+                            CAST(cents AS HUGEINT) * ($lcn - $ls) AS term,
+                            n, s_cents
+                     FROM t)
+          SELECT c_mktsegment, any_value(n) AS n_orders,
+                 CAST(any_value(s_cents) AS DOUBLE) / 100.0
+                   AS total_revenue,
+                 CAST(sum(term) AS DOUBLE) * 0.6931471805599453
+                   / (CAST(any_value(s_cents) AS DOUBLE) * 1048576.0)
+                   AS theil
+          FROM u GROUP BY 1 ORDER BY 1"""
+      }),
 
     // Mutual information between event type and ISO weekday (one row):
     // MI = Σ p(x,y)·log2(p(x,y)/(p(x)p(y))) = (Σ c_xy·(log2fp(c_xy·N) −
@@ -1045,7 +1753,7 @@ object AggQueries {
     // integers end to end, alongside both marginal entropies (the
     // normalizers for NMI). The feature-vs-label dependence screen a
     // training pipeline runs before trusting a stratification column.
-    "agg_mutual_information" -> ((s, dir) => {
+    Query("agg_mutual_information", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val L = graft.functions.FixedLog2.log2_fp _
       val cells = Tables.events(s, dir)
@@ -1074,7 +1782,45 @@ object AggQueries {
             / col("n").cast("double") / lit(1048576.0)).as("h_type_bits"),
           ((dec(col("n")) * dec(L(col("n"))) - col("sylog")).cast("double")
             / col("n").cast("double") / lit(1048576.0)).as("h_dow_bits"))
-    }),
+    },
+      Some {
+      val lxy = graft.functions.FixedLog2.sql("cn")
+      val lmm = graft.functions.FixedLog2.sql("cxy")
+      val lcx = graft.functions.FixedLog2.sql("c_x")
+      val lcy = graft.functions.FixedLog2.sql("c_y")
+      val ln = graft.functions.FixedLog2.sql("n")
+      s"""WITH cells AS (SELECT event_type,
+                                CAST(isodow(CAST(ts AS DATE)) AS BIGINT)
+                                  AS dow,
+                                count(*) AS c_xy
+                         FROM events GROUP BY 1, 2),
+               mx AS (SELECT event_type, CAST(sum(c_xy) AS BIGINT) AS c_x
+                      FROM cells GROUP BY 1),
+               my AS (SELECT dow, CAST(sum(c_xy) AS BIGINT) AS c_y
+                      FROM cells GROUP BY 1),
+               nn AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n FROM cells),
+               terms AS (SELECT cells.c_xy,
+                                cells.c_xy * nn.n AS cn,
+                                mx.c_x * my.c_y AS cxy
+                         FROM cells JOIN mx ON mx.event_type = cells.event_type
+                                    JOIN my ON my.dow = cells.dow
+                                    CROSS JOIN nn),
+               mi AS (SELECT CAST(sum(CAST(c_xy AS HUGEINT)
+                          * ($lxy - $lmm)) AS HUGEINT) AS minum
+                      FROM terms),
+               hx AS (SELECT CAST(sum(CAST(c_x AS HUGEINT) * $lcx)
+                          AS HUGEINT) AS sxlog FROM mx),
+               hy AS (SELECT CAST(sum(CAST(c_y AS HUGEINT) * $lcy)
+                          AS HUGEINT) AS sylog FROM my)
+          SELECT n,
+                 CAST(minum AS DOUBLE) / CAST(n AS DOUBLE) / 1048576.0
+                   AS mi_bits,
+                 CAST(CAST(CAST(n AS HUGEINT) * $ln - sxlog AS BIGINT) AS DOUBLE)
+                   / CAST(n AS DOUBLE) / 1048576.0 AS h_type_bits,
+                 CAST(CAST(CAST(n AS HUGEINT) * $ln - sylog AS BIGINT) AS DOUBLE)
+                   / CAST(n AS DOUBLE) / 1048576.0 AS h_dow_bits
+          FROM nn CROSS JOIN mi CROSS JOIN hx CROSS JOIN hy"""
+      }),
 
     // Kaplan–Meier survival over user lifetimes (first→last event day):
     // S(t) = Π_{i≤t}(1 − dᵢ/nᵢ) is a product of exact rationals, kept
@@ -1083,7 +1829,7 @@ object AggQueries {
     // lifetime, so the deliberate single-partition window is justified
     // and keyed non-foldably). NULL once survivors hit zero (S = 0, log
     // undefined). The retention-curve statistic behind cohort LTV.
-    "agg_kaplan_meier" -> ((s, dir) => {
+    Query("agg_kaplan_meier", (s, dir) => {
       val L = graft.functions.FixedLog2.log2_fp _
       val lives = Tables.events(s, dir)
         .groupBy("user_id")
@@ -1105,7 +1851,34 @@ object AggQueries {
         .select(col("t").as("lifetime_days"), col("n_at_risk"),
           col("d").as("n_churned"), col("log2_survival"))
         .orderBy("lifetime_days")
-    }),
+    },
+      Some {
+      val ls = graft.functions.FixedLog2.sql("svv")
+      val ln = graft.functions.FixedLog2.sql("n_at_risk")
+      s"""WITH lives AS (SELECT user_id,
+                           CAST(date_diff('day', min(CAST(ts AS DATE)),
+                             max(CAST(ts AS DATE))) AS BIGINT) AS t
+                         FROM events GROUP BY 1),
+               hist AS (SELECT t, count(*) AS d FROM lives GROUP BY 1),
+               ar AS (SELECT t, d,
+                        CAST(sum(d) OVER (ORDER BY t ROWS BETWEEN
+                          CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
+                          AS n_at_risk
+                      FROM hist),
+               sv AS (SELECT t, d, n_at_risk,
+                        n_at_risk - d AS svv
+                      FROM ar),
+               tm AS (SELECT t, d, n_at_risk,
+                        CASE WHEN n_at_risk > d
+                          THEN $ls - $ln END AS surv
+                      FROM sv)
+          SELECT t AS lifetime_days, n_at_risk, d AS n_churned,
+                 CASE WHEN surv IS NOT NULL THEN
+                   CAST(sum(surv) OVER (ORDER BY t ROWS BETWEEN
+                     UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+                     / 1048576.0 END AS log2_survival
+          FROM tm ORDER BY lifetime_days"""
+      }),
 
     // One-way ANOVA F across event types on value cents — the "does this
     // slice move the metric" test a feature pipeline runs before shipping
@@ -1116,11 +1889,19 @@ object AggQueries {
     // in a FIXED event_type order (sort_array→aggregate ≡
     // list_sort→list_reduce, the Cramér's-V discipline), so F is bitwise
     // portable. k is the bounded type universe, never event volume.
-    "agg_anova_f" -> ((s, dir) =>
+    Query("agg_anova_f", (s, dir) =>
       fixedFoldF(Tables.events(s, dir)
           .select(col("event_type"), Exact.cents(col("value")).as("v")))
         .select(col("k"), col("n_total"), col("ssb"), col("ssw"),
-                col("stat").as("f_stat"))),
+                col("stat").as("f_stat")),
+      Some(s"""WITH c AS (SELECT event_type,
+                            CAST(round(value * 100, 0) AS BIGINT) AS c
+                     FROM events),
+              ${duckFixedFoldF("c", "c")}
+         SELECT k, n_total, ssb, ssw,
+                (ssb / CAST(k - 1 AS DOUBLE))
+                  / (ssw / CAST(n_total - k AS DOUBLE)) AS f_stat
+         FROM f""")),
 
     // Brown–Forsythe (median-based Levene) variance-equality test across
     // event types — the heteroscedasticity gate that decides whether
@@ -1130,7 +1911,7 @@ object AggQueries {
     // z = |2c − 2·median| are exact BIGINTs; then the same fixed-fold
     // one-way-F chain as agg_anova_f runs on z. Two scans of the cents
     // frame (rank pick + spread moments), both keyed by type.
-    "agg_levene_bf" -> ((s, dir) => {
+    Query("agg_levene_bf", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
       val v = Tables.events(s, dir)
         .select(col("event_type"), Exact.cents(col("value")).as("c"))
@@ -1148,7 +1929,28 @@ object AggQueries {
           .select(col("event_type"),
                   abs(col("c") * 2 - col("m2")).as("v")))
         .select(col("k"), col("n_total"), col("stat").as("w_stat"))
-    }),
+    },
+      Some(s"""WITH v AS (SELECT event_type,
+                           CAST(round(value * 100, 0) AS BIGINT) AS c
+                    FROM events),
+              r AS (SELECT event_type, c,
+                           CAST(row_number() OVER (PARTITION BY event_type
+                             ORDER BY c) AS BIGINT) AS rn,
+                           count(*) OVER (PARTITION BY event_type) AS n
+                    FROM v),
+              md AS (SELECT event_type,
+                            CAST(sum(CASE WHEN rn = (n + 1) // 2 THEN c
+                                          ELSE 0 END)
+                              + sum(CASE WHEN rn = (n + 2) // 2 THEN c
+                                         ELSE 0 END) AS BIGINT) AS m2
+                     FROM r GROUP BY 1),
+              z AS (SELECT v.event_type, abs(v.c * 2 - md.m2) AS z
+                    FROM v JOIN md ON md.event_type = v.event_type),
+              ${duckFixedFoldF("z", "z")}
+         SELECT k, n_total,
+                (ssb / CAST(k - 1 AS DOUBLE))
+                  / (ssw / CAST(n_total - k AS DOUBLE)) AS w_stat
+         FROM f""")),
 
     // CUPED variance reduction — the experimentation-platform adjustment:
     // split users into pseudo-arms by the seedless spread hash, use each
@@ -1160,7 +1962,7 @@ object AggQueries {
     // one IEEE division each. One partial-agg pass to user cells, one to
     // arm/global moments; the window-midpoint scalar is a 1-row
     // broadcast.
-    "agg_cuped_adjustment" -> ((s, dir) => {
+    Query("agg_cuped_adjustment", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       def d(c: org.apache.spark.sql.Column) = c.cast("double")
       val ev = Tables.events(s, dir)
@@ -1218,1878 +2020,8 @@ object AggQueries {
           ((col("diff_raw") - col("theta") * col("diff_x"))
             / lit(10000.0) / lit(100.0)).as("diff_cuped"),
           col("theta"), col("rho2"))
-    }),
-
-    // Delta-method standard error of a ratio metric (value per event)
-    // under user-level clustering — the correct SE every experimentation
-    // platform needs because events within a user correlate: naive
-    // per-event SE is anticonservative. Per-user totals (x = events,
-    // y = cents) are exact integers from one partial-agg pass;
-    // R = ȳ/x̄ and Var(R) ≈ (Var(y) − 2R·Cov + R²·Var(x))/(n·x̄²) use
-    // exact DECIMAL(38,0) moments with a FIXED IEEE chain (each moment
-    // one division, combined once). Output in dollars per event.
-    "agg_ratio_delta_se" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      def d(c: org.apache.spark.sql.Column) = c.cast("double")
-      val u = Tables.events(s, dir)
-        .groupBy("user_id")
-        .agg(count(lit(1)).as("x"), sum(Exact.cents(col("value"))).as("y"))
-      u.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-            sum(dec(col("x")) * dec(col("x"))).as("sxx"),
-            sum(dec(col("x")) * dec(col("y"))).as("sxy"),
-            sum(dec(col("y")) * dec(col("y"))).as("syy"))
-        .withColumn("xbar", d(col("sx")) / d(col("n")))
-        .withColumn("r", d(col("sy")) / d(col("sx")))
-        .withColumn("var_x",
-          (dec(col("n")) * col("sxx") - dec(col("sx")) * dec(col("sx")))
-            .cast("double") / d(col("n") * (col("n") - 1)))
-        .withColumn("var_y",
-          (dec(col("n")) * col("syy") - dec(col("sy")) * dec(col("sy")))
-            .cast("double") / d(col("n") * (col("n") - 1)))
-        .withColumn("cov_xy",
-          (dec(col("n")) * col("sxy") - dec(col("sx")) * dec(col("sy")))
-            .cast("double") / d(col("n") * (col("n") - 1)))
-        .select(col("n").as("n_users"),
-          (col("r") / lit(100.0)).as("ratio"),
-          (sqrt((col("var_y") - lit(2.0) * col("r") * col("cov_xy")
-                 + col("r") * col("r") * col("var_x"))
-                / (d(col("n")) * col("xbar") * col("xbar")))
-            / lit(100.0)).as("se_delta"))
-    }),
-
-    // Pooled-variance Student t, Cohen's d effect size and the
-    // Welch–Satterthwaite df for every event-type pair — the effect-size
-    // report A/B readouts need next to agg_two_sample_z's z. Moments are
-    // exact (cents lattice, DECIMAL(38,0) cross terms); the t/d/df
-    // formulas spend fixed IEEE chains mirrored verbatim in the oracle.
-    "agg_effect_size_t" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast("double")
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val stats = Tables.events(s, dir)
-        .select(col("event_type"), Exact.cents(col("value")).as("c"))
-        .groupBy("event_type")
-        // second moment in DECIMAL(38,0): a raw BIGINT c·c sum wraps
-        // SILENTLY at corpus scale on Spark while the oracle's HUGEINT
-        // sum → BIGINT cast aborts loudly — the decimal lattice keeps
-        // both engines exact (the neighboring anova/mde discipline)
-        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
-             sum(dec(col("c")) * dec(col("c"))).as("ss"))
-        .tracked // both sides of the pair self-join
-      val a = stats.select(col("event_type").as("et_a"), col("n").as("na"),
-        col("sc").as("sca"), col("ss").as("ssa"))
-      val b = stats.select(col("event_type").as("et_b"), col("n").as("nb"),
-        col("sc").as("scb"), col("ss").as("ssb"))
-      val ma = d(col("sca")) / d(col("na"))
-      val mb = d(col("scb")) / d(col("nb"))
-      val va = (dec(col("na")) * dec(col("ssa"))
-        - dec(col("sca")) * dec(col("sca"))).cast("double") /
-        d(col("na") * (col("na") - 1L))
-      val vb = (dec(col("nb")) * dec(col("ssb"))
-        - dec(col("scb")) * dec(col("scb"))).cast("double") /
-        d(col("nb") * (col("nb") - 1L))
-      val sp2 = (d(col("na") - 1L) * va + d(col("nb") - 1L) * vb) /
-        d(col("na") + col("nb") - 2L)
-      val vna = va / d(col("na"))
-      val vnb = vb / d(col("nb"))
-      a.join(b, col("et_a") < col("et_b"))
-        .select(col("et_a"), col("et_b"), col("na"), col("nb"),
-          ((ma - mb) / (sqrt(sp2)
-            * sqrt(lit(1.0) / d(col("na")) + lit(1.0) / d(col("nb")))))
-            .as("t_pooled"),
-          ((ma - mb) / sqrt(sp2)).as("cohen_d"),
-          ((vna + vnb) * (vna + vnb)
-            / (vna * vna / d(col("na") - 1L)
-               + vnb * vnb / d(col("nb") - 1L))).as("df_welch"))
-        .orderBy("et_a", "et_b")
-    }),
-
-    // 10% trimmed mean per type WITHOUT a row-level rank: cumulative
-    // counts over the (type, value) HISTOGRAM cells (keyed window over
-    // the value support, never event rows), each cell contributing
-    // max(0, overlap of its cumulative range with the kept band) — the
-    // robust-location estimate at 100 TB, where sorting rows per key is
-    // the thing you must not do.
-    "agg_trimmed_mean" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), Exact.cents(col("value")).as("c"))
-      val cells = ev.groupBy("event_type", "c")
-        .agg(count(lit(1)).as("cnt"))
-      val wc = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("c")
-        .rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val tot = ev.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("s_all"))
-      cells
-        .withColumn("cum", sum("cnt").over(wc))
-        .withColumn("cum_prev", col("cum") - col("cnt"))
-        .join(tot, "event_type")
-        .withColumn("lo", expr("n div 10"))
-        .withColumn("kept", greatest(lit(0L),
-          least(col("cum"), col("n") - col("lo"))
-            - greatest(col("cum_prev") + 1L, col("lo") + 1L) + 1L))
-        .groupBy("event_type")
-        .agg(max("n").as("n"), max("s_all").as("s_all"),
-             sum("kept").as("n_trimmed"),
-             sum(col("c") * col("kept")).as("t_sum"))
-        .select(col("event_type"), col("n"), col("n_trimmed"),
-          (col("s_all").cast("double") / col("n").cast("double"))
-            .as("mean_c"),
-          (col("t_sum").cast("double") / col("n_trimmed").cast("double"))
-            .as("trimmed_mean_c"),
-          expr("t_sum div n_trimmed").as("trimmed_floor_c"))
-        .orderBy("event_type")
-    }),
-
-    // Simpson's-paradox screen: the (discount → quantity) association
-    // judged pooled AND per brand, with only the SIGNS of exact centered
-    // covariance numerators compared — signs of integers, so the flip
-    // report is bitwise trivially and immune to IEEE noise. The
-    // aggregation-bias tripwire every metrics rollup should run before
-    // shipping a "discounts don't work" conclusion.
-    "agg_simpson_check" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      def covSign(g: DataFrame): DataFrame = g
-        .withColumn("cov_num", Exact.checkedLong(
-          dec(col("n")) * col("sdq") - dec(col("sd")) * dec(col("sq"))))
-        .withColumn("assoc_sign", signum(col("cov_num")).cast("long"))
-      val j = Tables.lineitem(s, dir)
-        .join(Tables.part(s, dir),
-          col("p_partkey") === col("l_partkey"))
-        .select(col("p_brand"),
-          Exact.cents(col("l_discount")).as("d"),
-          col("l_quantity").cast("long").as("q"))
-        .tracked // pooled + per-brand moments scan it
-      val perBrand = covSign(j.groupBy("p_brand")
-        .agg(count(lit(1)).as("n"), sum("d").as("sd"), sum("q").as("sq"),
-             sum(dec(col("d")) * dec(col("q"))).as("sdq")))
-      val pooled = covSign(j.agg(count(lit(1)).as("n"), sum("d").as("sd"),
-          sum("q").as("sq"), sum(dec(col("d")) * dec(col("q"))).as("sdq")))
-        .select(col("assoc_sign").as("pooled_sign"))
-      perBrand.crossJoin(broadcast(pooled))
-        .select(col("p_brand"), col("n"), col("cov_num"),
-          col("assoc_sign"), col("pooled_sign"),
-          (col("assoc_sign") =!= lit(0L)
-            && col("assoc_sign") =!= col("pooled_sign")).as("sign_flip"))
-        .orderBy("p_brand")
-    }),
-
-    // Top-decile value concentration: what share of each type's total
-    // value the top 10% of events carry — the same histogram-overlap
-    // machinery as agg_trimmed_mean (cumulative counts over value CELLS,
-    // never a row-level rank), share exact in ppm plus one IEEE double.
-    "agg_top_decile_share" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), Exact.cents(col("value")).as("c"))
-      val cells = ev.groupBy("event_type", "c")
-        .agg(count(lit(1)).as("cnt"))
-      val wc = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("c")
-        .rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val tot = ev.groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("s_all"))
-      cells
-        .withColumn("cum", sum("cnt").over(wc))
-        .withColumn("cum_prev", col("cum") - col("cnt"))
-        .join(tot, "event_type")
-        .withColumn("lo", expr("n div 10"))
-        .withColumn("kept", greatest(lit(0L),
-          least(col("cum"), col("n"))
-            - greatest(col("cum_prev") + 1L, col("n") - col("lo") + 1L)
-            + 1L))
-        .groupBy("event_type")
-        .agg(max("n").as("n"), max("s_all").as("s_all"),
-             sum("kept").as("n_top"),
-             sum(col("c") * col("kept")).as("top_sum"))
-        .select(col("event_type"), col("n"), col("n_top"), col("top_sum"),
-          expr("(1000000 * cast(top_sum as decimal(38,0))) div s_all")
-            .as("share_ppm"),
-          (col("top_sum").cast("double") / col("s_all").cast("double"))
-            .as("share"))
-        .orderBy("event_type")
-    }),
-
-    // KS uniformity audit of the engine's own LCG spread hash — the
-    // self-test any hash-partitioned sampler owes its users: D =
-    // max|F̂(u) − u/10⁶| evaluated on the integer lattice at both sides
-    // of every occupied cell (the discrete-KS boundary convention), via
-    // the global two-level prefix sum — never a single-partition window
-    // over the support.
-    "agg_hash_uniformity_ks" -> ((s, dir) => {
-      val m = 2147483647L
-      val cells = Tables.events(s, dir)
-        .withColumn("h1", ((col("event_id") % m) * 1103515245L + 12345L) % m)
-        .withColumn("hm", (col("h1") * col("h1")) % m)
-        .withColumn("u", ((col("hm") * 69069L + 362437L) % m) % 1000000L)
-        .groupBy("u").agg(count(lit(1)).as("cnt"))
-      val cum = graft.text.Packing.withStreamOffset(
-        cells, "u", "cnt", "cum_prev", bucketSize = 10000L)
-        .withColumn("cum", col("cum_prev") + col("cnt"))
-      val tot = cells.agg(sum("cnt").as("n"))
-      cum.crossJoin(broadcast(tot))
-        .select(col("n"),
-          greatest(
-            abs(col("cum") * lit(1000000L) - col("n") * (col("u") + 1L)),
-            abs(col("cum_prev") * lit(1000000L) - col("n") * col("u")))
-            .as("dn"))
-        .groupBy("n").agg(max("dn").as("d_num"))
-        .select(col("n"), col("d_num"),
-          (col("d_num").cast("double")
-            / (col("n").cast("double") * lit(1.0e6))).as("d_stat"),
-          ((col("d_num").cast("double")
-            / (col("n").cast("double") * lit(1.0e6)))
-            * sqrt(col("n").cast("double"))).as("d_sqrt_n"))
-    }),
-
-    // Power analysis / minimum detectable effect per metric: with this
-    // type's variance and a 50/50 split of its current volume, what
-    // lift could a two-arm test detect at α = 0.05, power = 0.8?
-    // mde = (z_α/2 + z_β)·√(2σ²/n_arm) with the two z's as DEFINED
-    // constants (1.96, 0.8416) — variance from exact DECIMAL moments,
-    // the mde one fixed IEEE chain. The sizing readout every experiment
-    // platform publishes next to its metrics.
-    "agg_mde_power" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast("double")
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val stats = Tables.events(s, dir)
-        .select(col("event_type"), Exact.cents(col("value")).as("c"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("c").as("sc"),
-             sum(dec(col("c")) * dec(col("c"))).as("ss"))
-        .withColumn("n_arm", expr("n div 2"))
-      val v = (dec(col("n")) * col("ss") - dec(col("sc")) * dec(col("sc")))
-        .cast("double") / d(col("n") * (col("n") - 1L))
-      val mde = lit(1.96 + 0.8416) * sqrt(lit(2.0) * v / d(col("n_arm")))
-      stats.select(col("event_type"), col("n"), col("n_arm"),
-          (d(col("sc")) / d(col("n")) / lit(100.0)).as("mean_value"),
-          (v / lit(10000.0)).as("var_value"),
-          (mde / lit(100.0)).as("mde_abs"),
-          (mde / (d(col("sc")) / d(col("n")))).as("mde_rel"))
-        .orderBy("event_type")
-    }),
-
-    // Sequential probability ratio test per metric: is the daily total
-    // running at baseline μ₀ or at a 5% lift μ₁? The LLR is kept as the
-    // EXACT integer score Σ(2Δμ·x − (μ₁²−μ₀²)) (the 2σ² factor moved to
-    // the boundary), baseline moments come from the first 10 days, and
-    // the accept/reject boundaries spend one IEEE chain with ln 19 as a
-    // DEFINED constant. The always-on alternative to fixed-horizon
-    // testing — decisions per day, exact cumulative state.
-    "agg_sprt_monitor" -> ((s, dir) => {
-      def d(c: org.apache.spark.sql.Column) = c.cast("double")
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy("dt")
-      val wcum = w.rowsBetween(
-        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-      val daily = Tables.events(s, dir)
-        .groupBy(col("event_type"), to_date(col("ts")).as("dt"))
-        .agg(sum(Exact.cents(col("value"))).as("x"))
-        .withColumn("rn", row_number().over(w))
-        .tracked // baseline + monitored slice both read it
-      val base = daily.filter(col("rn") <= 10)
-        .groupBy("event_type")
-        .agg(expr("sum(x) div 10").as("mu0"),
-             sum(dec(col("x")) * dec(col("x"))).as("ss"),
-             sum("x").as("sx"))
-        .withColumn("var_num", Exact.checkedLong(
-          dec(lit(10L)) * col("ss") - dec(col("sx")) * dec(col("sx"))))
-        .withColumn("mu1", col("mu0") + expr("mu0 div 20"))
-        .select("event_type", "mu0", "mu1", "var_num")
-      val scored = daily.filter(col("rn") >= 11)
-        .join(broadcast(base), "event_type")
-        .withColumn("term", lit(2L) * (col("mu1") - col("mu0")) * col("x")
-          - (col("mu1") * col("mu1") - col("mu0") * col("mu0")))
-        .withColumn("cum_score", sum("term").over(wcum))
-      // boundary: LLR >= ln 19 ⇔ score >= 2σ²·ln 19, σ² = var_num/90
-      val thr = lit(2.0) * (d(col("var_num")) / lit(90.0)) *
-        lit(2.9444389791664403)
-      scored.select(col("event_type"), col("dt"), col("x"),
-          col("cum_score"),
-          when(d(col("cum_score")) >= thr, lit("accept_lift"))
-            .when(d(col("cum_score")) <= -thr, lit("accept_baseline"))
-            .otherwise(lit("continue")).as("decision"))
-        .orderBy("event_type", "dt")
-    }),
-
-    // Sample-ratio-mismatch guardrail: the 1-df χ² of the hash-split arm
-    // counts against 50/50 — THE first check an experimentation readout
-    // runs before any metric (a biased splitter invalidates everything
-    // downstream). Seed reduces mod-first (the documented overflow-safe
-    // LCG discipline); χ² numerator exact through DECIMAL, the 3.8415
-    // critical compare done in scaled integers so the flag is portable.
-    // The fixture's signup split genuinely trips it.
-    "agg_srm_check" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val m = 2147483647L
-      val arm = ((col("user_id") % m) * 1103515245L + 12345L) % m
-      Tables.events(s, dir)
-        .withColumn("arm", when(arm % 2 === 0, "a").otherwise("b"))
-        .groupBy("event_type")
-        .agg(sum(when(col("arm") === "a", 1L).otherwise(0L)).as("na"),
-             sum(when(col("arm") === "b", 1L).otherwise(0L)).as("nb"))
-        .withColumn("srm_num", Exact.checkedLong(
-          dec(col("na") - col("nb")) * dec(col("na") - col("nb"))))
-        .withColumn("srm_den", col("na") + col("nb"))
-        .withColumn("srm_chi2",
-          col("srm_num").cast("double") / col("srm_den").cast("double"))
-        .withColumn("srm_flag",
-          when(dec(col("srm_num")) * lit(10000L)
-                 > dec(col("srm_den")) * lit(38415L), 1L).otherwise(0L))
-        .select("event_type", "na", "nb", "srm_num", "srm_den",
-          "srm_chi2", "srm_flag")
-        .orderBy("event_type")
-    }),
-
-    // G-test of value-mix homogeneity: are the three fixed value buckets
-    // ($0-75 / 75-150 / 150+) distributed identically across event types?
-    // The log-likelihood-ratio sibling of agg_chi2_contingency, and a
-    // FixedLog2 showcase: each cell's O·ln(O·N/(R·C)) term is the exact
-    // integer O·(log2fp(O·N) − log2fp(R·C)), decimal-summed order-free;
-    // the df=8 critical compare happens on the same lattice
-    // (crit_q = ⌊15.507/(2ln2)·2²⁰⌋ = 11729304) so the flag is portable.
-    // 15 cells by construction — every frame after the first groupBy is
-    // bounded, and the 1-row total attaches via broadcast.
-    "agg_g_test" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val L = graft.functions.FixedLog2.log2_fp _
-      val c = Tables.events(s, dir)
-        .withColumn("cc", Exact.cents(col("value")))
-        .groupBy(col("event_type"),
-                 least(lit(2L), expr("cc DIV 7500")).as("vb"))
-        .agg(count(lit(1)).as("o")).tracked
-      val r = c.groupBy("event_type").agg(sum("o").as("rt"))
-      val k = c.groupBy("vb").agg(sum("o").as("ct"))
-      val n = c.agg(sum("o").as("nt"))
-      c.join(broadcast(r), "event_type").join(broadcast(k), "vb")
-        .crossJoin(broadcast(n))
-        .withColumn("term",
-          dec(col("o")) * dec(L(col("o") * col("nt")) -
-                              L(col("rt") * col("ct"))))
-        .agg(max("nt").as("n_events"), count(lit(1)).as("n_cells"),
-             sum("term").cast("long").as("g_scaled"))
-        .select(col("n_events"), col("n_cells"), col("g_scaled"),
-          lit(8L).as("df"),
-          (col("g_scaled").cast("double") * lit(1.3862943611198906)
-            / lit(1048576.0)).as("g_stat"),
-          when(col("g_scaled") > lit(11729304L), 1L).otherwise(0L)
-            .as("reject_flag"))
-    }),
-
-    // Poisson rate-shift guardrail: per type, first-half vs second-half
-    // event counts against their day exposures — the conditional-binomial
-    // score test (n1·E − n·e1)²/(n·e1·e2) vs χ²(1), cross-multiplied into
-    // one exact integer compare (10⁴·num² > 38415·den) so the flag is
-    // portable. The global date bounds attach as a 1-row broadcast.
-    "agg_poisson_rate_test" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), to_date(col("ts")).as("d")).tracked
-      val b = ev.agg(min("d").as("mn"), max("d").as("mx"))
-        .select(col("mn"),
-          date_add(col("mn"),
-            ((datediff(col("mx"), col("mn")) + 1) / 2)
-              .cast("int")).as("mid"), col("mx"))
-      ev.crossJoin(broadcast(b))
-        .groupBy("event_type")
-        .agg(sum(when(col("d") < col("mid"), 1L).otherwise(0L)).as("n1"),
-             sum(when(col("d") >= col("mid"), 1L).otherwise(0L)).as("n2"),
-             datediff(min("mid"), min("mn")).cast("long").as("e1"),
-             (datediff(min("mx"), min("mid")) + 1).cast("long").as("e2"))
-        .withColumn("num", col("n1") * (col("e1") + col("e2")) -
-                           (col("n1") + col("n2")) * col("e1"))
-        .withColumn("den", (col("n1") + col("n2")) * col("e1") * col("e2"))
-        .select(col("event_type"), col("n1"), col("n2"), col("e1"),
-          col("e2"),
-          expr("(10000 * n1 * e2) DIV (n2 * e1)").as("rate_ratio_q4"),
-          expr("""CAST((CAST(num AS DECIMAL(38,0)) * num * 10000) DIV den
-                  AS BIGINT)""").as("score_q4"),
-          when(expr("CAST(num AS DECIMAL(38,0)) * num * 10000") >
-               expr("CAST(den AS DECIMAL(38,0)) * 38415"), 1L)
-            .otherwise(0L).as("rate_shift_flag"))
-        .orderBy("event_type")
-    }),
-
-    // Tukey HSD post-hoc: after the one-way ANOVA, which of the 10 type
-    // pairs actually differ in mean value? Means quantized to the q8 cents
-    // lattice (⌊256·S/n⌋), within-group SS to ⌊S²/n⌋ cells — the
-    // statistic is DEFINED on those lattices (the kruskal discipline) so
-    // both engines compare identical integers: 100·Δq²·(N−k)·2·nₐn_b vs
-    // 1488·2¹⁶·SSW·(nₐ+n_b), q²(5,∞)=14.88 truncated at 2dp; the q4 ratio
-    // of the two sides carries continuous signal beside the flag. The
-    // 5-row stats self-join and 1-row totals combine are bounded
-    // broadcasts (allowlisted BNLJ shapes).
-    "agg_tukey_hsd" -> ((s, dir) => {
-      val g = Tables.events(s, dir)
-        .withColumn("cc", Exact.cents(col("value")))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("cc").as("s"),
-             sum(expr("CAST(cc AS DECIMAL(38,0)) * cc")).as("ss")).tracked
-      val t = g.agg(sum("n").cast("long").as("nn"),
-                    count(lit(1)).as("k"),
-                    sum(expr("ss - (CAST(s AS DECIMAL(38,0)) * s) DIV n"))
-                      .cast("long").as("ssw_q"))
-      val a = g.select(col("event_type").as("type_a"), col("n").as("n_a"),
-                       col("s").as("s_a"))
-      val b = g.select(col("event_type").as("type_b"), col("n").as("n_b"),
-                       col("s").as("s_b"))
-      a.join(broadcast(b), col("type_a") < col("type_b"))
-        .crossJoin(broadcast(t))
-        .withColumn("dq", expr("(256 * s_a) DIV n_a - (256 * s_b) DIV n_b"))
-        .withColumn("lhs", expr(
-          "CAST(100 AS DECIMAL(38,0)) * dq * dq * (nn - k) * 2 * n_a * n_b"))
-        .withColumn("rhs", expr(
-          "CAST(1488 AS DECIMAL(38,0)) * 65536 * ssw_q * (n_a + n_b)"))
-        .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
-          col("dq").as("mean_diff_q8"),
-          expr("CAST((CAST(10000 AS DECIMAL(38,0)) * lhs) DIV rhs AS BIGINT)")
-            .as("hsd_ratio_q4"),
-          when(col("lhs") > col("rhs"), 1L).otherwise(0L).as("hsd_flag"))
-        .orderBy("type_a", "type_b")
-    }),
-
-    // Cohen's kappa inter-labeler agreement between the two cheap length
-    // labelings every curation pipeline accumulates (char-class terciles
-    // vs word-count terciles): κ = (N·ΣOᵢᵢ − ΣRᵢCᵢ)/(N² − ΣRᵢCᵢ), exact
-    // integers through one final IEEE division. The contingency is ≤ 9
-    // cells after the first groupBy, so margins and totals are bounded
-    // 1-row broadcasts (allowlisted scalar combines).
-    "agg_cohens_kappa" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val words = length(col("text")) -
-        length(regexp_replace(col("text"), lit(" "), lit(""))) + 1
-      val l = Tables.documents(s, dir).select(
-        when(col("n_chars") < 220, 0L).when(col("n_chars") < 380, 1L)
-          .otherwise(2L).as("la"),
-        when(words < 40, 0L).when(words < 69, 1L).otherwise(2L).as("lb"))
-      val o = l.groupBy("la", "lb").agg(count(lit(1)).as("n")).tracked
-      val tot = o.agg(sum("n").cast("long").as("n_total"),
-        sum(when(col("la") === col("lb"), col("n")).otherwise(0L))
-          .cast("long").as("n_agree"))
-      val r = o.groupBy("la").agg(sum("n").as("rn"))
-      val k = o.groupBy("lb").agg(sum("n").as("cn"))
-      val chance = r.join(k, col("la") === col("lb"))
-        .agg(Exact.checkedLong(sum(dec(col("rn")) * dec(col("cn"))))
-          .as("chance"))
-      tot.crossJoin(broadcast(chance))
-        .select(col("n_total"), col("n_agree"), col("chance"),
-          Exact.checkedLong(dec(col("n_total")) * dec(col("n_agree"))
-            - dec(col("chance"))).as("kappa_num"),
-          Exact.checkedLong(dec(col("n_total")) * dec(col("n_total"))
-            - dec(col("chance"))).as("kappa_den"))
-        .withColumn("kappa", col("kappa_num").cast("double")
-          / col("kappa_den").cast("double"))
-    }),
-
-    // Delete-one-DAY jackknife variance of the per-type mean value — the
-    // grouped-resampling SE that respects within-day correlation (the
-    // i.i.d. formula understates it). Leave-one-out means on the q10
-    // lattice θᵢ = ⌊2¹⁰(S−sᵢ)/(n−nᵢ)⌋, then the (d−1)(dΣθ²−(Σθ)²)/d²
-    // spread with decimal-exact moments — integers end to end, one final
-    // sqrt. Day cells bound every frame; the per-type totals broadcast.
-    "agg_jackknife_variance" -> ((s, dir) => {
-      val g = Tables.events(s, dir)
-        .withColumn("cc", Exact.cents(col("value")))
-        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
-        .agg(count(lit(1)).as("ni"), sum("cc").as("si"))
-      val t = g.groupBy("event_type")
-        .agg(sum("ni").cast("long").as("n"), sum("si").cast("long").as("s"))
-      val th = g.join(broadcast(t), "event_type")
-        .select(col("event_type"),
-          expr("(1024 * (s - si)) DIV (n - ni)").as("theta"))
-      th.groupBy("event_type")
-        .agg(count(lit(1)).as("n_days"),
-          sum("theta").cast("long").as("st"),
-          sum(expr("CAST(theta AS DECIMAL(38,0)) * theta")).as("stt"))
-        .join(broadcast(t), "event_type")
-        // the θ-spread core leaves the decimal lattice as a checked
-        // BIGINT BEFORE the final division: DuckDB's DECIMAL `//`
-        // ROUNDS (measured: N/900 = x.74 gave x+1) where BIGINT `//`
-        // truncates like Spark's DIV — and θ is mean-scaled, so the
-        // core is BIGINT-safe at any data volume
-        .withColumn("core", Exact.checkedLong(expr(
-          "n_days * stt - CAST(st AS DECIMAL(38,0)) * st")))
-        .select(col("event_type"), col("n_days"),
-          expr("(1024 * s) DIV n").as("mean_q10"),
-          expr("((n_days - 1) * core) DIV (n_days * n_days)")
-            .as("jk_var_num_q20"),
-          (sqrt(expr("((n_days - 1) * core) DIV (n_days * n_days)")
-            .cast("double")) / lit(1024.0)).as("jk_se"))
-        .orderBy("event_type")
-    }),
-
-    // Randomization (permutation) test for the purchase-vs-rest value
-    // difference: 64 deterministic sign-splits from the spread-hash chain,
-    // statistic d = |n·S₁ − n₁·S| (zero-mean under exchangeability),
-    // DECIMAL-exact per split, p̂ = (#{|d_p| ≥ |d_obs|}+1)/65. ONE pass:
-    // the 64 re-labelings are gated sums inside a single wide partial
-    // aggregation — never 64 scans and never an explode — which is the
-    // only shape that survives 100 TB. Monte-Carlo over fixed hash splits,
-    // so reruns, retries and the oracle all see identical permutations.
-    "agg_permutation_test" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val h = Tables.events(s, dir).select(
-        col("event_type"), Exact.cents(col("value")).as("cc"),
-        graft.olap.Sketch.spreadHash(col("event_id")).as("h3"))
-      def bit(p: Int) = expr(
-        s"((h3 * 1000003 + ${p * 7919 + 12345}) % 2147483647 >> 7) & 1")
-      val base = Seq(
-        count(lit(1)).as("n"), sum(col("cc")).as("s"),
-        sum(when(col("event_type") === "purchase", col("cc"))
-          .otherwise(0L)).as("s_obs"),
-        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
-          .as("n_obs"))
-      val perms = (0 until 64).flatMap { p =>
-        Seq(sum(when(bit(p) === 1, col("cc")).otherwise(0L)).as(s"s$p"),
-            sum(when(bit(p) === 1, 1L).otherwise(0L)).as(s"m$p"))
-      }
-      val agg = h.agg((base ++ perms).head, (base ++ perms).tail: _*)
-      val dObs = abs(dec(col("n")) * dec(col("s_obs"))
-        - dec(col("n_obs")) * dec(col("s")))
-      val ge = (0 until 64).map { p =>
-        when(abs(dec(col("n")) * dec(col(s"s$p"))
-          - dec(col(s"m$p")) * dec(col("s"))) >= dObs, 1L).otherwise(0L)
-      }.reduce(_ + _)
-      agg.select(col("n").as("n_events"), col("n_obs").as("n_treat"),
-        Exact.checkedLong(dObs).as("d_obs"), ge.as("n_perm_ge"),
-        ((ge + lit(1L)).cast("double") / lit(65.0)).as("p_value"))
-    }),
-
-    // Lincoln–Petersen capture–recapture: estimate the per-type user
-    // population from two single-day "capture" samples (first and last
-    // active day) — the coverage estimator crawl/census pipelines use
-    // when the full population is unobservable. N̂ = n₁n₂ div m₁₂ exact;
-    // the true count rides along so the estimator's bias is measured,
-    // not assumed. Global date bounds attach as the 1-row broadcast.
-    "agg_capture_recapture" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"), col("user_id"),
-          to_date(col("ts")).as("d")).tracked
-      val b = ev.agg(min("d").as("mn"), max("d").as("mx"))
-      ev.crossJoin(broadcast(b))
-        .groupBy("event_type", "user_id")
-        .agg(max(when(col("d") === col("mn"), 1L).otherwise(0L)).as("c1"),
-             max(when(col("d") === col("mx"), 1L).otherwise(0L)).as("c2"))
-        .groupBy("event_type")
-        .agg(sum("c1").cast("long").as("n1"),
-          sum("c2").cast("long").as("n2"),
-          sum(col("c1") * col("c2")).cast("long").as("m12"),
-          sum(when(col("c1") === 1L || col("c2") === 1L, 1L).otherwise(0L))
-            .cast("long").as("n_seen"),
-          count(lit(1)).as("n_true"))
-        .select(col("event_type"), col("n1"), col("n2"), col("m12"),
-          col("n_seen"), col("n_true"),
-          when(col("m12") > 0, expr("(n1 * n2) DIV m12")).as("n_hat"),
-          when(col("m12") > 0,
-            (expr("(n1 * n2) DIV m12") - col("n_true")).cast("double")
-              / col("n_true").cast("double")).as("rel_bias"))
-        .orderBy("event_type")
-    }),
-
-    // Hill tail-index estimator over the top-200 order totals — "how
-    // heavy is the revenue tail?" (α ≈ 1 Zipf-like, α large thin). The
-    // order statistics come from one rank window, the log-moment is the
-    // exact FixedLog2 sum Σ(log2fp(xᵢ) − log2fp(x₍ₖ₊₁₎)), and α spends
-    // one IEEE chain. Pairs with the Zipf/Heaps text laws on the exact
-    // same lattice.
-    "agg_hill_tail_index" -> ((s, dir) => {
-      val L = graft.functions.FixedLog2.log2_fp _
-      val W = org.apache.spark.sql.expressions.Window
-        .partitionBy(Exact.onePartition(col("x"))).orderBy(col("x").desc)
-      // distributed top-k first (TakeOrderedAndProject — per-partition
-      // heads, never a global sort); the rank window then runs over the
-      // 201-row frame (deliberate onePartition). Value ties at either
-      // boundary are harmless: the statistic reads only the x multiset.
-      val r = Tables.orders(s, dir)
-        .select(Exact.cents(col("o_totalprice")).as("x"))
-        .orderBy(col("x").desc).limit(201)
-        .withColumn("rn", row_number().over(W))
-        .tracked
-      val xk = r.filter(col("rn") === 201).select(L(col("x")).as("lxk"))
-      r.filter(col("rn") <= 200)
-        .crossJoin(broadcast(xk))
-        .agg(count(lit(1)).as("k"),
-          (sum(L(col("x"))) - lit(200L) * max("lxk")).cast("long")
-            .as("s_q20"))
-        .withColumn("hill_alpha",
-          col("k").cast("double") * lit(1048576.0)
-            / (col("s_q20").cast("double") * lit(0.6931471805599453)))
-    }),
-
-    // Two-factor OLS by normal equations in ONE aggregation pass: daily
-    // purchase revenue (cents) regressed on daily click and view counts.
-    // The nine raw moments (n, Σx₁, Σx₂, Σy, Σx₁², Σx₂², Σx₁x₂, Σx₁y,
-    // Σx₂y, Σy²) reduce the fact stream to one row — the only shape that
-    // regresses 100 TB (never a per-row residual pass); the n-scaled
-    // centered 2×2 system solves by Cramer on the DECIMAL(38,0) lattice,
-    // and every quotient is integer DIV (truncating in both engines —
-    // DuckDB runs it in HUGEINT) so coefficients leave as exact q6 ppm
-    // BIGINTs. R² rides on the same moments.
-    "agg_ols_two_factor" -> ((s, dir) => {
-      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
-      val d = Tables.events(s, dir)
-        .groupBy(to_date(col("ts")).as("dt"))
-        .agg(
-          sum(when(col("event_type") === "click", 1L).otherwise(0L))
-            .as("x1"),
-          sum(when(col("event_type") === "view", 1L).otherwise(0L))
-            .as("x2"),
-          sum(when(col("event_type") === "purchase",
-            Exact.cents(col("value"))).otherwise(0L)).as("y"))
-      val m = d.agg(count(lit(1)).as("n"),
-        sum("x1").as("s1"), sum("x2").as("s2"), sum("y").as("sy"),
-        sum(dec(col("x1")) * col("x1")).as("s11"),
-        sum(dec(col("x2")) * col("x2")).as("s22"),
-        sum(dec(col("x1")) * col("x2")).as("s12"),
-        sum(dec(col("x1")) * col("y")).as("s1y"),
-        sum(dec(col("x2")) * col("y")).as("s2y"),
-        sum(dec(col("y")) * col("y")).as("syy"))
-      // moments feed a product-of-two determinant: the 7e18 bound (not
-      // plain BIGINT range) keeps det within DECIMAL(38,0) AND HUGEINT,
-      // so Spark and the oracle share one loud overflow envelope
-      val momentBound = 7000000000000000000L
-      def mom(c: org.apache.spark.sql.Column) =
-        Exact.boundedLong(c, momentBound)
-      m.select(col("n"), col("s1"), col("s2"), col("sy"),
-          mom(col("n") * col("s11")
-            - dec(col("s1")) * col("s1")).as("c11"),
-          mom(col("n") * col("s22")
-            - dec(col("s2")) * col("s2")).as("c22"),
-          mom(col("n") * col("s12")
-            - dec(col("s1")) * col("s2")).as("c12"),
-          mom(col("n") * col("s1y")
-            - dec(col("s1")) * col("sy")).as("cy1"),
-          mom(col("n") * col("s2y")
-            - dec(col("s2")) * col("sy")).as("cy2"),
-          mom(col("n") * col("syy")
-            - dec(col("sy")) * col("sy")).as("cyy"))
-        .select(col("n").as("n_days"), col("s1"), col("s2"), col("sy"),
-          expr("""cast(c11 as decimal(38,0)) * c22
-                  - cast(c12 as decimal(38,0)) * c12""").as("det"),
-          expr("""cast(cy1 as decimal(38,0)) * c22
-                  - cast(cy2 as decimal(38,0)) * c12""").as("b1n"),
-          expr("""cast(c11 as decimal(38,0)) * cy2
-                  - cast(c12 as decimal(38,0)) * cy1""").as("b2n"),
-          col("cy1"), col("cy2"), col("cyy"))
-        .select(col("n_days"), col("s1"), col("s2"), col("sy"),
-          expr("(1000000 * b1n) DIV det").as("beta1_ppm"),
-          expr("(1000000 * b2n) DIV det").as("beta2_ppm"),
-          col("cy1"), col("cy2"), col("cyy"))
-        .select(col("n_days"), col("sy"),
-          col("beta1_ppm"), col("beta2_ppm"),
-          // intercept on the same q6 lattice: ȳ − β₁x̄₁ − β₂x̄₂, cents·ppm
-          expr("""(1000000 * sy - beta1_ppm * s1 - beta2_ppm * s2)
-                  DIV n_days""").as("alpha_ppm_cents"),
-          // R² = (β·Sxy)/Syy with the q6 betas — q6 lattice, DECIMAL-safe
-          expr("""(cast(beta1_ppm as decimal(38,0)) * cy1
-                   + cast(beta2_ppm as decimal(38,0)) * cy2)
-                  DIV cast(cyy as decimal(38,0))""").as("r2_ppm"),
-          (col("beta1_ppm").cast("double") / lit(1e6)).as("beta1"),
-          (col("beta2_ppm").cast("double") / lit(1e6)).as("beta2"))
-    }),
-
-    // Raking / iterative proportional fitting (survey calibration): the
-    // first-week (event_type × weekday) joint seeds weights that are
-    // raked to the FULL-period row then column margins — one row pass +
-    // one column pass, both on the q10 integer lattice with explicit
-    // DIV (trunc ≡ floor on nonnegatives, both engines), so the fitted
-    // weights are bitwise-portable with no float ratio anywhere. BOTH
-    // passes' products ride DECIMAL(38,0)/HUGEINT into the integral
-    // divide (the ols/beta precedent) — at extreme scale the BIGINT
-    // re-entry fails loudly on both engines rather than drifting. Seed
-    // and margin frames are dimension-sized (types × weekdays); the
-    // only fact-scale work is the three counting groupBys.
-    "agg_raking_ipf" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .select(col("event_type"),
-          dayofweek(to_date(col("ts"))).as("dow"),
-          to_date(col("ts")).as("d"))
-        .tracked // seed + both margins scan it
-      val clock = ev.agg(min("d").as("d0"))
-      val seed = ev.crossJoin(broadcast(clock))
-        .filter(col("d") < date_add(col("d0"), 7))
-        .groupBy("event_type", "dow").agg(count(lit(1)).as("n_seed"))
-        .tracked // row sums and the column pass reuse it
-      val rTot = ev.groupBy("event_type").agg(count(lit(1)).as("r_i"))
-      val cTot = ev.groupBy("dow").agg(count(lit(1)).as("c_j"))
-      val rs = seed.groupBy("event_type")
-        .agg(sum("n_seed").cast("long").as("rs0"))
-      val w1 = seed
-        .join(broadcast(rTot), "event_type")
-        .join(broadcast(rs), "event_type")
-        .withColumn("w1",
-          expr("cast(n_seed as decimal(38,0)) * 1024 * r_i div rs0"))
-        .tracked // column sums and the final projection reuse it
-      val cs = w1.groupBy("dow").agg(sum("w1").cast("long").as("cs1"))
-      w1.join(broadcast(cTot), "dow")
-        .join(broadcast(cs), "dow")
-        .withColumn("w2", expr(
-          "(cast(w1 as decimal(38,0)) * c_j * 1024)" +
-            " div cast(cs1 as decimal(38,0))"))
-        .select(col("event_type"), col("dow").cast("long").as("dow"),
-          col("n_seed"), col("w2").as("w_q10"),
-          (col("w2").cast("double") / lit(1024.0)).as("weight"))
-        .orderBy("event_type", "dow")
-    }),
-
-  )
-
-  val oracles: Map[String, String] = Map(
-    "agg_winsorize" ->
-      """WITH v AS (SELECT event_type, event_id,
-                           CAST(round(value * 100, 0) AS BIGINT) AS cents
-                    FROM events),
-              nn AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
-              r AS (SELECT v.event_type, v.cents, nn.n,
-                           row_number() OVER (PARTITION BY v.event_type
-                             ORDER BY cents, event_id) AS rn
-                    FROM v JOIN nn USING (event_type)),
-              b AS (SELECT event_type, min(cents) AS p05_cents,
-                           max(cents) AS p95_cents
-                    FROM r WHERE rn = (n * 5 + 99) // 100
-                       OR rn = (n * 95 + 99) // 100
-                    GROUP BY 1),
-              c AS (SELECT v.event_type, cents, p05_cents, p95_cents,
-                           greatest(least(cents, p95_cents), p05_cents) AS cl
-                    FROM v JOIN b USING (event_type))
-         SELECT event_type, count(*) AS n,
-                CAST(p05_cents AS DOUBLE) / 100.0 AS p05,
-                CAST(p95_cents AS DOUBLE) / 100.0 AS p95,
-                CAST(sum(CASE WHEN cents < p05_cents THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_clamped_low,
-                CAST(sum(CASE WHEN cents > p95_cents THEN 1 ELSE 0 END)
-                     AS BIGINT) AS n_clamped_high,
-                CAST(sum(cl) AS DOUBLE) / CAST(count(*) AS DOUBLE) / 100.0
-                  AS winsorized_mean
-         FROM c GROUP BY event_type, p05_cents, p95_cents
-         ORDER BY event_type""",
-
-    "agg_share_of_total" ->
-      """WITH m AS (SELECT event_type,
-                           CAST(date_trunc('month', ts) AS DATE) AS month,
-                           count(*) AS n,
-                           sum(CAST(round(value * 100, 0) AS BIGINT)) AS c
-                    FROM events GROUP BY 1, 2),
-              w AS (SELECT event_type, month, n, c,
-                           sum(c) OVER (PARTITION BY month) AS mc,
-                           sum(c) OVER () AS tc
-                    FROM m)
-         SELECT event_type, month, n,
-                CAST(c AS DOUBLE) / 100.0 AS sum_value,
-                CAST(c AS DOUBLE) / CAST(mc AS DOUBLE) AS share_of_month,
-                CAST(c AS DOUBLE) / CAST(tc AS DOUBLE) AS share_of_total
-         FROM w ORDER BY event_type, month""",
-
-    "agg_pricing_summary" ->
-      s"""SELECT l_returnflag, l_linestatus,
-                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                   AS sum_base_price,
-                 CAST(sum(${Exact.revenueSql}) AS DOUBLE) AS sum_disc_price,
-                 CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                   / CAST(count(*) AS DOUBLE) AS avg_qty,
-                 CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-                   / CAST(count(*) AS DOUBLE) AS avg_price,
-                 CAST(sum(CAST(l_discount AS DECIMAL(8,2))) AS DOUBLE)
-                   / CAST(count(*) AS DOUBLE) AS avg_disc,
-                 count(*) AS n
-          FROM lineitem
-          WHERE CAST(l_shipdate AS DATE) <= DATE '2000-12-31'
-          GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "agg_distinct_parts" ->
-      """SELECT l_returnflag, count(DISTINCT l_partkey) AS n_parts,
-                count(DISTINCT l_suppkey) AS n_supps, count(*) AS n_rows
-         FROM lineitem GROUP BY 1 ORDER BY 1""",
-
-    "agg_value_deciles" ->
-      """WITH r AS (SELECT event_type, event_id, value,
-                      CAST(row_number() OVER (PARTITION BY event_type
-                        ORDER BY value, event_id) AS BIGINT) AS rn,
-                      count(*) OVER (PARTITION BY event_type) AS cnt
-                    FROM events)
-         SELECT event_type, CAST(q AS BIGINT) AS decile, value
-         FROM r, unnest(generate_series(1, 9)) AS t(q)
-         WHERE ((cnt - 1) * q) // 10 + 1 = rn
-         ORDER BY event_type, decile""",
-
-    "agg_rollup_counts" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-                CAST(sum(CAST(round(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
-                  / 100.0 AS sum_qty,
-                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
-                  AS BIGINT) AS lvl
-         FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-         ORDER BY lvl, l_returnflag ASC NULLS FIRST,
-                  l_linestatus ASC NULLS FIRST""",
-
-    // same cents lattice + positional quantiles; the ×10-scaled losses
-    // are exact integer sums, HUGEINT routed through BIGINT
-    "agg_pinball_loss" ->
-      """WITH v AS (SELECT event_type,
-                      CAST(round(value * 100, 0) AS BIGINT) AS cents
-                    FROM events),
-            r AS (SELECT event_type, cents,
-                    row_number() OVER (PARTITION BY event_type
-                      ORDER BY cents) AS rn,
-                    count(*) OVER (PARTITION BY event_type) AS n
-                  FROM v),
-            q AS (SELECT event_type,
-                    min(CASE WHEN rn = (n + 1) // 2 THEN cents END)
-                      AS q50c,
-                    min(CASE WHEN rn = (9 * n + 9) // 10 THEN cents END)
-                      AS q90c
-                  FROM r GROUP BY 1),
-            l AS (SELECT v.event_type, q.q50c, q.q90c,
-                    count(*) AS n,
-                    CAST(sum(CASE WHEN cents >= q50c
-                                  THEN (cents - q50c) * 5
-                                  ELSE (q50c - cents) * 5 END)
-                      AS BIGINT) AS l50,
-                    CAST(sum(CASE WHEN cents >= q90c
-                                  THEN (cents - q90c) * 9
-                                  ELSE q90c - cents END)
-                      AS BIGINT) AS l90
-                  FROM v JOIN q USING (event_type) GROUP BY 1, 2, 3)
-         SELECT event_type, n,
-                CAST(q50c AS DOUBLE) / 100.0 AS q50,
-                CAST(q90c AS DOUBLE) / 100.0 AS q90,
-                CAST(l50 AS DOUBLE) / CAST(n * 1000 AS DOUBLE)
-                  AS pinball_50,
-                CAST(l90 AS DOUBLE) / CAST(n * 1000 AS DOUBLE)
-                  AS pinball_90
-         FROM l ORDER BY event_type""",
-
-    "agg_mad_outliers" ->
-      """WITH v AS (SELECT event_type,
-                      CAST(round(value * 100, 0) AS BIGINT) AS cents
-                    FROM events),
-              n AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
-              r AS (SELECT event_type, cents,
-                      row_number() OVER (PARTITION BY event_type
-                                         ORDER BY cents) AS rn
-                    FROM v),
-              med AS (SELECT r.event_type, cents AS med_cents
-                      FROM r JOIN n USING (event_type)
-                      WHERE rn = (n + 1) // 2),
-              dev AS (SELECT v.event_type, v.cents, med.med_cents,
-                        abs(v.cents - med.med_cents) AS adev
-                      FROM v JOIN med USING (event_type)),
-              r2 AS (SELECT event_type, adev,
-                       row_number() OVER (PARTITION BY event_type
-                                          ORDER BY adev) AS rn
-                     FROM dev),
-              mad AS (SELECT r2.event_type, adev AS mad_cents
-                      FROM r2 JOIN n USING (event_type)
-                      WHERE rn = (n + 1) // 2)
-         SELECT dev.event_type, count(*) AS n,
-                CAST(med_cents AS DOUBLE) / CAST(100 AS DOUBLE)
-                  AS median_value,
-                CAST(mad_cents AS DOUBLE) / CAST(100 AS DOUBLE) AS mad_value,
-                CAST(sum(CASE WHEN adev > mad_cents * 3 THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_outliers
-         FROM dev JOIN mad USING (event_type)
-         GROUP BY dev.event_type, med_cents, mad_cents
-         ORDER BY dev.event_type""",
-
-    "agg_concentration_hhi" ->
-      """WITH s AS (SELECT CAST(date_trunc('month', ts) AS DATE) AS month,
-                           event_type,
-                           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                                AS BIGINT) AS c
-                    FROM events GROUP BY 1, 2),
-              m AS (SELECT month, event_type,
-                           (c - (((c % 100) + 100) % 100)) // 100 AS d
-                    FROM s)
-         SELECT month, count(*) AS n_types,
-                CAST(sum(d * d) AS DOUBLE)
-                  / CAST(sum(d) * sum(d) AS DOUBLE) AS hhi
-         FROM m GROUP BY 1 ORDER BY 1""",
-
-    "agg_gini" ->
-      """WITH v AS (SELECT event_type, event_id,
-                           CAST(round(value * 100, 0) AS BIGINT) AS cents
-                    FROM events),
-              r AS (SELECT event_type, cents,
-                           CAST(row_number() OVER (PARTITION BY event_type
-                             ORDER BY cents, event_id) AS BIGINT) AS rn
-                    FROM v),
-              g AS (SELECT event_type, count(*) AS n, sum(cents) AS sx,
-                           sum(rn * cents) AS six
-                    FROM r GROUP BY 1)
-         SELECT event_type, n,
-                CAST(2 * six - (n + 1) * sx AS DOUBLE)
-                  / CAST(n * sx AS DOUBLE) AS gini
-         FROM g ORDER BY 1""",
-
-    "agg_heatmap_2d" ->
-      """WITH c AS (SELECT CAST(round(value * 100, 0) AS BIGINT) AS cc,
-                           isodow(CAST(ts AS DATE)) AS dow
-                    FROM events)
-         SELECT (cc - ((cc % 10000) + 10000) % 10000) // 10000
-                  AS value_band,
-                CAST(dow AS BIGINT) AS dow, count(*) AS n,
-                CAST(sum(cc) AS BIGINT) AS sum_cents
-         FROM c GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "agg_chi2_contingency" ->
-      """WITH cells AS (SELECT event_type,
-                               CAST(isodow(CAST(ts AS DATE)) AS BIGINT)
-                                 AS dow,
-                               count(*) AS o
-                        FROM events GROUP BY 1, 2),
-              rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS r
-                     FROM cells GROUP BY 1),
-              ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c
-                     FROM cells GROUP BY 1),
-              n AS (SELECT CAST(sum(o) AS BIGINT) AS n FROM cells),
-              j AS (SELECT cells.event_type, cells.dow, cells.o,
-                           rt.r, ct.c, n.n,
-                           cells.o * n.n - rt.r * ct.c AS dev
-                    FROM cells
-                    JOIN rt ON rt.event_type = cells.event_type
-                    JOIN ct ON ct.dow = cells.dow
-                    CROSS JOIN n)
-         SELECT event_type, dow, o, r, c,
-                CAST(CAST(dev AS HUGEINT) * CAST(dev AS HUGEINT)
-                     AS BIGINT) AS chi2_num,
-                n * r * c AS chi2_den,
-                CAST(CAST(CAST(dev AS HUGEINT) * CAST(dev AS HUGEINT)
-                          AS BIGINT) AS DOUBLE)
-                  / CAST(n * r * c AS DOUBLE) AS chi2_cell
-         FROM j ORDER BY event_type, dow""",
-
-    "agg_mode_per_group" ->
-      """WITH c AS (SELECT o_orderstatus, o_orderpriority,
-                           count(*) AS cnt
-                    FROM orders GROUP BY 1, 2),
-              m AS (SELECT o_orderstatus, max(cnt) AS mx
-                    FROM c GROUP BY 1)
-         SELECT c.o_orderstatus,
-                min(c.o_orderpriority) AS mode_priority,
-                CAST(max(m.mx) AS BIGINT) AS n_mode
-         FROM c JOIN m ON m.o_orderstatus = c.o_orderstatus
-                      AND c.cnt = m.mx
-         GROUP BY 1 ORDER BY 1""",
-
-    "agg_grouping_sets" ->
-      """SELECT lang, source,
-                CAST(grouping(lang) AS BIGINT) AS g_lang,
-                CAST(grouping(source) AS BIGINT) AS g_source,
-                count(*) AS n_docs,
-                CAST(sum(n_chars) AS BIGINT) AS sum_chars
-         FROM documents
-         GROUP BY GROUPING SETS ((lang), (source), (lang, source), ())
-         ORDER BY g_lang, g_source, coalesce(lang, ''),
-                  coalesce(source, '')""",
-
-    "agg_cube_counts" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-                CAST(sum(CAST(round(l_quantity * 100, 0) AS BIGINT)) AS DOUBLE)
-                  / 100.0 AS sum_qty,
-                CAST(grouping(l_returnflag) * 2 + grouping(l_linestatus)
-                  AS BIGINT) AS lvl
-         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)
-         ORDER BY lvl, l_returnflag ASC NULLS FIRST,
-                  l_linestatus ASC NULLS FIRST""",
-
-    "agg_value_histogram" ->
-      """SELECT event_type,
-                CAST(floor(value / CAST(50 AS DOUBLE)) AS BIGINT) AS bin,
-                count(*) AS n,
-                CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM events GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    "agg_retention_cohorts" ->
-      """WITH ev AS (SELECT DISTINCT user_id, CAST(ts AS DATE)
-                       AS activity_date FROM events),
-              f AS (SELECT user_id, min(activity_date) AS cohort_date
-                    FROM ev GROUP BY 1)
-         SELECT cohort_date,
-                CAST(activity_date - cohort_date AS BIGINT) AS day_offset,
-                count(DISTINCT ev.user_id) AS n_users
-         FROM ev JOIN f ON ev.user_id = f.user_id
-         GROUP BY 1, 2 ORDER BY 1, 2""",
-
-    // exact BIGINT moment sums; identical double expression order for the
-    // final mean/variance/stddev projection on both engines
-    "agg_weighted_median" ->
-      """WITH li AS (SELECT l_returnflag AS flag,
-                            CAST(round(l_extendedprice * 100, 0) AS BIGINT)
-                              AS cents,
-                            CAST(l_quantity AS BIGINT) AS qty,
-                            l_orderkey AS ok, l_linenumber AS ln
-                     FROM lineitem),
-              t AS (SELECT flag, CAST(sum(qty) AS BIGINT) AS total_qty
-                    FROM li GROUP BY 1),
-              c AS (SELECT flag, cents,
-                           CAST(sum(qty) OVER (PARTITION BY flag
-                             ORDER BY cents, ok, ln
-                             ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS BIGINT) AS cum
-                    FROM li)
-         SELECT c.flag, max(t.total_qty) AS total_qty,
-                CAST(min(c.cents) AS DOUBLE) / CAST(100 AS DOUBLE)
-                  AS weighted_median_price
-         FROM c JOIN t ON t.flag = c.flag
-         WHERE c.cum * 2 >= t.total_qty
-         GROUP BY 1 ORDER BY 1""",
-
-    "agg_skew_kurtosis" ->
-      """WITH cc AS (SELECT event_type,
-                            CAST(round(value * 100, 0) AS BIGINT) AS cc
-                     FROM events),
-              c AS (SELECT event_type,
-                           (cc - ((cc % 100) + 100) % 100) // 100 AS c
-                    FROM cc),
-              a AS (SELECT event_type,
-                           CAST(count(*) AS BIGINT) AS n,
-                           CAST(sum(c) AS BIGINT) AS s1,
-                           CAST(sum(c * c) AS BIGINT) AS s2,
-                           CAST(sum(c * c * c) AS BIGINT) AS s3,
-                           CAST(sum(c * c * c * c) AS BIGINT) AS s4
-                    FROM c GROUP BY 1),
-              d AS (SELECT event_type, n,
-                           CAST(s1 AS DOUBLE) / CAST(n AS DOUBLE) AS m,
-                           CAST(s2 AS DOUBLE) / CAST(n AS DOUBLE) AS e2,
-                           CAST(s3 AS DOUBLE) / CAST(n AS DOUBLE) AS e3,
-                           CAST(s4 AS DOUBLE) / CAST(n AS DOUBLE) AS e4
-                    FROM a)
-         SELECT event_type, n,
-                (e3 - CAST(3 AS DOUBLE) * m * e2
-                  + CAST(2 AS DOUBLE) * m * m * m)
-                  / ((e2 - m * m) * sqrt(e2 - m * m)) AS skewness,
-                (e4 - CAST(4 AS DOUBLE) * m * e3
-                  + CAST(6 AS DOUBLE) * m * m * e2
-                  - CAST(3 AS DOUBLE) * m * m * m * m)
-                  / ((e2 - m * m) * (e2 - m * m)) - CAST(3 AS DOUBLE)
-                  AS excess_kurtosis
-         FROM d ORDER BY event_type""",
-
-    "agg_value_stats" ->
-      """WITH a AS (SELECT event_type, count(*) AS n,
-                      sum(CAST(round(value * 100, 0) AS BIGINT)) AS sc,
-                      sum(CAST(round(value * 100, 0) AS BIGINT)
-                          * CAST(round(value * 100, 0) AS BIGINT)) AS ssq
-                    FROM events GROUP BY 1)
-         SELECT event_type, n,
-                CAST(sc AS DOUBLE)
-                  / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)) AS mean_value,
-                CAST(ssq AS DOUBLE)
-                  / (CAST(n AS DOUBLE) * CAST(10000 AS DOUBLE))
-                  - (CAST(sc AS DOUBLE)
-                     / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)))
-                    * (CAST(sc AS DOUBLE)
-                       / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)))
-                  AS variance,
-                sqrt(CAST(ssq AS DOUBLE)
-                  / (CAST(n AS DOUBLE) * CAST(10000 AS DOUBLE))
-                  - (CAST(sc AS DOUBLE)
-                     / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE)))
-                    * (CAST(sc AS DOUBLE)
-                       / (CAST(n AS DOUBLE) * CAST(100 AS DOUBLE))))
-                  AS stddev
-         FROM a ORDER BY event_type""",
-
-    "agg_two_sample_z" ->
-      """WITH c AS (SELECT event_type,
-                           CAST(round(value * 100, 0) AS BIGINT) AS c
-                    FROM events),
-              s AS (SELECT event_type, count(*) AS n,
-                           CAST(sum(c) AS BIGINT) AS sc,
-                           CAST(sum(c * c) AS BIGINT) AS ss
-                    FROM c GROUP BY 1)
-         SELECT a.event_type AS et_a, b.event_type AS et_b,
-                a.n AS na, b.n AS nb,
-                CAST(a.sc AS DOUBLE) / CAST(a.n AS DOUBLE) / 100.0
-                  AS mean_a,
-                CAST(b.sc AS DOUBLE) / CAST(b.n AS DOUBLE) / 100.0
-                  AS mean_b,
-                (CAST(a.sc AS DOUBLE) / CAST(a.n AS DOUBLE)
-                  - CAST(b.sc AS DOUBLE) / CAST(b.n AS DOUBLE))
-                / sqrt(
-                    (CAST(CAST(CAST(a.n AS HUGEINT) * a.ss
-                          - CAST(a.sc AS HUGEINT) * a.sc AS BIGINT) AS DOUBLE)
-                     / CAST(a.n * (a.n - 1) AS DOUBLE))
-                      / CAST(a.n AS DOUBLE)
-                  + (CAST(CAST(CAST(b.n AS HUGEINT) * b.ss
-                          - CAST(b.sc AS HUGEINT) * b.sc AS BIGINT) AS DOUBLE)
-                     / CAST(b.n * (b.n - 1) AS DOUBLE))
-                      / CAST(b.n AS DOUBLE)) AS z
-         FROM s a JOIN s b ON a.event_type < b.event_type
-         ORDER BY 1, 2""",
-
-    "agg_ks_statistic" ->
-      """WITH ev AS (SELECT event_type,
-                            CAST(round(value * 100, 0) AS BIGINT) AS v
-                     FROM events WHERE event_type IN ('click', 'view')),
-              c AS (SELECT v,
-                           sum(CASE WHEN event_type = 'click' THEN 1
-                                    ELSE 0 END) AS c1,
-                           sum(CASE WHEN event_type = 'view' THEN 1
-                                    ELSE 0 END) AS c2
-                    FROM ev GROUP BY 1),
-              cc AS (SELECT v, sum(c1) OVER (ORDER BY v) AS cum1,
-                            sum(c2) OVER (ORDER BY v) AS cum2
-                     FROM c),
-              n AS (SELECT CAST(sum(CASE WHEN event_type = 'click' THEN 1
-                                         ELSE 0 END) AS BIGINT) AS n1,
-                           CAST(sum(CASE WHEN event_type = 'view' THEN 1
-                                         ELSE 0 END) AS BIGINT) AS n2
-                    FROM ev),
-              d AS (SELECT n.n1, n.n2, cc.v,
-                           CAST(abs(n.n2 * cc.cum1 - n.n1 * cc.cum2)
-                                AS BIGINT) AS dn,
-                           row_number() OVER (
-                             ORDER BY abs(n.n2 * cc.cum1 - n.n1 * cc.cum2)
-                               DESC, cc.v ASC) AS rn
-                    FROM cc, n)
-         SELECT n1, n2, dn AS d_num, v AS ks_at_value,
-                CAST(dn AS DOUBLE) / CAST(n1 * n2 AS DOUBLE) AS d_stat
-         FROM d WHERE rn = 1""",
-
-    "agg_bootstrap_ci" ->
-      """WITH p AS (SELECT event_id,
-                           CAST(round(value * 100, 0) AS BIGINT) AS c
-                    FROM events WHERE event_type = 'purchase'),
-              r AS (SELECT t.b, event_id, c,
-                           ((((event_id * 31 + t.b) * 2654435761)
-                             % 2147483647) + 2147483647) % 2147483647 % 3
-                             AS wgt
-                    FROM p, unnest(range(0, 32)) AS t(b)),
-              m AS (SELECT b,
-                           CAST(CAST(sum(wgt * c) AS BIGINT) AS DOUBLE)
-                             / CAST(CAST(sum(wgt) AS BIGINT) AS DOUBLE)
-                             AS rep_mean
-                    FROM r GROUP BY 1),
-              rk AS (SELECT b, rep_mean,
-                            row_number() OVER (ORDER BY rep_mean, b) AS rn
-                     FROM m),
-              pt AS (SELECT CAST(CAST(sum(c) AS BIGINT) AS DOUBLE)
-                              / CAST(count(*) AS DOUBLE) AS point_mean
-                     FROM p)
-         SELECT (SELECT count(*) FROM rk) AS n_replicates,
-                pt.point_mean,
-                (SELECT rep_mean FROM rk WHERE rn = 2) AS ci_lo,
-                (SELECT rep_mean FROM rk WHERE rn = 31) AS ci_hi
-         FROM pt""",
-
-    "agg_control_chart" ->
-      """WITH ev AS (SELECT epoch_us(ts) // 86400000000 AS day,
-                            CAST(round(value * 100, 0) AS BIGINT) AS x
-                     FROM events),
-              t AS (SELECT count(*) AS n, CAST(sum(x) AS BIGINT) AS s,
-                           CAST(sum(x * x) AS BIGINT) AS ss
-                    FROM ev),
-              d AS (SELECT day, count(*) AS nd,
-                           CAST(sum(x) AS BIGINT) AS sd
-                    FROM ev GROUP BY 1)
-         SELECT day, nd,
-                CAST(sd AS DOUBLE) / CAST(nd AS DOUBLE) AS day_mean_cents,
-                (CAST(t.n AS HUGEINT) * sd - CAST(nd AS HUGEINT) * t.s)
-                  * (CAST(t.n AS HUGEINT) * sd - CAST(nd AS HUGEINT) * t.s)
-                  > 9 * CAST(nd AS HUGEINT) * nd
-                    * (CAST(t.n AS HUGEINT) * t.ss
-                       - CAST(t.s AS HUGEINT) * t.s) AS ooc
-         FROM d, t ORDER BY day""",
-
-    "agg_time_to_convert" ->
-      """WITH ev AS (SELECT user_id, event_type, epoch_us(ts) AS us
-                     FROM events),
-              su AS (SELECT user_id, min(us) AS su_us FROM ev
-                     WHERE event_type = 'signup' GROUP BY 1),
-              conv AS (SELECT ev.user_id,
-                              (min(ev.us) - min(su.su_us)) // 60000000
-                                AS delta_m
-                       FROM ev JOIN su ON su.user_id = ev.user_id
-                       WHERE ev.event_type = 'purchase'
-                         AND ev.us >= su.su_us
-                       GROUP BY 1),
-              c AS (SELECT delta_m, count(*) AS cnt FROM conv GROUP BY 1),
-              cum AS (SELECT delta_m,
-                             sum(cnt) OVER (ORDER BY delta_m) AS cum
-                      FROM c),
-              r AS (SELECT count(*) AS n_converted,
-                           (count(*) + 3) // 4 AS r1,
-                           (count(*) + 1) // 2 AS r2,
-                           (3 * count(*) + 3) // 4 AS r3
-                    FROM conv),
-              ns AS (SELECT count(*) AS n_signup_users FROM su),
-              p AS (SELECT min(CASE WHEN cum >= r.r1 THEN delta_m END)
-                             AS q1_m,
-                           min(CASE WHEN cum >= r.r2 THEN delta_m END)
-                             AS median_m,
-                           min(CASE WHEN cum >= r.r3 THEN delta_m END)
-                             AS q3_m
-                    FROM cum, r)
-         SELECT ns.n_signup_users, r.n_converted,
-                CAST(r.n_converted AS DOUBLE)
-                  / CAST(ns.n_signup_users AS DOUBLE) AS conversion_rate,
-                p.q1_m, p.median_m, p.q3_m
-         FROM ns, r, p""",
-
-    "agg_discount_elasticity" ->
-      """WITH d AS (SELECT l_returnflag,
-                           CAST(round(l_discount * 10000, 0) AS BIGINT) AS x,
-                           CAST(round(l_quantity * 100, 0) AS BIGINT) AS y
-                    FROM lineitem),
-              a AS (SELECT l_returnflag, count(*) AS n,
-                           CAST(sum(x) AS BIGINT) AS sx,
-                           CAST(sum(y) AS BIGINT) AS sy,
-                           CAST(sum(x * x) AS BIGINT) AS sxx,
-                           CAST(sum(x * y) AS BIGINT) AS sxy
-                    FROM d GROUP BY 1),
-              m AS (SELECT l_returnflag, n,
-                           CAST(CAST(CAST(n AS HUGEINT) * sxy
-                                     - CAST(sx AS HUGEINT) * sy AS BIGINT)
-                                AS DOUBLE) AS num,
-                           CAST(CAST(CAST(n AS HUGEINT) * sxx
-                                     - CAST(sx AS HUGEINT) * sx AS BIGINT)
-                                AS DOUBLE) AS den,
-                           sx, sy
-                    FROM a)
-         SELECT l_returnflag, n, num / den AS slope_q_per_bp,
-                CAST(sy AS DOUBLE) / CAST(n AS DOUBLE)
-                  - num / den * (CAST(sx AS DOUBLE) / CAST(n AS DOUBLE))
-                  AS intercept_q
-         FROM m ORDER BY l_returnflag""",
-
-    "agg_mann_whitney_u" ->
-      """WITH c AS (SELECT event_type AS et,
-                           CAST(round(value * 100, 0) AS BIGINT) AS v,
-                           count(*) AS c
-                    FROM events GROUP BY 1, 2),
-              grid AS (SELECT e.et, s.v, coalesce(c.c, 0) AS c
-                       FROM (SELECT DISTINCT et FROM c) e
-                       CROSS JOIN (SELECT DISTINCT v FROM c) s
-                       LEFT JOIN c ON c.et = e.et AND c.v = s.v),
-              g AS (SELECT et, v, c,
-                           CAST(coalesce(sum(c) OVER (PARTITION BY et
-                             ORDER BY v ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND 1 PRECEDING), 0) AS BIGINT) AS cum
-                    FROM grid),
-              p AS (SELECT a.et AS et_a, b.et AS et_b,
-                           CAST(sum(a.c) AS BIGINT) AS na,
-                           CAST(sum(b.c) AS BIGINT) AS nb,
-                           CAST(sum(CAST(a.c AS HUGEINT)
-                             * (CAST(b.cum AS HUGEINT) * 2 + b.c))
-                             AS BIGINT) AS u2,
-                           CAST(sum(CAST(a.c + b.c AS HUGEINT)
-                             * (a.c + b.c) * (a.c + b.c) - (a.c + b.c))
-                             AS HUGEINT) AS tie3
-                    FROM g a JOIN g b ON a.v = b.v AND a.et < b.et
-                    GROUP BY 1, 2)
-         SELECT et_a, et_b, na, nb, u2,
-                CASE WHEN tie3 < CAST(na + nb AS HUGEINT) * (na + nb)
-                                 * (na + nb) - (na + nb) THEN
-                CAST(CAST(CAST(u2 AS HUGEINT) - CAST(na AS HUGEINT) * nb
-                     AS BIGINT) AS DOUBLE)
-                  / (2.0 * sqrt(
-                      CAST(CAST(CAST(na AS HUGEINT) * nb AS BIGINT)
-                           AS DOUBLE) / 12.0
-                      * (CAST(na + nb + 1 AS DOUBLE)
-                         - CAST(CAST(tie3 AS BIGINT) AS DOUBLE)
-                           / CAST(CAST(CAST(na + nb AS HUGEINT)
-                                  * (na + nb - 1) AS BIGINT) AS DOUBLE))))
-                END AS z
-         FROM p ORDER BY 1, 2""",
-
-    "agg_spearman_corr" ->
-      """WITH b AS (SELECT p_brand AS brand, CAST(p_size AS BIGINT) AS x,
-                           CAST(round(p_retailprice * 100, 0) AS BIGINT)
-                             AS y
-                    FROM part),
-              r AS (SELECT brand,
-                           CAST(rank() OVER (PARTITION BY brand
-                             ORDER BY x) AS BIGINT) * 2
-                             + count(*) OVER (PARTITION BY brand, x) - 1
-                             AS rx2,
-                           CAST(rank() OVER (PARTITION BY brand
-                             ORDER BY y) AS BIGINT) * 2
-                             + count(*) OVER (PARTITION BY brand, y) - 1
-                             AS ry2
-                    FROM b),
-              m AS (SELECT brand, count(*) AS n,
-                           CAST(sum(rx2) AS HUGEINT) AS sx,
-                           CAST(sum(ry2) AS HUGEINT) AS sy,
-                           CAST(sum(CAST(rx2 AS HUGEINT) * ry2)
-                                AS HUGEINT) AS sxy,
-                           CAST(sum(CAST(rx2 AS HUGEINT) * rx2)
-                                AS HUGEINT) AS sxx,
-                           CAST(sum(CAST(ry2 AS HUGEINT) * ry2)
-                                AS HUGEINT) AS syy
-                    FROM r GROUP BY 1)
-         SELECT brand, n,
-                CASE WHEN n * sxx - sx * sx > 0
-                      AND n * syy - sy * sy > 0 THEN
-                  CAST(n * sxy - sx * sy AS DOUBLE)
-                    / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                       * sqrt(CAST(n * syy - sy * sy AS DOUBLE)))
-                END AS rho
-         FROM m ORDER BY brand""",
-
-    "agg_funnel_stages" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-                    WHERE event_type = 'view' GROUP BY 1),
-              c AS (SELECT e.user_id, min(e.ts) AS t2 FROM events e
-                    JOIN v ON v.user_id = e.user_id AND e.ts >= v.t1
-                    WHERE e.event_type = 'click' GROUP BY 1),
-              p AS (SELECT e.user_id, min(e.ts) AS t3 FROM events e
-                    JOIN c ON c.user_id = e.user_id AND e.ts >= c.t2
-                    WHERE e.event_type = 'purchase' GROUP BY 1),
-              s AS (SELECT 1 AS stage, 'view' AS stage_name,
-                           count(*) AS n_users FROM v
-                    UNION ALL
-                    SELECT 2, 'click', count(*) FROM c
-                    UNION ALL
-                    SELECT 3, 'purchase', count(*) FROM p)
-         SELECT CAST(stage AS BIGINT) AS stage, stage_name, n_users,
-                CAST(n_users AS DOUBLE)
-                  / CAST((SELECT count(*) FROM v) AS DOUBLE) AS frac_of_top
-         FROM s ORDER BY stage""",
-
-    "agg_cramers_v" ->
-      """WITH cells AS (SELECT event_type,
-                               CAST(isodow(CAST(ts AS DATE)) AS BIGINT)
-                                 AS dow,
-                               count(*) AS o
-                        FROM events GROUP BY 1, 2),
-              grid AS (SELECT e.event_type, d.dow, coalesce(c.o, 0) AS o
-                       FROM (SELECT DISTINCT event_type FROM cells) e
-                       CROSS JOIN (SELECT DISTINCT dow FROM cells) d
-                       LEFT JOIN cells c ON c.event_type = e.event_type
-                                        AND c.dow = d.dow),
-              rt AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS r
-                     FROM cells GROUP BY 1),
-              ct AS (SELECT dow, CAST(sum(o) AS BIGINT) AS c
-                     FROM cells GROUP BY 1),
-              n AS (SELECT CAST(sum(o) AS BIGINT) AS n,
-                           count(DISTINCT event_type) AS nr,
-                           count(DISTINCT dow) AS nc
-                    FROM cells),
-              j AS (SELECT g.event_type, g.dow, n.n, n.nr, n.nc,
-                           g.o * n.n - rt.r * ct.c AS dev, rt.r, ct.c
-                    FROM grid g
-                    JOIN rt ON rt.event_type = g.event_type
-                    JOIN ct ON ct.dow = g.dow
-                    CROSS JOIN n),
-              t AS (SELECT event_type, dow, n, nr, nc,
-                           CAST(CAST(CAST(dev AS HUGEINT) * dev AS BIGINT) AS DOUBLE)
-                             / CAST(n * r * c AS DOUBLE) AS cell
-                    FROM j),
-              f AS (SELECT n AS n_total, nr AS n_rows, nc AS n_cols,
-                           list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                             list_transform(list_sort(list(struct_pack(
-                               event_type := event_type, dow := dow,
-                               cell := cell))),
-                               x -> x.cell)),
-                             (a, b) -> a + b) AS chi2
-                    FROM t GROUP BY 1, 2, 3)
-         SELECT n_total, n_rows, n_cols, chi2,
-                sqrt(chi2 / (CAST(n_total AS DOUBLE)
-                  * CAST(least(n_rows - 1, n_cols - 1) AS DOUBLE)))
-                  AS cramers_v
-         FROM f""",
-
-    "agg_cohort_ltv_curve" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d, event_type,
-                            CAST(round(value * 100, 0) AS BIGINT) AS cents
-                     FROM events),
-              firsts AS (SELECT user_id, min(d) AS cohort_date
-                         FROM ev GROUP BY 1),
-              sizes AS (SELECT cohort_date, count(*) AS n_cohort_users
-                        FROM firsts GROUP BY 1),
-              rev AS (SELECT f.cohort_date,
-                             CAST(date_diff('day', f.cohort_date, e.d)
-                                  AS BIGINT) AS day_offset,
-                             CAST(sum(e.cents) AS BIGINT) AS rev_cents
-                      FROM ev e JOIN firsts f ON f.user_id = e.user_id
-                      WHERE e.event_type = 'purchase' GROUP BY 1, 2),
-              c AS (SELECT r.cohort_date, r.day_offset, r.rev_cents,
-                           s.n_cohort_users,
-                           CAST(sum(r.rev_cents) OVER (
-                             PARTITION BY r.cohort_date
-                             ORDER BY r.day_offset
-                             ROWS BETWEEN UNBOUNDED PRECEDING AND
-                             CURRENT ROW) AS BIGINT) AS cum_rev_cents
-                    FROM rev r
-                    JOIN sizes s ON s.cohort_date = r.cohort_date)
-         SELECT cohort_date, day_offset, rev_cents, cum_rev_cents,
-                n_cohort_users,
-                CAST(cum_rev_cents AS DOUBLE)
-                  / (100.0 * CAST(n_cohort_users AS DOUBLE))
-                  AS ltv_per_user
-         FROM c ORDER BY cohort_date, day_offset""",
-
-    "agg_kruskal_wallis" ->
-      """WITH c AS (SELECT event_type AS et,
-                           CAST(round(value * 100, 0) AS BIGINT) AS v,
-                           count(*) AS c
-                    FROM events GROUP BY 1, 2),
-              t0 AS (SELECT v, CAST(sum(c) AS BIGINT) AS ct
-                     FROM c GROUP BY 1),
-              tot AS (SELECT v, ct,
-                             CAST(coalesce(sum(ct) OVER (ORDER BY v
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND
-                               1 PRECEDING), 0) AS BIGINT) AS cum
-                      FROM t0),
-              g AS (SELECT c.et, CAST(sum(c.c) AS BIGINT) AS n,
-                           CAST(sum(CAST(c.c AS HUGEINT)
-                             * (CAST(tot.cum AS HUGEINT) * 2 + tot.ct + 1))
-                             AS DECIMAL(38,0)) AS r2
-                    FROM c JOIN tot ON tot.v = c.v GROUP BY 1),
-              terms AS (SELECT et, n, r2,
-                               CAST(CAST(r2 AS HUGEINT) * CAST(r2 AS HUGEINT)
-                                    * 16 // (4 * CAST(n AS HUGEINT))
-                                    AS BIGINT) AS term_q16
-                        FROM g),
-              ties AS (SELECT CAST(sum(CAST(ct AS HUGEINT) * ct * ct - ct)
-                              AS BIGINT) AS t3
-                       FROM t0),
-              hh AS (SELECT CAST(sum(n) AS BIGINT) AS nt,
-                            CAST(sum(CAST(term_q16 AS HUGEINT)) AS BIGINT)
-                              AS sq
-                     FROM terms),
-              hs AS (SELECT nt,
-                            12.0 / CAST(CAST(CAST(nt AS HUGEINT) * (nt + 1)
-                                        AS BIGINT) AS DOUBLE)
-                              * (CAST(sq AS DOUBLE) / 16.0)
-                              - 3.0 * CAST(nt + 1 AS DOUBLE) AS h,
-                            1.0 - CAST((SELECT t3 FROM ties) AS DOUBLE)
-                              / CAST(CAST(CAST(nt AS HUGEINT) * nt * nt - nt
-                                     AS BIGINT) AS DOUBLE) AS corr
-                     FROM hh)
-         SELECT terms.et AS event_type, terms.n,
-                CAST(terms.r2 AS BIGINT) AS r2,
-                hs.nt AS n_total, hs.h,
-                CASE WHEN hs.corr <> 0.0 THEN hs.h / hs.corr
-                END AS h_tie_corrected
-         FROM terms CROSS JOIN hs ORDER BY event_type""",
-
-    "agg_srm_check" ->
-      """WITH h AS (SELECT event_type,
-                           CASE WHEN (((user_id % 2147483647) * 1103515245
-                                       + 12345) % 2147483647) % 2 = 0
-                                THEN 'a' ELSE 'b' END AS arm
-                    FROM events),
-              c AS (SELECT event_type,
-                           CAST(sum(CASE WHEN arm = 'a' THEN 1 ELSE 0 END)
-                                AS BIGINT) AS na,
-                           CAST(sum(CASE WHEN arm = 'b' THEN 1 ELSE 0 END)
-                                AS BIGINT) AS nb
-                    FROM h GROUP BY 1)
-         SELECT event_type, na, nb,
-                CAST(CAST(na - nb AS HUGEINT) * (na - nb) AS BIGINT)
-                  AS srm_num,
-                na + nb AS srm_den,
-                CAST(CAST(CAST(na - nb AS HUGEINT) * (na - nb) AS BIGINT)
-                     AS DOUBLE) / CAST(na + nb AS DOUBLE) AS srm_chi2,
-                CASE WHEN CAST(na - nb AS HUGEINT) * (na - nb) * 10000
-                          > CAST(na + nb AS HUGEINT) * 38415
-                     THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT)
-                END AS srm_flag
-         FROM c ORDER BY event_type""",
-
-    "agg_g_test" -> {
-      val lon = graft.functions.FixedLog2.sql("on_")
-      val lrc = graft.functions.FixedLog2.sql("rc")
-      s"""WITH c AS (SELECT event_type,
-                            least(CAST(2 AS BIGINT),
-                                  CAST(round(value*100,0) AS BIGINT) // 7500)
-                              AS vb, count(*) AS o
-                     FROM events GROUP BY 1, 2),
-               r AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
-                     FROM c GROUP BY 1),
-               k AS (SELECT vb, CAST(sum(o) AS BIGINT) AS ct
-                     FROM c GROUP BY 1),
-               n AS (SELECT CAST(sum(o) AS BIGINT) AS nt FROM c),
-               t AS (SELECT c.o, c.o * n.nt AS on_, r.rt * k.ct AS rc
-                     FROM c JOIN r USING (event_type) JOIN k USING (vb)
-                     CROSS JOIN n)
-          SELECT (SELECT nt FROM n) AS n_events,
-                 CAST(count(*) AS BIGINT) AS n_cells,
-                 CAST(sum(CAST(o AS HUGEINT) * ($lon - $lrc)) AS BIGINT)
-                   AS g_scaled,
-                 CAST(8 AS BIGINT) AS df,
-                 CAST(CAST(sum(CAST(o AS HUGEINT) * ($lon - $lrc))
-                      AS BIGINT) AS DOUBLE)
-                   * 1.3862943611198906 / 1048576.0 AS g_stat,
-                 CASE WHEN CAST(sum(CAST(o AS HUGEINT) * ($lon - $lrc))
-                           AS BIGINT) > 11729304
-                      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT)
-                 END AS reject_flag
-          FROM t"""
     },
-
-    "agg_poisson_rate_test" ->
-      """WITH b AS (SELECT min(CAST(ts AS DATE)) AS mn,
-                           max(CAST(ts AS DATE)) AS mx FROM events),
-              s AS (SELECT mn,
-                           mn + CAST((datediff('day', mn, mx) + 1) // 2
-                                     AS INTEGER) AS mid,
-                           mx FROM b),
-              g AS (SELECT event_type,
-                           CAST(sum(CASE WHEN CAST(ts AS DATE) < s.mid
-                                         THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-                           CAST(sum(CASE WHEN CAST(ts AS DATE) >= s.mid
-                                         THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-                           CAST(datediff('day', min(s.mn), min(s.mid))
-                                AS BIGINT) AS e1,
-                           CAST(datediff('day', min(s.mid), min(s.mx)) + 1
-                                AS BIGINT) AS e2
-                    FROM events, s GROUP BY 1)
-         SELECT event_type, n1, n2, e1, e2,
-                CAST((10000 * n1 * e2) // (n2 * e1) AS BIGINT)
-                  AS rate_ratio_q4,
-                CAST((CAST(n1*(e1+e2) - (n1+n2)*e1 AS HUGEINT)
-                      * (n1*(e1+e2) - (n1+n2)*e1) * 10000)
-                     // ((n1+n2) * e1 * e2) AS BIGINT) AS score_q4,
-                CASE WHEN CAST(n1*(e1+e2) - (n1+n2)*e1 AS HUGEINT)
-                          * (n1*(e1+e2) - (n1+n2)*e1) * 10000
-                          > CAST((n1+n2) AS HUGEINT) * e1 * e2 * 38415
-                     THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT)
-                END AS rate_shift_flag
-         FROM g ORDER BY event_type""",
-
-    "agg_tukey_hsd" ->
-      """WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-                           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                                AS BIGINT) AS s,
-                           CAST(sum(CAST(CAST(round(value * 100, 0)
-                                    AS BIGINT) AS HUGEINT)
-                                    * CAST(round(value * 100, 0) AS BIGINT))
-                                AS BIGINT) AS ss
-                    FROM events GROUP BY 1),
-              t AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
-                           CAST(count(*) AS BIGINT) AS k,
-                           CAST(sum(ss - (CAST(s AS HUGEINT) * s) // n)
-                                AS BIGINT) AS ssw_q
-                    FROM g),
-              p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                           a.n AS n_a, b.n AS n_b,
-                           (256 * a.s) // a.n - (256 * b.s) // b.n AS dq,
-                           100 * CAST((256*a.s)//a.n - (256*b.s)//b.n
-                                      AS HUGEINT)
-                               * ((256*a.s)//a.n - (256*b.s)//b.n)
-                               * (t.nn - t.k) * 2 * a.n * b.n AS lhs,
-                           1488 * 65536 * CAST(t.ssw_q AS HUGEINT)
-                               * (a.n + b.n) AS rhs
-                    FROM g a JOIN g b ON a.event_type < b.event_type
-                    CROSS JOIN t)
-         SELECT type_a, type_b, n_a, n_b,
-                CAST(dq AS BIGINT) AS mean_diff_q8,
-                CAST((10000 * lhs) // rhs AS BIGINT) AS hsd_ratio_q4,
-                CASE WHEN lhs > rhs THEN CAST(1 AS BIGINT)
-                     ELSE CAST(0 AS BIGINT) END AS hsd_flag
-         FROM p ORDER BY type_a, type_b""",
-
-    "agg_cohens_kappa" ->
-      """WITH l AS (SELECT CASE WHEN n_chars < 220 THEN 0
-                                WHEN n_chars < 380 THEN 1 ELSE 2 END AS la,
-                           CASE WHEN length(text)
-                                     - length(replace(text, ' ', '')) + 1
-                                     < 40 THEN 0
-                                WHEN length(text)
-                                     - length(replace(text, ' ', '')) + 1
-                                     < 69 THEN 1
-                                ELSE 2 END AS lb
-                    FROM documents),
-              o AS (SELECT la, lb, count(*) AS n FROM l GROUP BY 1, 2),
-              tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total,
-                             CAST(sum(CASE WHEN la = lb THEN n ELSE 0 END)
-                                  AS BIGINT) AS n_agree
-                      FROM o),
-              marg AS (SELECT CAST(sum(r.rn * c.cn) AS BIGINT) AS chance
-                       FROM (SELECT la, sum(n) AS rn FROM o GROUP BY 1) r
-                       JOIN (SELECT lb, sum(n) AS cn FROM o GROUP BY 1) c
-                         ON r.la = c.lb)
-         SELECT t.n_total, t.n_agree, m.chance,
-                CAST(t.n_total * t.n_agree - m.chance AS BIGINT)
-                  AS kappa_num,
-                CAST(t.n_total * t.n_total - m.chance AS BIGINT)
-                  AS kappa_den,
-                CAST(t.n_total * t.n_agree - m.chance AS DOUBLE)
-                  / CAST(t.n_total * t.n_total - m.chance AS DOUBLE)
-                  AS kappa
-         FROM tot t, marg m""",
-
-    // 64 hash sign-splits as gated sums in one wide aggregation; the
-    // spread-hash chain replayed inline exactly as sample_hash_split does
-    "agg_permutation_test" -> {
-      val sums = (0 until 64).map { p =>
-        s"""sum(CASE WHEN ((h3 * 1000003 + ${p * 7919 + 12345})
-           |  % 2147483647 >> 7) & 1 = 1 THEN cc ELSE 0 END) AS s$p,
-           |sum(CASE WHEN ((h3 * 1000003 + ${p * 7919 + 12345})
-           |  % 2147483647 >> 7) & 1 = 1 THEN 1 ELSE 0 END) AS m$p"""
-          .stripMargin
-      }.mkString(",\n")
-      val dterms = (0 until 64).map { p =>
-        s"abs(CAST(n AS DECIMAL(38,0)) * s$p" +
-          s" - CAST(m$p AS DECIMAL(38,0)) * s) AS d$p"
-      }.mkString(",\n")
-      val cnt = (0 until 64)
-        .map(p => s"(CASE WHEN d$p >= d_obs THEN 1 ELSE 0 END)")
-        .mkString(" + ")
-      s"""WITH e AS (SELECT event_id, event_type,
-                            CAST(round(value * 100, 0) AS BIGINT) AS cc
-                     FROM events),
-              f AS (SELECT *,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(CAST(event_id AS VARCHAR),
-                                                    ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM e),
-              h AS (SELECT event_id, event_type, cc,
-                           ((((h0 * 1103515245 + 12345) % 2147483647)
-                             * ((h0 * 1103515245 + 12345) % 2147483647))
-                            % 2147483647
-                            * 69069 + 362437) % 2147483647 AS h3
-                    FROM f),
-              agg AS (SELECT count(*) AS n, sum(cc) AS s,
-                             sum(CASE WHEN event_type = 'purchase'
-                                      THEN cc ELSE 0 END) AS s_obs,
-                             sum(CASE WHEN event_type = 'purchase'
-                                      THEN 1 ELSE 0 END) AS n_obs,
-                             $sums
-                      FROM h),
-              d AS (SELECT n, s, n_obs, s_obs,
-                           abs(CAST(n AS DECIMAL(38,0)) * s_obs
-                               - CAST(n_obs AS DECIMAL(38,0)) * s) AS d_obs,
-                           $dterms
-                    FROM agg)
-         SELECT CAST(n AS BIGINT) AS n_events,
-                CAST(n_obs AS BIGINT) AS n_treat,
-                CAST(d_obs AS BIGINT) AS d_obs,
-                CAST($cnt AS BIGINT) AS n_perm_ge,
-                CAST(($cnt) + 1 AS DOUBLE) / CAST(65 AS DOUBLE) AS p_value
-         FROM d"""
-    },
-
-    "agg_jackknife_variance" ->
-      """WITH r AS (SELECT event_type, CAST(ts AS DATE) AS d,
-                           CAST(round(value * 100, 0) AS BIGINT) AS cc
-                    FROM events),
-              g AS (SELECT event_type, d, CAST(count(*) AS BIGINT) AS ni,
-                           CAST(sum(cc) AS BIGINT) AS si
-                    FROM r GROUP BY 1, 2),
-              t AS (SELECT event_type, CAST(sum(ni) AS BIGINT) AS n,
-                           CAST(sum(si) AS BIGINT) AS s
-                    FROM g GROUP BY 1),
-              th AS (SELECT g.event_type,
-                            (1024 * (t.s - g.si)) // (t.n - g.ni) AS theta
-                     FROM g JOIN t ON t.event_type = g.event_type),
-              a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-                           CAST(sum(theta) AS BIGINT) AS st,
-                           CAST(sum(CAST(theta AS DECIMAL(38,0)) * theta)
-                                AS DECIMAL(38,0)) AS stt
-                    FROM th GROUP BY 1),
-              core AS (SELECT event_type, n_days, st,
-                              CAST(n_days * stt
-                                   - CAST(st AS DECIMAL(38,0)) * st
-                                   AS BIGINT) AS core
-                       FROM a)
-         SELECT c.event_type, c.n_days,
-                (1024 * t.s) // t.n AS mean_q10,
-                ((c.n_days - 1) * c.core)
-                  // (c.n_days * c.n_days) AS jk_var_num_q20,
-                sqrt(CAST(((c.n_days - 1) * c.core)
-                     // (c.n_days * c.n_days) AS DOUBLE))
-                  / CAST(1024 AS DOUBLE) AS jk_se
-         FROM core c JOIN t ON t.event_type = c.event_type
-         ORDER BY c.event_type""",
-
-    "agg_capture_recapture" ->
-      """WITH b AS (SELECT min(CAST(ts AS DATE)) AS mn,
-                           max(CAST(ts AS DATE)) AS mx FROM events),
-              u AS (SELECT event_type, user_id,
-                           max(CASE WHEN CAST(ts AS DATE) =
-                               (SELECT mn FROM b) THEN 1 ELSE 0 END) AS c1,
-                           max(CASE WHEN CAST(ts AS DATE) =
-                               (SELECT mx FROM b) THEN 1 ELSE 0 END) AS c2
-                    FROM events GROUP BY 1, 2),
-              a AS (SELECT event_type,
-                           CAST(sum(c1) AS BIGINT) AS n1,
-                           CAST(sum(c2) AS BIGINT) AS n2,
-                           CAST(sum(c1 * c2) AS BIGINT) AS m12,
-                           CAST(sum(CASE WHEN c1 = 1 OR c2 = 1
-                                    THEN 1 ELSE 0 END) AS BIGINT) AS n_seen,
-                           CAST(count(*) AS BIGINT) AS n_true
-                    FROM u GROUP BY 1)
-         SELECT event_type, n1, n2, m12, n_seen, n_true,
-                CASE WHEN m12 > 0 THEN (n1 * n2) // m12 END AS n_hat,
-                CASE WHEN m12 > 0 THEN
-                  CAST((n1 * n2) // m12 - n_true AS DOUBLE)
-                    / CAST(n_true AS DOUBLE) END AS rel_bias
-         FROM a ORDER BY event_type""",
-
-    "agg_hill_tail_index" -> {
-      val lx = graft.functions.FixedLog2.sql("r.x")
-      val lxk = graft.functions.FixedLog2.sql("xk")
-      s"""WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT)
-                       AS x
-                     FROM orders),
-               r AS (SELECT x, row_number() OVER (ORDER BY x DESC) AS rn
-                     FROM c),
-               k AS (SELECT x AS xk FROM r WHERE rn = 201),
-               top AS (SELECT r.x, $lx AS lx FROM r WHERE rn <= 200),
-               s AS (SELECT CAST(count(*) AS BIGINT) AS k,
-                            CAST(sum(lx) AS BIGINT)
-                              - 200 * (SELECT $lxk FROM k) AS s_q20
-                     FROM top)
-          SELECT k, s_q20,
-                 CAST(k AS DOUBLE) * 1048576.0
-                   / (CAST(s_q20 AS DOUBLE) * 0.6931471805599453)
-                   AS hill_alpha
-          FROM s"""
-    },
-
-    "agg_entropy_by_group" -> {
-      val lc = graft.functions.FixedLog2.sql("c")
-      val ln = graft.functions.FixedLog2.sql("n_events")
-      s"""WITH c AS (SELECT CAST(isodow(CAST(ts AS DATE)) AS BIGINT) AS dow,
-                            event_type, count(*) AS c
-                     FROM events GROUP BY 1, 2),
-               g AS (SELECT dow, CAST(sum(c) AS BIGINT) AS n_events,
-                            count(*) AS n_types,
-                            CAST(sum(CAST(c AS HUGEINT) * $lc) AS HUGEINT)
-                              AS sclog
-                     FROM c GROUP BY 1)
-          SELECT dow, n_events, n_types,
-                 CAST(CAST(CAST(n_events AS HUGEINT) * $ln - sclog AS BIGINT) AS DOUBLE)
-                   / CAST(n_events AS DOUBLE) / 1048576.0 AS entropy_bits
-          FROM g ORDER BY dow"""
-    },
-
-    "agg_theil_index" -> {
-      val lcn = graft.functions.FixedLog2.sql("cn")
-      val ls = graft.functions.FixedLog2.sql("s_cents")
-      s"""WITH j AS (SELECT c.c_mktsegment,
-                            CAST(round(o.o_totalprice * 100, 0) AS BIGINT)
-                              AS cents
-                     FROM orders o JOIN customer c
-                       ON o.o_custkey = c.c_custkey),
-               g AS (SELECT c_mktsegment, count(*) AS n,
-                            CAST(sum(cents) AS BIGINT) AS s_cents
-                     FROM j GROUP BY 1),
-               t AS (SELECT j.c_mktsegment, j.cents, g.n, g.s_cents,
-                            j.cents * g.n AS cn
-                     FROM j JOIN g ON j.c_mktsegment = g.c_mktsegment),
-               u AS (SELECT c_mktsegment,
-                            CAST(cents AS HUGEINT) * ($lcn - $ls) AS term,
-                            n, s_cents
-                     FROM t)
-          SELECT c_mktsegment, any_value(n) AS n_orders,
-                 CAST(any_value(s_cents) AS DOUBLE) / 100.0
-                   AS total_revenue,
-                 CAST(sum(term) AS DOUBLE) * 0.6931471805599453
-                   / (CAST(any_value(s_cents) AS DOUBLE) * 1048576.0)
-                   AS theil
-          FROM u GROUP BY 1 ORDER BY 1"""
-    },
-
-    "agg_mutual_information" -> {
-      val lxy = graft.functions.FixedLog2.sql("cn")
-      val lmm = graft.functions.FixedLog2.sql("cxy")
-      val lcx = graft.functions.FixedLog2.sql("c_x")
-      val lcy = graft.functions.FixedLog2.sql("c_y")
-      val ln = graft.functions.FixedLog2.sql("n")
-      s"""WITH cells AS (SELECT event_type,
-                                CAST(isodow(CAST(ts AS DATE)) AS BIGINT)
-                                  AS dow,
-                                count(*) AS c_xy
-                         FROM events GROUP BY 1, 2),
-               mx AS (SELECT event_type, CAST(sum(c_xy) AS BIGINT) AS c_x
-                      FROM cells GROUP BY 1),
-               my AS (SELECT dow, CAST(sum(c_xy) AS BIGINT) AS c_y
-                      FROM cells GROUP BY 1),
-               nn AS (SELECT CAST(sum(c_xy) AS BIGINT) AS n FROM cells),
-               terms AS (SELECT cells.c_xy,
-                                cells.c_xy * nn.n AS cn,
-                                mx.c_x * my.c_y AS cxy
-                         FROM cells JOIN mx ON mx.event_type = cells.event_type
-                                    JOIN my ON my.dow = cells.dow
-                                    CROSS JOIN nn),
-               mi AS (SELECT CAST(sum(CAST(c_xy AS HUGEINT)
-                          * ($lxy - $lmm)) AS HUGEINT) AS minum
-                      FROM terms),
-               hx AS (SELECT CAST(sum(CAST(c_x AS HUGEINT) * $lcx)
-                          AS HUGEINT) AS sxlog FROM mx),
-               hy AS (SELECT CAST(sum(CAST(c_y AS HUGEINT) * $lcy)
-                          AS HUGEINT) AS sylog FROM my)
-          SELECT n,
-                 CAST(minum AS DOUBLE) / CAST(n AS DOUBLE) / 1048576.0
-                   AS mi_bits,
-                 CAST(CAST(CAST(n AS HUGEINT) * $ln - sxlog AS BIGINT) AS DOUBLE)
-                   / CAST(n AS DOUBLE) / 1048576.0 AS h_type_bits,
-                 CAST(CAST(CAST(n AS HUGEINT) * $ln - sylog AS BIGINT) AS DOUBLE)
-                   / CAST(n AS DOUBLE) / 1048576.0 AS h_dow_bits
-          FROM nn CROSS JOIN mi CROSS JOIN hx CROSS JOIN hy"""
-    },
-
-    "agg_kaplan_meier" -> {
-      val ls = graft.functions.FixedLog2.sql("svv")
-      val ln = graft.functions.FixedLog2.sql("n_at_risk")
-      s"""WITH lives AS (SELECT user_id,
-                           CAST(date_diff('day', min(CAST(ts AS DATE)),
-                             max(CAST(ts AS DATE))) AS BIGINT) AS t
-                         FROM events GROUP BY 1),
-               hist AS (SELECT t, count(*) AS d FROM lives GROUP BY 1),
-               ar AS (SELECT t, d,
-                        CAST(sum(d) OVER (ORDER BY t ROWS BETWEEN
-                          CURRENT ROW AND UNBOUNDED FOLLOWING) AS BIGINT)
-                          AS n_at_risk
-                      FROM hist),
-               sv AS (SELECT t, d, n_at_risk,
-                        n_at_risk - d AS svv
-                      FROM ar),
-               tm AS (SELECT t, d, n_at_risk,
-                        CASE WHEN n_at_risk > d
-                          THEN $ls - $ln END AS surv
-                      FROM sv)
-          SELECT t AS lifetime_days, n_at_risk, d AS n_churned,
-                 CASE WHEN surv IS NOT NULL THEN
-                   CAST(sum(surv) OVER (ORDER BY t ROWS BETWEEN
-                     UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-                     / 1048576.0 END AS log2_survival
-          FROM tm ORDER BY lifetime_days"""
-    },
-
-    "agg_anova_f" ->
-      s"""WITH c AS (SELECT event_type,
-                            CAST(round(value * 100, 0) AS BIGINT) AS c
-                     FROM events),
-              ${duckFixedFoldF("c", "c")}
-         SELECT k, n_total, ssb, ssw,
-                (ssb / CAST(k - 1 AS DOUBLE))
-                  / (ssw / CAST(n_total - k AS DOUBLE)) AS f_stat
-         FROM f""",
-
-    "agg_levene_bf" ->
-      s"""WITH v AS (SELECT event_type,
-                           CAST(round(value * 100, 0) AS BIGINT) AS c
-                    FROM events),
-              r AS (SELECT event_type, c,
-                           CAST(row_number() OVER (PARTITION BY event_type
-                             ORDER BY c) AS BIGINT) AS rn,
-                           count(*) OVER (PARTITION BY event_type) AS n
-                    FROM v),
-              md AS (SELECT event_type,
-                            CAST(sum(CASE WHEN rn = (n + 1) // 2 THEN c
-                                          ELSE 0 END)
-                              + sum(CASE WHEN rn = (n + 2) // 2 THEN c
-                                         ELSE 0 END) AS BIGINT) AS m2
-                     FROM r GROUP BY 1),
-              z AS (SELECT v.event_type, abs(v.c * 2 - md.m2) AS z
-                    FROM v JOIN md ON md.event_type = v.event_type),
-              ${duckFixedFoldF("z", "z")}
-         SELECT k, n_total,
-                (ssb / CAST(k - 1 AS DOUBLE))
-                  / (ssw / CAST(n_total - k AS DOUBLE)) AS w_stat
-         FROM f""",
-
-    "agg_cuped_adjustment" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS dt,
+      Some("""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS dt,
                             CAST(round(value * 100, 0) AS BIGINT) AS c
                      FROM events),
               mid AS (SELECT min(dt) + 15 AS mid_d FROM ev),
@@ -3164,10 +2096,45 @@ object AggQueries {
                 (ab.diff_raw - th.theta * ab.diff_x) / 10000.0 / 100.0
                   AS diff_cuped,
                 th.theta, th.rho2
-         FROM ab CROSS JOIN th""",
+         FROM ab CROSS JOIN th""")),
 
-    "agg_ratio_delta_se" ->
-      """WITH u AS (SELECT user_id, count(*) AS x,
+    // Delta-method standard error of a ratio metric (value per event)
+    // under user-level clustering — the correct SE every experimentation
+    // platform needs because events within a user correlate: naive
+    // per-event SE is anticonservative. Per-user totals (x = events,
+    // y = cents) are exact integers from one partial-agg pass;
+    // R = ȳ/x̄ and Var(R) ≈ (Var(y) − 2R·Cov + R²·Var(x))/(n·x̄²) use
+    // exact DECIMAL(38,0) moments with a FIXED IEEE chain (each moment
+    // one division, combined once). Output in dollars per event.
+    Query("agg_ratio_delta_se", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      def d(c: org.apache.spark.sql.Column) = c.cast("double")
+      val u = Tables.events(s, dir)
+        .groupBy("user_id")
+        .agg(count(lit(1)).as("x"), sum(Exact.cents(col("value"))).as("y"))
+      u.agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
+            sum(dec(col("x")) * dec(col("x"))).as("sxx"),
+            sum(dec(col("x")) * dec(col("y"))).as("sxy"),
+            sum(dec(col("y")) * dec(col("y"))).as("syy"))
+        .withColumn("xbar", d(col("sx")) / d(col("n")))
+        .withColumn("r", d(col("sy")) / d(col("sx")))
+        .withColumn("var_x",
+          (dec(col("n")) * col("sxx") - dec(col("sx")) * dec(col("sx")))
+            .cast("double") / d(col("n") * (col("n") - 1)))
+        .withColumn("var_y",
+          (dec(col("n")) * col("syy") - dec(col("sy")) * dec(col("sy")))
+            .cast("double") / d(col("n") * (col("n") - 1)))
+        .withColumn("cov_xy",
+          (dec(col("n")) * col("sxy") - dec(col("sx")) * dec(col("sy")))
+            .cast("double") / d(col("n") * (col("n") - 1)))
+        .select(col("n").as("n_users"),
+          (col("r") / lit(100.0)).as("ratio"),
+          (sqrt((col("var_y") - lit(2.0) * col("r") * col("cov_xy")
+                 + col("r") * col("r") * col("var_x"))
+                / (d(col("n")) * col("xbar") * col("xbar")))
+            / lit(100.0)).as("se_delta"))
+    },
+      Some("""WITH u AS (SELECT user_id, count(*) AS x,
                            CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
                              AS BIGINT) AS y
                     FROM events GROUP BY 1),
@@ -3197,10 +2164,54 @@ object AggQueries {
                 sqrt((var_y - 2.0 * r * cov_xy + r * r * var_x)
                      / (CAST(n AS DOUBLE) * xbar * xbar)) / 100.0
                   AS se_delta
-         FROM m""",
+         FROM m""")),
 
-    "agg_effect_size_t" ->
-      """WITH st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+    // Pooled-variance Student t, Cohen's d effect size and the
+    // Welch–Satterthwaite df for every event-type pair — the effect-size
+    // report A/B readouts need next to agg_two_sample_z's z. Moments are
+    // exact (cents lattice, DECIMAL(38,0) cross terms); the t/d/df
+    // formulas spend fixed IEEE chains mirrored verbatim in the oracle.
+    Query("agg_effect_size_t", (s, dir) => {
+      def d(c: org.apache.spark.sql.Column) = c.cast("double")
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val stats = Tables.events(s, dir)
+        .select(col("event_type"), Exact.cents(col("value")).as("c"))
+        .groupBy("event_type")
+        // second moment in DECIMAL(38,0): a raw BIGINT c·c sum wraps
+        // SILENTLY at corpus scale on Spark while the oracle's HUGEINT
+        // sum → BIGINT cast aborts loudly — the decimal lattice keeps
+        // both engines exact (the neighboring anova/mde discipline)
+        .agg(count(lit(1)).as("n"), sum(col("c")).as("sc"),
+             sum(dec(col("c")) * dec(col("c"))).as("ss"))
+        .tracked // both sides of the pair self-join
+      val a = stats.select(col("event_type").as("et_a"), col("n").as("na"),
+        col("sc").as("sca"), col("ss").as("ssa"))
+      val b = stats.select(col("event_type").as("et_b"), col("n").as("nb"),
+        col("sc").as("scb"), col("ss").as("ssb"))
+      val ma = d(col("sca")) / d(col("na"))
+      val mb = d(col("scb")) / d(col("nb"))
+      val va = (dec(col("na")) * dec(col("ssa"))
+        - dec(col("sca")) * dec(col("sca"))).cast("double") /
+        d(col("na") * (col("na") - 1L))
+      val vb = (dec(col("nb")) * dec(col("ssb"))
+        - dec(col("scb")) * dec(col("scb"))).cast("double") /
+        d(col("nb") * (col("nb") - 1L))
+      val sp2 = (d(col("na") - 1L) * va + d(col("nb") - 1L) * vb) /
+        d(col("na") + col("nb") - 2L)
+      val vna = va / d(col("na"))
+      val vnb = vb / d(col("nb"))
+      a.join(b, col("et_a") < col("et_b"))
+        .select(col("et_a"), col("et_b"), col("na"), col("nb"),
+          ((ma - mb) / (sqrt(sp2)
+            * sqrt(lit(1.0) / d(col("na")) + lit(1.0) / d(col("nb")))))
+            .as("t_pooled"),
+          ((ma - mb) / sqrt(sp2)).as("cohen_d"),
+          ((vna + vnb) * (vna + vnb)
+            / (vna * vna / d(col("na") - 1L)
+               + vnb * vnb / d(col("nb") - 1L))).as("df_welch"))
+        .orderBy("et_a", "et_b")
+    },
+      Some("""WITH st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                    CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
                      AS BIGINT) AS sc,
                    CAST(sum(CAST(round(value * 100, 0) AS BIGINT)
@@ -3235,10 +2246,46 @@ object AggQueries {
                        / CAST(na - 1 AS DOUBLE)
                      + (vb / CAST(nb AS DOUBLE)) * (vb / CAST(nb AS DOUBLE))
                        / CAST(nb - 1 AS DOUBLE)) AS df_welch
-         FROM pr ORDER BY et_a, et_b""",
+         FROM pr ORDER BY et_a, et_b""")),
 
-    "agg_trimmed_mean" ->
-      """WITH ev AS (SELECT event_type,
+    // 10% trimmed mean per type WITHOUT a row-level rank: cumulative
+    // counts over the (type, value) HISTOGRAM cells (keyed window over
+    // the value support, never event rows), each cell contributing
+    // max(0, overlap of its cumulative range with the kept band) — the
+    // robust-location estimate at 100 TB, where sorting rows per key is
+    // the thing you must not do.
+    Query("agg_trimmed_mean", (s, dir) => {
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), Exact.cents(col("value")).as("c"))
+      val cells = ev.groupBy("event_type", "c")
+        .agg(count(lit(1)).as("cnt"))
+      val wc = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("c")
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      val tot = ev.groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("c").as("s_all"))
+      cells
+        .withColumn("cum", sum("cnt").over(wc))
+        .withColumn("cum_prev", col("cum") - col("cnt"))
+        .join(tot, "event_type")
+        .withColumn("lo", expr("n div 10"))
+        .withColumn("kept", greatest(lit(0L),
+          least(col("cum"), col("n") - col("lo"))
+            - greatest(col("cum_prev") + 1L, col("lo") + 1L) + 1L))
+        .groupBy("event_type")
+        .agg(max("n").as("n"), max("s_all").as("s_all"),
+             sum("kept").as("n_trimmed"),
+             sum(col("c") * col("kept")).as("t_sum"))
+        .select(col("event_type"), col("n"), col("n_trimmed"),
+          (col("s_all").cast("double") / col("n").cast("double"))
+            .as("mean_c"),
+          (col("t_sum").cast("double") / col("n_trimmed").cast("double"))
+            .as("trimmed_mean_c"),
+          expr("t_sum div n_trimmed").as("trimmed_floor_c"))
+        .orderBy("event_type")
+    },
+      Some("""WITH ev AS (SELECT event_type,
                   CAST(round(value * 100, 0) AS BIGINT) AS c FROM events),
      cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS cnt
                FROM ev GROUP BY 1, 2),
@@ -3267,10 +2314,41 @@ object AggQueries {
                   AS trimmed_mean_c,
                 CAST(sum(c * kept) AS BIGINT)
                   // CAST(sum(kept) AS BIGINT) AS trimmed_floor_c
-         FROM kept GROUP BY 1 ORDER BY event_type""",
+         FROM kept GROUP BY 1 ORDER BY event_type""")),
 
-    "agg_simpson_check" ->
-      """WITH j AS (SELECT p.p_brand,
+    // Simpson's-paradox screen: the (discount → quantity) association
+    // judged pooled AND per brand, with only the SIGNS of exact centered
+    // covariance numerators compared — signs of integers, so the flip
+    // report is bitwise trivially and immune to IEEE noise. The
+    // aggregation-bias tripwire every metrics rollup should run before
+    // shipping a "discounts don't work" conclusion.
+    Query("agg_simpson_check", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      def covSign(g: DataFrame): DataFrame = g
+        .withColumn("cov_num", Exact.checkedLong(
+          dec(col("n")) * col("sdq") - dec(col("sd")) * dec(col("sq"))))
+        .withColumn("assoc_sign", signum(col("cov_num")).cast("long"))
+      val j = Tables.lineitem(s, dir)
+        .join(Tables.part(s, dir),
+          col("p_partkey") === col("l_partkey"))
+        .select(col("p_brand"),
+          Exact.cents(col("l_discount")).as("d"),
+          col("l_quantity").cast("long").as("q"))
+        .tracked // pooled + per-brand moments scan it
+      val perBrand = covSign(j.groupBy("p_brand")
+        .agg(count(lit(1)).as("n"), sum("d").as("sd"), sum("q").as("sq"),
+             sum(dec(col("d")) * dec(col("q"))).as("sdq")))
+      val pooled = covSign(j.agg(count(lit(1)).as("n"), sum("d").as("sd"),
+          sum("q").as("sq"), sum(dec(col("d")) * dec(col("q"))).as("sdq")))
+        .select(col("assoc_sign").as("pooled_sign"))
+      perBrand.crossJoin(broadcast(pooled))
+        .select(col("p_brand"), col("n"), col("cov_num"),
+          col("assoc_sign"), col("pooled_sign"),
+          (col("assoc_sign") =!= lit(0L)
+            && col("assoc_sign") =!= col("pooled_sign")).as("sign_flip"))
+        .orderBy("p_brand")
+    },
+      Some("""WITH j AS (SELECT p.p_brand,
                   CAST(round(l.l_discount * 100, 0) AS BIGINT) AS d,
                   CAST(l.l_quantity AS BIGINT) AS q
            FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey),
@@ -3298,10 +2376,44 @@ object AggQueries {
                 sign(gb.cov_num) <> 0
                   AND CAST(sign(gb.cov_num) AS BIGINT) <> ps.pooled_sign
                   AS sign_flip
-         FROM gb CROSS JOIN ps ORDER BY gb.p_brand""",
+         FROM gb CROSS JOIN ps ORDER BY gb.p_brand""")),
 
-    "agg_top_decile_share" ->
-      """WITH ev AS (SELECT event_type,
+    // Top-decile value concentration: what share of each type's total
+    // value the top 10% of events carry — the same histogram-overlap
+    // machinery as agg_trimmed_mean (cumulative counts over value CELLS,
+    // never a row-level rank), share exact in ppm plus one IEEE double.
+    Query("agg_top_decile_share", (s, dir) => {
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), Exact.cents(col("value")).as("c"))
+      val cells = ev.groupBy("event_type", "c")
+        .agg(count(lit(1)).as("cnt"))
+      val wc = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("c")
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      val tot = ev.groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("c").as("s_all"))
+      cells
+        .withColumn("cum", sum("cnt").over(wc))
+        .withColumn("cum_prev", col("cum") - col("cnt"))
+        .join(tot, "event_type")
+        .withColumn("lo", expr("n div 10"))
+        .withColumn("kept", greatest(lit(0L),
+          least(col("cum"), col("n"))
+            - greatest(col("cum_prev") + 1L, col("n") - col("lo") + 1L)
+            + 1L))
+        .groupBy("event_type")
+        .agg(max("n").as("n"), max("s_all").as("s_all"),
+             sum("kept").as("n_top"),
+             sum(col("c") * col("kept")).as("top_sum"))
+        .select(col("event_type"), col("n"), col("n_top"), col("top_sum"),
+          expr("(1000000 * cast(top_sum as decimal(38,0))) div s_all")
+            .as("share_ppm"),
+          (col("top_sum").cast("double") / col("s_all").cast("double"))
+            .as("share"))
+        .orderBy("event_type")
+    },
+      Some("""WITH ev AS (SELECT event_type,
                   CAST(round(value * 100, 0) AS BIGINT) AS c FROM events),
      cells AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS cnt
                FROM ev GROUP BY 1, 2),
@@ -3328,10 +2440,40 @@ object AggQueries {
                   // max(s_all) AS BIGINT) AS share_ppm,
                 CAST(CAST(sum(c * kept) AS BIGINT) AS DOUBLE)
                   / CAST(max(s_all) AS DOUBLE) AS share
-         FROM kept GROUP BY 1 ORDER BY event_type""",
+         FROM kept GROUP BY 1 ORDER BY event_type""")),
 
-    "agg_hash_uniformity_ks" ->
-      """WITH h AS (SELECT ((((event_id % 2147483647) * 1103515245
+    // KS uniformity audit of the engine's own LCG spread hash — the
+    // self-test any hash-partitioned sampler owes its users: D =
+    // max|F̂(u) − u/10⁶| evaluated on the integer lattice at both sides
+    // of every occupied cell (the discrete-KS boundary convention), via
+    // the global two-level prefix sum — never a single-partition window
+    // over the support.
+    Query("agg_hash_uniformity_ks", (s, dir) => {
+      val m = 2147483647L
+      val cells = Tables.events(s, dir)
+        .withColumn("h1", ((col("event_id") % m) * 1103515245L + 12345L) % m)
+        .withColumn("hm", (col("h1") * col("h1")) % m)
+        .withColumn("u", ((col("hm") * 69069L + 362437L) % m) % 1000000L)
+        .groupBy("u").agg(count(lit(1)).as("cnt"))
+      val cum = graft.text.Packing.withStreamOffset(
+        cells, "u", "cnt", "cum_prev", bucketSize = 10000L)
+        .withColumn("cum", col("cum_prev") + col("cnt"))
+      val tot = cells.agg(sum("cnt").as("n"))
+      cum.crossJoin(broadcast(tot))
+        .select(col("n"),
+          greatest(
+            abs(col("cum") * lit(1000000L) - col("n") * (col("u") + 1L)),
+            abs(col("cum_prev") * lit(1000000L) - col("n") * col("u")))
+            .as("dn"))
+        .groupBy("n").agg(max("dn").as("d_num"))
+        .select(col("n"), col("d_num"),
+          (col("d_num").cast("double")
+            / (col("n").cast("double") * lit(1.0e6))).as("d_stat"),
+          ((col("d_num").cast("double")
+            / (col("n").cast("double") * lit(1.0e6)))
+            * sqrt(col("n").cast("double"))).as("d_sqrt_n"))
+    },
+      Some("""WITH h AS (SELECT ((((event_id % 2147483647) * 1103515245
                      + 12345) % 2147483647)
                    * (((event_id % 2147483647) * 1103515245 + 12345)
                      % 2147483647)) % 2147483647 AS hm
@@ -3356,10 +2498,35 @@ object AggQueries {
                 (CAST(max(dn) AS DOUBLE)
                   / (CAST(n AS DOUBLE) * 1000000.0))
                   * sqrt(CAST(n AS DOUBLE)) AS d_sqrt_n
-         FROM d GROUP BY 1""",
+         FROM d GROUP BY 1""")),
 
-    "agg_mde_power" ->
-      """WITH st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+    // Power analysis / minimum detectable effect per metric: with this
+    // type's variance and a 50/50 split of its current volume, what
+    // lift could a two-arm test detect at α = 0.05, power = 0.8?
+    // mde = (z_α/2 + z_β)·√(2σ²/n_arm) with the two z's as DEFINED
+    // constants (1.96, 0.8416) — variance from exact DECIMAL moments,
+    // the mde one fixed IEEE chain. The sizing readout every experiment
+    // platform publishes next to its metrics.
+    Query("agg_mde_power", (s, dir) => {
+      def d(c: org.apache.spark.sql.Column) = c.cast("double")
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val stats = Tables.events(s, dir)
+        .select(col("event_type"), Exact.cents(col("value")).as("c"))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("c").as("sc"),
+             sum(dec(col("c")) * dec(col("c"))).as("ss"))
+        .withColumn("n_arm", expr("n div 2"))
+      val v = (dec(col("n")) * col("ss") - dec(col("sc")) * dec(col("sc")))
+        .cast("double") / d(col("n") * (col("n") - 1L))
+      val mde = lit(1.96 + 0.8416) * sqrt(lit(2.0) * v / d(col("n_arm")))
+      stats.select(col("event_type"), col("n"), col("n_arm"),
+          (d(col("sc")) / d(col("n")) / lit(100.0)).as("mean_value"),
+          (v / lit(10000.0)).as("var_value"),
+          (mde / lit(100.0)).as("mde_abs"),
+          (mde / (d(col("sc")) / d(col("n")))).as("mde_rel"))
+        .orderBy("event_type")
+    },
+      Some("""WITH st AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
                   CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
                     AS BIGINT) AS sc,
                   CAST(sum(CAST(round(value * 100, 0) AS BIGINT)
@@ -3380,10 +2547,52 @@ object AggQueries {
                 (1.96 + 0.8416) * sqrt(2.0 * var_c
                   / CAST(n_arm AS DOUBLE))
                   / (CAST(sc AS DOUBLE) / CAST(n AS DOUBLE)) AS mde_rel
-         FROM v ORDER BY event_type""",
+         FROM v ORDER BY event_type""")),
 
-    "agg_sprt_monitor" ->
-      """WITH d AS (SELECT event_type, CAST(ts AS DATE) AS dt,
+    // Sequential probability ratio test per metric: is the daily total
+    // running at baseline μ₀ or at a 5% lift μ₁? The LLR is kept as the
+    // EXACT integer score Σ(2Δμ·x − (μ₁²−μ₀²)) (the 2σ² factor moved to
+    // the boundary), baseline moments come from the first 10 days, and
+    // the accept/reject boundaries spend one IEEE chain with ln 19 as a
+    // DEFINED constant. The always-on alternative to fixed-horizon
+    // testing — decisions per day, exact cumulative state.
+    Query("agg_sprt_monitor", (s, dir) => {
+      def d(c: org.apache.spark.sql.Column) = c.cast("double")
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("event_type").orderBy("dt")
+      val wcum = w.rowsBetween(
+        org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
+      val daily = Tables.events(s, dir)
+        .groupBy(col("event_type"), to_date(col("ts")).as("dt"))
+        .agg(sum(Exact.cents(col("value"))).as("x"))
+        .withColumn("rn", row_number().over(w))
+        .tracked // baseline + monitored slice both read it
+      val base = daily.filter(col("rn") <= 10)
+        .groupBy("event_type")
+        .agg(expr("sum(x) div 10").as("mu0"),
+             sum(dec(col("x")) * dec(col("x"))).as("ss"),
+             sum("x").as("sx"))
+        .withColumn("var_num", Exact.checkedLong(
+          dec(lit(10L)) * col("ss") - dec(col("sx")) * dec(col("sx"))))
+        .withColumn("mu1", col("mu0") + expr("mu0 div 20"))
+        .select("event_type", "mu0", "mu1", "var_num")
+      val scored = daily.filter(col("rn") >= 11)
+        .join(broadcast(base), "event_type")
+        .withColumn("term", lit(2L) * (col("mu1") - col("mu0")) * col("x")
+          - (col("mu1") * col("mu1") - col("mu0") * col("mu0")))
+        .withColumn("cum_score", sum("term").over(wcum))
+      // boundary: LLR >= ln 19 ⇔ score >= 2σ²·ln 19, σ² = var_num/90
+      val thr = lit(2.0) * (d(col("var_num")) / lit(90.0)) *
+        lit(2.9444389791664403)
+      scored.select(col("event_type"), col("dt"), col("x"),
+          col("cum_score"),
+          when(d(col("cum_score")) >= thr, lit("accept_lift"))
+            .when(d(col("cum_score")) <= -thr, lit("accept_baseline"))
+            .otherwise(lit("continue")).as("decision"))
+        .orderBy("event_type", "dt")
+    },
+      Some("""WITH d AS (SELECT event_type, CAST(ts AS DATE) AS dt,
                   CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
                     AS BIGINT) AS x
            FROM events GROUP BY 1, 2),
@@ -3417,13 +2626,649 @@ object AggQueries {
                        <= -(2.0 * (CAST(var_num AS DOUBLE) / 90.0)
                           * 2.9444389791664403) THEN 'accept_baseline'
                      ELSE 'continue' END AS decision
-         FROM cumq ORDER BY event_type, dt""",
+         FROM cumq ORDER BY event_type, dt""")),
 
-    // nine raw moments in one pass, n-scaled centered 2x2 Cramer on the
-    // integer lattice; every quotient is HUGEINT // (truncating toward
-    // zero, matching Spark's decimal DIV — verified on negatives)
-    "agg_ols_two_factor" ->
-      """WITH d AS (SELECT CAST(ts AS DATE) AS dt,
+    // Sample-ratio-mismatch guardrail: the 1-df χ² of the hash-split arm
+    // counts against 50/50 — THE first check an experimentation readout
+    // runs before any metric (a biased splitter invalidates everything
+    // downstream). Seed reduces mod-first (the documented overflow-safe
+    // LCG discipline); χ² numerator exact through DECIMAL, the 3.8415
+    // critical compare done in scaled integers so the flag is portable.
+    // The fixture's signup split genuinely trips it.
+    Query("agg_srm_check", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val m = 2147483647L
+      val arm = ((col("user_id") % m) * 1103515245L + 12345L) % m
+      Tables.events(s, dir)
+        .withColumn("arm", when(arm % 2 === 0, "a").otherwise("b"))
+        .groupBy("event_type")
+        .agg(sum(when(col("arm") === "a", 1L).otherwise(0L)).as("na"),
+             sum(when(col("arm") === "b", 1L).otherwise(0L)).as("nb"))
+        .withColumn("srm_num", Exact.checkedLong(
+          dec(col("na") - col("nb")) * dec(col("na") - col("nb"))))
+        .withColumn("srm_den", col("na") + col("nb"))
+        .withColumn("srm_chi2",
+          col("srm_num").cast("double") / col("srm_den").cast("double"))
+        .withColumn("srm_flag",
+          when(dec(col("srm_num")) * lit(10000L)
+                 > dec(col("srm_den")) * lit(38415L), 1L).otherwise(0L))
+        .select("event_type", "na", "nb", "srm_num", "srm_den",
+          "srm_chi2", "srm_flag")
+        .orderBy("event_type")
+    },
+      Some("""WITH h AS (SELECT event_type,
+                           CASE WHEN (((user_id % 2147483647) * 1103515245
+                                       + 12345) % 2147483647) % 2 = 0
+                                THEN 'a' ELSE 'b' END AS arm
+                    FROM events),
+              c AS (SELECT event_type,
+                           CAST(sum(CASE WHEN arm = 'a' THEN 1 ELSE 0 END)
+                                AS BIGINT) AS na,
+                           CAST(sum(CASE WHEN arm = 'b' THEN 1 ELSE 0 END)
+                                AS BIGINT) AS nb
+                    FROM h GROUP BY 1)
+         SELECT event_type, na, nb,
+                CAST(CAST(na - nb AS HUGEINT) * (na - nb) AS BIGINT)
+                  AS srm_num,
+                na + nb AS srm_den,
+                CAST(CAST(CAST(na - nb AS HUGEINT) * (na - nb) AS BIGINT)
+                     AS DOUBLE) / CAST(na + nb AS DOUBLE) AS srm_chi2,
+                CASE WHEN CAST(na - nb AS HUGEINT) * (na - nb) * 10000
+                          > CAST(na + nb AS HUGEINT) * 38415
+                     THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT)
+                END AS srm_flag
+         FROM c ORDER BY event_type""")),
+
+    // G-test of value-mix homogeneity: are the three fixed value buckets
+    // ($0-75 / 75-150 / 150+) distributed identically across event types?
+    // The log-likelihood-ratio sibling of agg_chi2_contingency, and a
+    // FixedLog2 showcase: each cell's O·ln(O·N/(R·C)) term is the exact
+    // integer O·(log2fp(O·N) − log2fp(R·C)), decimal-summed order-free;
+    // the df=8 critical compare happens on the same lattice
+    // (crit_q = ⌊15.507/(2ln2)·2²⁰⌋ = 11729304) so the flag is portable.
+    // 15 cells by construction — every frame after the first groupBy is
+    // bounded, and the 1-row total attaches via broadcast.
+    Query("agg_g_test", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val L = graft.functions.FixedLog2.log2_fp _
+      val c = Tables.events(s, dir)
+        .withColumn("cc", Exact.cents(col("value")))
+        .groupBy(col("event_type"),
+                 least(lit(2L), expr("cc DIV 7500")).as("vb"))
+        .agg(count(lit(1)).as("o")).tracked
+      val r = c.groupBy("event_type").agg(sum("o").as("rt"))
+      val k = c.groupBy("vb").agg(sum("o").as("ct"))
+      val n = c.agg(sum("o").as("nt"))
+      c.join(broadcast(r), "event_type").join(broadcast(k), "vb")
+        .crossJoin(broadcast(n))
+        .withColumn("term",
+          dec(col("o")) * dec(L(col("o") * col("nt")) -
+                              L(col("rt") * col("ct"))))
+        .agg(max("nt").as("n_events"), count(lit(1)).as("n_cells"),
+             sum("term").cast("long").as("g_scaled"))
+        .select(col("n_events"), col("n_cells"), col("g_scaled"),
+          lit(8L).as("df"),
+          (col("g_scaled").cast("double") * lit(1.3862943611198906)
+            / lit(1048576.0)).as("g_stat"),
+          when(col("g_scaled") > lit(11729304L), 1L).otherwise(0L)
+            .as("reject_flag"))
+    },
+      Some {
+      val lon = graft.functions.FixedLog2.sql("on_")
+      val lrc = graft.functions.FixedLog2.sql("rc")
+      s"""WITH c AS (SELECT event_type,
+                            least(CAST(2 AS BIGINT),
+                                  CAST(round(value*100,0) AS BIGINT) // 7500)
+                              AS vb, count(*) AS o
+                     FROM events GROUP BY 1, 2),
+               r AS (SELECT event_type, CAST(sum(o) AS BIGINT) AS rt
+                     FROM c GROUP BY 1),
+               k AS (SELECT vb, CAST(sum(o) AS BIGINT) AS ct
+                     FROM c GROUP BY 1),
+               n AS (SELECT CAST(sum(o) AS BIGINT) AS nt FROM c),
+               t AS (SELECT c.o, c.o * n.nt AS on_, r.rt * k.ct AS rc
+                     FROM c JOIN r USING (event_type) JOIN k USING (vb)
+                     CROSS JOIN n)
+          SELECT (SELECT nt FROM n) AS n_events,
+                 CAST(count(*) AS BIGINT) AS n_cells,
+                 CAST(sum(CAST(o AS HUGEINT) * ($lon - $lrc)) AS BIGINT)
+                   AS g_scaled,
+                 CAST(8 AS BIGINT) AS df,
+                 CAST(CAST(sum(CAST(o AS HUGEINT) * ($lon - $lrc))
+                      AS BIGINT) AS DOUBLE)
+                   * 1.3862943611198906 / 1048576.0 AS g_stat,
+                 CASE WHEN CAST(sum(CAST(o AS HUGEINT) * ($lon - $lrc))
+                           AS BIGINT) > 11729304
+                      THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT)
+                 END AS reject_flag
+          FROM t"""
+      }),
+
+    // Poisson rate-shift guardrail: per type, first-half vs second-half
+    // event counts against their day exposures — the conditional-binomial
+    // score test (n1·E − n·e1)²/(n·e1·e2) vs χ²(1), cross-multiplied into
+    // one exact integer compare (10⁴·num² > 38415·den) so the flag is
+    // portable. The global date bounds attach as a 1-row broadcast.
+    Query("agg_poisson_rate_test", (s, dir) => {
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), to_date(col("ts")).as("d")).tracked
+      val b = ev.agg(min("d").as("mn"), max("d").as("mx"))
+        .select(col("mn"),
+          date_add(col("mn"),
+            ((datediff(col("mx"), col("mn")) + 1) / 2)
+              .cast("int")).as("mid"), col("mx"))
+      ev.crossJoin(broadcast(b))
+        .groupBy("event_type")
+        .agg(sum(when(col("d") < col("mid"), 1L).otherwise(0L)).as("n1"),
+             sum(when(col("d") >= col("mid"), 1L).otherwise(0L)).as("n2"),
+             datediff(min("mid"), min("mn")).cast("long").as("e1"),
+             (datediff(min("mx"), min("mid")) + 1).cast("long").as("e2"))
+        .withColumn("num", col("n1") * (col("e1") + col("e2")) -
+                           (col("n1") + col("n2")) * col("e1"))
+        .withColumn("den", (col("n1") + col("n2")) * col("e1") * col("e2"))
+        .select(col("event_type"), col("n1"), col("n2"), col("e1"),
+          col("e2"),
+          expr("(10000 * n1 * e2) DIV (n2 * e1)").as("rate_ratio_q4"),
+          expr("""CAST((CAST(num AS DECIMAL(38,0)) * num * 10000) DIV den
+                  AS BIGINT)""").as("score_q4"),
+          when(expr("CAST(num AS DECIMAL(38,0)) * num * 10000") >
+               expr("CAST(den AS DECIMAL(38,0)) * 38415"), 1L)
+            .otherwise(0L).as("rate_shift_flag"))
+        .orderBy("event_type")
+    },
+      Some("""WITH b AS (SELECT min(CAST(ts AS DATE)) AS mn,
+                           max(CAST(ts AS DATE)) AS mx FROM events),
+              s AS (SELECT mn,
+                           mn + CAST((datediff('day', mn, mx) + 1) // 2
+                                     AS INTEGER) AS mid,
+                           mx FROM b),
+              g AS (SELECT event_type,
+                           CAST(sum(CASE WHEN CAST(ts AS DATE) < s.mid
+                                         THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+                           CAST(sum(CASE WHEN CAST(ts AS DATE) >= s.mid
+                                         THEN 1 ELSE 0 END) AS BIGINT) AS n2,
+                           CAST(datediff('day', min(s.mn), min(s.mid))
+                                AS BIGINT) AS e1,
+                           CAST(datediff('day', min(s.mid), min(s.mx)) + 1
+                                AS BIGINT) AS e2
+                    FROM events, s GROUP BY 1)
+         SELECT event_type, n1, n2, e1, e2,
+                CAST((10000 * n1 * e2) // (n2 * e1) AS BIGINT)
+                  AS rate_ratio_q4,
+                CAST((CAST(n1*(e1+e2) - (n1+n2)*e1 AS HUGEINT)
+                      * (n1*(e1+e2) - (n1+n2)*e1) * 10000)
+                     // ((n1+n2) * e1 * e2) AS BIGINT) AS score_q4,
+                CASE WHEN CAST(n1*(e1+e2) - (n1+n2)*e1 AS HUGEINT)
+                          * (n1*(e1+e2) - (n1+n2)*e1) * 10000
+                          > CAST((n1+n2) AS HUGEINT) * e1 * e2 * 38415
+                     THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT)
+                END AS rate_shift_flag
+         FROM g ORDER BY event_type""")),
+
+    // Tukey HSD post-hoc: after the one-way ANOVA, which of the 10 type
+    // pairs actually differ in mean value? Means quantized to the q8 cents
+    // lattice (⌊256·S/n⌋), within-group SS to ⌊S²/n⌋ cells — the
+    // statistic is DEFINED on those lattices (the kruskal discipline) so
+    // both engines compare identical integers: 100·Δq²·(N−k)·2·nₐn_b vs
+    // 1488·2¹⁶·SSW·(nₐ+n_b), q²(5,∞)=14.88 truncated at 2dp; the q4 ratio
+    // of the two sides carries continuous signal beside the flag. The
+    // 5-row stats self-join and 1-row totals combine are bounded
+    // broadcasts (allowlisted BNLJ shapes).
+    Query("agg_tukey_hsd", (s, dir) => {
+      val g = Tables.events(s, dir)
+        .withColumn("cc", Exact.cents(col("value")))
+        .groupBy("event_type")
+        .agg(count(lit(1)).as("n"), sum("cc").as("s"),
+             sum(expr("CAST(cc AS DECIMAL(38,0)) * cc")).as("ss")).tracked
+      val t = g.agg(sum("n").cast("long").as("nn"),
+                    count(lit(1)).as("k"),
+                    sum(expr("ss - (CAST(s AS DECIMAL(38,0)) * s) DIV n"))
+                      .cast("long").as("ssw_q"))
+      val a = g.select(col("event_type").as("type_a"), col("n").as("n_a"),
+                       col("s").as("s_a"))
+      val b = g.select(col("event_type").as("type_b"), col("n").as("n_b"),
+                       col("s").as("s_b"))
+      a.join(broadcast(b), col("type_a") < col("type_b"))
+        .crossJoin(broadcast(t))
+        .withColumn("dq", expr("(256 * s_a) DIV n_a - (256 * s_b) DIV n_b"))
+        .withColumn("lhs", expr(
+          "CAST(100 AS DECIMAL(38,0)) * dq * dq * (nn - k) * 2 * n_a * n_b"))
+        .withColumn("rhs", expr(
+          "CAST(1488 AS DECIMAL(38,0)) * 65536 * ssw_q * (n_a + n_b)"))
+        .select(col("type_a"), col("type_b"), col("n_a"), col("n_b"),
+          col("dq").as("mean_diff_q8"),
+          expr("CAST((CAST(10000 AS DECIMAL(38,0)) * lhs) DIV rhs AS BIGINT)")
+            .as("hsd_ratio_q4"),
+          when(col("lhs") > col("rhs"), 1L).otherwise(0L).as("hsd_flag"))
+        .orderBy("type_a", "type_b")
+    },
+      Some("""WITH g AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n,
+                           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+                                AS BIGINT) AS s,
+                           CAST(sum(CAST(CAST(round(value * 100, 0)
+                                    AS BIGINT) AS HUGEINT)
+                                    * CAST(round(value * 100, 0) AS BIGINT))
+                                AS BIGINT) AS ss
+                    FROM events GROUP BY 1),
+              t AS (SELECT CAST(sum(n) AS BIGINT) AS nn,
+                           CAST(count(*) AS BIGINT) AS k,
+                           CAST(sum(ss - (CAST(s AS HUGEINT) * s) // n)
+                                AS BIGINT) AS ssw_q
+                    FROM g),
+              p AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+                           a.n AS n_a, b.n AS n_b,
+                           (256 * a.s) // a.n - (256 * b.s) // b.n AS dq,
+                           100 * CAST((256*a.s)//a.n - (256*b.s)//b.n
+                                      AS HUGEINT)
+                               * ((256*a.s)//a.n - (256*b.s)//b.n)
+                               * (t.nn - t.k) * 2 * a.n * b.n AS lhs,
+                           1488 * 65536 * CAST(t.ssw_q AS HUGEINT)
+                               * (a.n + b.n) AS rhs
+                    FROM g a JOIN g b ON a.event_type < b.event_type
+                    CROSS JOIN t)
+         SELECT type_a, type_b, n_a, n_b,
+                CAST(dq AS BIGINT) AS mean_diff_q8,
+                CAST((10000 * lhs) // rhs AS BIGINT) AS hsd_ratio_q4,
+                CASE WHEN lhs > rhs THEN CAST(1 AS BIGINT)
+                     ELSE CAST(0 AS BIGINT) END AS hsd_flag
+         FROM p ORDER BY type_a, type_b""")),
+
+    // Cohen's kappa inter-labeler agreement between the two cheap length
+    // labelings every curation pipeline accumulates (char-class terciles
+    // vs word-count terciles): κ = (N·ΣOᵢᵢ − ΣRᵢCᵢ)/(N² − ΣRᵢCᵢ), exact
+    // integers through one final IEEE division. The contingency is ≤ 9
+    // cells after the first groupBy, so margins and totals are bounded
+    // 1-row broadcasts (allowlisted scalar combines).
+    Query("agg_cohens_kappa", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val words = length(col("text")) -
+        length(regexp_replace(col("text"), lit(" "), lit(""))) + 1
+      val l = Tables.documents(s, dir).select(
+        when(col("n_chars") < 220, 0L).when(col("n_chars") < 380, 1L)
+          .otherwise(2L).as("la"),
+        when(words < 40, 0L).when(words < 69, 1L).otherwise(2L).as("lb"))
+      val o = l.groupBy("la", "lb").agg(count(lit(1)).as("n")).tracked
+      val tot = o.agg(sum("n").cast("long").as("n_total"),
+        sum(when(col("la") === col("lb"), col("n")).otherwise(0L))
+          .cast("long").as("n_agree"))
+      val r = o.groupBy("la").agg(sum("n").as("rn"))
+      val k = o.groupBy("lb").agg(sum("n").as("cn"))
+      val chance = r.join(k, col("la") === col("lb"))
+        .agg(Exact.checkedLong(sum(dec(col("rn")) * dec(col("cn"))))
+          .as("chance"))
+      tot.crossJoin(broadcast(chance))
+        .select(col("n_total"), col("n_agree"), col("chance"),
+          Exact.checkedLong(dec(col("n_total")) * dec(col("n_agree"))
+            - dec(col("chance"))).as("kappa_num"),
+          Exact.checkedLong(dec(col("n_total")) * dec(col("n_total"))
+            - dec(col("chance"))).as("kappa_den"))
+        .withColumn("kappa", col("kappa_num").cast("double")
+          / col("kappa_den").cast("double"))
+    },
+      Some("""WITH l AS (SELECT CASE WHEN n_chars < 220 THEN 0
+                                WHEN n_chars < 380 THEN 1 ELSE 2 END AS la,
+                           CASE WHEN length(text)
+                                     - length(replace(text, ' ', '')) + 1
+                                     < 40 THEN 0
+                                WHEN length(text)
+                                     - length(replace(text, ' ', '')) + 1
+                                     < 69 THEN 1
+                                ELSE 2 END AS lb
+                    FROM documents),
+              o AS (SELECT la, lb, count(*) AS n FROM l GROUP BY 1, 2),
+              tot AS (SELECT CAST(sum(n) AS BIGINT) AS n_total,
+                             CAST(sum(CASE WHEN la = lb THEN n ELSE 0 END)
+                                  AS BIGINT) AS n_agree
+                      FROM o),
+              marg AS (SELECT CAST(sum(r.rn * c.cn) AS BIGINT) AS chance
+                       FROM (SELECT la, sum(n) AS rn FROM o GROUP BY 1) r
+                       JOIN (SELECT lb, sum(n) AS cn FROM o GROUP BY 1) c
+                         ON r.la = c.lb)
+         SELECT t.n_total, t.n_agree, m.chance,
+                CAST(t.n_total * t.n_agree - m.chance AS BIGINT)
+                  AS kappa_num,
+                CAST(t.n_total * t.n_total - m.chance AS BIGINT)
+                  AS kappa_den,
+                CAST(t.n_total * t.n_agree - m.chance AS DOUBLE)
+                  / CAST(t.n_total * t.n_total - m.chance AS DOUBLE)
+                  AS kappa
+         FROM tot t, marg m""")),
+
+    // Delete-one-DAY jackknife variance of the per-type mean value — the
+    // grouped-resampling SE that respects within-day correlation (the
+    // i.i.d. formula understates it). Leave-one-out means on the q10
+    // lattice θᵢ = ⌊2¹⁰(S−sᵢ)/(n−nᵢ)⌋, then the (d−1)(dΣθ²−(Σθ)²)/d²
+    // spread with decimal-exact moments — integers end to end, one final
+    // sqrt. Day cells bound every frame; the per-type totals broadcast.
+    Query("agg_jackknife_variance", (s, dir) => {
+      val g = Tables.events(s, dir)
+        .withColumn("cc", Exact.cents(col("value")))
+        .groupBy(col("event_type"), to_date(col("ts")).as("d"))
+        .agg(count(lit(1)).as("ni"), sum("cc").as("si"))
+      val t = g.groupBy("event_type")
+        .agg(sum("ni").cast("long").as("n"), sum("si").cast("long").as("s"))
+      val th = g.join(broadcast(t), "event_type")
+        .select(col("event_type"),
+          expr("(1024 * (s - si)) DIV (n - ni)").as("theta"))
+      th.groupBy("event_type")
+        .agg(count(lit(1)).as("n_days"),
+          sum("theta").cast("long").as("st"),
+          sum(expr("CAST(theta AS DECIMAL(38,0)) * theta")).as("stt"))
+        .join(broadcast(t), "event_type")
+        // the θ-spread core leaves the decimal lattice as a checked
+        // BIGINT BEFORE the final division: DuckDB's DECIMAL `//`
+        // ROUNDS (measured: N/900 = x.74 gave x+1) where BIGINT `//`
+        // truncates like Spark's DIV — and θ is mean-scaled, so the
+        // core is BIGINT-safe at any data volume
+        .withColumn("core", Exact.checkedLong(expr(
+          "n_days * stt - CAST(st AS DECIMAL(38,0)) * st")))
+        .select(col("event_type"), col("n_days"),
+          expr("(1024 * s) DIV n").as("mean_q10"),
+          expr("((n_days - 1) * core) DIV (n_days * n_days)")
+            .as("jk_var_num_q20"),
+          (sqrt(expr("((n_days - 1) * core) DIV (n_days * n_days)")
+            .cast("double")) / lit(1024.0)).as("jk_se"))
+        .orderBy("event_type")
+    },
+      Some("""WITH r AS (SELECT event_type, CAST(ts AS DATE) AS d,
+                           CAST(round(value * 100, 0) AS BIGINT) AS cc
+                    FROM events),
+              g AS (SELECT event_type, d, CAST(count(*) AS BIGINT) AS ni,
+                           CAST(sum(cc) AS BIGINT) AS si
+                    FROM r GROUP BY 1, 2),
+              t AS (SELECT event_type, CAST(sum(ni) AS BIGINT) AS n,
+                           CAST(sum(si) AS BIGINT) AS s
+                    FROM g GROUP BY 1),
+              th AS (SELECT g.event_type,
+                            (1024 * (t.s - g.si)) // (t.n - g.ni) AS theta
+                     FROM g JOIN t ON t.event_type = g.event_type),
+              a AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
+                           CAST(sum(theta) AS BIGINT) AS st,
+                           CAST(sum(CAST(theta AS DECIMAL(38,0)) * theta)
+                                AS DECIMAL(38,0)) AS stt
+                    FROM th GROUP BY 1),
+              core AS (SELECT event_type, n_days, st,
+                              CAST(n_days * stt
+                                   - CAST(st AS DECIMAL(38,0)) * st
+                                   AS BIGINT) AS core
+                       FROM a)
+         SELECT c.event_type, c.n_days,
+                (1024 * t.s) // t.n AS mean_q10,
+                ((c.n_days - 1) * c.core)
+                  // (c.n_days * c.n_days) AS jk_var_num_q20,
+                sqrt(CAST(((c.n_days - 1) * c.core)
+                     // (c.n_days * c.n_days) AS DOUBLE))
+                  / CAST(1024 AS DOUBLE) AS jk_se
+         FROM core c JOIN t ON t.event_type = c.event_type
+         ORDER BY c.event_type""")),
+
+    // Randomization (permutation) test for the purchase-vs-rest value
+    // difference: 64 deterministic sign-splits from the spread-hash chain,
+    // statistic d = |n·S₁ − n₁·S| (zero-mean under exchangeability),
+    // DECIMAL-exact per split, p̂ = (#{|d_p| ≥ |d_obs|}+1)/65. ONE pass:
+    // the 64 re-labelings are gated sums inside a single wide partial
+    // aggregation — never 64 scans and never an explode — which is the
+    // only shape that survives 100 TB. Monte-Carlo over fixed hash splits,
+    // so reruns, retries and the oracle all see identical permutations.
+    Query("agg_permutation_test", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val h = Tables.events(s, dir).select(
+        col("event_type"), Exact.cents(col("value")).as("cc"),
+        graft.olap.Sketch.spreadHash(col("event_id")).as("h3"))
+      def bit(p: Int) = expr(
+        s"((h3 * 1000003 + ${p * 7919 + 12345}) % 2147483647 >> 7) & 1")
+      val base = Seq(
+        count(lit(1)).as("n"), sum(col("cc")).as("s"),
+        sum(when(col("event_type") === "purchase", col("cc"))
+          .otherwise(0L)).as("s_obs"),
+        sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
+          .as("n_obs"))
+      val perms = (0 until 64).flatMap { p =>
+        Seq(sum(when(bit(p) === 1, col("cc")).otherwise(0L)).as(s"s$p"),
+            sum(when(bit(p) === 1, 1L).otherwise(0L)).as(s"m$p"))
+      }
+      val agg = h.agg((base ++ perms).head, (base ++ perms).tail: _*)
+      val dObs = abs(dec(col("n")) * dec(col("s_obs"))
+        - dec(col("n_obs")) * dec(col("s")))
+      val ge = (0 until 64).map { p =>
+        when(abs(dec(col("n")) * dec(col(s"s$p"))
+          - dec(col(s"m$p")) * dec(col("s"))) >= dObs, 1L).otherwise(0L)
+      }.reduce(_ + _)
+      agg.select(col("n").as("n_events"), col("n_obs").as("n_treat"),
+        Exact.checkedLong(dObs).as("d_obs"), ge.as("n_perm_ge"),
+        ((ge + lit(1L)).cast("double") / lit(65.0)).as("p_value"))
+    },
+      // 64 hash sign-splits as gated sums in one wide aggregation; the
+      // spread-hash chain replayed inline exactly as sample_hash_split does
+      Some {
+      val sums = (0 until 64).map { p =>
+        s"""sum(CASE WHEN ((h3 * 1000003 + ${p * 7919 + 12345})
+           |  % 2147483647 >> 7) & 1 = 1 THEN cc ELSE 0 END) AS s$p,
+           |sum(CASE WHEN ((h3 * 1000003 + ${p * 7919 + 12345})
+           |  % 2147483647 >> 7) & 1 = 1 THEN 1 ELSE 0 END) AS m$p"""
+          .stripMargin
+      }.mkString(",\n")
+      val dterms = (0 until 64).map { p =>
+        s"abs(CAST(n AS DECIMAL(38,0)) * s$p" +
+          s" - CAST(m$p AS DECIMAL(38,0)) * s) AS d$p"
+      }.mkString(",\n")
+      val cnt = (0 until 64)
+        .map(p => s"(CASE WHEN d$p >= d_obs THEN 1 ELSE 0 END)")
+        .mkString(" + ")
+      s"""WITH e AS (SELECT event_id, event_type,
+                            CAST(round(value * 100, 0) AS BIGINT) AS cc
+                     FROM events),
+              f AS (SELECT *,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(CAST(event_id AS VARCHAR),
+                                                    ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM e),
+              h AS (SELECT event_id, event_type, cc,
+                           ((((h0 * 1103515245 + 12345) % 2147483647)
+                             * ((h0 * 1103515245 + 12345) % 2147483647))
+                            % 2147483647
+                            * 69069 + 362437) % 2147483647 AS h3
+                    FROM f),
+              agg AS (SELECT count(*) AS n, sum(cc) AS s,
+                             sum(CASE WHEN event_type = 'purchase'
+                                      THEN cc ELSE 0 END) AS s_obs,
+                             sum(CASE WHEN event_type = 'purchase'
+                                      THEN 1 ELSE 0 END) AS n_obs,
+                             $sums
+                      FROM h),
+              d AS (SELECT n, s, n_obs, s_obs,
+                           abs(CAST(n AS DECIMAL(38,0)) * s_obs
+                               - CAST(n_obs AS DECIMAL(38,0)) * s) AS d_obs,
+                           $dterms
+                    FROM agg)
+         SELECT CAST(n AS BIGINT) AS n_events,
+                CAST(n_obs AS BIGINT) AS n_treat,
+                CAST(d_obs AS BIGINT) AS d_obs,
+                CAST($cnt AS BIGINT) AS n_perm_ge,
+                CAST(($cnt) + 1 AS DOUBLE) / CAST(65 AS DOUBLE) AS p_value
+         FROM d"""
+      }),
+
+    // Lincoln–Petersen capture–recapture: estimate the per-type user
+    // population from two single-day "capture" samples (first and last
+    // active day) — the coverage estimator crawl/census pipelines use
+    // when the full population is unobservable. N̂ = n₁n₂ div m₁₂ exact;
+    // the true count rides along so the estimator's bias is measured,
+    // not assumed. Global date bounds attach as the 1-row broadcast.
+    Query("agg_capture_recapture", (s, dir) => {
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), col("user_id"),
+          to_date(col("ts")).as("d")).tracked
+      val b = ev.agg(min("d").as("mn"), max("d").as("mx"))
+      ev.crossJoin(broadcast(b))
+        .groupBy("event_type", "user_id")
+        .agg(max(when(col("d") === col("mn"), 1L).otherwise(0L)).as("c1"),
+             max(when(col("d") === col("mx"), 1L).otherwise(0L)).as("c2"))
+        .groupBy("event_type")
+        .agg(sum("c1").cast("long").as("n1"),
+          sum("c2").cast("long").as("n2"),
+          sum(col("c1") * col("c2")).cast("long").as("m12"),
+          sum(when(col("c1") === 1L || col("c2") === 1L, 1L).otherwise(0L))
+            .cast("long").as("n_seen"),
+          count(lit(1)).as("n_true"))
+        .select(col("event_type"), col("n1"), col("n2"), col("m12"),
+          col("n_seen"), col("n_true"),
+          when(col("m12") > 0, expr("(n1 * n2) DIV m12")).as("n_hat"),
+          when(col("m12") > 0,
+            (expr("(n1 * n2) DIV m12") - col("n_true")).cast("double")
+              / col("n_true").cast("double")).as("rel_bias"))
+        .orderBy("event_type")
+    },
+      Some("""WITH b AS (SELECT min(CAST(ts AS DATE)) AS mn,
+                           max(CAST(ts AS DATE)) AS mx FROM events),
+              u AS (SELECT event_type, user_id,
+                           max(CASE WHEN CAST(ts AS DATE) =
+                               (SELECT mn FROM b) THEN 1 ELSE 0 END) AS c1,
+                           max(CASE WHEN CAST(ts AS DATE) =
+                               (SELECT mx FROM b) THEN 1 ELSE 0 END) AS c2
+                    FROM events GROUP BY 1, 2),
+              a AS (SELECT event_type,
+                           CAST(sum(c1) AS BIGINT) AS n1,
+                           CAST(sum(c2) AS BIGINT) AS n2,
+                           CAST(sum(c1 * c2) AS BIGINT) AS m12,
+                           CAST(sum(CASE WHEN c1 = 1 OR c2 = 1
+                                    THEN 1 ELSE 0 END) AS BIGINT) AS n_seen,
+                           CAST(count(*) AS BIGINT) AS n_true
+                    FROM u GROUP BY 1)
+         SELECT event_type, n1, n2, m12, n_seen, n_true,
+                CASE WHEN m12 > 0 THEN (n1 * n2) // m12 END AS n_hat,
+                CASE WHEN m12 > 0 THEN
+                  CAST((n1 * n2) // m12 - n_true AS DOUBLE)
+                    / CAST(n_true AS DOUBLE) END AS rel_bias
+         FROM a ORDER BY event_type""")),
+
+    // Hill tail-index estimator over the top-200 order totals — "how
+    // heavy is the revenue tail?" (α ≈ 1 Zipf-like, α large thin). The
+    // order statistics come from one rank window, the log-moment is the
+    // exact FixedLog2 sum Σ(log2fp(xᵢ) − log2fp(x₍ₖ₊₁₎)), and α spends
+    // one IEEE chain. Pairs with the Zipf/Heaps text laws on the exact
+    // same lattice.
+    Query("agg_hill_tail_index", (s, dir) => {
+      val L = graft.functions.FixedLog2.log2_fp _
+      val W = org.apache.spark.sql.expressions.Window
+        .partitionBy(Exact.onePartition(col("x"))).orderBy(col("x").desc)
+      // distributed top-k first (TakeOrderedAndProject — per-partition
+      // heads, never a global sort); the rank window then runs over the
+      // 201-row frame (deliberate onePartition). Value ties at either
+      // boundary are harmless: the statistic reads only the x multiset.
+      val r = Tables.orders(s, dir)
+        .select(Exact.cents(col("o_totalprice")).as("x"))
+        .orderBy(col("x").desc).limit(201)
+        .withColumn("rn", row_number().over(W))
+        .tracked
+      val xk = r.filter(col("rn") === 201).select(L(col("x")).as("lxk"))
+      r.filter(col("rn") <= 200)
+        .crossJoin(broadcast(xk))
+        .agg(count(lit(1)).as("k"),
+          (sum(L(col("x"))) - lit(200L) * max("lxk")).cast("long")
+            .as("s_q20"))
+        .withColumn("hill_alpha",
+          col("k").cast("double") * lit(1048576.0)
+            / (col("s_q20").cast("double") * lit(0.6931471805599453)))
+    },
+      Some {
+      val lx = graft.functions.FixedLog2.sql("r.x")
+      val lxk = graft.functions.FixedLog2.sql("xk")
+      s"""WITH c AS (SELECT CAST(round(o_totalprice * 100, 0) AS BIGINT)
+                       AS x
+                     FROM orders),
+               r AS (SELECT x, row_number() OVER (ORDER BY x DESC) AS rn
+                     FROM c),
+               k AS (SELECT x AS xk FROM r WHERE rn = 201),
+               top AS (SELECT r.x, $lx AS lx FROM r WHERE rn <= 200),
+               s AS (SELECT CAST(count(*) AS BIGINT) AS k,
+                            CAST(sum(lx) AS BIGINT)
+                              - 200 * (SELECT $lxk FROM k) AS s_q20
+                     FROM top)
+          SELECT k, s_q20,
+                 CAST(k AS DOUBLE) * 1048576.0
+                   / (CAST(s_q20 AS DOUBLE) * 0.6931471805599453)
+                   AS hill_alpha
+          FROM s"""
+      }),
+
+    // Two-factor OLS by normal equations in ONE aggregation pass: daily
+    // purchase revenue (cents) regressed on daily click and view counts.
+    // The nine raw moments (n, Σx₁, Σx₂, Σy, Σx₁², Σx₂², Σx₁x₂, Σx₁y,
+    // Σx₂y, Σy²) reduce the fact stream to one row — the only shape that
+    // regresses 100 TB (never a per-row residual pass); the n-scaled
+    // centered 2×2 system solves by Cramer on the DECIMAL(38,0) lattice,
+    // and every quotient is integer DIV (truncating in both engines —
+    // DuckDB runs it in HUGEINT) so coefficients leave as exact q6 ppm
+    // BIGINTs. R² rides on the same moments.
+    Query("agg_ols_two_factor", (s, dir) => {
+      def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
+      val d = Tables.events(s, dir)
+        .groupBy(to_date(col("ts")).as("dt"))
+        .agg(
+          sum(when(col("event_type") === "click", 1L).otherwise(0L))
+            .as("x1"),
+          sum(when(col("event_type") === "view", 1L).otherwise(0L))
+            .as("x2"),
+          sum(when(col("event_type") === "purchase",
+            Exact.cents(col("value"))).otherwise(0L)).as("y"))
+      val m = d.agg(count(lit(1)).as("n"),
+        sum("x1").as("s1"), sum("x2").as("s2"), sum("y").as("sy"),
+        sum(dec(col("x1")) * col("x1")).as("s11"),
+        sum(dec(col("x2")) * col("x2")).as("s22"),
+        sum(dec(col("x1")) * col("x2")).as("s12"),
+        sum(dec(col("x1")) * col("y")).as("s1y"),
+        sum(dec(col("x2")) * col("y")).as("s2y"),
+        sum(dec(col("y")) * col("y")).as("syy"))
+      // moments feed a product-of-two determinant: the 7e18 bound (not
+      // plain BIGINT range) keeps det within DECIMAL(38,0) AND HUGEINT,
+      // so Spark and the oracle share one loud overflow envelope
+      val momentBound = 7000000000000000000L
+      def mom(c: org.apache.spark.sql.Column) =
+        Exact.boundedLong(c, momentBound)
+      m.select(col("n"), col("s1"), col("s2"), col("sy"),
+          mom(col("n") * col("s11")
+            - dec(col("s1")) * col("s1")).as("c11"),
+          mom(col("n") * col("s22")
+            - dec(col("s2")) * col("s2")).as("c22"),
+          mom(col("n") * col("s12")
+            - dec(col("s1")) * col("s2")).as("c12"),
+          mom(col("n") * col("s1y")
+            - dec(col("s1")) * col("sy")).as("cy1"),
+          mom(col("n") * col("s2y")
+            - dec(col("s2")) * col("sy")).as("cy2"),
+          mom(col("n") * col("syy")
+            - dec(col("sy")) * col("sy")).as("cyy"))
+        .select(col("n").as("n_days"), col("s1"), col("s2"), col("sy"),
+          expr("""cast(c11 as decimal(38,0)) * c22
+                  - cast(c12 as decimal(38,0)) * c12""").as("det"),
+          expr("""cast(cy1 as decimal(38,0)) * c22
+                  - cast(cy2 as decimal(38,0)) * c12""").as("b1n"),
+          expr("""cast(c11 as decimal(38,0)) * cy2
+                  - cast(c12 as decimal(38,0)) * cy1""").as("b2n"),
+          col("cy1"), col("cy2"), col("cyy"))
+        .select(col("n_days"), col("s1"), col("s2"), col("sy"),
+          expr("(1000000 * b1n) DIV det").as("beta1_ppm"),
+          expr("(1000000 * b2n) DIV det").as("beta2_ppm"),
+          col("cy1"), col("cy2"), col("cyy"))
+        .select(col("n_days"), col("sy"),
+          col("beta1_ppm"), col("beta2_ppm"),
+          // intercept on the same q6 lattice: ȳ − β₁x̄₁ − β₂x̄₂, cents·ppm
+          expr("""(1000000 * sy - beta1_ppm * s1 - beta2_ppm * s2)
+                  DIV n_days""").as("alpha_ppm_cents"),
+          // R² = (β·Sxy)/Syy with the q6 betas — q6 lattice, DECIMAL-safe
+          expr("""(cast(beta1_ppm as decimal(38,0)) * cy1
+                   + cast(beta2_ppm as decimal(38,0)) * cy2)
+                  DIV cast(cyy as decimal(38,0))""").as("r2_ppm"),
+          (col("beta1_ppm").cast("double") / lit(1e6)).as("beta1"),
+          (col("beta2_ppm").cast("double") / lit(1e6)).as("beta2"))
+    },
+      // nine raw moments in one pass, n-scaled centered 2x2 Cramer on the
+      // integer lattice; every quotient is HUGEINT // (truncating toward
+      // zero, matching Spark's decimal DIV — verified on negatives)
+      Some("""WITH d AS (SELECT CAST(ts AS DATE) AS dt,
                   CAST(sum(CASE WHEN event_type = 'click'
                                 THEN 1 ELSE 0 END) AS BIGINT) AS x1,
                   CAST(sum(CASE WHEN event_type = 'view'
@@ -3494,12 +3339,54 @@ object AggQueries {
                      // CAST(cyy AS HUGEINT) AS BIGINT) AS r2_ppm,
                 CAST(beta1_ppm AS DOUBLE) / 1e6 AS beta1,
                 CAST(beta2_ppm AS DOUBLE) / 1e6 AS beta2
-         FROM b""",
+         FROM b""")),
 
-    // q10-lattice row pass then column pass; the column product rides
-    // HUGEINT and re-enters BIGINT loudly (the Spark side's DECIMAL div)
-    "agg_raking_ipf" ->
-      """WITH ev AS (SELECT event_type,
+    // Raking / iterative proportional fitting (survey calibration): the
+    // first-week (event_type × weekday) joint seeds weights that are
+    // raked to the FULL-period row then column margins — one row pass +
+    // one column pass, both on the q10 integer lattice with explicit
+    // DIV (trunc ≡ floor on nonnegatives, both engines), so the fitted
+    // weights are bitwise-portable with no float ratio anywhere. BOTH
+    // passes' products ride DECIMAL(38,0)/HUGEINT into the integral
+    // divide (the ols/beta precedent) — at extreme scale the BIGINT
+    // re-entry fails loudly on both engines rather than drifting. Seed
+    // and margin frames are dimension-sized (types × weekdays); the
+    // only fact-scale work is the three counting groupBys.
+    Query("agg_raking_ipf", (s, dir) => {
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"),
+          dayofweek(to_date(col("ts"))).as("dow"),
+          to_date(col("ts")).as("d"))
+        .tracked // seed + both margins scan it
+      val clock = ev.agg(min("d").as("d0"))
+      val seed = ev.crossJoin(broadcast(clock))
+        .filter(col("d") < date_add(col("d0"), 7))
+        .groupBy("event_type", "dow").agg(count(lit(1)).as("n_seed"))
+        .tracked // row sums and the column pass reuse it
+      val rTot = ev.groupBy("event_type").agg(count(lit(1)).as("r_i"))
+      val cTot = ev.groupBy("dow").agg(count(lit(1)).as("c_j"))
+      val rs = seed.groupBy("event_type")
+        .agg(sum("n_seed").cast("long").as("rs0"))
+      val w1 = seed
+        .join(broadcast(rTot), "event_type")
+        .join(broadcast(rs), "event_type")
+        .withColumn("w1",
+          expr("cast(n_seed as decimal(38,0)) * 1024 * r_i div rs0"))
+        .tracked // column sums and the final projection reuse it
+      val cs = w1.groupBy("dow").agg(sum("w1").cast("long").as("cs1"))
+      w1.join(broadcast(cTot), "dow")
+        .join(broadcast(cs), "dow")
+        .withColumn("w2", expr(
+          "(cast(w1 as decimal(38,0)) * c_j * 1024)" +
+            " div cast(cs1 as decimal(38,0))"))
+        .select(col("event_type"), col("dow").cast("long").as("dow"),
+          col("n_seed"), col("w2").as("w_q10"),
+          (col("w2").cast("double") / lit(1024.0)).as("weight"))
+        .orderBy("event_type", "dow")
+    },
+      // q10-lattice row pass then column pass; the column product rides
+      // HUGEINT and re-enters BIGINT loudly (the Spark side's DECIMAL div)
+      Some("""WITH ev AS (SELECT event_type,
                   CAST(dayofweek(CAST(ts AS DATE)) + 1 AS BIGINT) AS dow,
                   CAST(ts AS DATE) AS d
            FROM events),
@@ -3525,7 +3412,6 @@ object AggQueries {
             FROM w1 JOIN ct USING (dow) JOIN cs USING (dow))
          SELECT event_type, dow, n_seed, w_q10,
                 CAST(w_q10 AS DOUBLE) / CAST(1024 AS DOUBLE) AS weight
-         FROM w2 ORDER BY 1, 2""",
-
+         FROM w2 ORDER BY 1, 2""")),
   )
 }

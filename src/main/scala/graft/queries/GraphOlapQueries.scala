@@ -1,26 +1,25 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.CacheRegistry.QueryCached
 import graft.olap.{Exact, Skyline}
 import graft.text.TextAnalysis
 
-/** Graph, OLAP, mining, sketch and layout families — query + oracle definitions, mechanically split
-  * out of SparkEntry (round 7, VERDICT r6 item 7): entry text is
-  * verbatim, zero behavior change; SparkEntry merges the family maps
-  * back into the single driver contract.
+/** Graph, OLAP, mining, sketch and layout families — one `Query` record per
+  * query, its DuckDB oracle next to its Spark closure; SparkEntry
+  * concatenates the family Seqs into `queries`/`oracleSql`.
   */
 object GraphOlapQueries {
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  val all: Seq[Query] = Seq(
     // Small-file compaction (OPTIMIZE): fragment events into 64 splinter
     // files, compact to right-sized ones, read the compacted layout back
     // and prove content integrity against the base table. File-count
     // assertions live in BucketingSpec; the oracle checks the data
     // survived the rewrite bit-for-bit.
-    "layout_compact_small_files" -> ((s, dir) => {
+    Query("layout_compact_small_files", (s, dir) => {
       val base = graft.io.WorkDir.create("graft_compact").toString
       Tables.events(s, dir).select("event_id", "event_type", "value")
         .repartition(64)
@@ -33,29 +32,50 @@ object GraphOlapQueries {
              (sum(Exact.cents(col("value"))).cast("double") / lit(100.0))
                .as("sum_value"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""SELECT event_type, count(*) AS n,
+                CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
+                  / 100.0 AS sum_value
+         FROM events GROUP BY 1 ORDER BY 1""")),
 
     // Misra-Gries heavy hitters over the token stream: per-partition O(k)
     // summaries whose union is a guaranteed superset of all items with
     // freq > n/k (pigeonhole), then an exact verify over only the
     // candidates — the two-pass shape that never aggregates the full
     // vocabulary. Threshold test in exact integers (freq·k > n).
-    "sketch_mg_heavy" -> ((s, dir) =>
+    Query("sketch_mg_heavy", (s, dir) =>
       graft.olap.Frequent.heavyHitters(
           Tables.documents(s, dir)
             .select(explode(TextAnalysis.tokens("text")).as("token")),
           "token", 40)
-        .orderBy(col("freq").desc, col("item").asc)),
+        .orderBy(col("freq").desc, col("item").asc),
+      Some("""WITH t AS (SELECT unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9]+')) AS item
+                    FROM documents),
+              n AS (SELECT count(*) AS tot FROM t)
+         SELECT item, count(*) AS freq
+         FROM t, n GROUP BY item, tot
+         HAVING count(*) * 40 > tot
+         ORDER BY freq DESC, item ASC""")),
 
     // 2D skyline (Pareto frontier) per brand: maximize size, minimize
     // price. Implemented as groupBy-reduce + one keyed running-min scan;
     // the oracle keeps the O(n²) NOT-EXISTS dominance formulation — a
     // different algorithm reaching the same set.
-    "olap_skyline_parts" -> ((s, dir) =>
+    Query("olap_skyline_parts", (s, dir) =>
       Skyline.pareto2d(
           Tables.part(s, dir).select("p_brand", "p_size", "p_retailprice"),
           Seq("p_brand"), "p_size", "p_retailprice")
-        .orderBy("p_brand", "p_size")),
+        .orderBy("p_brand", "p_size"),
+      Some("""WITH c AS (SELECT p_brand, p_size, min(p_retailprice) AS p_retailprice
+                    FROM part GROUP BY 1, 2)
+         SELECT p_brand, p_size, p_retailprice FROM c a
+         WHERE NOT EXISTS (SELECT 1 FROM c b
+                           WHERE b.p_brand = a.p_brand
+                             AND b.p_size >= a.p_size
+                             AND b.p_retailprice <= a.p_retailprice
+                             AND (b.p_size > a.p_size
+                                  OR b.p_retailprice < a.p_retailprice))
+         ORDER BY p_brand, p_size""")),
 
     // Bucketed-table layout (graft.olap.Layout): both join sides written
     // bucketed+sorted on the key, so the equi-join plans with NO exchange
@@ -64,7 +84,7 @@ object GraphOlapQueries {
     // final 5-group aggregation (BucketingSpec pins exactly one Exchange
     // in the whole plan; the remaining join-side sorts are
     // partition-local).
-    "layout_bucketed_join" -> ((s, dir) => {
+    Query("layout_bucketed_join", (s, dir) => {
       val sfx = math.abs(dir.hashCode).toString
       val orders = graft.olap.Layout.writeBucketed(s,
         Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
@@ -79,7 +99,14 @@ object GraphOlapQueries {
              sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")
                .as("revenue"))
         .orderBy("c_mktsegment")
-    }),
+    },
+      // the bucketed layout changes the PLAN, not the answer: the oracle is
+      // the plain join+agg
+      Some("""SELECT c_mktsegment, count(*) AS n_orders,
+                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
+                  AS revenue
+         FROM orders JOIN customer ON o_custkey = c_custkey
+         GROUP BY 1 ORDER BY 1""")),
 
     // Hive-style partitioned layout: events written partitioned by
     // event_type, read back with a partition predicate — the filter never
@@ -87,7 +114,7 @@ object GraphOlapQueries {
     // (PartitionFilters in the scan, 1 of 5 partitions read;
     // BucketingSpec pins both). At 100 TB this is THE first-line scan
     // reducer: partition by the column every query filters on.
-    "layout_partition_prune" -> ((s, dir) => {
+    Query("layout_partition_prune", (s, dir) => {
       val path = graft.io.WorkDir.create("graft_part_events").toString
       Tables.events(s, dir)
         .withColumn("event_date", to_date(col("ts")))
@@ -99,15 +126,41 @@ object GraphOlapQueries {
              sum(Exact.cents(col("value"))).cast("double")./(lit(100.0))
                .as("sum_value"))
         .orderBy("event_date")
-    }),
+    },
+      // the partitioned layout changes the SCAN, not the answer
+      Some("""SELECT CAST(ts AS DATE) AS event_date, count(*) AS n,
+                CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
+                  / 100.0 AS sum_value
+         FROM events WHERE event_type = 'purchase'
+         GROUP BY 1 ORDER BY 1""")),
 
     // North-star sketch: KMV distinct-count estimation — portable-hash
     // k-minimum-values, bitwise-reproducible in the oracle (unlike HLL,
     // whose answer is a library artifact). k-smallest plans as
     // TakeOrderedAndProject; the estimate is one double division.
-    "sketch_kmv_distinct" -> ((s, dir) =>
+    Query("sketch_kmv_distinct", (s, dir) =>
       graft.olap.Sketch.kmvDistinct(Tables.lineitem(s, dir),
-        col("l_partkey"), k = 256)),
+        col("l_partkey"), k = 256),
+      // identical estimator arithmetic: k smallest distinct portable hashes,
+      // (k-1)*M/h_k in left-associated double ops on both engines
+      Some("""WITH f AS (SELECT DISTINCT
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(CAST(l_partkey AS VARCHAR), ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM lineitem),
+              m1 AS (SELECT (h0 * 1103515245 + 12345) % 2147483647 AS h1
+                     FROM f),
+              m2 AS (SELECT (h1 * h1) % 2147483647 AS h2 FROM m1),
+              h AS (SELECT DISTINCT (h2 * 69069 + 362437) % 2147483647 AS hv
+                    FROM m2),
+              t AS (SELECT hv FROM h ORDER BY hv LIMIT 256)
+         SELECT CAST(count(*) AS BIGINT) AS k_actual,
+                CAST(max(hv) AS BIGINT) AS kth_hash,
+                CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
+                     ELSE CAST(count(*) - 1 AS DOUBLE) * 2147483647.0
+                          / CAST(max(hv) AS DOUBLE) END AS est_distinct
+         FROM t""")),
 
     // HyperLogLog as a NATIVE Catalyst aggregate (graft.olap.Hll): 512
     // one-byte registers per group, partial-aggregated map-side, merged by
@@ -117,7 +170,7 @@ object GraphOlapQueries {
     // oracle computes the ALL registers directly from all rows: max is
     // associative, so merged == direct, bit-for-bit; exact counts ride
     // along so the (raw-estimator) error stays visible.
-    "sketch_hll_distinct" -> ((s, dir) => {
+    Query("sketch_hll_distinct", (s, dir) => {
       import graft.olap.Hll
       val base = Tables.events(s, dir)
         .select(col("event_type"), col("user_id"),
@@ -137,7 +190,58 @@ object GraphOlapQueries {
                 Hll.zeroRegs(col("sk")).as("zero_regs"),
                 col("n_exact"))
       per.unionByName(all).orderBy("scope")
-    }),
+    },
+      // HLL registers replayed exactly: same spread hash, bucket = hv mod 512,
+      // rho = 23 - bitlength(hv div 512) (bin() is minimal-width), registers
+      // as max(rho), estimate from the exact BIGINT S = sum 2^(32-r) with one
+      // int->double conversion + one IEEE division. The ALL row recomputes
+      // registers directly from all rows — max is associative, so the
+      // engine's hll_merge of group sketches must equal it bit-for-bit.
+      Some("""WITH f AS (SELECT event_type, user_id,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(CAST(user_id AS VARCHAR), ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM events),
+              m1 AS (SELECT event_type, user_id,
+                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
+              m2 AS (SELECT event_type, user_id, (h1 * h1) % 2147483647 AS h2
+                     FROM m1),
+              m3 AS (SELECT event_type, user_id,
+                       (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
+              r AS (SELECT event_type, hv % 512 AS bucket,
+                      CASE WHEN hv // 512 = 0 THEN 23
+                           ELSE 23 - length(bin(hv // 512)) END AS rho
+                    FROM m3),
+              regs AS (SELECT event_type, bucket, max(rho) AS r
+                       FROM r GROUP BY 1, 2),
+              sq AS (SELECT event_type,
+                       CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
+                         + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s,
+                       512 - count(*) AS zero_regs
+                     FROM regs GROUP BY 1),
+              ex AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
+                     FROM events GROUP BY 1),
+              rall AS (SELECT bucket, max(rho) AS r FROM r GROUP BY 1),
+              sqall AS (SELECT
+                          CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
+                            + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s,
+                          512 - count(*) AS zero_regs
+                        FROM rall),
+              exall AS (SELECT count(DISTINCT user_id) AS n_exact FROM events),
+              u AS (SELECT sq.event_type AS scope, sq.s, sq.zero_regs,
+                           ex.n_exact
+                    FROM sq JOIN ex ON sq.event_type = ex.event_type
+                    UNION ALL
+                    SELECT 'ALL', sqall.s, sqall.zero_regs, exall.n_exact
+                    FROM sqall, exall)
+         SELECT scope,
+                (((CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE)
+                    + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
+                  * CAST(512 AS DOUBLE)) * CAST(512 AS DOUBLE))
+                  * CAST(4294967296 AS DOUBLE) / CAST(s AS DOUBLE) AS hll_est,
+                CAST(zero_regs AS BIGINT) AS zero_regs, n_exact
+         FROM u ORDER BY scope""")),
 
     // 6-way star join (TPC-H Q5 shape): region/nation/supplier broadcast,
     // customer⋈orders⋈lineitem shuffle on their keys, nation-local
@@ -148,7 +252,7 @@ object GraphOlapQueries {
     // like the k-core degree histogram — never the fact table), ordered
     // totally by (revenue desc, partkey); thresholds compare exact
     // integers (cum·100 vs total·k), no percent doubles in the cut.
-    "olap_abc_classification" -> ((s, dir) => {
+    Query("olap_abc_classification", (s, dir) => {
       val rev = Tables.lineitem(s, dir)
         .groupBy("l_partkey")
         .agg(sum(Exact.cents(col("l_extendedprice"))).as("cents"))
@@ -170,14 +274,38 @@ object GraphOlapQueries {
           (col("class_cents").cast("double")
             / col("total_cents").cast("double")).as("revenue_share"))
         .orderBy("abc_class")
-    }),
+    },
+      Some("""WITH rev AS (SELECT l_partkey,
+                             CAST(sum(CAST(round(l_extendedprice * 100, 0)
+                               AS BIGINT)) AS BIGINT) AS cents
+                      FROM lineitem GROUP BY 1),
+              t AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents
+                    FROM rev),
+              c AS (SELECT l_partkey, cents,
+                           CAST(sum(cents) OVER (ORDER BY cents DESC,
+                             l_partkey ROWS BETWEEN UNBOUNDED PRECEDING
+                             AND CURRENT ROW) AS BIGINT) AS cum
+                    FROM rev),
+              k AS (SELECT c.cents,
+                           CASE WHEN c.cum * 100 <= t.total_cents * 80
+                                THEN 'A'
+                                WHEN c.cum * 100 <= t.total_cents * 95
+                                THEN 'B'
+                                ELSE 'C' END AS abc_class,
+                           t.total_cents
+                    FROM c, t)
+         SELECT abc_class, count(*) AS n_parts,
+                CAST(sum(cents) AS BIGINT) AS class_cents,
+                CAST(sum(cents) AS DOUBLE) / CAST(max(total_cents) AS DOUBLE)
+                  AS revenue_share
+         FROM k GROUP BY 1 ORDER BY 1""")),
 
     // Percent-of-parent hierarchy report (the drill-down table every BI
     // layer renders): order revenue per nation, each nation's share of
     // its region, each region's share of the grand total — exact cent
     // sums at the leaf level, parents by re-aggregation (never a second
     // scan), shares as one division each. Dims broadcast.
-    "olap_percent_of_parent" -> ((s, dir) => {
+    Query("olap_percent_of_parent", (s, dir) => {
       val geo = Tables.nation(s, dir)
         .join(broadcast(Tables.region(s, dir)),
           col("n_regionkey") === col("r_regionkey"))
@@ -201,7 +329,28 @@ object GraphOlapQueries {
           (col("region_cents").cast("double")
             / col("total_cents").cast("double")).as("region_share"))
         .orderBy("r_name", "n_name")
-    }),
+    },
+      Some("""WITH pn AS (SELECT r.r_name, n.n_name,
+                            CAST(sum(CAST(round(o.o_totalprice * 100, 0)
+                              AS BIGINT)) AS BIGINT) AS nation_cents
+                     FROM orders o
+                     JOIN customer c ON c.c_custkey = o.o_custkey
+                     JOIN nation n ON n.n_nationkey = c.c_nationkey
+                     JOIN region r ON r.r_regionkey = n.n_regionkey
+                     GROUP BY 1, 2),
+              pr AS (SELECT r_name,
+                            CAST(sum(nation_cents) AS BIGINT)
+                              AS region_cents
+                     FROM pn GROUP BY 1),
+              t AS (SELECT CAST(sum(region_cents) AS BIGINT)
+                      AS total_cents FROM pr)
+         SELECT pn.r_name, pn.n_name, pn.nation_cents, pr.region_cents,
+                CAST(pn.nation_cents AS DOUBLE)
+                  / CAST(pr.region_cents AS DOUBLE) AS share_in_region,
+                CAST(pr.region_cents AS DOUBLE)
+                  / CAST(t.total_cents AS DOUBLE) AS region_share
+         FROM pn JOIN pr ON pr.r_name = pn.r_name, t
+         ORDER BY pn.r_name, pn.n_name""")),
 
     // Graph analytics: fixed-iteration PageRank over the part<->supplier
     // bipartite graph from lineitem (both directions), quantized-integer
@@ -215,7 +364,7 @@ object GraphOlapQueries {
     // co-purchased in the same order (order size is bounded, so edge
     // generation is linear in lineitems). The edge frame is persisted:
     // degrees, wedges, and closures all reuse one scan.
-    "graph_triangles" -> ((s, dir) => {
+    Query("graph_triangles", (s, dir) => {
       // shared pinned frames (GraphFrames): edges, degrees, and the
       // materialized triangle closure built once per process+SF — the
       // materialized-derived-table posture; clustering_coeff, path3 and
@@ -226,31 +375,116 @@ object GraphOlapQueries {
         .select(col("n_nodes"), col("n_edges"), col("n_triangles"),
                 (lit(3.0) * col("n_triangles").cast("double")
                   / col("n_wedges").cast("double")).as("transitivity"))
-    }),
+    },
+      // the oracle counts triangles by the direct ordered triple join
+      // (u < v < w via the canonical edge direction) — a different
+      // algorithm from the engine's degree-ordered orientation, same count
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              deg AS (SELECT n, count(*) AS d
+                      FROM (SELECT u AS n FROM e
+                            UNION ALL SELECT v AS n FROM e)
+                      GROUP BY 1),
+              t AS (SELECT count(*) AS n_triangles
+                    FROM e e1
+                    JOIN e e2 ON e2.u = e1.v
+                    JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
+              s AS (SELECT count(*) AS n_nodes,
+                           CAST(sum(d * (d - 1) // 2) AS BIGINT) AS n_wedges
+                    FROM deg),
+              m AS (SELECT count(*) AS n_edges FROM e)
+         SELECT s.n_nodes, m.n_edges, t.n_triangles,
+                CAST(3 AS DOUBLE) * CAST(t.n_triangles AS DOUBLE)
+                  / CAST(s.n_wedges AS DOUBLE) AS transitivity
+         FROM s, m, t""")),
 
     // k-core peeling, 3 fixed rounds at k = median degree of the input
     // graph (exact positional order statistic): repeated degree count +
     // induced-subgraph semi-joins over a shrinking edge list — the
     // bounded-iteration shape shared with graph_pagerank.
-    "graph_kcore" -> ((s, dir) => {
+    Query("graph_kcore", (s, dir) => {
       // per-round degree caches ride the registry (released by the
       // harness); the per-round stat rows are lazy and fold into ONE
       // final union action (r11; guide §1.2)
       val e = graft.olap.GraphFrames.coPurchaseEdges(s, dir)
       graft.olap.KCore.peelStats(e, 3).orderBy("round")
-    }),
+    },
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e0 AS (SELECT DISTINCT a.p AS u, b.p AS v
+                     FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              d0 AS (SELECT n, count(*) AS d FROM
+                       (SELECT u AS n FROM e0 UNION ALL SELECT v AS n FROM e0)
+                     GROUP BY 1),
+              kv AS (SELECT d AS kth FROM
+                       (SELECT d, n, row_number() OVER (ORDER BY d, n) AS rn,
+                               count(*) OVER () AS cnt FROM d0)
+                     WHERE rn = (cnt + 1) // 2),
+              k1 AS (SELECT n FROM d0, kv WHERE d >= kth),
+              e1 AS (SELECT u, v FROM e0
+                     WHERE u IN (SELECT n FROM k1)
+                       AND v IN (SELECT n FROM k1)),
+              d1 AS (SELECT n, count(*) AS d FROM
+                       (SELECT u AS n FROM e1 UNION ALL SELECT v AS n FROM e1)
+                     GROUP BY 1),
+              k2 AS (SELECT n FROM d1, kv WHERE d >= kth),
+              e2 AS (SELECT u, v FROM e1
+                     WHERE u IN (SELECT n FROM k2)
+                       AND v IN (SELECT n FROM k2)),
+              d2 AS (SELECT n, count(*) AS d FROM
+                       (SELECT u AS n FROM e2 UNION ALL SELECT v AS n FROM e2)
+                     GROUP BY 1),
+              k3 AS (SELECT n FROM d2, kv WHERE d >= kth),
+              e3 AS (SELECT u, v FROM e2
+                     WHERE u IN (SELECT n FROM k3)
+                       AND v IN (SELECT n FROM k3))
+         SELECT 0 AS round,
+                (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e0
+                   UNION ALL SELECT v AS n FROM e0)) AS n_nodes,
+                (SELECT count(*) FROM e0) AS n_edges
+         UNION ALL
+         SELECT 1, (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e1
+                      UNION ALL SELECT v AS n FROM e1)),
+                (SELECT count(*) FROM e1)
+         UNION ALL
+         SELECT 2, (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e2
+                      UNION ALL SELECT v AS n FROM e2)),
+                (SELECT count(*) FROM e2)
+         UNION ALL
+         SELECT 3, (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e3
+                      UNION ALL SELECT v AS n FROM e3)),
+                (SELECT count(*) FROM e3)
+         ORDER BY round""")),
 
     // Degree distribution in log₂ buckets — the first diagnostic run on
     // any production graph (power-law or not?): one degree count + one
     // bucket groupBy, both partial-aggregable, portable floor(log2).
-    "graph_degree_distribution" -> ((s, dir) => {
+    Query("graph_degree_distribution", (s, dir) => {
       graft.olap.GraphFrames.partSuppDegrees(s, dir)
         .withColumn("bucket", (length(bin(col("d"))) - 1).cast("long"))
         .groupBy("bucket")
         .agg(count(lit(1)).as("n_nodes"), min(col("d")).as("min_degree"),
              max(col("d")).as("max_degree"))
         .orderBy("bucket")
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              deg AS (SELECT u AS n, count(*) AS d FROM e GROUP BY 1)
+         SELECT length(bin(d)) - 1 AS bucket, count(*) AS n_nodes,
+                CAST(min(d) AS BIGINT) AS min_degree,
+                CAST(max(d) AS BIGINT) AS max_degree
+         FROM deg GROUP BY 1 ORDER BY 1""")),
 
     // Degree assortativity (Newman's r): do high-degree nodes attach to
     // high-degree nodes? Pearson correlation over the (deg(u), deg(v))
@@ -258,7 +492,7 @@ object GraphOlapQueries {
     // integer degrees (partial-aggregable; DECIMAL(38,0) where products
     // of sums appear), a single fixed IEEE chain at the end. Two keyed
     // joins to attach endpoint degrees, one global aggregate.
-    "graph_assortativity" -> ((s, dir) => {
+    Query("graph_assortativity", (s, dir) => {
       // pinned symmetric doubled-id frame (§2.4; r11)
       val e = graft.olap.GraphFrames.partSuppSym(s, dir)
         .select(col("src").as("u"), col("dst").as("v"))
@@ -282,14 +516,33 @@ object GraphOlapQueries {
           / (lit(2).cast("decimal(38,0)") * md * col("sj2") - sjd * sjd)
             .cast("double"))
           .as("assortativity"))
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              deg AS (SELECT u AS n, count(*) AS d FROM e GROUP BY 1),
+              wd AS (SELECT du.d AS ju, dv.d AS kv
+                     FROM e JOIN deg du ON du.n = e.u
+                            JOIN deg dv ON dv.n = e.v),
+              ag AS (SELECT CAST(count(*) AS BIGINT) AS m,
+                            CAST(sum(ju * kv) AS HUGEINT) AS sjk,
+                            CAST(sum(ju + kv) AS HUGEINT) AS sj,
+                            CAST(sum(ju * ju + kv * kv) AS HUGEINT) AS sj2
+                     FROM wd)
+         SELECT m,
+                CAST(CAST(4 * m * sjk - sj * sj AS BIGINT) AS DOUBLE)
+                  / CAST(CAST(2 * m * sj2 - sj * sj AS BIGINT) AS DOUBLE)
+                  AS assortativity
+         FROM ag""")),
 
     // Market-basket mining: top co-occurring part pairs across orders
     // with association confidence. Pair generation is a per-order
     // self-join — bounded by items-per-order (TPC-H ≈ 4, never corpus
     // size), the blocking that keeps basket mining feasible at any scale;
     // support and confidence are exact counts + one division each.
-    "mine_frequent_pairs" -> ((s, dir) => {
+    Query("mine_frequent_pairs", (s, dir) => {
       val items = graft.olap.GraphFrames.orderPartItems(s, dir)
       val itemCnt = items.groupBy(col("pk")).agg(count(lit(1)).as("n_item"))
       // pair supports come off the PINNED weighted co-purchase frame —
@@ -310,14 +563,33 @@ object GraphOlapQueries {
             .as("conf_a_b"))
         .orderBy(col("n_pair").desc, col("part_a"), col("part_b"))
         .limit(50)
-    }),
+    },
+      Some("""WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+                        FROM lineitem),
+              ic AS (SELECT pk, count(*) AS n_item FROM items GROUP BY 1),
+              lbw AS (SELECT ok FROM items GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT items.ok, items.pk FROM items
+                      JOIN lbw USING (ok)),
+              p AS (SELECT a.pk AS part_a, b.pk AS part_b,
+                           count(*) AS n_pair
+                    FROM lcp a JOIN lcp b
+                      ON a.ok = b.ok AND a.pk < b.pk
+                    GROUP BY 1, 2)
+         SELECT p.part_a, p.part_b, p.n_pair,
+                ia.n_item AS n_a, ib.n_item AS n_b,
+                CAST(p.n_pair AS DOUBLE) / CAST(ia.n_item AS DOUBLE)
+                  AS conf_a_b
+         FROM p JOIN ic ia ON ia.pk = p.part_a
+                JOIN ic ib ON ib.pk = p.part_b
+         ORDER BY p.n_pair DESC, p.part_a, p.part_b LIMIT 50""")),
 
     // Bounded BFS from the smallest node id over the bipartite
     // part–supplier graph: exact-distance frontier counts for 3 hops —
     // per hop one keyed join + distinct + anti-join vs visited, eagerly
     // materialized per round (the KCore discipline) so finished frontiers
     // release their caches.
-    "graph_bfs_reach" -> ((s, dir) => {
+    Query("graph_bfs_reach", (s, dir) => {
       // pinned pre-partitioned symmetric edges — the per-hop frontier
       // join reuses the cached layout, and the root (min node id) reads
       // the node-sized pinned degree frame instead of an edge scan
@@ -327,7 +599,30 @@ object GraphOlapQueries {
       graft.olap.Bfs.distanceCounts(G.partSuppSym(s, dir), source, 3,
           edgesPinned = true)
         .orderBy("distance")
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              d0 AS (SELECT min(src) AS node FROM e),
+              d1 AS (SELECT DISTINCT e.dst AS node
+                     FROM e JOIN d0 ON e.src = d0.node
+                     WHERE e.dst NOT IN (SELECT node FROM d0)),
+              d2 AS (SELECT DISTINCT e.dst AS node
+                     FROM e JOIN d1 ON e.src = d1.node
+                     WHERE e.dst NOT IN (SELECT node FROM d0)
+                       AND e.dst NOT IN (SELECT node FROM d1)),
+              d3 AS (SELECT DISTINCT e.dst AS node
+                     FROM e JOIN d2 ON e.src = d2.node
+                     WHERE e.dst NOT IN (SELECT node FROM d0)
+                       AND e.dst NOT IN (SELECT node FROM d1)
+                       AND e.dst NOT IN (SELECT node FROM d2))
+         SELECT 0 AS distance, count(*) AS n_nodes FROM d0
+         UNION ALL SELECT 1, count(*) FROM d1
+         UNION ALL SELECT 2, count(*) FROM d2
+         UNION ALL SELECT 3, count(*) FROM d3
+         ORDER BY distance""")),
 
     // Label-propagation community detection over the bipartite
     // part–supplier graph, 2 fixed rounds: most-frequent neighbor label,
@@ -335,7 +630,7 @@ object GraphOlapQueries {
     // partial-aggregable aggregates (the max_by packs (count, −label) so
     // the tie-break rides inside the lexicographic max). Output is the
     // community-size histogram.
-    "graph_label_prop" -> ((s, dir) => {
+    Query("graph_label_prop", (s, dir) => {
       // the 2-round LPA labels are the PINNED shared frame this query
       // and graph_modularity both derive from (guide §2.4; r11) — one
       // iterative run per process+SF, the histogram is one node-sized
@@ -344,9 +639,31 @@ object GraphOlapQueries {
         .groupBy(col("label").as("community"))
         .agg(count(lit(1)).as("n_nodes"))
         .orderBy("community")
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
+              c1 AS (SELECT e.dst AS node, l.label, count(*) AS c
+                     FROM e JOIN l0 l ON l.node = e.src GROUP BY 1, 2),
+              l1 AS (SELECT node, label FROM
+                       (SELECT node, label,
+                               row_number() OVER (PARTITION BY node
+                                 ORDER BY c DESC, label ASC) AS rn
+                        FROM c1) WHERE rn = 1),
+              c2 AS (SELECT e.dst AS node, l.label, count(*) AS c
+                     FROM e JOIN l1 l ON l.node = e.src GROUP BY 1, 2),
+              l2 AS (SELECT node, label FROM
+                       (SELECT node, label,
+                               row_number() OVER (PARTITION BY node
+                                 ORDER BY c DESC, label ASC) AS rn
+                        FROM c2) WHERE rn = 1)
+         SELECT label AS community, count(*) AS n_nodes
+         FROM l2 GROUP BY 1 ORDER BY 1""")),
 
-    "graph_pagerank" -> ((s, dir) => {
+    Query("graph_pagerank", (s, dir) => {
       // pinned pre-partitioned symmetric edges + pinned degree frame:
       // the per-call edge repartition and the node/outdeg rebuilds are
       // gone — the symmetric graph's degree IS the out-degree and its
@@ -363,7 +680,38 @@ object GraphOlapQueries {
         .select("node_id", "node_type", "rank")
         .orderBy(col("rank").desc, col("node_id"))
         .limit(50)
-    }),
+    },
+      Some {
+      def iter(i: Int, prev: String): String =
+        s"""c$i AS (SELECT src,
+                      CAST(floor(rank / CAST(d AS DOUBLE)
+                        * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS c
+                    FROM $prev JOIN outdeg ON node_id = src),
+             s$i AS (SELECT dst AS node_id, CAST(sum(c) AS BIGINT) AS sc
+                     FROM edges JOIN c$i USING (src) GROUP BY 1),
+             r$i AS (SELECT n2.node_id,
+                       CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE)
+                         * (CAST(coalesce(sc, 0) AS DOUBLE)
+                            / CAST(1000000000000 AS DOUBLE)) AS rank
+                     FROM nodes n2 LEFT JOIN s$i USING (node_id))"""
+      s"""WITH e0 AS (SELECT DISTINCT l_partkey * 2 AS src,
+                        l_suppkey * 2 + 1 AS dst FROM lineitem),
+              edges AS (SELECT src, dst FROM e0
+                        UNION ALL SELECT e0.dst AS src, e0.src AS dst FROM e0),
+              nodes AS (SELECT DISTINCT src AS node_id FROM edges),
+              nn AS (SELECT count(*) AS n FROM nodes),
+              outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1),
+              r0 AS (SELECT node_id, CAST(1 AS DOUBLE) / CAST(n AS DOUBLE)
+                       AS rank FROM nodes, nn),
+              ${iter(1, "r0")},
+              ${iter(2, "r1")},
+              ${iter(3, "r2")}
+         SELECT node_id,
+                CASE WHEN node_id % 2 = 0 THEN 'part' ELSE 'supplier' END
+                  AS node_type,
+                rank
+         FROM r3 ORDER BY rank DESC, node_id LIMIT 50"""
+      }),
 
     // North-star frequency sketch: count-min over the corpus token stream
     // (depth 3 × width 1024). Counters are order-independent sums —
@@ -371,7 +719,7 @@ object GraphOlapQueries {
     // regardless of corpus size, so estimate lookups broadcast it. Output:
     // top-20 tokens with exact counts next to CMS estimates (never an
     // underestimate — spec-pinned).
-    "sketch_cms_topk" -> ((s, dir) => {
+    Query("sketch_cms_topk", (s, dir) => {
       val toks = Tables.documents(s, dir)
         .select(explode(TextAnalysis.tokens("text")).as("token"))
       val cms = graft.olap.Sketch.cmsBuild(toks, col("token"), w = 1024)
@@ -382,14 +730,45 @@ object GraphOlapQueries {
         .select(col("token"), col("exact_n"), col("est_n"))
         .orderBy(col("exact_n").desc, col("token").asc)
         .limit(20)
-    }),
+    },
+      Some("""WITH tok AS (SELECT unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9]+')) AS token
+                     FROM documents),
+              f AS (SELECT token,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(token, ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM tok),
+              m1 AS (SELECT token,
+                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
+              m2 AS (SELECT token, (h1 * h1) % 2147483647 AS h2 FROM m1),
+              sp AS (SELECT token,
+                       (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
+              bk AS (SELECT token, hv % 1024 AS b0,
+                       ((hv * 69069 + 362437) % 2147483647) % 1024 AS b1,
+                       ((hv * 1103515245 + 12345) % 2147483647) % 1024 AS b2
+                     FROM sp),
+              cms AS (SELECT r, bucket, count(*) AS counter FROM (
+                        SELECT 0 AS r, b0 AS bucket FROM bk
+                        UNION ALL SELECT 1, b1 FROM bk
+                        UNION ALL SELECT 2, b2 FROM bk)
+                      GROUP BY 1, 2),
+              dtok AS (SELECT DISTINCT token, b0, b1, b2 FROM bk),
+              probe AS (SELECT token, 0 AS r, b0 AS bucket FROM dtok
+                        UNION ALL SELECT token, 1, b1 FROM dtok
+                        UNION ALL SELECT token, 2, b2 FROM dtok),
+              est AS (SELECT token, CAST(min(counter) AS BIGINT) AS est_n
+                      FROM probe JOIN cms USING (r, bucket) GROUP BY 1),
+              exact AS (SELECT token, count(*) AS exact_n FROM tok GROUP BY 1)
+         SELECT token, exact_n, est_n FROM exact JOIN est USING (token)
+         ORDER BY exact_n DESC, token ASC LIMIT 20""")),
 
     // Mergeable approximate quantiles: invert the CDF of the fixed-width
     // histogram (the histogram is additive across shards — the same merge
     // contract as the KMV/CMS sketches — so p50/p90/p99 come from a
     // bin-count frame thousands of times smaller than the data). Exact
     // positional percentiles ride along for the error to be visible.
-    "sketch_histogram_quantiles" -> ((s, dir) => {
+    Query("sketch_histogram_quantiles", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
       val binW = 1000L // cents: $10 bins
       val v = Tables.events(s, dir)
@@ -419,7 +798,39 @@ object GraphOlapQueries {
       est.join(exact, Seq("event_type", "p"))
         .select("event_type", "p", "est_value", "exact_value")
         .orderBy("event_type", "p")
-    }),
+    },
+      Some("""WITH v AS (SELECT event_type,
+                      CAST(round(value * 100, 0) AS BIGINT) AS cents
+                    FROM events),
+              n AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
+              hist AS (SELECT event_type, cents // 1000 AS bin,
+                         count(*) AS cnt
+                       FROM v GROUP BY 1, 2),
+              cum AS (SELECT event_type, bin,
+                        CAST(sum(cnt) OVER (PARTITION BY event_type
+                               ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING
+                               AND CURRENT ROW) AS BIGINT) AS cum
+                      FROM hist),
+              ps AS (SELECT event_type, n, CAST(u.p AS BIGINT) AS p,
+                       (n * u.p + 99) // 100 AS k
+                     FROM n, unnest([50, 90, 99]) AS u(p)),
+              est AS (SELECT cum.event_type, p, min(bin) AS est_bin
+                      FROM cum JOIN ps USING (event_type)
+                      WHERE cum >= k GROUP BY 1, 2),
+              e2 AS (SELECT event_type, p,
+                       CAST(est_bin * 1000 + 500 AS DOUBLE)
+                         / CAST(100 AS DOUBLE) AS est_value
+                     FROM est),
+              r AS (SELECT event_type, cents,
+                      row_number() OVER (PARTITION BY event_type
+                                         ORDER BY cents) AS rn
+                    FROM v),
+              ex AS (SELECT r.event_type, p,
+                       CAST(cents AS DOUBLE) / CAST(100 AS DOUBLE)
+                         AS exact_value
+                     FROM r JOIN ps USING (event_type) WHERE rn = k)
+         SELECT event_type, p, est_value, exact_value
+         FROM e2 JOIN ex USING (event_type, p) ORDER BY 1, 2""")),
 
     // Record linkage: blocking + edit-distance verify (the fuzzy-match
     // pattern: a cheap equi-join block key bounds the candidate pairs,
@@ -429,7 +840,7 @@ object GraphOlapQueries {
     // the quadratic-per-block verify stays linear overall — the coarse
     // (lang, length) key alone left ~100k pairs at sf0.1 (90 s of DP);
     // adding the first token cuts that 30×. Aggregated per language.
-    "link_block_levenshtein" -> ((s, dir) => {
+    Query("link_block_levenshtein", (s, dir) => {
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("text"),
           expr("n_chars div 16").as("blk"),
@@ -449,7 +860,20 @@ object GraphOlapQueries {
              sum("lev").as("sum_lev"),
              sum(when(col("lev") <= 64, 1L).otherwise(0L)).as("n_close"))
         .orderBy("lang")
-    }),
+    },
+      Some("""WITH d AS (SELECT doc_id, lang, text, n_chars // 16 AS blk,
+                           split_part(text, ' ', 1) AS ft
+                    FROM documents),
+              p AS (SELECT a.lang,
+                      CAST(levenshtein(a.text, b.text) AS BIGINT) AS lev
+                    FROM d a JOIN d b
+                      ON a.lang = b.lang AND a.blk = b.blk AND a.ft = b.ft
+                     AND a.doc_id < b.doc_id)
+         SELECT lang, count(*) AS n_pairs, min(lev) AS min_lev,
+                CAST(sum(lev) AS BIGINT) AS sum_lev,
+                CAST(sum(CASE WHEN lev <= 64 THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_close
+         FROM p GROUP BY 1 ORDER BY 1""")),
 
     // Record linkage with the unrestricted Damerau–Levenshtein distance —
     // a custom codegen Catalyst expression (Spark ships only plain
@@ -457,7 +881,7 @@ object GraphOlapQueries {
     // link_block_levenshtein, and the integer distances cross-check
     // bitwise against DuckDB's built-in damerau_levenshtein on every
     // surviving pair.
-    "link_block_damerau" -> ((s, dir) => {
+    Query("link_block_damerau", (s, dir) => {
       val d = Tables.documents(s, dir)
         .select(col("doc_id"), col("lang"), col("text"),
           expr("n_chars div 16").as("blk"),
@@ -486,21 +910,68 @@ object GraphOlapQueries {
              sum("dl").as("sum_dl"),
              sum(when(col("dl") <= 64, 1L).otherwise(0L)).as("n_close"))
         .orderBy("lang")
-    }),
+    },
+      Some("""WITH d AS (SELECT doc_id, lang, text, n_chars // 16 AS blk,
+                           split_part(text, ' ', 1) AS ft
+                    FROM documents),
+              p AS (SELECT a.lang,
+                      CAST(damerau_levenshtein(a.text, b.text) AS BIGINT)
+                        AS dl
+                    FROM d a JOIN d b
+                      ON a.lang = b.lang AND a.blk = b.blk AND a.ft = b.ft
+                     AND a.doc_id < b.doc_id)
+         SELECT lang, count(*) AS n_pairs, min(dl) AS min_dl,
+                CAST(sum(dl) AS BIGINT) AS sum_dl,
+                CAST(sum(CASE WHEN dl <= 64 THEN 1 ELSE 0 END) AS BIGINT)
+                  AS n_close
+         FROM p GROUP BY 1 ORDER BY 1""")),
 
     // Mergeable sketches: per-group KMV plus the union estimated ONLY from
     // the per-group sketch rows — the roll-up property that makes sketches
     // distributed primitives (per-partition → global, daily → monthly,
     // no rescan).
-    "sketch_kmv_union" -> ((s, dir) =>
+    Query("sketch_kmv_union", (s, dir) =>
       graft.olap.Sketch.kmvGroupsWithUnion(Tables.lineitem(s, dir),
           col("l_returnflag"), col("l_partkey"), k = 128)
-        .orderBy("scope")),
+        .orderBy("scope"),
+      // per-group k-min sketches; the union row re-takes the k smallest of
+      // the UNION OF THE SKETCH ROWS only (mergeability), never the raw data
+      Some("""WITH f AS (SELECT DISTINCT l_returnflag AS scope,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(CAST(l_partkey AS VARCHAR), ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM lineitem),
+              m1 AS (SELECT scope,
+                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
+              m2 AS (SELECT scope, (h1 * h1) % 2147483647 AS h2 FROM m1),
+              h AS (SELECT DISTINCT scope,
+                      (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
+              r AS (SELECT scope, hv, row_number() OVER (PARTITION BY scope
+                      ORDER BY hv) AS rn FROM h),
+              sk AS (SELECT scope, hv FROM r WHERE rn <= 128),
+              per AS (SELECT scope, CAST(count(*) AS BIGINT) AS k_actual,
+                        CAST(max(hv) AS BIGINT) AS kth_hash,
+                        CASE WHEN count(*) < 128 THEN CAST(count(*) AS DOUBLE)
+                             ELSE CAST(count(*) - 1 AS DOUBLE) * 2147483647.0
+                                  / CAST(max(hv) AS DOUBLE)
+                        END AS est_distinct
+                      FROM sk GROUP BY 1),
+              u AS (SELECT DISTINCT hv FROM sk ORDER BY hv LIMIT 128),
+              uni AS (SELECT '__union' AS scope,
+                        CAST(count(*) AS BIGINT) AS k_actual,
+                        CAST(max(hv) AS BIGINT) AS kth_hash,
+                        CASE WHEN count(*) < 128 THEN CAST(count(*) AS DOUBLE)
+                             ELSE CAST(count(*) - 1 AS DOUBLE) * 2147483647.0
+                                  / CAST(max(hv) AS DOUBLE)
+                        END AS est_distinct
+                      FROM u)
+         SELECT * FROM per UNION ALL SELECT * FROM uni ORDER BY scope""")),
 
     // Bloom-filter join pruning (explicit runtime-filter): selective build
     // side → broadcast position set → probe-side candidacy before the real
     // join; the output counts the filter's exact false-positive tally.
-    "sketch_bloom_join" -> ((s, dir) => {
+    Query("sketch_bloom_join", (s, dir) => {
       import graft.olap.BloomJoin
       val bits = 65536
       val hashes = 3
@@ -521,14 +992,60 @@ object GraphOlapQueries {
         .crossJoin(probeKeys.agg(count(lit(1)).as("n_probe_keys")))
         .select(col("n_probe_keys"), col("n_true"), col("n_candidates"),
                 (col("n_candidates") - col("n_true")).as("n_false_pos"))
-    }),
+    },
+      // spread("key#salt") % bits on both sides; candidacy = all 3 positions
+      // set; n_false_pos is the filter's exact false-positive tally
+      Some("""WITH bk AS (SELECT DISTINCT o_orderkey AS k FROM orders
+                     WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
+                       AND CAST(o_orderdate AS DATE) < DATE '1996-02-01'),
+              pk AS (SELECT DISTINCT l_orderkey AS k FROM lineitem),
+              bs AS (SELECT k, CAST(unnest(generate_series(0, 2)) AS INT)
+                       AS salt FROM bk),
+              bf AS (SELECT
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(
+                          CAST(k AS VARCHAR) || '#' || CAST(salt AS VARCHAR),
+                          ''), ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                     FROM bs),
+              bm1 AS (SELECT (h0 * 1103515245 + 12345) % 2147483647 AS h1
+                      FROM bf),
+              bm2 AS (SELECT (h1 * h1) % 2147483647 AS h2 FROM bm1),
+              bpos AS (SELECT DISTINCT
+                         ((h2 * 69069 + 362437) % 2147483647) % 65536 AS pos
+                       FROM bm2),
+              ps AS (SELECT k, CAST(unnest(generate_series(0, 2)) AS INT)
+                       AS salt FROM pk),
+              pf AS (SELECT k,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(
+                          CAST(k AS VARCHAR) || '#' || CAST(salt AS VARCHAR),
+                          ''), ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                     FROM ps),
+              pm1 AS (SELECT k, (h0 * 1103515245 + 12345) % 2147483647 AS h1
+                      FROM pf),
+              pm2 AS (SELECT k, (h1 * h1) % 2147483647 AS h2 FROM pm1),
+              ppos AS (SELECT k,
+                         ((h2 * 69069 + 362437) % 2147483647) % 65536 AS pos
+                       FROM pm2),
+              hits AS (SELECT k, count(*) AS n_hit
+                       FROM ppos JOIN bpos USING (pos) GROUP BY 1),
+              cand AS (SELECT k FROM hits WHERE n_hit = 3)
+         SELECT (SELECT count(*) FROM pk) AS n_probe_keys,
+                (SELECT count(*) FROM pk
+                 WHERE k IN (SELECT k FROM bk)) AS n_true,
+                (SELECT count(*) FROM cand) AS n_candidates,
+                (SELECT count(*) FROM cand)
+                  - (SELECT count(*) FROM pk
+                     WHERE k IN (SELECT k FROM bk)) AS n_false_pos""")),
 
     // Z-order layout key (the OPTIMIZE ZORDER primitive): Morton-
     // interleave (user, day) so min/max row-group stats prune scans on
     // EITHER dimension; exact bit arithmetic, engine-portable. The query
     // emits the curve positions for the distinct (user, day) grid — the
     // exact sort key an ingest-time layout pass would cluster by.
-    "layout_zorder_key" -> ((s, dir) => {
+    Query("layout_zorder_key", (s, dir) => {
       val day = datediff(to_date(col("ts")),
         lit("1970-01-01").cast("date")).cast("long")
       Tables.events(s, dir)
@@ -538,13 +1055,22 @@ object GraphOlapQueries {
           graft.olap.ZOrder.zkey(col("user_id"), col("day"), bits = 16))
         .orderBy("zkey", "user_id", "day")
         .limit(200)
-    }),
+    },
+      Some("""WITH d AS (SELECT DISTINCT user_id,
+                      CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)
+                        AS day
+                    FROM events)
+         SELECT user_id, day,
+                CAST(list_sum(list_transform(generate_series(0, 15), i ->
+                  (((user_id >> i) & 1) << (2 * i))
+                  + (((day >> i) & 1) << (2 * i + 1)))) AS BIGINT) AS zkey
+         FROM d ORDER BY zkey, user_id, day LIMIT 200""")),
 
     // Sketch-only set similarity: Jaccard estimated from two KMV sketches
     // (merged k-min ∩ both sketches) — compares 100 TB key sets by
     // touching 2·k sketch rows; exact figures ride along to show the
     // estimator's error on this data.
-    "sketch_kmv_jaccard" -> ((s, dir) => {
+    Query("sketch_kmv_jaccard", (s, dir) => {
       val li = Tables.lineitem(s, dir)
       val a = li.filter(col("l_returnflag") === "R")
       val b = li.filter(col("l_returnflag") === "A")
@@ -558,7 +1084,43 @@ object GraphOlapQueries {
           .agg(count(lit(1)).as("n_union")))
         .withColumn("jaccard_exact",
           col("n_inter").cast("double") / col("n_union").cast("double"))
-    }),
+    },
+      Some("""WITH f0 AS (SELECT DISTINCT l_returnflag AS scope, l_partkey
+                     FROM lineitem WHERE l_returnflag IN ('R', 'A')),
+              f AS (SELECT scope, l_partkey,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(CAST(l_partkey AS VARCHAR), ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM f0),
+              m1 AS (SELECT scope,
+                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
+              m2 AS (SELECT scope, (h1 * h1) % 2147483647 AS h2 FROM m1),
+              h AS (SELECT DISTINCT scope,
+                      (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
+              sa AS (SELECT hv FROM h WHERE scope = 'R'
+                     ORDER BY hv LIMIT 128),
+              sb AS (SELECT hv FROM h WHERE scope = 'A'
+                     ORDER BY hv LIMIT 128),
+              m AS (SELECT DISTINCT hv FROM
+                      (SELECT hv FROM sa UNION ALL SELECT hv FROM sb)
+                    ORDER BY hv LIMIT 128),
+              nb AS (SELECT count(*) AS n_both FROM m
+                     WHERE hv IN (SELECT hv FROM sa)
+                       AND hv IN (SELECT hv FROM sb)),
+              ni AS (SELECT count(DISTINCT a.l_partkey) AS n_inter
+                     FROM f0 a JOIN f0 b ON a.l_partkey = b.l_partkey
+                     WHERE a.scope = 'R' AND b.scope = 'A'),
+              nu AS (SELECT count(DISTINCT l_partkey) AS n_union FROM f0)
+         SELECT (SELECT count(*) FROM m) AS k_merged,
+                (SELECT n_both FROM nb) AS n_both,
+                CAST((SELECT n_both FROM nb) AS DOUBLE)
+                  / CAST((SELECT count(*) FROM m) AS DOUBLE) AS jaccard_est,
+                (SELECT n_inter FROM ni) AS n_inter,
+                (SELECT n_union FROM nu) AS n_union,
+                CAST((SELECT n_inter FROM ni) AS DOUBLE)
+                  / CAST((SELECT n_union FROM nu) AS DOUBLE)
+                  AS jaccard_exact""")),
 
     // Local clustering coefficient distribution: per-node triangle counts
     // from the degree-ordered orientation (each triangle materialized once,
@@ -567,7 +1129,7 @@ object GraphOlapQueries {
     // division; sum_cc_micro is the per-node floor(2t·10⁶/(d(d-1))) summed
     // as BIGINT, so the distribution's mass is order-independent and
     // bitwise-portable. Nodes with d < 2 (cc undefined) land in bucket -1.
-    "graph_clustering_coeff" -> ((s, dir) => {
+    Query("graph_clustering_coeff", (s, dir) => {
       // pinned shared frames — the materialized triangle closure serves
       // every triangle consumer (see GraphFrames.coPurchaseTriangles)
       val G = graft.olap.GraphFrames
@@ -584,7 +1146,43 @@ object GraphOlapQueries {
         .agg(count(lit(1)).as("n_nodes"), sum(col("t")).as("sum_tri"),
              sum(col("ccm")).as("sum_cc_micro"))
         .orderBy("cc_decile")
-    }),
+    },
+      // per-node triangle counts from the ordered triple join (u < v < w,
+      // each triangle exactly once, credited to all three corners) — a
+      // different algorithm from the engine's oriented-intersect explode
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              deg AS (SELECT n, count(*) AS d
+                      FROM (SELECT u AS n FROM e
+                            UNION ALL SELECT v AS n FROM e)
+                      GROUP BY 1),
+              t3 AS (SELECT e1.u AS u, e1.v AS v, e2.v AS w
+                     FROM e e1
+                     JOIN e e2 ON e2.u = e1.v
+                     JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
+              corners AS (SELECT u AS n FROM t3
+                          UNION ALL SELECT v FROM t3
+                          UNION ALL SELECT w FROM t3),
+              tc AS (SELECT n, count(*) AS t FROM corners GROUP BY 1),
+              nd AS (SELECT deg.n, deg.d, coalesce(tc.t, 0) AS t
+                     FROM deg LEFT JOIN tc USING (n)),
+              b AS (SELECT CASE WHEN d < 2 THEN -1
+                                ELSE least((20 * t) // (d * (d - 1)), 9)
+                           END AS cc_decile,
+                           CASE WHEN d < 2 THEN 0
+                                ELSE (2000000 * t) // (d * (d - 1))
+                           END AS ccm, t
+                    FROM nd)
+         SELECT CAST(cc_decile AS BIGINT) AS cc_decile,
+                count(*) AS n_nodes,
+                CAST(sum(t) AS BIGINT) AS sum_tri,
+                CAST(sum(ccm) AS BIGINT) AS sum_cc_micro
+         FROM b GROUP BY 1 ORDER BY 1""")),
 
     // Common-neighbor link prediction: for every non-adjacent node pair,
     // count shared neighbors and keep the top 20 candidates. Wedges are
@@ -595,7 +1193,7 @@ object GraphOlapQueries {
     // add near-zero signal to common-neighbor scores). Existing edges are
     // removed by an anti-join on the canonical form; the limit boundary is
     // made deterministic by the (cn desc, x, y) total order.
-    "graph_common_neighbors" -> ((s, dir) => {
+    Query("graph_common_neighbors", (s, dir) => {
       val cap = 32L
       val e = graft.olap.GraphFrames.coPurchaseEdges(s, dir)
       // pinned symmetric co-purchase frame (§2.4; r11)
@@ -615,7 +1213,29 @@ object GraphOlapQueries {
         .join(e, col("x") === col("u") && col("y") === col("v"), "leftanti")
         .orderBy(col("cn").desc, col("x"), col("y"))
         .limit(20)
-    }),
+    },
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              sym AS (SELECT u AS c, v AS x FROM e
+                      UNION ALL SELECT v, u FROM e),
+              okc AS (SELECT c FROM (SELECT c, count(*) AS dc FROM sym
+                                     GROUP BY 1)
+                      WHERE dc <= 32),
+              w AS (SELECT s1.x AS x, s2.x AS y
+                    FROM sym s1
+                    JOIN sym s2 ON s1.c = s2.c AND s1.x < s2.x
+                    WHERE s1.c IN (SELECT c FROM okc)),
+              cn AS (SELECT x, y, count(*) AS cn FROM w GROUP BY 1, 2),
+              nz AS (SELECT cn.x, cn.y, cn.cn FROM cn
+                     WHERE NOT EXISTS (SELECT 1 FROM e
+                                       WHERE e.u = cn.x AND e.v = cn.y))
+         SELECT x, y, cn FROM nz
+         ORDER BY cn DESC, x, y LIMIT 20""")),
 
     // Jaccard link prediction: common_neighbors' union-normalized sibling —
     // J(x,y) = |N(x)∩N(y)| / |N(x)∪N(y)| = cn/(du+dv−cn), the score that
@@ -624,7 +1244,7 @@ object GraphOlapQueries {
     // counts common neighbors of capped degree, du/dv are FULL degrees,
     // so J is the capped lower-bound estimate), exact integers until one
     // IEEE division, deterministic (jaccard desc, x, y) top-20 boundary.
-    "graph_jaccard_links" -> ((s, dir) => {
+    Query("graph_jaccard_links", (s, dir) => {
       val cap = 64L
       val e = graft.olap.GraphFrames.coPurchaseEdges(s, dir)
       // pinned symmetric co-purchase frame (§2.4; r11)
@@ -649,7 +1269,32 @@ object GraphOlapQueries {
             .as("jaccard"))
         .orderBy(col("jaccard").desc, col("x"), col("y"))
         .limit(20)
-    }),
+    },
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              sym AS (SELECT u AS c, v AS x FROM e
+                      UNION ALL SELECT v, u FROM e),
+              deg AS (SELECT c, count(*) AS dc FROM sym GROUP BY 1),
+              w AS (SELECT s1.x AS x, s2.x AS y
+                    FROM sym s1
+                    JOIN sym s2 ON s1.c = s2.c AND s1.x < s2.x
+                    WHERE s1.c IN (SELECT c FROM deg WHERE dc <= 64)),
+              cn AS (SELECT x, y, count(*) AS cn FROM w GROUP BY 1, 2),
+              nz AS (SELECT cn.x, cn.y, cn.cn FROM cn
+                     WHERE NOT EXISTS (SELECT 1 FROM e
+                                       WHERE e.u = cn.x AND e.v = cn.y))
+         SELECT nz.x, nz.y, nz.cn, dx.dc AS du, dy.dc AS dv,
+                CAST(nz.cn AS DOUBLE)
+                  / CAST(dx.dc + dy.dc - nz.cn AS DOUBLE) AS jaccard
+         FROM nz
+         JOIN deg dx ON dx.c = nz.x
+         JOIN deg dy ON dy.c = nz.y
+         ORDER BY jaccard DESC, x, y LIMIT 20""")),
 
     // Newman modularity of the label-propagation partition — the quality
     // score that closes the community-detection loop. Q = ΣL_c/m −
@@ -659,7 +1304,7 @@ object GraphOlapQueries {
     // persisted for its two consumers (intra-edge count + degree mass);
     // magnitudes stay < 2⁵³ so the double conversion is exact on both
     // engines.
-    "graph_modularity" -> ((s, dir) => {
+    Query("graph_modularity", (s, dir) => {
       val G = graft.olap.GraphFrames
       val pairs = G.partSuppPairs(s, dir)
       // PINNED shared 2-round LPA labels (also graph_label_prop's frame)
@@ -687,7 +1332,51 @@ object GraphOlapQueries {
           (lit(4L) * col("m_edges") * col("m_edges")).as("q_den"))
         .withColumn("modularity",
           col("q_num").cast("double") / col("q_den").cast("double"))
-    }),
+    },
+      // the same 2-round LPA unroll as graph_label_prop, extended with the
+      // exact rational modularity of the resulting partition
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
+              c1 AS (SELECT e.dst AS node, l.label, count(*) AS c
+                     FROM e JOIN l0 l ON l.node = e.src GROUP BY 1, 2),
+              l1 AS (SELECT node, label FROM
+                       (SELECT node, label,
+                               row_number() OVER (PARTITION BY node
+                                 ORDER BY c DESC, label ASC) AS rn
+                        FROM c1) WHERE rn = 1),
+              c2 AS (SELECT e.dst AS node, l.label, count(*) AS c
+                     FROM e JOIN l1 l ON l.node = e.src GROUP BY 1, 2),
+              l2 AS (SELECT node, label FROM
+                       (SELECT node, label,
+                               row_number() OVER (PARTITION BY node
+                                 ORDER BY c DESC, label ASC) AS rn
+                        FROM c2) WHERE rn = 1),
+              mm AS (SELECT CAST(count(*) AS BIGINT) AS m_edges FROM pairs),
+              intra AS (SELECT CAST(sum(CASE WHEN la.label = lb.label
+                                             THEN 1 ELSE 0 END) AS BIGINT)
+                               AS intra_edges
+                        FROM pairs p
+                        JOIN l2 la ON la.node = p.l_partkey * 2
+                        JOIN l2 lb ON lb.node = p.l_suppkey * 2 + 1),
+              deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1),
+              dc AS (SELECT l.label, CAST(sum(deg.d) AS BIGINT) AS dsum
+                     FROM l2 l JOIN deg ON deg.node = l.node GROUP BY 1),
+              ds AS (SELECT count(*) AS n_communities,
+                            CAST(sum(dsum * dsum) AS BIGINT) AS sum_dc2
+                     FROM dc)
+         SELECT ds.n_communities, mm.m_edges, intra.intra_edges,
+                CAST(4 * mm.m_edges * intra.intra_edges - ds.sum_dc2
+                     AS BIGINT) AS q_num,
+                CAST(4 * mm.m_edges * mm.m_edges AS BIGINT) AS q_den,
+                CAST(CAST(4 * mm.m_edges * intra.intra_edges - ds.sum_dc2
+                          AS BIGINT) AS DOUBLE)
+                  / CAST(CAST(4 * mm.m_edges * mm.m_edges AS BIGINT)
+                         AS DOUBLE) AS modularity
+         FROM mm, intra, ds""")),
 
     // Sequential pattern mining: the top event-type trigrams users emit
     // (behavioral path analysis). Per-user strict (ts, event_id) order,
@@ -695,7 +1384,7 @@ object GraphOlapQueries {
     // trigram count with a deterministic top-10 boundary. The shape
     // behind funnel discovery — where sessionize_funnel checks a GIVEN
     // path, this MINES the paths.
-    "mine_event_trigrams" -> ((s, dir) => {
+    Query("mine_event_trigrams", (s, dir) => {
       // leads 1–2 come off the PINNED shared event-sequence frame — the
       // one fact-scale window pass the whole transition family shares
       // (§2.4; r11)
@@ -706,7 +1395,17 @@ object GraphOlapQueries {
         .agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("e1"), col("e2"), col("e3"))
         .limit(10)
-    }),
+    },
+      Some("""WITH s AS (SELECT event_type AS e1,
+                           lead(event_type, 1) OVER w AS e2,
+                           lead(event_type, 2) OVER w AS e3
+                    FROM events
+                    WINDOW w AS (PARTITION BY user_id
+                                 ORDER BY ts, event_id))
+         SELECT e1, e2, e3, count(*) AS n FROM s
+         WHERE e3 IS NOT NULL
+         GROUP BY 1, 2, 3
+         ORDER BY n DESC, e1, e2, e3 LIMIT 10""")),
 
     // Audience overlap matrix: distinct users shared by every event-type
     // pair, with exact Jaccard. Membership is reduced to distinct
@@ -714,7 +1413,7 @@ object GraphOlapQueries {
     // keyed self-join on user_id fans out C(types_per_user, 2) ≤ C(5,2)
     // rows per user — bounded by the type-universe, never by event
     // volume. The segmentation-overlap report behind audience targeting.
-    "olap_audience_overlap" -> ((s, dir) => {
+    Query("olap_audience_overlap", (s, dir) => {
       val m = Tables.events(s, dir)
         .select(col("user_id"), col("event_type")).distinct().tracked
       val sizes = m.groupBy("event_type").agg(count(lit(1)).as("sz"))
@@ -733,7 +1432,21 @@ object GraphOlapQueries {
             (col("sz_a") + col("sz_b") - col("n_shared")).cast("double"))
             .as("jaccard"))
         .orderBy("type_a", "type_b")
-    }),
+    },
+      Some("""WITH m AS (SELECT DISTINCT user_id, event_type FROM events),
+              sz AS (SELECT event_type, count(*) AS sz FROM m GROUP BY 1),
+              ov AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
+                            count(*) AS n_shared
+                     FROM m a JOIN m b ON a.user_id = b.user_id
+                     WHERE a.event_type <= b.event_type
+                     GROUP BY 1, 2)
+         SELECT ov.type_a, ov.type_b, ov.n_shared,
+                CAST(ov.n_shared AS DOUBLE)
+                  / CAST(sa.sz + sb.sz - ov.n_shared AS DOUBLE) AS jaccard
+         FROM ov
+         JOIN sz sa ON sa.event_type = ov.type_a
+         JOIN sz sb ON sb.event_type = ov.type_b
+         ORDER BY type_a, type_b""")),
 
     // Sketch-only set intersection: |A∩B| ≈ |A| + |B| − |A∪B| by
     // inclusion-exclusion over three HLL estimates — the union sketch is
@@ -741,7 +1454,7 @@ object GraphOlapQueries {
     // TypedImperativeAggregate's mergeAgg), so two 100 TB key sets are
     // intersected by touching 2·512 register bytes. Exact figures ride
     // along to show the estimator's error here.
-    "sketch_hll_intersection" -> ((s, dir) => {
+    Query("sketch_hll_intersection", (s, dir) => {
       import graft.olap.Hll
       val base = Tables.events(s, dir)
         .filter(col("event_type").isin("click", "view"))
@@ -770,13 +1483,79 @@ object GraphOlapQueries {
         .select(col("est_a"), col("est_b"), col("est_union"),
           (col("est_a") + col("est_b") - col("est_union")).as("est_inter"),
           col("n_a"), col("n_b"), col("n_inter_exact"))
-    }),
+    },
+      // the same portable register emulation as sketch_hll_distinct,
+      // restricted to the two sets, plus the register-wise union merge
+      Some("""WITH f0 AS (SELECT event_type, user_id FROM events
+                     WHERE event_type IN ('click', 'view')),
+              f AS (SELECT event_type, user_id,
+                      list_reduce(list_prepend(CAST(0 AS BIGINT),
+                        list_transform(string_split(CAST(user_id AS VARCHAR), ''),
+                          ch -> CAST(ascii(ch) AS BIGINT))),
+                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
+                    FROM f0),
+              m1 AS (SELECT event_type, user_id,
+                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
+              m2 AS (SELECT event_type, user_id, (h1 * h1) % 2147483647 AS h2
+                     FROM m1),
+              m3 AS (SELECT event_type, user_id,
+                       (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
+              r AS (SELECT event_type, hv % 512 AS bucket,
+                      CASE WHEN hv // 512 = 0 THEN 23
+                           ELSE 23 - length(bin(hv // 512)) END AS rho
+                    FROM m3),
+              regs AS (SELECT event_type, bucket, max(rho) AS r
+                       FROM r GROUP BY 1, 2),
+              sq AS (SELECT event_type,
+                       CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
+                         + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s
+                     FROM regs GROUP BY 1),
+              rall AS (SELECT bucket, max(rho) AS r FROM r GROUP BY 1),
+              squ AS (SELECT
+                        CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
+                          + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s
+                      FROM rall),
+              e AS (SELECT event_type,
+                      (((CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE)
+                          + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
+                        * CAST(512 AS DOUBLE)) * CAST(512 AS DOUBLE))
+                        * CAST(4294967296 AS DOUBLE) / CAST(s AS DOUBLE)
+                        AS est
+                    FROM sq),
+              eu AS (SELECT
+                       (((CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE)
+                           + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
+                         * CAST(512 AS DOUBLE)) * CAST(512 AS DOUBLE))
+                         * CAST(4294967296 AS DOUBLE) / CAST(s AS DOUBLE)
+                         AS est_union
+                     FROM squ),
+              es AS (SELECT
+                       max(CASE WHEN event_type = 'click' THEN est END)
+                         AS est_a,
+                       max(CASE WHEN event_type = 'view' THEN est END)
+                         AS est_b
+                     FROM e),
+              ex AS (SELECT
+                       count(DISTINCT CASE WHEN event_type = 'click'
+                                           THEN user_id END) AS n_a,
+                       count(DISTINCT CASE WHEN event_type = 'view'
+                                           THEN user_id END) AS n_b
+                     FROM f0),
+              xi AS (SELECT count(*) AS n_inter_exact FROM
+                       (SELECT DISTINCT a.user_id
+                        FROM f0 a JOIN f0 b ON a.user_id = b.user_id
+                        WHERE a.event_type = 'click'
+                          AND b.event_type = 'view'))
+         SELECT es.est_a, es.est_b, eu.est_union,
+                es.est_a + es.est_b - eu.est_union AS est_inter,
+                ex.n_a, ex.n_b, xi.n_inter_exact
+         FROM es, eu, ex, xi""")),
 
     // Period-over-period growth (the WoW report): exact weekly cent sums
     // per series, previous week via one keyed lag, growth as one
     // division of exact integers. NULL growth on each series' first week
     // and on zero-revenue previous weeks (division guarded, not Inf).
-    "olap_period_over_period" -> ((s, dir) => {
+    Query("olap_period_over_period", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("event_type").orderBy("week")
       Tables.events(s, dir)
@@ -789,7 +1568,22 @@ object GraphOlapQueries {
             (col("cents") - col("prev_cents")).cast("double")
               / col("prev_cents").cast("double")))
         .orderBy("event_type", "week")
-    }),
+    },
+      Some("""WITH w AS (SELECT event_type,
+                           CAST(date_trunc('week', ts) AS DATE) AS week,
+                           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
+                                AS BIGINT) AS cents
+                    FROM events GROUP BY 1, 2),
+              l AS (SELECT event_type, week, cents,
+                           lag(cents, 1) OVER (PARTITION BY event_type
+                                               ORDER BY week) AS prev_cents
+                    FROM w)
+         SELECT event_type, week, cents, prev_cents,
+                CASE WHEN prev_cents IS NOT NULL AND prev_cents <> 0
+                     THEN CAST(cents - prev_cents AS DOUBLE)
+                            / CAST(prev_cents AS DOUBLE)
+                END AS growth
+         FROM l ORDER BY event_type, week""")),
 
     // Distinct users at three time grains in ONE grouping-sets pass:
     // count_distinct under GROUPING SETS (day), (week), (month) — the
@@ -797,7 +1591,7 @@ object GraphOlapQueries {
     // aggregate dedups per grain, one shuffle total. Grain keys are
     // coalesced into one label column (both engines order NULLs
     // differently — the proven grouping-sets discipline).
-    "olap_distinct_rollup" -> ((s, dir) => {
+    Query("olap_distinct_rollup", (s, dir) => {
       Tables.events(s, dir)
         .select(col("user_id"),
           expr("unix_micros(ts) DIV 86400000000").as("day"),
@@ -814,7 +1608,21 @@ object GraphOlapQueries {
                FROM graft_ev_grains
                GROUP BY GROUPING SETS ((day), (week), (month))
                ORDER BY grain, bucket""")
-    }),
+    },
+      Some("""WITH g AS (SELECT user_id,
+                           epoch_us(ts) // 86400000000 AS day,
+                           CAST(date_trunc('week', ts) AS DATE) AS week,
+                           CAST(date_trunc('month', ts) AS DATE) AS month
+                    FROM events)
+         SELECT CASE WHEN day IS NOT NULL THEN '1_day'
+                     WHEN week IS NOT NULL THEN '2_week'
+                     ELSE '3_month' END AS grain,
+                coalesce(CAST(day AS VARCHAR), CAST(week AS VARCHAR),
+                         CAST(month AS VARCHAR)) AS bucket,
+                count(DISTINCT user_id) AS n_users,
+                count(*) AS n_events
+         FROM g GROUP BY GROUPING SETS ((day), (week), (month))
+         ORDER BY grain, bucket""")),
 
     // First-order Markov transition matrix over user event sequences:
     // lag-1 pairs from ONE keyed window pass, transition counts + exact
@@ -822,7 +1630,7 @@ object GraphOlapQueries {
     // counts) — the Sankey/flow view of behavior that mine_event_trigrams
     // samples at depth 3. 5×5 output here; the same plan is the n²-cell
     // estimation at any state-space size.
-    "mine_transition_matrix" -> ((s, dir) => {
+    Query("mine_transition_matrix", (s, dir) => {
       // transition counts come off the PINNED shared bigram frame — the
       // identical window + groupBy this query used to re-run (guide
       // §2.4; r11 — one fact-scale window pass for the whole family)
@@ -834,7 +1642,19 @@ object GraphOlapQueries {
           (col("n").cast("double") / col("row_n").cast("double"))
             .as("prob"))
         .orderBy("e_from", "e_to")
-    }),
+    },
+      Some("""WITH s AS (SELECT event_type AS e_from,
+                           lead(event_type, 1) OVER (PARTITION BY user_id
+                             ORDER BY ts, event_id) AS e_to
+                    FROM events),
+              p AS (SELECT e_from, e_to, count(*) AS n FROM s
+                    WHERE e_to IS NOT NULL GROUP BY 1, 2),
+              t AS (SELECT e_from, CAST(sum(n) AS BIGINT) AS row_n
+                    FROM p GROUP BY 1)
+         SELECT p.e_from, p.e_to, p.n,
+                CAST(p.n AS DOUBLE) / CAST(t.row_n AS DOUBLE) AS prob
+         FROM p JOIN t ON t.e_from = p.e_from
+         ORDER BY p.e_from, p.e_to""")),
 
     // HITS hubs & authorities on the DIRECTED part→supplier bipartite
     // graph: alternating matvecs a ← Aᵀh, h ← Aa, each rescaled to the
@@ -845,7 +1665,7 @@ object GraphOlapQueries {
     // role. Where PageRank ranks by random-walk mass and Katz by
     // attenuated paths, HITS separates pointing-well (hubs = parts)
     // from pointed-at-well (authorities = suppliers).
-    "graph_hits" -> ((s, dir) => {
+    Query("graph_hits", (s, dir) => {
       val e = graft.olap.GraphFrames.partSuppPairs(s, dir)
         .select(col("l_partkey").as("p"), col("l_suppkey").as("sk"))
       def norm(x: DataFrame, keyCol: String, vCol: String): DataFrame = {
@@ -886,7 +1706,34 @@ object GraphOlapQueries {
                    col("av").as("score"))
             .orderBy(col("score").desc, col("node")).limit(10))
         .orderBy(col("role"), col("score").desc, col("node"))
-    }),
+    },
+      Some("""WITH e AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS sk
+                    FROM lineitem),
+              h0 AS (SELECT DISTINCT p, CAST(1 AS BIGINT) AS hv FROM e),
+              a1r AS (SELECT e.sk, CAST(sum(h0.hv) AS BIGINT) AS av
+                      FROM e JOIN h0 ON h0.p = e.p GROUP BY 1),
+              a1m AS (SELECT max(av) AS mx FROM a1r),
+              a1 AS (SELECT sk, (av * 4096) // mx AS av FROM a1r, a1m),
+              h1r AS (SELECT e.p, CAST(sum(a1.av) AS BIGINT) AS hv
+                      FROM e JOIN a1 ON a1.sk = e.sk GROUP BY 1),
+              h1m AS (SELECT max(hv) AS mx FROM h1r),
+              h1 AS (SELECT p, (hv * 4096) // mx AS hv FROM h1r, h1m),
+              a2r AS (SELECT e.sk, CAST(sum(h1.hv) AS BIGINT) AS av
+                      FROM e JOIN h1 ON h1.p = e.p GROUP BY 1),
+              a2m AS (SELECT max(av) AS mx FROM a2r),
+              a2 AS (SELECT sk, (av * 4096) // mx AS av FROM a2r, a2m),
+              h2r AS (SELECT e.p, CAST(sum(a2.av) AS BIGINT) AS hv
+                      FROM e JOIN a2 ON a2.sk = e.sk GROUP BY 1),
+              h2m AS (SELECT max(hv) AS mx FROM h2r),
+              h2 AS (SELECT p, (hv * 4096) // mx AS hv FROM h2r, h2m),
+              top AS (SELECT 'hub' AS role, p AS node,
+                             CAST(hv AS BIGINT) AS score
+                      FROM h2 ORDER BY score DESC, node LIMIT 10),
+              topa AS (SELECT 'authority' AS role, sk AS node,
+                              CAST(av AS BIGINT) AS score
+                       FROM a2 ORDER BY score DESC, node LIMIT 10)
+         SELECT * FROM (SELECT * FROM top UNION ALL SELECT * FROM topa)
+         ORDER BY role, score DESC, node""")),
 
     // Truncated Katz centrality: 3 attenuated path-count rounds,
     // v' = 1 + (A·v) DIV 4, all exact integers (the DIV-4 attenuation is
@@ -895,7 +1742,7 @@ object GraphOlapQueries {
     // counting attenuated PATHS, not random-walk mass — no out-degree
     // normalization, no teleport. Edge frame persisted across rounds;
     // deterministic (katz desc, node) top-20 boundary.
-    "graph_katz_centrality" -> ((s, dir) => {
+    Query("graph_katz_centrality", (s, dir) => {
       // pinned pre-partitioned symmetric edges; the matvec join is
       // flipped to key on the cached partitioning column (src) — on a
       // SYMMETRIC edge set Σ katz over in-neighbors ≡ Σ over
@@ -917,7 +1764,28 @@ object GraphOlapQueries {
       v.select(col("node"), col("katz"))
         .orderBy(col("katz").desc, col("node"))
         .limit(20)
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              v0 AS (SELECT DISTINCT src AS node, CAST(1 AS BIGINT) AS katz
+                     FROM e),
+              v1 AS (SELECT e.src AS node,
+                            CAST(1 + CAST(sum(v0.katz) AS BIGINT) // 4
+                                 AS BIGINT) AS katz
+                     FROM e JOIN v0 ON v0.node = e.dst GROUP BY e.src),
+              v2 AS (SELECT e.src AS node,
+                            CAST(1 + CAST(sum(v1.katz) AS BIGINT) // 4
+                                 AS BIGINT) AS katz
+                     FROM e JOIN v1 ON v1.node = e.dst GROUP BY e.src),
+              v3 AS (SELECT e.src AS node,
+                            CAST(1 + CAST(sum(v2.katz) AS BIGINT) // 4
+                                 AS BIGINT) AS katz
+                     FROM e JOIN v2 ON v2.node = e.dst GROUP BY e.src)
+         SELECT node, katz FROM v3
+         ORDER BY katz DESC, node LIMIT 20""")),
 
     // Association rules over the co-purchase pairs: confidence both
     // directions, lift and leverage — the rule-quality metrics on top of
@@ -926,7 +1794,7 @@ object GraphOlapQueries {
     // overflow BIGINT at warehouse scale) with ONE IEEE division per
     // metric; support floor ≥3 keeps the rule set honest, top-25 by
     // (lift, part_a, part_b) is a deterministic total order.
-    "mine_association_rules" -> ((s, dir) => {
+    Query("mine_association_rules", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       // pinned shared (order, part) items — basket count + item counts
       // read the one cached frame; pair supports come off the PINNED
@@ -962,7 +1830,35 @@ object GraphOlapQueries {
             .as("leverage"))
         .orderBy(col("lift").desc, col("part_a"), col("part_b"))
         .limit(25)
-    }),
+    },
+      Some("""WITH i AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+                    FROM lineitem),
+              nb AS (SELECT count(DISTINCT ok) AS n_baskets FROM i),
+              ic AS (SELECT pk, count(*) AS n_item FROM i GROUP BY 1),
+              lbw AS (SELECT ok FROM i GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT i.ok, i.pk FROM i JOIN lbw USING (ok)),
+              p AS (SELECT a.pk AS part_a, b.pk AS part_b,
+                           count(*) AS n_pair
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.pk < b.pk
+                    GROUP BY 1, 2 HAVING count(*) >= 3)
+         SELECT p.part_a, p.part_b, p.n_pair,
+                ia.n_item AS n_a, ib.n_item AS n_b, nb.n_baskets,
+                CAST(p.n_pair AS DOUBLE) / CAST(ia.n_item AS DOUBLE)
+                  AS conf_a_b,
+                CAST(p.n_pair AS DOUBLE) / CAST(ib.n_item AS DOUBLE)
+                  AS conf_b_a,
+                CAST(CAST(CAST(p.n_pair AS HUGEINT) * nb.n_baskets AS BIGINT) AS DOUBLE)
+                  / CAST(CAST(CAST(ia.n_item AS HUGEINT) * ib.n_item AS BIGINT) AS DOUBLE)
+                  AS lift,
+                CAST(CAST(CAST(p.n_pair AS HUGEINT) * nb.n_baskets
+                     - CAST(ia.n_item AS HUGEINT) * ib.n_item AS BIGINT) AS DOUBLE)
+                  / CAST(CAST(CAST(nb.n_baskets AS HUGEINT) * nb.n_baskets AS BIGINT) AS DOUBLE) AS leverage
+         FROM p
+         JOIN ic ia ON ia.pk = p.part_a
+         JOIN ic ib ON ib.pk = p.part_b
+         CROSS JOIN nb
+         ORDER BY lift DESC, part_a, part_b LIMIT 25""")),
 
     // Rich-club coefficient φ(k) = E_{>k} / (N_{>k}(N_{>k}−1)) on the
     // directed edge set (so E counts each undirected edge twice — the 2E
@@ -972,7 +1868,7 @@ object GraphOlapQueries {
     // threshold ladder (one aggregate row), unpivoted via stack — the
     // same two keyed degree joins graph_assortativity makes, zero extra
     // shuffles, thresholds bounded by the ladder not the data.
-    "graph_rich_club" -> ((s, dir) => {
+    Query("graph_rich_club", (s, dir) => {
       // pinned symmetric doubled-id frame (§2.4; r11)
       val e = graft.olap.GraphFrames.partSuppSym(s, dir)
         .select(col("src").as("u"), col("dst").as("v"))
@@ -1004,7 +1900,50 @@ object GraphOlapQueries {
                  * (col("n_rich") - 1L).cast("decimal(38,0)"))
                   .cast("double")))
         .orderBy("k")
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              deg AS (SELECT u AS n, count(*) AS d FROM e GROUP BY 1),
+              em AS (SELECT least(du.d, dv.d) AS m
+                     FROM e JOIN deg du ON du.n = e.u
+                            JOIN deg dv ON dv.n = e.v),
+              ec AS (SELECT
+                       CAST(sum(CASE WHEN m > 2 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS e0,
+                       CAST(sum(CASE WHEN m > 4 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS e1,
+                       CAST(sum(CASE WHEN m > 8 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS e2,
+                       CAST(sum(CASE WHEN m > 16 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS e3
+                     FROM em),
+              nc AS (SELECT
+                       CAST(sum(CASE WHEN d > 2 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS n0,
+                       CAST(sum(CASE WHEN d > 4 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS n1,
+                       CAST(sum(CASE WHEN d > 8 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS n2,
+                       CAST(sum(CASE WHEN d > 16 THEN 1 ELSE 0 END)
+                            AS BIGINT) AS n3
+                     FROM deg),
+              r AS (SELECT CAST(2 AS BIGINT) AS k, n0 AS n_rich,
+                           e0 AS e_rich FROM ec CROSS JOIN nc
+                    UNION ALL
+                    SELECT 4, n1, e1 FROM ec CROSS JOIN nc
+                    UNION ALL
+                    SELECT 8, n2, e2 FROM ec CROSS JOIN nc
+                    UNION ALL
+                    SELECT 16, n3, e3 FROM ec CROSS JOIN nc)
+         SELECT k, n_rich, e_rich,
+                CASE WHEN n_rich > 1 THEN
+                  CAST(e_rich AS DOUBLE)
+                    / CAST(CAST(CAST(n_rich AS HUGEINT) * (n_rich - 1) AS BIGINT) AS DOUBLE)
+                END AS phi
+         FROM r ORDER BY k""")),
 
     // Gini coefficient of the degree distribution — "how concentrated is
     // this graph's connectivity?" in one number, the scalar companion to
@@ -1014,7 +1953,7 @@ object GraphOlapQueries {
     // ranks (c, c+m], so 2·Σ rank·x over the block = d·(2·m·c + m·(m+1)).
     // Histogram prefix runs through the two-level prefix sum; all moments
     // exact DECIMAL(38,0); one fixed IEEE chain.
-    "graph_degree_gini" -> ((s, dir) => {
+    Query("graph_degree_gini", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val hist = graft.olap.GraphFrames.partSuppDegrees(s, dir)
         .groupBy("d").agg(count(lit(1)).as("m"))
@@ -1029,7 +1968,32 @@ object GraphOlapQueries {
              .cast("double")
            / (dec(col("n_nodes")) * col("sum_deg")).cast("double"))
             .as("gini"))
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              deg AS (SELECT u, count(*) AS d FROM e GROUP BY 1),
+              hist AS (SELECT d, count(*) AS m FROM deg GROUP BY 1),
+              cum AS (SELECT d, m,
+                             CAST(coalesce(sum(m) OVER (ORDER BY d
+                               ROWS BETWEEN UNBOUNDED PRECEDING AND
+                               1 PRECEDING), 0) AS BIGINT) AS cumm
+                      FROM hist),
+              agg AS (SELECT CAST(sum(m) AS BIGINT) AS n_nodes,
+                             CAST(sum(CAST(d AS HUGEINT) * m) AS HUGEINT)
+                               AS sum_deg,
+                             CAST(sum(CAST(d AS HUGEINT)
+                               * (CAST(m AS HUGEINT) * cumm * 2
+                                  + CAST(m AS HUGEINT) * (m + 1)))
+                               AS HUGEINT) AS tw
+                      FROM cum)
+         SELECT n_nodes, CAST(sum_deg AS BIGINT) AS sum_degree,
+                CAST(CAST(tw - CAST(n_nodes + 1 AS HUGEINT) * sum_deg AS BIGINT) AS DOUBLE)
+                  / CAST(CAST(CAST(n_nodes AS HUGEINT) * sum_deg AS BIGINT) AS DOUBLE)
+                  AS gini
+         FROM agg""")),
 
     // Truncated harmonic centrality (radius 2) from the 4 smallest part-
     // nodes of the bipartite part–supplier graph: h = n₁ + n₂/2, kept
@@ -1037,7 +2001,7 @@ object GraphOlapQueries {
     // pair state — two rounds of keyed join + distinct + anti-join, the
     // same frontier shape as graph_bfs_reach but batched over sources so
     // the engine amortizes one edge scan per round across all of them.
-    "graph_harmonic_sample" -> ((s, dir) => {
+    Query("graph_harmonic_sample", (s, dir) => {
       // pinned pre-partitioned symmetric doubled-id frame — both BFS
       // layers join on src, the cached partitioning key (§2.1/§2.4; r11)
       val e = graft.olap.GraphFrames.partSuppSym(s, dir)
@@ -1066,13 +2030,40 @@ object GraphOlapQueries {
         .withColumn("h2", col("n1") * 2 + col("n2"))
         .withColumn("harmonic", col("h2").cast("double") / lit(2.0))
         .orderBy("source")
-    }),
+    },
+      Some("""WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
+              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
+                    FROM pairs
+                    UNION ALL
+                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
+              srcs AS (SELECT src AS s FROM (SELECT DISTINCT src FROM e
+                         WHERE src % 2 = 0 ORDER BY src LIMIT 4)),
+              d1 AS (SELECT DISTINCT srcs.s, e.dst AS node
+                     FROM e JOIN srcs ON e.src = srcs.s
+                     WHERE e.dst <> srcs.s),
+              d2 AS (SELECT DISTINCT d1.s, e.dst AS node
+                     FROM e JOIN d1 ON e.src = d1.node
+                     WHERE e.dst <> d1.s
+                       AND NOT EXISTS (SELECT 1 FROM d1 y
+                                       WHERE y.s = d1.s AND y.node = e.dst)),
+              c1 AS (SELECT s, count(*) AS n1 FROM d1 GROUP BY 1),
+              c2 AS (SELECT s, count(*) AS n2 FROM d2 GROUP BY 1)
+         SELECT srcs.s AS source,
+                CAST(coalesce(c1.n1, 0) AS BIGINT) AS n1,
+                CAST(coalesce(c2.n2, 0) AS BIGINT) AS n2,
+                CAST(coalesce(c1.n1, 0) * 2 + coalesce(c2.n2, 0) AS BIGINT)
+                  AS h2,
+                CAST(coalesce(c1.n1, 0) * 2 + coalesce(c2.n2, 0) AS DOUBLE)
+                  / 2.0 AS harmonic
+         FROM srcs LEFT JOIN c1 ON c1.s = srcs.s
+                   LEFT JOIN c2 ON c2.s = srcs.s
+         ORDER BY source""")),
 
     // Conditional entropy of the next event type given the current one,
     // per from-state — the sequence-predictability complement of
     // mine_transition_matrix (same per-user lead transitions): H(next|i)
     // = Σ_j (c_ij/c_i)·log2(c_i/c_ij), exact on the lattice.
-    "mine_transition_entropy" -> ((s, dir) => {
+    Query("mine_transition_entropy", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       val L = graft.functions.FixedLog2.log2_fp _
       // transition counts off the PINNED shared bigram frame (§2.4; r11)
@@ -1088,7 +2079,26 @@ object GraphOlapQueries {
           (col("num").cast("double") / col("n_out").cast("double")
             / lit(1048576.0)).as("h_next_bits"))
         .orderBy("e_from")
-    }),
+    },
+      Some {
+      val li = graft.functions.FixedLog2.sql("row_n")
+      val lj = graft.functions.FixedLog2.sql("n")
+      s"""WITH s AS (SELECT event_type AS e_from,
+                            lead(event_type, 1) OVER (PARTITION BY user_id
+                              ORDER BY ts, event_id) AS e_to
+                     FROM events),
+               p AS (SELECT e_from, e_to, count(*) AS n FROM s
+                     WHERE e_to IS NOT NULL GROUP BY 1, 2),
+               t AS (SELECT e_from, CAST(sum(n) AS BIGINT) AS row_n
+                     FROM p GROUP BY 1),
+               terms AS (SELECT p.e_from, p.n, t.row_n
+                         FROM p JOIN t ON t.e_from = p.e_from)
+          SELECT e_from, any_value(row_n) AS n_out,
+                 CAST(CAST(sum(CAST(n AS HUGEINT) * ($li - $lj)) AS BIGINT) AS DOUBLE)
+                   / CAST(any_value(row_n) AS DOUBLE) / 1048576.0
+                   AS h_next_bits
+          FROM terms GROUP BY 1 ORDER BY 1"""
+      }),
 
     // DDSketch-flavored relative-error quantiles: the log-bucketed
     // companion to sketch_histogram_quantiles' fixed-width bins. Bucket =
@@ -1101,7 +2111,7 @@ object GraphOlapQueries {
     // estimate is the bucket's own observed min — exact integers on the
     // shared lattice, no pow() inversion. Exact positional percentiles
     // ride along so the relative error is visible.
-    "sketch_ddsketch_quantiles" -> ((s, dir) => {
+    Query("sketch_ddsketch_quantiles", (s, dir) => {
       val w = org.apache.spark.sql.expressions.Window
       val L = graft.functions.FixedLog2.log2_fp _
       val v = Tables.events(s, dir)
@@ -1135,7 +2145,52 @@ object GraphOlapQueries {
       est.join(exact, Seq("event_type", "p"))
         .select("event_type", "p", "bucket", "est_value", "exact_value")
         .orderBy("event_type", "p")
-    }),
+    },
+      Some {
+      val lg = graft.functions.FixedLog2.sql("cents")
+      s"""WITH v AS (SELECT event_type,
+                            CAST(round(value * 100, 0) AS BIGINT) AS cents
+                     FROM events
+                     WHERE CAST(round(value * 100, 0) AS BIGINT) > 0),
+               l AS (SELECT event_type, cents, $lg AS lg FROM v),
+               bc AS (SELECT event_type, lg // 65536 AS bucket,
+                             count(*) AS cnt,
+                             CAST(min(cents) AS BIGINT) AS lo
+                      FROM l GROUP BY 1, 2),
+               cm AS (SELECT event_type, bucket, cnt, lo,
+                             CAST(sum(cnt) OVER (PARTITION BY event_type
+                               ORDER BY bucket) AS BIGINT) AS cum
+                      FROM bc),
+               n AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
+               ps AS (SELECT event_type, n,
+                             CAST(unnest([50, 90, 99]) AS BIGINT) AS p
+                      FROM n),
+               ks AS (SELECT event_type, p, (n * p + 99) // 100 AS k
+                      FROM ps),
+               est AS (SELECT c.event_type, k.p,
+                              CAST(min(c.bucket) AS BIGINT) AS bucket
+                       FROM cm c JOIN ks k
+                         ON k.event_type = c.event_type AND c.cum >= k.k
+                       GROUP BY 1, 2),
+               eb AS (SELECT e.event_type, e.p, e.bucket,
+                             CAST(b.lo AS DOUBLE) / 100.0 AS est_value
+                      FROM est e JOIN bc b
+                        ON b.event_type = e.event_type
+                       AND b.bucket = e.bucket),
+               rk AS (SELECT event_type, cents,
+                             row_number() OVER (PARTITION BY event_type
+                               ORDER BY cents) AS rn
+                      FROM v),
+               ex AS (SELECT r.event_type, k.p,
+                             CAST(r.cents AS DOUBLE) / 100.0 AS exact_value
+                      FROM rk r JOIN ks k
+                        ON k.event_type = r.event_type AND r.rn = k.k)
+          SELECT eb.event_type, eb.p, eb.bucket, eb.est_value,
+                 ex.exact_value
+          FROM eb JOIN ex ON ex.event_type = eb.event_type
+                         AND ex.p = eb.p
+          ORDER BY 1, 2"""
+      }),
 
     // ClickHouse-style windowFunnel: conversion depth where every later
     // stage must land within T = 3 days of the user's FIRST view (the
@@ -1144,7 +2199,7 @@ object GraphOlapQueries {
     // min-in-window — three user-keyed aggregates + broadcast-sized
     // stage counts, no per-user state machine. At 100 TB each stage is
     // one partial-aggregable groupBy over a time-pruned slice.
-    "olap_window_funnel" -> ((s, dir) => {
+    Query("olap_window_funnel", (s, dir) => {
       val ev = Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"))
         .tracked // three stage scans
@@ -1170,7 +2225,28 @@ object GraphOlapQueries {
                   lit("purchase_in_window").as("stage_name"),
                   col("n_users")))
         .orderBy("stage")
-    }),
+    },
+      Some("""WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
+                    WHERE event_type = 'view' GROUP BY 1),
+              c2 AS (SELECT e.user_id, min(e.ts) AS t2
+                     FROM events e JOIN v ON v.user_id = e.user_id
+                     WHERE e.event_type = 'click' AND e.ts >= v.t1
+                       AND e.ts <= v.t1 + INTERVAL 3 DAY
+                     GROUP BY 1),
+              p3 AS (SELECT e.user_id, min(e.ts) AS t3
+                     FROM events e JOIN v ON v.user_id = e.user_id
+                                   JOIN c2 ON c2.user_id = e.user_id
+                     WHERE e.event_type = 'purchase' AND e.ts >= c2.t2
+                       AND e.ts <= v.t1 + INTERVAL 3 DAY
+                     GROUP BY 1)
+         SELECT * FROM (
+           SELECT CAST(1 AS BIGINT) AS stage, 'view' AS stage_name,
+                  (SELECT count(*) FROM v) AS n_users
+           UNION ALL
+           SELECT 2, 'click_in_window', (SELECT count(*) FROM c2)
+           UNION ALL
+           SELECT 3, 'purchase_in_window', (SELECT count(*) FROM p3))
+         ORDER BY stage""")),
 
     // Event-sequence pattern matching (the MATCH_RECOGNIZE / ClickHouse
     // sequenceMatch niche): each user's history becomes one ordered
@@ -1180,7 +2256,7 @@ object GraphOlapQueries {
     // here; a 100 TB run sessionizes or caps first — the string is a
     // session transcript, not an unbounded corpus), and the patterns
     // stay in the Java∩RE2 common subset so any engine pair agrees.
-    "olap_sequence_match" -> ((s, dir) => {
+    Query("olap_sequence_match", (s, dir) => {
       import s.implicits._
       val pats = Seq(
         ("funnel_ordered", "v.*c.*p"),
@@ -1203,7 +2279,25 @@ object GraphOlapQueries {
                .otherwise(0L)).cast("double")
                / count(lit(1)).cast("double")).as("frac"))
         .orderBy("pattern_name")
-    }),
+    },
+      Some("""WITH u AS (SELECT user_id,
+                  string_agg(substr(event_type, 1, 1), ''
+                             ORDER BY ts, event_id) AS s
+           FROM events GROUP BY 1),
+     pats AS (SELECT * FROM (VALUES
+        ('funnel_ordered', 'v.*c.*p'),
+        ('click_purchase_adjacent', 'cp'),
+        ('starts_with_signup', '^s'),
+        ('repeat_purchase', 'pp'),
+        ('error_mid_funnel', 'v[^p]*e[^p]*p'))
+        p(pattern_name, pattern))
+         SELECT p.pattern_name, p.pattern,
+                CAST(sum(CASE WHEN regexp_matches(u.s, p.pattern)
+                              THEN 1 ELSE 0 END) AS BIGINT) AS n_users,
+                CAST(sum(CASE WHEN regexp_matches(u.s, p.pattern)
+                              THEN 1 ELSE 0 END) AS DOUBLE)
+                  / CAST(count(*) AS DOUBLE) AS frac
+         FROM u CROSS JOIN pats p GROUP BY 1, 2 ORDER BY pattern_name""")),
 
     // Transition lift: P(b follows a) against independence —
     // lift = c_ab·N / (c_a·c_b) as exact DECIMAL rationals with BOTH a
@@ -1211,7 +2305,7 @@ object GraphOlapQueries {
     // (user-keyed lead) pairs as mine_transition_matrix. The
     // sequence-mining score that separates real funnels from frequency
     // artifacts.
-    "mine_transition_lift" -> ((s, dir) => {
+    Query("mine_transition_lift", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       // counts + both marginals + total all derive from the PINNED
       // shared bigram frame (integer sums of the same counts — §2.4; r11)
@@ -1230,7 +2324,28 @@ object GraphOlapQueries {
         .select("a", "b", "c_ab", "c_a", "c_b", "n_trans", "lift_ppm",
                 "lift")
         .orderBy("a", "b")
-    }),
+    },
+      Some("""WITH p AS (SELECT event_type AS a,
+                  lead(event_type) OVER (PARTITION BY user_id
+                    ORDER BY ts, event_id) AS b
+           FROM events),
+     pp AS (SELECT a, b FROM p WHERE b IS NOT NULL),
+     cab AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
+             FROM pp GROUP BY 1, 2),
+     ca AS (SELECT a, CAST(count(*) AS BIGINT) AS c_a FROM pp GROUP BY 1),
+     cb AS (SELECT b, CAST(count(*) AS BIGINT) AS c_b FROM pp GROUP BY 1),
+     n AS (SELECT CAST(count(*) AS BIGINT) AS n_trans FROM pp)
+         SELECT cab.a, cab.b, cab.c_ab, ca.c_a, cb.c_b, n.n_trans,
+                CAST((CAST(cab.c_ab AS HUGEINT) * n.n_trans * 1000000)
+                  // (CAST(ca.c_a AS HUGEINT) * cb.c_b) AS BIGINT)
+                  AS lift_ppm,
+                CAST(CAST(CAST(cab.c_ab AS HUGEINT) * n.n_trans AS BIGINT) AS DOUBLE)
+                  / CAST(CAST(CAST(ca.c_a AS HUGEINT) * cb.c_b AS BIGINT) AS DOUBLE)
+                  AS lift
+         FROM cab JOIN ca ON ca.a = cab.a
+                  JOIN cb ON cb.b = cab.b
+                  CROSS JOIN n
+         ORDER BY cab.a, cab.b""")),
 
     // Butterfly (2×2 biclique) census of the order–part BIPARTITE graph —
     // the bipartite clustering primitive, and the scale-correct way to
@@ -1239,7 +2354,7 @@ object GraphOlapQueries {
     // by part degree (the projection's hub problem that forced degree
     // caps on the unipartite queries). Butterflies = Σ C(co-orders, 2),
     // exact integers end-to-end.
-    "graph_butterflies" -> ((s, dir) => {
+    Query("graph_butterflies", (s, dir) => {
       // the per-order wedge groupBy IS the pinned weighted co-purchase
       // frame (w = co-order count per part pair) — one aggregate over
       // the shared derived table instead of a rebuilt self-join
@@ -1248,7 +2363,20 @@ object GraphOlapQueries {
         .agg(count(lit(1)).as("n_pairs"), sum("w").as("n_wedges"),
              sum(expr("w * (w - 1) div 2")).as("n_butterflies"),
              max("w").as("max_copairs"))
-    }),
+    },
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+     lbw AS (SELECT ok FROM li GROUP BY ok HAVING count(*) <= 256),
+     lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+     w AS (SELECT a.p AS x, b.p AS y
+           FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+     cn AS (SELECT x, y, CAST(count(*) AS BIGINT) AS cnt
+            FROM w GROUP BY 1, 2)
+         SELECT CAST(count(*) AS BIGINT) AS n_pairs,
+                CAST(sum(cnt) AS BIGINT) AS n_wedges,
+                CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT) AS n_butterflies,
+                CAST(max(cnt) AS BIGINT) AS max_copairs
+         FROM cn""")),
 
     // Partition-level TTL retention: write the events day-partitioned,
     // sweep everything older than the last 10 days as a pure METADATA
@@ -1256,7 +2384,7 @@ object GraphOlapQueries {
     // at 100 TB), then certify the sweep by joining the survivors back
     // against the full per-day source counts. A partition the sweep
     // should have dropped but didn't (or vice versa) fails the oracle.
-    "layout_ttl_sweep" -> ((s, dir) => {
+    Query("layout_ttl_sweep", (s, dir) => {
       val base = graft.io.WorkDir.create("graft_ttl").toString
       val ev = Tables.events(s, dir)
         .select(col("event_id"), col("event_type"), col("ts"),
@@ -1273,14 +2401,24 @@ object GraphOlapQueries {
             .as("action"),
           coalesce(col("n_kept"), lit(0L)).as("n_kept"))
         .orderBy("dt")
-    }),
+    },
+      Some("""WITH d AS (SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS dt,
+                  CAST(count(*) AS BIGINT) AS n_rows
+           FROM events GROUP BY 1),
+     c AS (SELECT CAST(max(CAST(dt AS DATE)) - 9 AS DATE) AS cutoff FROM d)
+         SELECT d.dt, d.n_rows,
+                CASE WHEN CAST(d.dt AS DATE) >= c.cutoff THEN 'kept'
+                     ELSE 'dropped' END AS action,
+                CASE WHEN CAST(d.dt AS DATE) >= c.cutoff THEN d.n_rows
+                     ELSE 0 END AS n_kept
+         FROM d CROSS JOIN c ORDER BY dt""")),
 
     // Linear counting — the small-cardinality sketch that beats HLL below
     // ~m distinct (the regime where HLL's estimator biases): m = 1024
     // hashed bitmap positions per type, est = m·ln(m/z) with the log on
     // the FixedLog2 lattice (exact BIGINT bits), ONE double multiply by
     // ln 2 at the end. True distinct rides along for the error readout.
-    "sketch_linear_counting" -> ((s, dir) => {
+    Query("sketch_linear_counting", (s, dir) => {
       val L = graft.functions.FixedLog2.log2_fp _
       val m = 2147483647L
       val pos = Tables.events(s, dir)
@@ -1302,14 +2440,40 @@ object GraphOlapQueries {
           (col("est_bits").cast("double") * lit(0.6931471805599453)
             / lit(1048576.0)).as("est_lc"))
         .orderBy("event_type")
-    }),
+    },
+      Some {
+      val lm = graft.functions.FixedLog2.sql("1024")
+      val lz = graft.functions.FixedLog2.sql("z")
+      s"""WITH h AS (SELECT event_type, user_id,
+                  ((((user_id % 2147483647) * 1103515245 + 12345)
+                     % 2147483647)
+                   * (((user_id % 2147483647) * 1103515245 + 12345)
+                     % 2147483647)) % 2147483647 AS hm
+           FROM events),
+     p AS (SELECT event_type, user_id,
+                  ((hm * 69069 + 362437) % 2147483647) % 1024 AS p
+           FROM h),
+     o AS (SELECT event_type,
+                  CAST(count(DISTINCT p) AS BIGINT) AS occupied,
+                  CAST(count(DISTINCT user_id) AS BIGINT) AS n_true
+           FROM p GROUP BY 1),
+     z AS (SELECT event_type, n_true, 1024 - occupied AS z FROM o),
+     e AS (SELECT event_type, n_true, z,
+                  CASE WHEN z > 0 THEN 1024 * ($lm - $lz) END AS est_bits
+           FROM z)
+         SELECT event_type, CAST(1024 AS BIGINT) AS m,
+                CAST(z AS BIGINT) AS z, n_true,
+                CAST(est_bits AS DOUBLE) * 0.6931471805599453 / 1048576.0
+                  AS est_lc
+         FROM e ORDER BY event_type"""
+      }),
 
     // Reciprocity of the directed transition graph (a→b consecutive
     // event types per user): binary — reciprocated directed edges over
     // all directed edges — and weighted — Σ min(c_ab, c_ba) / Σ c_ab —
     // both exact integers until one ppm floor-div each. The symmetry
     // diagnostic for any directed interaction graph.
-    "graph_transition_reciprocity" -> ((s, dir) => {
+    Query("graph_transition_reciprocity", (s, dir) => {
       // directed transition counts off the PINNED shared bigram frame
       // (pre-group row filter b≠a ≡ post-group cell filter — §2.4; r11)
       val pairs = Shared.eventBigramCounts(s, dir)
@@ -1329,13 +2493,33 @@ object GraphOlapQueries {
             .as("r_binary_ppm"),
           col("w_total"), col("w_min"),
           expr("(1000000 * w_min) div w_total").as("r_weighted_ppm"))
-    }),
+    },
+      Some("""WITH pr AS (SELECT user_id, event_type AS a,
+                  lead(event_type) OVER (PARTITION BY user_id
+                    ORDER BY ts, event_id) AS b
+           FROM events),
+     c AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
+           FROM pr WHERE b IS NOT NULL AND b <> a GROUP BY 1, 2),
+     j AS (SELECT c.a, c.b, c.c_ab, r.c_ab AS c_ba
+           FROM c LEFT JOIN c r ON r.a = c.b AND r.b = c.a)
+         SELECT CAST(count(*) AS BIGINT) AS n_directed,
+                CAST(sum(CASE WHEN c_ba IS NOT NULL THEN 1 ELSE 0 END)
+                  AS BIGINT) AS n_reciprocated,
+                CAST((1000000 * sum(CASE WHEN c_ba IS NOT NULL
+                       THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
+                  AS r_binary_ppm,
+                CAST(sum(c_ab) AS BIGINT) AS w_total,
+                CAST(sum(least(c_ab, coalesce(c_ba, 0))) AS BIGINT)
+                  AS w_min,
+                CAST((1000000 * sum(least(c_ab, coalesce(c_ba, 0))))
+                  // sum(c_ab) AS BIGINT) AS r_weighted_ppm
+         FROM j""")),
 
     // Peak concurrency report: distinct users per (day, hour) cell, then
     // per-day active hours / peak hourly users / user-hours — the
     // capacity-planning readout. Distinct-per-cell is the only shuffle;
     // cells are horizon-bounded (24/day) regardless of event volume.
-    "olap_peak_concurrency" -> ((s, dir) =>
+    Query("olap_peak_concurrency", (s, dir) =>
       Tables.events(s, dir)
         .groupBy(to_date(col("ts")).as("dt"),
                  date_trunc("hour", col("ts")).as("hr"))
@@ -1344,13 +2528,21 @@ object GraphOlapQueries {
         .agg(count(lit(1)).as("n_active_hours"),
              max("u").as("peak_hourly_users"),
              sum("u").as("user_hours"))
-        .orderBy("dt")),
+        .orderBy("dt"),
+      Some("""WITH h AS (SELECT CAST(ts AS DATE) AS dt,
+                           date_trunc('hour', ts) AS hr,
+                           count(DISTINCT user_id) AS u
+                    FROM events GROUP BY 1, 2)
+         SELECT dt, count(*) AS n_active_hours,
+                CAST(max(u) AS BIGINT) AS peak_hourly_users,
+                CAST(sum(u) AS BIGINT) AS user_hours
+         FROM h GROUP BY 1 ORDER BY 1""")),
 
     // Inter-visit gap per series: median and p90 of the minutes between a
     // user's consecutive same-type events — rank picks over the (type,
     // gap-minute) HISTOGRAM (weighted-median discipline: cells, never a
     // row-level global rank), gaps from one user-keyed lag.
-    "olap_intervisit_gap" -> ((s, dir) => {
+    Query("olap_intervisit_gap", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       val g = Tables.events(s, dir)
         .withColumn("pts", lag(col("ts"), 1).over(
@@ -1371,7 +2563,30 @@ object GraphOlapQueries {
              min(when(col("cum") * 10 >= col("n") * 9, col("gap_min")))
                .as("p90_gap_min"))
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH o AS (SELECT event_type, user_id, ts,
+                           lag(ts) OVER (PARTITION BY event_type, user_id
+                             ORDER BY ts, event_id) AS pts
+                    FROM events),
+              g AS (SELECT event_type,
+                           CAST(datediff('microsecond', pts, ts)
+                                // 60000000 AS BIGINT) AS gap_min
+                    FROM o WHERE pts IS NOT NULL),
+              h AS (SELECT event_type, gap_min, count(*) AS m
+                    FROM g GROUP BY 1, 2),
+              c AS (SELECT event_type, gap_min, m,
+                           CAST(sum(m) OVER (PARTITION BY event_type
+                             ORDER BY gap_min ROWS BETWEEN UNBOUNDED
+                             PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
+                           CAST(sum(m) OVER (PARTITION BY event_type)
+                                AS BIGINT) AS n
+                    FROM h)
+         SELECT event_type, max(n) AS n_gaps,
+                CAST(min(CASE WHEN cum * 2 >= n + 1 THEN gap_min END)
+                     AS BIGINT) AS median_gap_min,
+                CAST(min(CASE WHEN cum * 10 >= n * 9 THEN gap_min END)
+                     AS BIGINT) AS p90_gap_min
+         FROM c GROUP BY 1 ORDER BY 1""")),
 
     // Stationary distribution of the user-journey Markov chain: three q16
     // power-iteration steps π′ⱼ = Σᵢ (πᵢ·nᵢⱼ) div rᵢ over the transition
@@ -1380,7 +2595,7 @@ object GraphOlapQueries {
     // k×k (k = event types) after one user-keyed lead window, so every
     // iteration frame is bounded and broadcast; the normalizer is the
     // allowlisted 1-row combine.
-    "mine_markov_stationary" -> ((s, dir) => {
+    Query("mine_markov_stationary", (s, dir) => {
       // transition counts off the PINNED shared bigram frame (§2.4; r11)
       val p = Shared.eventBigramCounts(s, dir)
         .select(col("a").as("e_from"), col("b").as("e_to"), col("n"))
@@ -1414,7 +2629,45 @@ object GraphOlapQueries {
           piM(s0).toDouble / totalV.toDouble))
         .toSeq.toDF("event_type", "pi_q16", "pi_share")
         .orderBy("event_type")
-    }),
+    },
+      Some("""WITH s AS (SELECT event_type AS e_from,
+                           lead(event_type, 1) OVER (PARTITION BY user_id
+                             ORDER BY ts, event_id) AS e_to
+                    FROM events),
+              p AS (SELECT e_from, e_to, count(*) AS n FROM s
+                    WHERE e_to IS NOT NULL GROUP BY 1, 2),
+              t AS (SELECT e_from, CAST(sum(n) AS BIGINT) AS row_n
+                    FROM p GROUP BY 1),
+              st AS (SELECT DISTINCT e_from AS event_type FROM p),
+              pi0 AS (SELECT event_type, CAST(65536 AS BIGINT) AS v FROM st),
+              pi1 AS (SELECT st.event_type,
+                             coalesce(CAST(sum((pi0.v * p.n) // t.row_n)
+                               AS BIGINT), 0) AS v
+                      FROM st
+                      LEFT JOIN p ON p.e_to = st.event_type
+                      LEFT JOIN pi0 ON pi0.event_type = p.e_from
+                      LEFT JOIN t ON t.e_from = p.e_from
+                      GROUP BY 1),
+              pi2 AS (SELECT st.event_type,
+                             coalesce(CAST(sum((pi1.v * p.n) // t.row_n)
+                               AS BIGINT), 0) AS v
+                      FROM st
+                      LEFT JOIN p ON p.e_to = st.event_type
+                      LEFT JOIN pi1 ON pi1.event_type = p.e_from
+                      LEFT JOIN t ON t.e_from = p.e_from
+                      GROUP BY 1),
+              pi3 AS (SELECT st.event_type,
+                             coalesce(CAST(sum((pi2.v * p.n) // t.row_n)
+                               AS BIGINT), 0) AS v
+                      FROM st
+                      LEFT JOIN p ON p.e_to = st.event_type
+                      LEFT JOIN pi2 ON pi2.event_type = p.e_from
+                      LEFT JOIN t ON t.e_from = p.e_from
+                      GROUP BY 1),
+              z AS (SELECT CAST(sum(v) AS BIGINT) AS total FROM pi3)
+         SELECT pi3.event_type, pi3.v AS pi_q16,
+                CAST(pi3.v AS DOUBLE) / CAST(z.total AS DOUBLE) AS pi_share
+         FROM pi3, z ORDER BY event_type""")),
 
     // Adamic-Adar link prediction on the co-purchase graph: the
     // hub-discounted sibling of jaccard_links — AA(x,y) = Σ_z 1/log d(z)
@@ -1423,7 +2676,7 @@ object GraphOlapQueries {
     // exact in both engines; ln vs log2 is a constant factor that never
     // reorders scores). Same degree-capped wedge generation as the other
     // link predictors; deterministic (aa desc, x, y) top-20 boundary.
-    "graph_adamic_adar" -> ((s, dir) => {
+    Query("graph_adamic_adar", (s, dir) => {
       val cap = 64L
       val L = graft.functions.FixedLog2.log2_fp _
       val e = graft.olap.GraphFrames.coPurchaseEdges(s, dir)
@@ -1453,7 +2706,38 @@ object GraphOlapQueries {
           (col("aa_q20").cast("double") / lit(1048576.0)).as("adamic_adar"))
         .orderBy(col("aa_q20").desc, col("x"), col("y"))
         .limit(20)
-    }),
+    },
+      Some {
+      val lg = graft.functions.FixedLog2.sql("dc")
+      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                      FROM lineitem),
+               lbw AS (SELECT ok FROM li GROUP BY ok
+                       HAVING count(*) <= 256),
+               lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+               e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                     FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+               sym AS (SELECT u AS c, v AS x FROM e
+                       UNION ALL SELECT v, u FROM e),
+               deg AS (SELECT c, CAST(count(*) AS BIGINT) AS dc
+                       FROM sym GROUP BY 1),
+               term AS (SELECT c,
+                          CAST(1099511627776 // $lg AS BIGINT) AS aa_term
+                        FROM deg WHERE dc <= 64 AND dc >= 2),
+               w AS (SELECT s1.x AS x, s2.x AS y, term.aa_term
+                     FROM sym s1
+                     JOIN sym s2 ON s1.c = s2.c AND s1.x < s2.x
+                     JOIN term ON term.c = s1.c),
+               sc AS (SELECT x, y, count(*) AS cn,
+                             CAST(sum(aa_term) AS BIGINT) AS aa_q20
+                      FROM w GROUP BY 1, 2),
+               nz AS (SELECT sc.* FROM sc
+                      WHERE NOT EXISTS (SELECT 1 FROM e
+                                        WHERE e.u = sc.x AND e.v = sc.y))
+          SELECT x, y, cn, aa_q20,
+                 CAST(aa_q20 AS DOUBLE) / CAST(1048576 AS DOUBLE)
+                   AS adamic_adar
+          FROM nz ORDER BY aa_q20 DESC, x, y LIMIT 20"""
+      }),
 
     // EXACT sliding 7-day distinct users (WAU) per day — the window-
     // distinct that has no direct operator anywhere: re-expressed as the
@@ -1464,18 +2748,46 @@ object GraphOlapQueries {
     // dedup shuffle + ONE keyed lag window — never a day×history rescan
     // or an explode-7 re-dedup. The day-axis cumulative runs on the
     // deliberate onePartition key (dimension-sized frame).
-    "olap_wau_sliding_distinct" -> ((s, dir) =>
+    Query("olap_wau_sliding_distinct", (s, dir) =>
       graft.olap.SlidingDistinct.perDay(Tables.events(s, dir),
           col("user_id"), to_date(col("ts")), windowDays = 7)
         .withColumnRenamed("n_distinct", "wau")
-        .orderBy("day")),
+        .orderBy("day"),
+      // first-in-window difference array: user-day (d, prev) is first inside
+      // windows ending e in [max(d, prev+7), d+6]; +1/-1 at the bounds,
+      // prefix sum over the bounded day axis = exact sliding distinct
+      Some("""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
+                     FROM events),
+              lagd AS (SELECT user_id, d,
+                              lag(d) OVER (PARTITION BY user_id
+                                           ORDER BY d) AS prev
+                       FROM ud),
+              seg AS (SELECT CASE WHEN prev IS NULL THEN d
+                                  ELSE greatest(d, prev + 7) END AS e_start,
+                             d + 7 AS e_next
+                      FROM lagd),
+              delta AS (SELECT e_start AS e, 1 AS v FROM seg
+                        UNION ALL SELECT e_next, -1 FROM seg),
+              dd AS (SELECT e, CAST(sum(v) AS BIGINT) AS dv
+                     FROM delta GROUP BY 1),
+              bounds AS (SELECT min(CAST(ts AS DATE)) AS mn,
+                                max(CAST(ts AS DATE)) AS mx FROM events),
+              days AS (SELECT CAST(unnest(generate_series(mn, mx,
+                                INTERVAL 1 DAY)) AS DATE) AS day
+                       FROM bounds),
+              cum AS (SELECT days.day, coalesce(dd.dv, 0) AS dv
+                      FROM days LEFT JOIN dd ON dd.e = days.day)
+         SELECT day, CAST(sum(dv) OVER (ORDER BY day
+                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                AS BIGINT) AS wau
+         FROM cum ORDER BY day""")),
 
     // DAU/MAU stickiness per day — "what share of the monthly audience
     // shows up daily?", the engagement ratio every growth dashboard
     // tracks. DAU is one per-day distinct; MAU is the 30-day sliding
     // distinct through the SAME SlidingDistinct difference-array operator
     // as WAU (one operator, every window length), exact at any scale.
-    "olap_dau_mau_stickiness" -> ((s, dir) => {
+    Query("olap_dau_mau_stickiness", (s, dir) => {
       val ev = Tables.events(s, dir)
       val mau = graft.olap.SlidingDistinct.perDay(ev,
           col("user_id"), to_date(col("ts")), windowDays = 30)
@@ -1489,14 +2801,46 @@ object GraphOlapQueries {
           when(col("mau") > 0, coalesce(col("dau"), lit(0L)).cast("double")
             / col("mau").cast("double")).as("stickiness"))
         .orderBy("day")
-    }),
+    },
+      Some("""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
+                     FROM events),
+              dau AS (SELECT d, CAST(count(*) AS BIGINT) AS dau
+                      FROM ud GROUP BY 1),
+              lagd AS (SELECT user_id, d,
+                              lag(d) OVER (PARTITION BY user_id
+                                           ORDER BY d) AS prev
+                       FROM ud),
+              seg AS (SELECT CASE WHEN prev IS NULL THEN d
+                                  ELSE greatest(d, prev + 30) END AS e_start,
+                             d + 30 AS e_next
+                      FROM lagd),
+              delta AS (SELECT e_start AS e, 1 AS v FROM seg
+                        UNION ALL SELECT e_next, -1 FROM seg),
+              dd AS (SELECT e, CAST(sum(v) AS BIGINT) AS dv
+                     FROM delta GROUP BY 1),
+              bounds AS (SELECT min(CAST(ts AS DATE)) AS mn,
+                                max(CAST(ts AS DATE)) AS mx FROM events),
+              days AS (SELECT CAST(unnest(generate_series(mn, mx,
+                                INTERVAL 1 DAY)) AS DATE) AS day
+                       FROM bounds),
+              cum AS (SELECT days.day, coalesce(dd.dv, 0) AS dv
+                      FROM days LEFT JOIN dd ON dd.e = days.day),
+              mau AS (SELECT day, CAST(sum(dv) OVER (ORDER BY day
+                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                        AS BIGINT) AS mau
+                      FROM cum)
+         SELECT m.day, coalesce(da.dau, 0) AS dau, m.mau,
+                CASE WHEN m.mau > 0 THEN CAST(coalesce(da.dau, 0) AS DOUBLE)
+                       / CAST(m.mau AS DOUBLE) END AS stickiness
+         FROM mau m LEFT JOIN dau da ON da.d = m.day
+         ORDER BY m.day""")),
 
     // Last-touch attribution: for every purchase, the user's most recent
     // strictly-prior non-purchase event is the credited channel — ONE
     // keyed window with an (unbounded, −1) frame and an ignore-nulls
     // last(), never a self-join against history. Purchases with no prior
     // touch stay explicit as 'none'; lag sums are exact integer seconds.
-    "olap_attribution_lasttouch" -> ((s, dir) => {
+    Query("olap_attribution_lasttouch", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy("ts", "event_id")
         .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -1521,7 +2865,32 @@ object GraphOlapQueries {
             col("lag_seconds_sum").cast("double")
               / col("n_purchases").cast("double")))
         .orderBy("channel")
-    }),
+    },
+      Some("""WITH e AS (SELECT user_id, event_id, event_type, ts,
+                           epoch_us(ts) AS us FROM events),
+              w AS (SELECT event_type, us,
+                           last_value(CASE WHEN event_type <> 'purchase'
+                                      THEN event_type END IGNORE NULLS)
+                             OVER pre AS channel,
+                           last_value(CASE WHEN event_type <> 'purchase'
+                                      THEN us END IGNORE NULLS)
+                             OVER pre AS ch_us
+                    FROM e
+                    WINDOW pre AS (PARTITION BY user_id
+                                   ORDER BY ts, event_id
+                                   ROWS BETWEEN UNBOUNDED PRECEDING
+                                   AND 1 PRECEDING)),
+              p AS (SELECT coalesce(channel, 'none') AS channel,
+                           CASE WHEN channel IS NOT NULL
+                                THEN (us - ch_us) // 1000000 END AS lag_s
+                    FROM w WHERE event_type = 'purchase')
+         SELECT channel, CAST(count(*) AS BIGINT) AS n_purchases,
+                CAST(coalesce(sum(lag_s), 0) AS BIGINT) AS lag_seconds_sum,
+                CASE WHEN channel <> 'none'
+                     THEN CAST(sum(lag_s) AS DOUBLE)
+                            / CAST(count(*) AS DOUBLE)
+                END AS avg_lag_seconds
+         FROM p GROUP BY 1 ORDER BY 1""")),
 
     // Largest-connected-component share of the co-purchase graph — the
     // connectivity certification run before any graph algorithm is
@@ -1529,7 +2898,7 @@ object GraphOlapQueries {
     // results). Reuses the dedup suite's pointer-jumping connected
     // components (log-round convergence, pre-partitioned edge cache) on
     // the graph edge frame; the census is component-sized, not edge-sized.
-    "graph_lcc_share" -> ((s, dir) => {
+    Query("graph_lcc_share", (s, dir) => {
       // the PINNED pre-partitioned symmetric co-purchase frame feeds CC
       // directly (symInput): the per-call symmetrize + edge-scale
       // re-exchange + re-sort are gone, every CC round's frontier join
@@ -1544,7 +2913,34 @@ object GraphOlapQueries {
         .select(col("n_nodes"), col("n_components"), col("lcc_size"),
           (col("lcc_size").cast("double") / col("n_nodes").cast("double"))
             .as("lcc_share"))
-    }),
+    },
+      // component labels via recursive min-label closure: the label SET is
+      // method-independent, so sizes match Spark's pointer jumping exactly
+      Some("""WITH RECURSIVE
+              li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              sym AS (SELECT u AS a, v AS b FROM e
+                      UNION ALL SELECT v, u FROM e),
+              reach(node, label) AS (
+                SELECT a, a FROM (SELECT DISTINCT a FROM sym)
+                UNION
+                SELECT s.b, r.label FROM reach r JOIN sym s ON s.a = r.node
+                WHERE r.label < s.b),
+              lab AS (SELECT node, min(label) AS label
+                      FROM reach GROUP BY 1),
+              comp AS (SELECT label, CAST(count(*) AS BIGINT) AS sz
+                       FROM lab GROUP BY 1)
+         SELECT CAST(sum(sz) AS BIGINT) AS n_nodes,
+                CAST(count(*) AS BIGINT) AS n_components,
+                CAST(max(sz) AS BIGINT) AS lcc_size,
+                CAST(max(sz) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)
+                  AS lcc_share
+         FROM comp""")),
 
     // Global path-motif census: nodes, edges, wedges, triangles and open
     // 3-paths in one report — P₃ = Σ_e (dᵤ−1)(dᵥ−1) − 3T needs only the
@@ -1552,7 +2948,7 @@ object GraphOlapQueries {
     // materialization), and T reuses the shared compact-forward closure.
     // The motif ratios are the graph's shape fingerprint (tree-like vs
     // clustered) at any scale.
-    "graph_path3_census" -> ((s, dir) => {
+    Query("graph_path3_census", (s, dir) => {
       val G = graft.olap.GraphFrames
       val e = G.coPurchaseEdges(s, dir)
       val deg = G.coPurchaseDegrees(s, dir)
@@ -1571,7 +2967,41 @@ object GraphOlapQueries {
         .select(col("n_nodes"), col("n_edges"), col("n_wedges"),
           col("n_triangles"),
           (col("pp") - lit(3L) * col("n_triangles")).as("n_path3"))
-    }),
+    },
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              sym AS (SELECT u AS c, v AS x FROM e
+                      UNION ALL SELECT v, u FROM e),
+              deg AS (SELECT c, CAST(count(*) AS BIGINT) AS d
+                      FROM sym GROUP BY 1),
+              ord AS (SELECT e.u, e.v, du.d AS du, dv.d AS dv
+                      FROM e JOIN deg du ON du.c = e.u
+                             JOIN deg dv ON dv.c = e.v),
+              dir AS (SELECT CASE WHEN du < dv OR (du = dv AND u < v)
+                                  THEN u ELSE v END AS a,
+                             CASE WHEN du < dv OR (du = dv AND u < v)
+                                  THEN v ELSE u END AS b
+                      FROM ord),
+              tri AS (SELECT CAST(count(*) AS BIGINT) AS t
+                      FROM dir d1
+                      JOIN dir d2 ON d2.a = d1.b
+                      JOIN dir d3 ON d3.a = d1.a AND d3.b = d2.b),
+              w AS (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) AS wedges
+                    FROM deg),
+              p3 AS (SELECT CAST(sum((du.d - 1) * (dv.d - 1)) AS BIGINT)
+                       AS pp
+                     FROM e JOIN deg du ON du.c = e.u
+                            JOIN deg dv ON dv.c = e.v),
+              ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM e),
+              nv AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg)
+         SELECT nv.n_nodes, ne.n_edges, w.wedges AS n_wedges,
+                tri.t AS n_triangles, p3.pp - 3 * tri.t AS n_path3
+         FROM nv, ne, w, tri, p3""")),
 
     // Truss support: per co-purchase edge, the number of triangles through
     // it — the edge-strength measure k-truss decomposition peels on. The
@@ -1579,7 +3009,7 @@ object GraphOlapQueries {
     // its three canonical edges and counting is 3·T rows (linear in
     // triangles, never wedges), left-joined back so support-0 edges stay
     // explicit. Output is the support histogram — the truss profile.
-    "graph_truss_support" -> ((s, dir) => {
+    Query("graph_truss_support", (s, dir) => {
       val G = graft.olap.GraphFrames
       val e = G.coPurchaseEdges(s, dir)
       // the pinned materialized triangle closure — enumeration runs once
@@ -1598,7 +3028,44 @@ object GraphOlapQueries {
         .select(coalesce(col("support"), lit(0L)).as("support"))
         .groupBy("support").agg(count(lit(1)).as("n_edges"))
         .orderBy("support")
-    }),
+    },
+      // triangle multiset is method-independent, so the wedge-free support
+      // census here matches Spark's compact-forward enumeration exactly
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+              lbw AS (SELECT ok FROM li GROUP BY ok
+                      HAVING count(*) <= 256),
+              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+              e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+              sym AS (SELECT u AS c, v AS x FROM e
+                      UNION ALL SELECT v, u FROM e),
+              deg AS (SELECT c, CAST(count(*) AS BIGINT) AS d
+                      FROM sym GROUP BY 1),
+              ord AS (SELECT e.u, e.v, du.d AS du, dv.d AS dv
+                      FROM e JOIN deg du ON du.c = e.u
+                             JOIN deg dv ON dv.c = e.v),
+              dir AS (SELECT CASE WHEN du < dv OR (du = dv AND u < v)
+                                  THEN u ELSE v END AS a,
+                             CASE WHEN du < dv OR (du = dv AND u < v)
+                                  THEN v ELSE u END AS b
+                      FROM ord),
+              tri AS (SELECT d1.a AS x, d1.b AS y, d2.b AS z
+                      FROM dir d1
+                      JOIN dir d2 ON d2.a = d1.b
+                      JOIN dir d3 ON d3.a = d1.a AND d3.b = d2.b),
+              sup AS (SELECT u, v, CAST(count(*) AS BIGINT) AS support
+                      FROM (SELECT least(x, y) AS u, greatest(x, y) AS v
+                            FROM tri
+                            UNION ALL SELECT least(y, z), greatest(y, z)
+                            FROM tri
+                            UNION ALL SELECT least(x, z), greatest(x, z)
+                            FROM tri)
+                      GROUP BY 1, 2),
+              alle AS (SELECT coalesce(s.support, 0) AS support
+                       FROM e LEFT JOIN sup s ON s.u = e.u AND s.v = e.v)
+         SELECT support, CAST(count(*) AS BIGINT) AS n_edges
+         FROM alle GROUP BY 1 ORDER BY 1""")),
 
     // Deterministic hash-steered random walks (the node2vec/PPR sampling
     // primitive): 6 steps from the 64 highest-degree parts, next hop =
@@ -1607,7 +3074,7 @@ object GraphOlapQueries {
     // adjacency — walk fan-out never touches non-frontier nodes, the
     // sampling posture that makes walks tractable on a 100 TB graph.
     // Reruns and the oracle see identical walks (no RNG state).
-    "graph_random_walk_visits" -> ((s, dir) => {
+    Query("graph_random_walk_visits", (s, dir) => {
       // the walk-sampler layout: while the GRAPH-bounded adjacency fits
       // executor memory it rides a pinned in-memory broadcast (node →
       // ascending-sorted neighbor array, the coPurchaseAdjGrouped rows)
@@ -1637,14 +3104,54 @@ object GraphOlapQueries {
       visits.groupBy("node").agg(count(lit(1)).as("visits"))
         .orderBy(col("visits").desc, col("node"))
         .limit(20)
-    }),
+    },
+      Some {
+      def step(t: Int) =
+        s"""w$t AS (SELECT w.seed, adj.x AS node
+           |        FROM w${t - 1} w
+           |        JOIN deg d ON d.c = w.node
+           |        JOIN adj ON adj.c = w.node
+           |         AND adj.idx = (w.seed * 1000003 + ${t * 7919 + 12345}
+           |                        + w.node * 31) % 2147483647 % d.d)"""
+          .stripMargin
+      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                      FROM lineitem),
+               lbw AS (SELECT ok FROM li GROUP BY ok
+                       HAVING count(*) <= 256),
+               lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+               e AS (SELECT DISTINCT a.p AS u, b.p AS v
+                     FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+               sym AS (SELECT u AS c, v AS x FROM e
+                       UNION ALL SELECT v, u FROM e),
+               deg AS (SELECT c, CAST(count(*) AS BIGINT) AS d
+                       FROM sym GROUP BY 1),
+               adj AS (SELECT c, x,
+                              row_number() OVER (PARTITION BY c
+                                                 ORDER BY x) - 1 AS idx
+                       FROM sym),
+               seeds AS (SELECT c FROM deg ORDER BY d DESC, c LIMIT 64),
+               w0 AS (SELECT c AS seed, c AS node FROM seeds),
+               ${step(1)},
+               ${step(2)},
+               ${step(3)},
+               ${step(4)},
+               ${step(5)},
+               ${step(6)},
+               visits AS (SELECT node FROM w1 UNION ALL SELECT node FROM w2
+                          UNION ALL SELECT node FROM w3
+                          UNION ALL SELECT node FROM w4
+                          UNION ALL SELECT node FROM w5
+                          UNION ALL SELECT node FROM w6)
+          SELECT node, CAST(count(*) AS BIGINT) AS visits
+          FROM visits GROUP BY 1 ORDER BY visits DESC, node LIMIT 20"""
+      }),
 
     // Cumulative-distinct-users curve per series: each user reduces to
     // their first day ONCE (the partial-aggregable trick — a naive
     // count(distinct) per day rescans all history per cell), then one
     // keyed running sum over day cells. The audience-growth curve every
     // dashboard draws, exact and shuffle-minimal at any scale.
-    "olap_cumulative_distinct" -> ((s, dir) => {
+    Query("olap_cumulative_distinct", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       Tables.events(s, dir)
         .groupBy(col("event_type"), col("user_id"))
@@ -1655,7 +3162,17 @@ object GraphOlapQueries {
           sum("new_users").over(W.partitionBy("event_type").orderBy("dt")
             .rowsBetween(W.unboundedPreceding, 0)))
         .orderBy("event_type", "dt")
-    }),
+    },
+      Some("""WITH fd AS (SELECT event_type, user_id,
+                            min(CAST(ts AS DATE)) AS dt
+                     FROM events GROUP BY 1, 2),
+              nw AS (SELECT event_type, dt, count(*) AS new_users
+                     FROM fd GROUP BY 1, 2)
+         SELECT event_type, dt, CAST(new_users AS BIGINT) AS new_users,
+                CAST(sum(new_users) OVER (PARTITION BY event_type
+                  ORDER BY dt ROWS BETWEEN UNBOUNDED PRECEDING AND
+                  CURRENT ROW) AS BIGINT) AS cum_users
+         FROM nw ORDER BY event_type, dt""")),
 
     // ABC class migration between the horizon's two halves — does a
     // part's revenue class persist? Each half reuses the established
@@ -1663,7 +3180,7 @@ object GraphOlapQueries {
     // 10^9 parts), the migration matrix is one exact count per
     // (class_h1, class_h2) cell. The assortment-drift report a
     // replenishment pipeline runs monthly.
-    "olap_abc_migration" -> ((s, dir) => {
+    Query("olap_abc_migration", (s, dir) => {
       def classify(rev: DataFrame): DataFrame = {
         val total = rev.agg(sum(col("cents")).as("total_cents"))
         // keyed two-level cumulative — see olap_abc_classification
@@ -1689,14 +3206,46 @@ object GraphOlapQueries {
         .groupBy("class_h1", "class_h2")
         .agg(count(lit(1)).as("n_parts"))
         .orderBy("class_h1", "class_h2")
-    }),
+    },
+      Some("""WITH li AS (SELECT l_partkey,
+                  CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c,
+                  l_shipdate
+           FROM lineitem),
+     r1 AS (SELECT l_partkey, CAST(sum(c) AS BIGINT) AS cents
+            FROM li WHERE l_shipdate < DATE '1995-01-01' GROUP BY 1),
+     t1 AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents FROM r1),
+     c1 AS (SELECT r1.l_partkey,
+                   CASE WHEN CAST(sum(r1.cents) OVER (ORDER BY r1.cents
+                       DESC, r1.l_partkey ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) * 100 <= t1.total_cents * 80 THEN 'A'
+                        WHEN CAST(sum(r1.cents) OVER (ORDER BY r1.cents
+                       DESC, r1.l_partkey ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) * 100 <= t1.total_cents * 95 THEN 'B'
+                        ELSE 'C' END AS class_h1
+            FROM r1 CROSS JOIN t1),
+     r2 AS (SELECT l_partkey, CAST(sum(c) AS BIGINT) AS cents
+            FROM li WHERE l_shipdate >= DATE '1995-01-01' GROUP BY 1),
+     t2 AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents FROM r2),
+     c2 AS (SELECT r2.l_partkey,
+                   CASE WHEN CAST(sum(r2.cents) OVER (ORDER BY r2.cents
+                       DESC, r2.l_partkey ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) * 100 <= t2.total_cents * 80 THEN 'A'
+                        WHEN CAST(sum(r2.cents) OVER (ORDER BY r2.cents
+                       DESC, r2.l_partkey ROWS UNBOUNDED PRECEDING)
+                       AS BIGINT) * 100 <= t2.total_cents * 95 THEN 'B'
+                        ELSE 'C' END AS class_h2
+            FROM r2 CROSS JOIN t2)
+         SELECT c1.class_h1, c2.class_h2,
+                CAST(count(*) AS BIGINT) AS n_parts
+         FROM c1 JOIN c2 ON c2.l_partkey = c1.l_partkey
+         GROUP BY 1, 2 ORDER BY class_h1, class_h2""")),
 
     // Average-neighbor-degree curve k_nn(k) — assortativity's richer
     // sibling: for each log2 degree bucket, the edge-weighted mean
     // neighbor degree, exact integers to one floor-div + one double.
     // Rising curve = hubs prefer hubs. Same symmetrized co-purchase
     // edges as graph_assortativity; degrees join back per endpoint.
-    "graph_knn_degree_curve" -> ((s, dir) => {
+    Query("graph_knn_degree_curve", (s, dir) => {
       // pinned symmetric co-purchase frame (shared with the wedge
       // generators, Louvain and CC — §2.4; r11)
       val sym = graft.olap.GraphFrames.coPurchaseSym(s, dir)
@@ -1719,14 +3268,37 @@ object GraphOlapQueries {
           (col("sum_nb_deg").cast("double")
             / col("n_edges").cast("double")).as("knn"))
         .orderBy("log2_degree")
-    }),
+    },
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                     FROM lineitem),
+     lbw AS (SELECT ok FROM li GROUP BY ok HAVING count(*) <= 256),
+     lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+     e AS (SELECT DISTINCT a.p AS u, b.p AS v
+           FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
+     sym AS (SELECT u AS c, v AS x FROM e
+             UNION ALL SELECT v, u FROM e),
+     deg AS (SELECT c, CAST(count(*) AS BIGINT) AS dc
+             FROM sym GROUP BY 1),
+     j AS (SELECT d1.dc AS deg_c, d2.dc AS deg_x
+           FROM sym s JOIN deg d1 ON d1.c = s.c
+                      JOIN deg d2 ON d2.c = s.x),
+     g AS (SELECT CAST(length(bin(deg_c)) - 1 AS BIGINT)
+                    AS log2_degree,
+                  CAST(count(*) AS BIGINT) AS n_edges,
+                  CAST(sum(deg_x) AS BIGINT) AS sum_nb_deg
+           FROM j GROUP BY 1)
+         SELECT log2_degree, n_edges, sum_nb_deg,
+                sum_nb_deg // n_edges AS knn_floor,
+                CAST(sum_nb_deg AS DOUBLE) / CAST(n_edges AS DOUBLE)
+                  AS knn
+         FROM g ORDER BY log2_degree""")),
 
     // Two-step transition structure: path counts n₂(a,c) = Σ_b c_ab·c_bc
     // — the matrix square, expressed as the keyed self-join matrix
     // multiply (the shape a distributed Markov power iteration uses) —
     // plus each row's two-step distribution in ppm. Exact integers to
     // one floor-div + one IEEE division.
-    "mine_transition_2step" -> ((s, dir) => {
+    Query("mine_transition_2step", (s, dir) => {
       def dec(c: org.apache.spark.sql.Column) = c.cast("decimal(38,0)")
       // both sides of the matrix square read the PINNED shared bigram
       // frame (§2.4; r11)
@@ -1749,7 +3321,27 @@ object GraphOlapQueries {
           (col("n2").cast("double") / col("row_total").cast("double"))
             .as("p2"))
         .orderBy("a", "c")
-    }),
+    },
+      Some("""WITH p AS (SELECT event_type AS a,
+                  lead(event_type) OVER (PARTITION BY user_id
+                    ORDER BY ts, event_id) AS b
+           FROM events),
+     c1 AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
+            FROM p WHERE b IS NOT NULL GROUP BY 1, 2),
+     n2 AS (SELECT x.a, y.b AS c,
+                   CAST(sum(CAST(x.c_ab AS HUGEINT) * y.c_ab) AS BIGINT)
+                     AS n2
+            FROM c1 x JOIN c1 y ON y.a = x.b
+            GROUP BY 1, 2),
+     rt AS (SELECT a, CAST(sum(n2) AS BIGINT) AS row_total
+            FROM n2 GROUP BY 1)
+         SELECT n2.a, n2.c, n2.n2,
+                CAST((1000000 * CAST(n2.n2 AS HUGEINT)) // rt.row_total
+                  AS BIGINT) AS p2_ppm,
+                CAST(n2.n2 AS DOUBLE) / CAST(rt.row_total AS DOUBLE)
+                  AS p2
+         FROM n2 JOIN rt ON rt.a = n2.a
+         ORDER BY n2.a, n2.c""")),
 
     // Markov removal-effect attribution (the data-driven alternative to
     // last-touch): per-user first-conversion journeys reduce to a
@@ -1763,7 +3355,7 @@ object GraphOlapQueries {
     // algebra replays in exact Long arithmetic, bitwise on every engine.
     // Removal can only cut conversion paths, so effects are provably
     // nonnegative at every truncation step.
-    "olap_attribution_markov" -> ((s, dir) => {
+    Query("olap_attribution_markov", (s, dir) => {
       val W = org.apache.spark.sql.expressions.Window
       val w = W.partitionBy("user_id").orderBy("ts", "event_id")
       val wc = w.rowsBetween(W.unboundedPreceding, 0)
@@ -1834,1996 +3426,12 @@ object GraphOlapQueries {
       out.toDF("channel", "p_base_q20", "p_removed_q20", "removal_ppm",
           "share_ppm", "removal")
         .orderBy("channel")
-    }),
-
-    // RFM segmentation over purchase events: per-user recency /
-    // frequency / monetary coded into FIXED bands — the production
-    // shape at fact scale, where global quantile codes would cost a
-    // users-sized total sort and re-drift with every batch; fixed bands
-    // are partial-aggregable end to end (one groupBy(user), a 1-row
-    // global-clock scalar, one groupBy(code) census with exact-cent
-    // revenue shares). Band edges are part of the operator's contract.
-    "olap_rfm_segments" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), to_date(col("ts")).as("d"),
-          Exact.cents(col("value")).as("c"))
-        .tracked // per-user rollup AND the global clock
-      val u = ev.groupBy("user_id")
-        .agg(max("d").as("last_d"), count(lit(1)).as("freq"),
-          sum("c").cast("long").as("mon"))
-      val clock = ev.agg(max("d").as("ref_d"))
-      val coded = u.crossJoin(broadcast(clock))
-        .withColumn("rec_days",
-          datediff(col("ref_d"), col("last_d")).cast("long"))
-        .withColumn("r_code",
-          when(col("rec_days") <= 2, 1L).when(col("rec_days") <= 5, 2L)
-            .when(col("rec_days") <= 10, 3L)
-            .when(col("rec_days") <= 20, 4L).otherwise(5L))
-        .withColumn("f_code",
-          when(col("freq") >= 20, 1L).when(col("freq") >= 15, 2L)
-            .when(col("freq") >= 12, 3L).when(col("freq") >= 8, 4L)
-            .otherwise(5L))
-        .withColumn("m_code",
-          when(col("mon") >= 100000L, 1L).when(col("mon") >= 80000L, 2L)
-            .when(col("mon") >= 60000L, 3L).when(col("mon") >= 40000L, 4L)
-            .otherwise(5L))
-      val tot = coded.agg(sum("mon").cast("long").as("grand_mon"))
-      coded.groupBy("r_code", "f_code", "m_code")
-        .agg(count(lit(1)).as("n_users"),
-          sum("mon").cast("long").as("revenue_cents"))
-        .crossJoin(broadcast(tot))
-        .select(col("r_code"), col("f_code"), col("m_code"),
-          col("n_users"), col("revenue_cents"),
-          (col("revenue_cents").cast("double")
-            / col("grand_mon").cast("double")).as("revenue_share"))
-        .orderBy("r_code", "f_code", "m_code")
-    }),
-
-    // Sequential-pattern mining with GAPS: ordered event-type pairs
-    // (a, then b) with 1–3 intervening events per user — the
-    // non-contiguous complement of mine_event_trigrams (contiguous
-    // n-grams miss "view … later purchase" motifs that skip chatter).
-    // One keyed window per gap (lead over the user's ordered stream —
-    // state bounded by the gap, never the session), then a
-    // partial-aggregable pair count with per-gap support.
-    "mine_seq_gap_pairs" -> ((s, dir) => {
-      // leads 2–4 come off the PINNED shared event-sequence frame — one
-      // cached scan per gap instead of three window passes (§2.4; r11)
-      val seq = Shared.eventSeqLeads(s, dir)
-      val pairs = (2 to 4).map(g => seq
-        .filter(col(s"l$g").isNotNull)
-        .select(col("et").as("a_type"), col(s"l$g").as("b_type"),
-          lit(g.toLong - 1).as("gap")))
-        .reduce(_ unionByName _)
-      val tot = pairs.groupBy("gap").agg(count(lit(1)).as("n_gap"))
-      pairs.groupBy("a_type", "b_type", "gap")
-        .agg(count(lit(1)).as("n"))
-        .join(broadcast(tot), "gap")
-        .select(col("a_type"), col("b_type"), col("gap"), col("n"),
-          (col("n").cast("double") / col("n_gap").cast("double"))
-            .as("support"))
-        .filter(col("n") >= 20L)
-        .orderBy("a_type", "b_type", "gap")
-    }),
-
-    // KMV set-DIFFERENCE estimate — completes the sketch set algebra
-    // (union: sketch_kmv_union; intersection share: sketch_kmv_jaccard):
-    // est(A\B) = est(A∪B) − est(B) by inclusion–exclusion, from the two
-    // k-min sketches alone (≤ k rows each, never re-touching the raw
-    // sets — the shard-merge contract). Exact |A\B| rides along via an
-    // anti-join so the estimator error is visible.
-    "sketch_kmv_difference" -> ((s, dir) => {
-      val li = Tables.lineitem(s, dir)
-      val a = li.filter(col("l_returnflag") === "R")
-      val b = li.filter(col("l_returnflag") === "A")
-      val sk = graft.olap.Sketch.kmvDifference(a, col("l_partkey"),
-        b, col("l_partkey"), k = 128)
-      val aK = a.select(col("l_partkey").as("k")).distinct()
-      val bK = b.select(col("l_partkey").as("k")).distinct()
-      sk.crossJoin(aK.join(bK, Seq("k"), "left_anti")
-        .agg(count(lit(1)).as("n_exact_diff")))
-    }),
-
-    // One synchronized Louvain sweep (phase 1, singleton init) over the
-    // co-purchase graph: each node moves to the neighbor whose community
-    // maximizes the modularity gain — at singleton init the gain of
-    // i→{j} has EXACT integer sign/order via gain_num = 2m·w_ij − k_i·k_j
-    // (w in edge-count units), so the argmax is a partial-aggregable
-    // struct-max with deterministic ties (higher gain, then lower
-    // neighbor id) and no floats anywhere. All nodes move simultaneously
-    // (the distributed variant — sequential Louvain doesn't parallelize);
-    // output is the resulting community-size histogram. One edges⋈degrees
-    // join + two node-sized groupBys.
-    "graph_louvain_step" -> ((s, dir) => {
-      val G = graft.olap.GraphFrames
-      val deg = G.coPurchaseDegrees(s, dir) // (n, d)
-      val e = G.coPurchaseEdges(s, dir) // undirected (u, v), u < v
-      // pinned symmetric co-purchase frame (§2.4; r11)
-      val sym = G.coPurchaseSym(s, dir)
-        .select(col("u").as("i"), col("v").as("j"))
-      val m2 = e.agg((count(lit(1)) * 2L).as("two_m")) // 2m = Σ degrees
-      val gains = sym
-        .join(deg.select(col("n").as("i"), col("d").as("k_i")), "i")
-        .join(deg.select(col("n").as("j"), col("d").as("k_j")), "j")
-        .crossJoin(broadcast(m2))
-        // w_ij = 1 on this simple graph; gain_num = 2m·1 − k_i·k_j
-        .withColumn("gain_num", col("two_m") - col("k_i") * col("k_j"))
-      val moved = gains.groupBy("i")
-        .agg(max(struct(col("gain_num"), (-col("j")).as("nj")))
-          .as("best"))
-        .select(col("i").as("node"),
-          when(col("best.gain_num") > 0L, -col("best.nj"))
-            .otherwise(col("i")).as("community"))
-      moved.groupBy("community").agg(count(lit(1)).as("sz"))
-        .groupBy("sz").agg(count(lit(1)).as("n_communities"))
-        .orderBy("sz")
-    }),
-
-    // One Borůvka round of the MAXIMUM-weight spanning forest over the
-    // weighted co-purchase graph (weight = shared-order count): every
-    // node picks its best incident edge under a GLOBAL total order
-    // (weight desc, then lexicographic edge id — SYMMETRIC, so both
-    // endpoints rank edges identically and the chosen set is provably a
-    // forest: cycles other than mutual picks are impossible, hence
-    // n_edges = n_nodes − n_components, the identity the spec pins).
-    // This is the distributed-MST primitive (Borůvka parallelizes;
-    // Prim/Kruskal don't): argmax is a partial-aggregable struct-max per
-    // node, components come from the engine's pointer-jumping CC.
-    "graph_mst_boruvka_round" -> ((s, dir) => {
-      // shared-order weights come off the pinned weighted edge frame —
-      // the same per-order self-join the rest of the co-purchase family
-      // derives from, built once per process+SF (VERDICT r8 item 6)
-      val w = graft.olap.GraphFrames.coPurchaseWeighted(s, dir)
-      // NOT persisted (r11): with the node count off the pinned degree
-      // frame the argmax is sym's ONLY consumer, and caching a
-      // read-once edge-scale union is pure write overhead — it's a
-      // cheap projection of the pinned weighted frame either way
-      val sym = w.select(col("u").as("i"), col("v").as("j"), col("w"))
-        .unionByName(w.select(col("v").as("i"), col("u").as("j"),
-          col("w")))
-      val chosen = sym
-        .select(col("i"), struct(col("w"),
-          (-least(col("i"), col("j"))).as("na"),
-          (-greatest(col("i"), col("j"))).as("nb")).as("k"))
-        .groupBy("i").agg(max(col("k")).as("b"))
-        .select((-col("b.na")).as("ea"), (-col("b.nb")).as("eb"))
-        .distinct()
-        .tracked // edge count + CC both scan it
-      val labels = graft.dedup.Components.canonicalLabels(
-        chosen, "ea", "eb")
-      // node count off the pinned node-sized degree frame — the weighted
-      // graph's node set ≡ the edge set's endpoints (r11; was an
-      // edge-scale distinct over sym)
-      val nNodes = graft.olap.GraphFrames.coPurchaseDegrees(s, dir)
-        .agg(count(lit(1)).as("n_nodes"))
-      val nChosen = chosen.agg(count(lit(1)).as("n_edges"))
-      labels.groupBy("canonical_id").agg(count(lit(1)).as("sz"))
-        .groupBy("sz").agg(count(lit(1)).as("n_components"))
-        .crossJoin(broadcast(nNodes))
-        .crossJoin(broadcast(nChosen))
-        .orderBy("sz")
-    }),
-
-    // Basket-width OBSERVABILITY — the graph twin of
-    // dedup_lsh_bucket_stats: the order→item-set width histogram plus
-    // the implied pair mass Σ n_orders·w(w−1)/2. This is the census a
-    // pipeline runs BEFORE the per-order pair join: one mega-basket (a
-    // crawler account, a bot order) makes the join quadratic exactly
-    // like the LSH hot bucket the scaling study measured, and this one
-    // cheap partial-aggregable pass predicts it without running the
-    // join. Two groupBys, no self-join anywhere.
-    "graph_basket_width_stats" -> ((s, dir) => {
-      graft.olap.GraphFrames.orderPartItems(s, dir)
-        .groupBy("ok").agg(count(lit(1)).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("n_orders"))
-        .withColumn("pair_mass",
-          expr("((w * (w - 1)) div 2) * n_orders"))
-        .orderBy("w")
-    }),
-
-    // The basket-width guard exercised AT a binding bound: cap 5 is
-    // BELOW the fixture max width, so whole wide baskets actually drop
-    // here and the ORACLE mirrors the cap — the guard's semantics
-    // (offending orders vanish entirely; surviving pairs and their
-    // shared-order weights are untouched) are pinned bitwise, not just
-    // the no-op case (the default-256 production path, which
-    // ScaleOpsSpec pins as the identity on this corpus). Output is the
-    // edge-weight histogram of the capped graph.
-    "graph_copurchase_capped" -> ((s, dir) => {
-      val items = graft.olap.GraphFrames.capBaskets(
-          graft.olap.GraphFrames.orderPartItems(s, dir), "ok", 5)
-        .tracked // both self-join sides read the capped frame once
-      items.as("a").join(items.as("b"),
-          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
-        .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
-        .agg(count(lit(1)).as("w"))
-        .groupBy("w").agg(count(lit(1)).as("n_edges"))
-        .orderBy("w")
-    }),
-
-    // Personalized PageRank from a seed set (every 50th part node): the
-    // "similar to these" walk primitive behind related-item recs and
-    // seed-expansion labeling. Same bitwise-portable quantized-lattice
-    // iteration as graph_pagerank (floor-scaled contributions sum as
-    // integers); the teleport mass lands on the seeds instead of
-    // uniformly, so rank decays with graph distance from them. Edge frame
-    // pre-shuffles once and persists across the 3 iterations; seeds is a
-    // node-sized predicate — no collect, no windows.
-    "graph_ppr_seeded" -> ((s, dir) => {
-      // pinned pre-partitioned symmetric edges + pinned degree frame
-      // (nodes, out-degrees, and the seed predicate's node universe all
-      // read the node-sized cached frame — guide §2.1/§2.4; r11)
-      val G = graft.olap.GraphFrames
-      val deg = G.partSuppDegrees(s, dir)
-      // seeds: part nodes whose partkey is a multiple of 50 — node ids are
-      // partkey*2, so the predicate is node_id % 100 == 0 (also implies
-      // the part side of the bipartite encoding)
-      val seeds = deg.select(col("n").as("node_id"))
-        .filter(col("node_id") % 100 === 0)
-      graft.olap.PageRank.runPersonalized(G.partSuppSym(s, dir), "src",
-          "dst", seeds, iterations = 3, edgesPinned = true,
-          nodesOpt = Some(deg.select(col("n").as("node_id"))),
-          outdegOpt = Some(deg.select(col("n").as("src"),
-            col("d").as("outdeg"))))
-        .withColumn("node_type",
-          when(col("node_id") % 2 === 0, "part").otherwise("supplier"))
-        .select(col("node_id"), col("node_type"), col("is_seed"),
-          col("rank"))
-        .orderBy(col("rank").desc, col("node_id"))
-        .limit(30)
-    }),
-
-    // Exact distinct via mergeable BITMAP segments — the production-exact
-    // counterpart to the HLL/KMV sketches: the user-id space is cut into
-    // 62-bit words (bit 62/63 stay clear so the per-word mask is a
-    // positive BIGINT on engines that range-check shifts), each
-    // (group, word) row ORs its members' bits, and distinct = Σ
-    // bit_count(word). Both stages are partial-aggregable (bit_or and sum
-    // are order-free), segments merge across shards/days by OR — the
-    // Roaring-bitmap idiom with state ∝ id-space/62 per group, not rows.
-    "olap_bitmap_distinct" -> ((s, dir) => {
-      val seg = Tables.events(s, dir)
-        .select(col("event_type"), to_date(col("ts")).as("event_date"),
-          col("user_id"))
-        .groupBy(col("event_type"), col("event_date"),
-          expr("user_id DIV 62").as("word_idx"))
-        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), " +
-          "CAST(pmod(user_id, 62) AS INT)))").as("bits"))
-      seg.groupBy("event_type", "event_date")
-        .agg(sum(bit_count(col("bits")).cast("long")).as("n_distinct"),
-          count(lit(1)).as("n_segments"))
-        .withColumn("density",
-          col("n_distinct").cast("double")
-            / (col("n_segments") * 62L).cast("double"))
-        .orderBy("event_type", "event_date")
-    }),
-
-  )
-
-  val oracles: Map[String, String] = Map(
-    "layout_compact_small_files" ->
-      """SELECT event_type, count(*) AS n,
-                CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
-                  / 100.0 AS sum_value
-         FROM events GROUP BY 1 ORDER BY 1""",
-
-    "sketch_mg_heavy" ->
-      """WITH t AS (SELECT unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9]+')) AS item
-                    FROM documents),
-              n AS (SELECT count(*) AS tot FROM t)
-         SELECT item, count(*) AS freq
-         FROM t, n GROUP BY item, tot
-         HAVING count(*) * 40 > tot
-         ORDER BY freq DESC, item ASC""",
-
-    "olap_skyline_parts" ->
-      """WITH c AS (SELECT p_brand, p_size, min(p_retailprice) AS p_retailprice
-                    FROM part GROUP BY 1, 2)
-         SELECT p_brand, p_size, p_retailprice FROM c a
-         WHERE NOT EXISTS (SELECT 1 FROM c b
-                           WHERE b.p_brand = a.p_brand
-                             AND b.p_size >= a.p_size
-                             AND b.p_retailprice <= a.p_retailprice
-                             AND (b.p_size > a.p_size
-                                  OR b.p_retailprice < a.p_retailprice))
-         ORDER BY p_brand, p_size""",
-
-    // the partitioned layout changes the SCAN, not the answer
-    "layout_partition_prune" ->
-      """SELECT CAST(ts AS DATE) AS event_date, count(*) AS n,
-                CAST(sum(CAST(round(value * 100, 0) AS BIGINT)) AS DOUBLE)
-                  / 100.0 AS sum_value
-         FROM events WHERE event_type = 'purchase'
-         GROUP BY 1 ORDER BY 1""",
-
-    // the bucketed layout changes the PLAN, not the answer: the oracle is
-    // the plain join+agg
-    "layout_bucketed_join" ->
-      """SELECT c_mktsegment, count(*) AS n_orders,
-                CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
-                  AS revenue
-         FROM orders JOIN customer ON o_custkey = c_custkey
-         GROUP BY 1 ORDER BY 1""",
-
-    // HLL registers replayed exactly: same spread hash, bucket = hv mod 512,
-    // rho = 23 - bitlength(hv div 512) (bin() is minimal-width), registers
-    // as max(rho), estimate from the exact BIGINT S = sum 2^(32-r) with one
-    // int->double conversion + one IEEE division. The ALL row recomputes
-    // registers directly from all rows — max is associative, so the
-    // engine's hll_merge of group sketches must equal it bit-for-bit.
-    "sketch_hll_distinct" ->
-      """WITH f AS (SELECT event_type, user_id,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(CAST(user_id AS VARCHAR), ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM events),
-              m1 AS (SELECT event_type, user_id,
-                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
-              m2 AS (SELECT event_type, user_id, (h1 * h1) % 2147483647 AS h2
-                     FROM m1),
-              m3 AS (SELECT event_type, user_id,
-                       (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
-              r AS (SELECT event_type, hv % 512 AS bucket,
-                      CASE WHEN hv // 512 = 0 THEN 23
-                           ELSE 23 - length(bin(hv // 512)) END AS rho
-                    FROM m3),
-              regs AS (SELECT event_type, bucket, max(rho) AS r
-                       FROM r GROUP BY 1, 2),
-              sq AS (SELECT event_type,
-                       CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
-                         + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s,
-                       512 - count(*) AS zero_regs
-                     FROM regs GROUP BY 1),
-              ex AS (SELECT event_type, count(DISTINCT user_id) AS n_exact
-                     FROM events GROUP BY 1),
-              rall AS (SELECT bucket, max(rho) AS r FROM r GROUP BY 1),
-              sqall AS (SELECT
-                          CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
-                            + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s,
-                          512 - count(*) AS zero_regs
-                        FROM rall),
-              exall AS (SELECT count(DISTINCT user_id) AS n_exact FROM events),
-              u AS (SELECT sq.event_type AS scope, sq.s, sq.zero_regs,
-                           ex.n_exact
-                    FROM sq JOIN ex ON sq.event_type = ex.event_type
-                    UNION ALL
-                    SELECT 'ALL', sqall.s, sqall.zero_regs, exall.n_exact
-                    FROM sqall, exall)
-         SELECT scope,
-                (((CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE)
-                    + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
-                  * CAST(512 AS DOUBLE)) * CAST(512 AS DOUBLE))
-                  * CAST(4294967296 AS DOUBLE) / CAST(s AS DOUBLE) AS hll_est,
-                CAST(zero_regs AS BIGINT) AS zero_regs, n_exact
-         FROM u ORDER BY scope""",
-
-    // identical estimator arithmetic: k smallest distinct portable hashes,
-    // (k-1)*M/h_k in left-associated double ops on both engines
-    "sketch_kmv_distinct" ->
-      """WITH f AS (SELECT DISTINCT
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(CAST(l_partkey AS VARCHAR), ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM lineitem),
-              m1 AS (SELECT (h0 * 1103515245 + 12345) % 2147483647 AS h1
-                     FROM f),
-              m2 AS (SELECT (h1 * h1) % 2147483647 AS h2 FROM m1),
-              h AS (SELECT DISTINCT (h2 * 69069 + 362437) % 2147483647 AS hv
-                    FROM m2),
-              t AS (SELECT hv FROM h ORDER BY hv LIMIT 256)
-         SELECT CAST(count(*) AS BIGINT) AS k_actual,
-                CAST(max(hv) AS BIGINT) AS kth_hash,
-                CASE WHEN count(*) < 256 THEN CAST(count(*) AS DOUBLE)
-                     ELSE CAST(count(*) - 1 AS DOUBLE) * 2147483647.0
-                          / CAST(max(hv) AS DOUBLE) END AS est_distinct
-         FROM t""",
-
-    "olap_abc_classification" ->
-      """WITH rev AS (SELECT l_partkey,
-                             CAST(sum(CAST(round(l_extendedprice * 100, 0)
-                               AS BIGINT)) AS BIGINT) AS cents
-                      FROM lineitem GROUP BY 1),
-              t AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents
-                    FROM rev),
-              c AS (SELECT l_partkey, cents,
-                           CAST(sum(cents) OVER (ORDER BY cents DESC,
-                             l_partkey ROWS BETWEEN UNBOUNDED PRECEDING
-                             AND CURRENT ROW) AS BIGINT) AS cum
-                    FROM rev),
-              k AS (SELECT c.cents,
-                           CASE WHEN c.cum * 100 <= t.total_cents * 80
-                                THEN 'A'
-                                WHEN c.cum * 100 <= t.total_cents * 95
-                                THEN 'B'
-                                ELSE 'C' END AS abc_class,
-                           t.total_cents
-                    FROM c, t)
-         SELECT abc_class, count(*) AS n_parts,
-                CAST(sum(cents) AS BIGINT) AS class_cents,
-                CAST(sum(cents) AS DOUBLE) / CAST(max(total_cents) AS DOUBLE)
-                  AS revenue_share
-         FROM k GROUP BY 1 ORDER BY 1""",
-
-    "olap_percent_of_parent" ->
-      """WITH pn AS (SELECT r.r_name, n.n_name,
-                            CAST(sum(CAST(round(o.o_totalprice * 100, 0)
-                              AS BIGINT)) AS BIGINT) AS nation_cents
-                     FROM orders o
-                     JOIN customer c ON c.c_custkey = o.o_custkey
-                     JOIN nation n ON n.n_nationkey = c.c_nationkey
-                     JOIN region r ON r.r_regionkey = n.n_regionkey
-                     GROUP BY 1, 2),
-              pr AS (SELECT r_name,
-                            CAST(sum(nation_cents) AS BIGINT)
-                              AS region_cents
-                     FROM pn GROUP BY 1),
-              t AS (SELECT CAST(sum(region_cents) AS BIGINT)
-                      AS total_cents FROM pr)
-         SELECT pn.r_name, pn.n_name, pn.nation_cents, pr.region_cents,
-                CAST(pn.nation_cents AS DOUBLE)
-                  / CAST(pr.region_cents AS DOUBLE) AS share_in_region,
-                CAST(pr.region_cents AS DOUBLE)
-                  / CAST(t.total_cents AS DOUBLE) AS region_share
-         FROM pn JOIN pr ON pr.r_name = pn.r_name, t
-         ORDER BY pn.r_name, pn.n_name""",
-
-    // the oracle counts triangles by the direct ordered triple join
-    // (u < v < w via the canonical edge direction) — a different
-    // algorithm from the engine's degree-ordered orientation, same count
-    "graph_triangles" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              deg AS (SELECT n, count(*) AS d
-                      FROM (SELECT u AS n FROM e
-                            UNION ALL SELECT v AS n FROM e)
-                      GROUP BY 1),
-              t AS (SELECT count(*) AS n_triangles
-                    FROM e e1
-                    JOIN e e2 ON e2.u = e1.v
-                    JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-              s AS (SELECT count(*) AS n_nodes,
-                           CAST(sum(d * (d - 1) // 2) AS BIGINT) AS n_wedges
-                    FROM deg),
-              m AS (SELECT count(*) AS n_edges FROM e)
-         SELECT s.n_nodes, m.n_edges, t.n_triangles,
-                CAST(3 AS DOUBLE) * CAST(t.n_triangles AS DOUBLE)
-                  / CAST(s.n_wedges AS DOUBLE) AS transitivity
-         FROM s, m, t""",
-
-    "graph_degree_distribution" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              deg AS (SELECT u AS n, count(*) AS d FROM e GROUP BY 1)
-         SELECT length(bin(d)) - 1 AS bucket, count(*) AS n_nodes,
-                CAST(min(d) AS BIGINT) AS min_degree,
-                CAST(max(d) AS BIGINT) AS max_degree
-         FROM deg GROUP BY 1 ORDER BY 1""",
-
-    "graph_assortativity" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              deg AS (SELECT u AS n, count(*) AS d FROM e GROUP BY 1),
-              wd AS (SELECT du.d AS ju, dv.d AS kv
-                     FROM e JOIN deg du ON du.n = e.u
-                            JOIN deg dv ON dv.n = e.v),
-              ag AS (SELECT CAST(count(*) AS BIGINT) AS m,
-                            CAST(sum(ju * kv) AS HUGEINT) AS sjk,
-                            CAST(sum(ju + kv) AS HUGEINT) AS sj,
-                            CAST(sum(ju * ju + kv * kv) AS HUGEINT) AS sj2
-                     FROM wd)
-         SELECT m,
-                CAST(CAST(4 * m * sjk - sj * sj AS BIGINT) AS DOUBLE)
-                  / CAST(CAST(2 * m * sj2 - sj * sj AS BIGINT) AS DOUBLE)
-                  AS assortativity
-         FROM ag""",
-
-    "mine_frequent_pairs" ->
-      """WITH items AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-                        FROM lineitem),
-              ic AS (SELECT pk, count(*) AS n_item FROM items GROUP BY 1),
-              lbw AS (SELECT ok FROM items GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT items.ok, items.pk FROM items
-                      JOIN lbw USING (ok)),
-              p AS (SELECT a.pk AS part_a, b.pk AS part_b,
-                           count(*) AS n_pair
-                    FROM lcp a JOIN lcp b
-                      ON a.ok = b.ok AND a.pk < b.pk
-                    GROUP BY 1, 2)
-         SELECT p.part_a, p.part_b, p.n_pair,
-                ia.n_item AS n_a, ib.n_item AS n_b,
-                CAST(p.n_pair AS DOUBLE) / CAST(ia.n_item AS DOUBLE)
-                  AS conf_a_b
-         FROM p JOIN ic ia ON ia.pk = p.part_a
-                JOIN ic ib ON ib.pk = p.part_b
-         ORDER BY p.n_pair DESC, p.part_a, p.part_b LIMIT 50""",
-
-    "graph_bfs_reach" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              d0 AS (SELECT min(src) AS node FROM e),
-              d1 AS (SELECT DISTINCT e.dst AS node
-                     FROM e JOIN d0 ON e.src = d0.node
-                     WHERE e.dst NOT IN (SELECT node FROM d0)),
-              d2 AS (SELECT DISTINCT e.dst AS node
-                     FROM e JOIN d1 ON e.src = d1.node
-                     WHERE e.dst NOT IN (SELECT node FROM d0)
-                       AND e.dst NOT IN (SELECT node FROM d1)),
-              d3 AS (SELECT DISTINCT e.dst AS node
-                     FROM e JOIN d2 ON e.src = d2.node
-                     WHERE e.dst NOT IN (SELECT node FROM d0)
-                       AND e.dst NOT IN (SELECT node FROM d1)
-                       AND e.dst NOT IN (SELECT node FROM d2))
-         SELECT 0 AS distance, count(*) AS n_nodes FROM d0
-         UNION ALL SELECT 1, count(*) FROM d1
-         UNION ALL SELECT 2, count(*) FROM d2
-         UNION ALL SELECT 3, count(*) FROM d3
-         ORDER BY distance""",
-
-    "graph_label_prop" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
-              c1 AS (SELECT e.dst AS node, l.label, count(*) AS c
-                     FROM e JOIN l0 l ON l.node = e.src GROUP BY 1, 2),
-              l1 AS (SELECT node, label FROM
-                       (SELECT node, label,
-                               row_number() OVER (PARTITION BY node
-                                 ORDER BY c DESC, label ASC) AS rn
-                        FROM c1) WHERE rn = 1),
-              c2 AS (SELECT e.dst AS node, l.label, count(*) AS c
-                     FROM e JOIN l1 l ON l.node = e.src GROUP BY 1, 2),
-              l2 AS (SELECT node, label FROM
-                       (SELECT node, label,
-                               row_number() OVER (PARTITION BY node
-                                 ORDER BY c DESC, label ASC) AS rn
-                        FROM c2) WHERE rn = 1)
-         SELECT label AS community, count(*) AS n_nodes
-         FROM l2 GROUP BY 1 ORDER BY 1""",
-
-    "graph_kcore" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e0 AS (SELECT DISTINCT a.p AS u, b.p AS v
-                     FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              d0 AS (SELECT n, count(*) AS d FROM
-                       (SELECT u AS n FROM e0 UNION ALL SELECT v AS n FROM e0)
-                     GROUP BY 1),
-              kv AS (SELECT d AS kth FROM
-                       (SELECT d, n, row_number() OVER (ORDER BY d, n) AS rn,
-                               count(*) OVER () AS cnt FROM d0)
-                     WHERE rn = (cnt + 1) // 2),
-              k1 AS (SELECT n FROM d0, kv WHERE d >= kth),
-              e1 AS (SELECT u, v FROM e0
-                     WHERE u IN (SELECT n FROM k1)
-                       AND v IN (SELECT n FROM k1)),
-              d1 AS (SELECT n, count(*) AS d FROM
-                       (SELECT u AS n FROM e1 UNION ALL SELECT v AS n FROM e1)
-                     GROUP BY 1),
-              k2 AS (SELECT n FROM d1, kv WHERE d >= kth),
-              e2 AS (SELECT u, v FROM e1
-                     WHERE u IN (SELECT n FROM k2)
-                       AND v IN (SELECT n FROM k2)),
-              d2 AS (SELECT n, count(*) AS d FROM
-                       (SELECT u AS n FROM e2 UNION ALL SELECT v AS n FROM e2)
-                     GROUP BY 1),
-              k3 AS (SELECT n FROM d2, kv WHERE d >= kth),
-              e3 AS (SELECT u, v FROM e2
-                     WHERE u IN (SELECT n FROM k3)
-                       AND v IN (SELECT n FROM k3))
-         SELECT 0 AS round,
-                (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e0
-                   UNION ALL SELECT v AS n FROM e0)) AS n_nodes,
-                (SELECT count(*) FROM e0) AS n_edges
-         UNION ALL
-         SELECT 1, (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e1
-                      UNION ALL SELECT v AS n FROM e1)),
-                (SELECT count(*) FROM e1)
-         UNION ALL
-         SELECT 2, (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e2
-                      UNION ALL SELECT v AS n FROM e2)),
-                (SELECT count(*) FROM e2)
-         UNION ALL
-         SELECT 3, (SELECT count(DISTINCT n) FROM (SELECT u AS n FROM e3
-                      UNION ALL SELECT v AS n FROM e3)),
-                (SELECT count(*) FROM e3)
-         ORDER BY round""",
-
-    "graph_pagerank" -> {
-      def iter(i: Int, prev: String): String =
-        s"""c$i AS (SELECT src,
-                      CAST(floor(rank / CAST(d AS DOUBLE)
-                        * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS c
-                    FROM $prev JOIN outdeg ON node_id = src),
-             s$i AS (SELECT dst AS node_id, CAST(sum(c) AS BIGINT) AS sc
-                     FROM edges JOIN c$i USING (src) GROUP BY 1),
-             r$i AS (SELECT n2.node_id,
-                       CAST(0.15 AS DOUBLE) + CAST(0.85 AS DOUBLE)
-                         * (CAST(coalesce(sc, 0) AS DOUBLE)
-                            / CAST(1000000000000 AS DOUBLE)) AS rank
-                     FROM nodes n2 LEFT JOIN s$i USING (node_id))"""
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey * 2 AS src,
-                        l_suppkey * 2 + 1 AS dst FROM lineitem),
-              edges AS (SELECT src, dst FROM e0
-                        UNION ALL SELECT e0.dst AS src, e0.src AS dst FROM e0),
-              nodes AS (SELECT DISTINCT src AS node_id FROM edges),
-              nn AS (SELECT count(*) AS n FROM nodes),
-              outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1),
-              r0 AS (SELECT node_id, CAST(1 AS DOUBLE) / CAST(n AS DOUBLE)
-                       AS rank FROM nodes, nn),
-              ${iter(1, "r0")},
-              ${iter(2, "r1")},
-              ${iter(3, "r2")}
-         SELECT node_id,
-                CASE WHEN node_id % 2 = 0 THEN 'part' ELSE 'supplier' END
-                  AS node_type,
-                rank
-         FROM r3 ORDER BY rank DESC, node_id LIMIT 50"""
     },
-
-    "sketch_cms_topk" ->
-      """WITH tok AS (SELECT unnest(regexp_extract_all(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), '[a-z0-9]+')) AS token
-                     FROM documents),
-              f AS (SELECT token,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(token, ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM tok),
-              m1 AS (SELECT token,
-                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
-              m2 AS (SELECT token, (h1 * h1) % 2147483647 AS h2 FROM m1),
-              sp AS (SELECT token,
-                       (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
-              bk AS (SELECT token, hv % 1024 AS b0,
-                       ((hv * 69069 + 362437) % 2147483647) % 1024 AS b1,
-                       ((hv * 1103515245 + 12345) % 2147483647) % 1024 AS b2
-                     FROM sp),
-              cms AS (SELECT r, bucket, count(*) AS counter FROM (
-                        SELECT 0 AS r, b0 AS bucket FROM bk
-                        UNION ALL SELECT 1, b1 FROM bk
-                        UNION ALL SELECT 2, b2 FROM bk)
-                      GROUP BY 1, 2),
-              dtok AS (SELECT DISTINCT token, b0, b1, b2 FROM bk),
-              probe AS (SELECT token, 0 AS r, b0 AS bucket FROM dtok
-                        UNION ALL SELECT token, 1, b1 FROM dtok
-                        UNION ALL SELECT token, 2, b2 FROM dtok),
-              est AS (SELECT token, CAST(min(counter) AS BIGINT) AS est_n
-                      FROM probe JOIN cms USING (r, bucket) GROUP BY 1),
-              exact AS (SELECT token, count(*) AS exact_n FROM tok GROUP BY 1)
-         SELECT token, exact_n, est_n FROM exact JOIN est USING (token)
-         ORDER BY exact_n DESC, token ASC LIMIT 20""",
-
-    "sketch_histogram_quantiles" ->
-      """WITH v AS (SELECT event_type,
-                      CAST(round(value * 100, 0) AS BIGINT) AS cents
-                    FROM events),
-              n AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
-              hist AS (SELECT event_type, cents // 1000 AS bin,
-                         count(*) AS cnt
-                       FROM v GROUP BY 1, 2),
-              cum AS (SELECT event_type, bin,
-                        CAST(sum(cnt) OVER (PARTITION BY event_type
-                               ORDER BY bin ROWS BETWEEN UNBOUNDED PRECEDING
-                               AND CURRENT ROW) AS BIGINT) AS cum
-                      FROM hist),
-              ps AS (SELECT event_type, n, CAST(u.p AS BIGINT) AS p,
-                       (n * u.p + 99) // 100 AS k
-                     FROM n, unnest([50, 90, 99]) AS u(p)),
-              est AS (SELECT cum.event_type, p, min(bin) AS est_bin
-                      FROM cum JOIN ps USING (event_type)
-                      WHERE cum >= k GROUP BY 1, 2),
-              e2 AS (SELECT event_type, p,
-                       CAST(est_bin * 1000 + 500 AS DOUBLE)
-                         / CAST(100 AS DOUBLE) AS est_value
-                     FROM est),
-              r AS (SELECT event_type, cents,
-                      row_number() OVER (PARTITION BY event_type
-                                         ORDER BY cents) AS rn
-                    FROM v),
-              ex AS (SELECT r.event_type, p,
-                       CAST(cents AS DOUBLE) / CAST(100 AS DOUBLE)
-                         AS exact_value
-                     FROM r JOIN ps USING (event_type) WHERE rn = k)
-         SELECT event_type, p, est_value, exact_value
-         FROM e2 JOIN ex USING (event_type, p) ORDER BY 1, 2""",
-
-    "link_block_levenshtein" ->
-      """WITH d AS (SELECT doc_id, lang, text, n_chars // 16 AS blk,
-                           split_part(text, ' ', 1) AS ft
-                    FROM documents),
-              p AS (SELECT a.lang,
-                      CAST(levenshtein(a.text, b.text) AS BIGINT) AS lev
-                    FROM d a JOIN d b
-                      ON a.lang = b.lang AND a.blk = b.blk AND a.ft = b.ft
-                     AND a.doc_id < b.doc_id)
-         SELECT lang, count(*) AS n_pairs, min(lev) AS min_lev,
-                CAST(sum(lev) AS BIGINT) AS sum_lev,
-                CAST(sum(CASE WHEN lev <= 64 THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_close
-         FROM p GROUP BY 1 ORDER BY 1""",
-
-    "link_block_damerau" ->
-      """WITH d AS (SELECT doc_id, lang, text, n_chars // 16 AS blk,
-                           split_part(text, ' ', 1) AS ft
-                    FROM documents),
-              p AS (SELECT a.lang,
-                      CAST(damerau_levenshtein(a.text, b.text) AS BIGINT)
-                        AS dl
-                    FROM d a JOIN d b
-                      ON a.lang = b.lang AND a.blk = b.blk AND a.ft = b.ft
-                     AND a.doc_id < b.doc_id)
-         SELECT lang, count(*) AS n_pairs, min(dl) AS min_dl,
-                CAST(sum(dl) AS BIGINT) AS sum_dl,
-                CAST(sum(CASE WHEN dl <= 64 THEN 1 ELSE 0 END) AS BIGINT)
-                  AS n_close
-         FROM p GROUP BY 1 ORDER BY 1""",
-
-    // per-group k-min sketches; the union row re-takes the k smallest of
-    // the UNION OF THE SKETCH ROWS only (mergeability), never the raw data
-    "sketch_kmv_union" ->
-      """WITH f AS (SELECT DISTINCT l_returnflag AS scope,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(CAST(l_partkey AS VARCHAR), ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM lineitem),
-              m1 AS (SELECT scope,
-                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
-              m2 AS (SELECT scope, (h1 * h1) % 2147483647 AS h2 FROM m1),
-              h AS (SELECT DISTINCT scope,
-                      (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
-              r AS (SELECT scope, hv, row_number() OVER (PARTITION BY scope
-                      ORDER BY hv) AS rn FROM h),
-              sk AS (SELECT scope, hv FROM r WHERE rn <= 128),
-              per AS (SELECT scope, CAST(count(*) AS BIGINT) AS k_actual,
-                        CAST(max(hv) AS BIGINT) AS kth_hash,
-                        CASE WHEN count(*) < 128 THEN CAST(count(*) AS DOUBLE)
-                             ELSE CAST(count(*) - 1 AS DOUBLE) * 2147483647.0
-                                  / CAST(max(hv) AS DOUBLE)
-                        END AS est_distinct
-                      FROM sk GROUP BY 1),
-              u AS (SELECT DISTINCT hv FROM sk ORDER BY hv LIMIT 128),
-              uni AS (SELECT '__union' AS scope,
-                        CAST(count(*) AS BIGINT) AS k_actual,
-                        CAST(max(hv) AS BIGINT) AS kth_hash,
-                        CASE WHEN count(*) < 128 THEN CAST(count(*) AS DOUBLE)
-                             ELSE CAST(count(*) - 1 AS DOUBLE) * 2147483647.0
-                                  / CAST(max(hv) AS DOUBLE)
-                        END AS est_distinct
-                      FROM u)
-         SELECT * FROM per UNION ALL SELECT * FROM uni ORDER BY scope""",
-
-    // spread("key#salt") % bits on both sides; candidacy = all 3 positions
-    // set; n_false_pos is the filter's exact false-positive tally
-    "sketch_bloom_join" ->
-      """WITH bk AS (SELECT DISTINCT o_orderkey AS k FROM orders
-                     WHERE CAST(o_orderdate AS DATE) >= DATE '1996-01-01'
-                       AND CAST(o_orderdate AS DATE) < DATE '1996-02-01'),
-              pk AS (SELECT DISTINCT l_orderkey AS k FROM lineitem),
-              bs AS (SELECT k, CAST(unnest(generate_series(0, 2)) AS INT)
-                       AS salt FROM bk),
-              bf AS (SELECT
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(
-                          CAST(k AS VARCHAR) || '#' || CAST(salt AS VARCHAR),
-                          ''), ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                     FROM bs),
-              bm1 AS (SELECT (h0 * 1103515245 + 12345) % 2147483647 AS h1
-                      FROM bf),
-              bm2 AS (SELECT (h1 * h1) % 2147483647 AS h2 FROM bm1),
-              bpos AS (SELECT DISTINCT
-                         ((h2 * 69069 + 362437) % 2147483647) % 65536 AS pos
-                       FROM bm2),
-              ps AS (SELECT k, CAST(unnest(generate_series(0, 2)) AS INT)
-                       AS salt FROM pk),
-              pf AS (SELECT k,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(
-                          CAST(k AS VARCHAR) || '#' || CAST(salt AS VARCHAR),
-                          ''), ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                     FROM ps),
-              pm1 AS (SELECT k, (h0 * 1103515245 + 12345) % 2147483647 AS h1
-                      FROM pf),
-              pm2 AS (SELECT k, (h1 * h1) % 2147483647 AS h2 FROM pm1),
-              ppos AS (SELECT k,
-                         ((h2 * 69069 + 362437) % 2147483647) % 65536 AS pos
-                       FROM pm2),
-              hits AS (SELECT k, count(*) AS n_hit
-                       FROM ppos JOIN bpos USING (pos) GROUP BY 1),
-              cand AS (SELECT k FROM hits WHERE n_hit = 3)
-         SELECT (SELECT count(*) FROM pk) AS n_probe_keys,
-                (SELECT count(*) FROM pk
-                 WHERE k IN (SELECT k FROM bk)) AS n_true,
-                (SELECT count(*) FROM cand) AS n_candidates,
-                (SELECT count(*) FROM cand)
-                  - (SELECT count(*) FROM pk
-                     WHERE k IN (SELECT k FROM bk)) AS n_false_pos""",
-
-    "layout_zorder_key" ->
-      """WITH d AS (SELECT DISTINCT user_id,
-                      CAST(CAST(ts AS DATE) - DATE '1970-01-01' AS BIGINT)
-                        AS day
-                    FROM events)
-         SELECT user_id, day,
-                CAST(list_sum(list_transform(generate_series(0, 15), i ->
-                  (((user_id >> i) & 1) << (2 * i))
-                  + (((day >> i) & 1) << (2 * i + 1)))) AS BIGINT) AS zkey
-         FROM d ORDER BY zkey, user_id, day LIMIT 200""",
-
-    "sketch_kmv_jaccard" ->
-      """WITH f0 AS (SELECT DISTINCT l_returnflag AS scope, l_partkey
-                     FROM lineitem WHERE l_returnflag IN ('R', 'A')),
-              f AS (SELECT scope, l_partkey,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(CAST(l_partkey AS VARCHAR), ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM f0),
-              m1 AS (SELECT scope,
-                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
-              m2 AS (SELECT scope, (h1 * h1) % 2147483647 AS h2 FROM m1),
-              h AS (SELECT DISTINCT scope,
-                      (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
-              sa AS (SELECT hv FROM h WHERE scope = 'R'
-                     ORDER BY hv LIMIT 128),
-              sb AS (SELECT hv FROM h WHERE scope = 'A'
-                     ORDER BY hv LIMIT 128),
-              m AS (SELECT DISTINCT hv FROM
-                      (SELECT hv FROM sa UNION ALL SELECT hv FROM sb)
-                    ORDER BY hv LIMIT 128),
-              nb AS (SELECT count(*) AS n_both FROM m
-                     WHERE hv IN (SELECT hv FROM sa)
-                       AND hv IN (SELECT hv FROM sb)),
-              ni AS (SELECT count(DISTINCT a.l_partkey) AS n_inter
-                     FROM f0 a JOIN f0 b ON a.l_partkey = b.l_partkey
-                     WHERE a.scope = 'R' AND b.scope = 'A'),
-              nu AS (SELECT count(DISTINCT l_partkey) AS n_union FROM f0)
-         SELECT (SELECT count(*) FROM m) AS k_merged,
-                (SELECT n_both FROM nb) AS n_both,
-                CAST((SELECT n_both FROM nb) AS DOUBLE)
-                  / CAST((SELECT count(*) FROM m) AS DOUBLE) AS jaccard_est,
-                (SELECT n_inter FROM ni) AS n_inter,
-                (SELECT n_union FROM nu) AS n_union,
-                CAST((SELECT n_inter FROM ni) AS DOUBLE)
-                  / CAST((SELECT n_union FROM nu) AS DOUBLE)
-                  AS jaccard_exact""",
-
-    // per-node triangle counts from the ordered triple join (u < v < w,
-    // each triangle exactly once, credited to all three corners) — a
-    // different algorithm from the engine's oriented-intersect explode
-    "graph_clustering_coeff" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              deg AS (SELECT n, count(*) AS d
-                      FROM (SELECT u AS n FROM e
-                            UNION ALL SELECT v AS n FROM e)
-                      GROUP BY 1),
-              t3 AS (SELECT e1.u AS u, e1.v AS v, e2.v AS w
-                     FROM e e1
-                     JOIN e e2 ON e2.u = e1.v
-                     JOIN e e3 ON e3.u = e1.u AND e3.v = e2.v),
-              corners AS (SELECT u AS n FROM t3
-                          UNION ALL SELECT v FROM t3
-                          UNION ALL SELECT w FROM t3),
-              tc AS (SELECT n, count(*) AS t FROM corners GROUP BY 1),
-              nd AS (SELECT deg.n, deg.d, coalesce(tc.t, 0) AS t
-                     FROM deg LEFT JOIN tc USING (n)),
-              b AS (SELECT CASE WHEN d < 2 THEN -1
-                                ELSE least((20 * t) // (d * (d - 1)), 9)
-                           END AS cc_decile,
-                           CASE WHEN d < 2 THEN 0
-                                ELSE (2000000 * t) // (d * (d - 1))
-                           END AS ccm, t
-                    FROM nd)
-         SELECT CAST(cc_decile AS BIGINT) AS cc_decile,
-                count(*) AS n_nodes,
-                CAST(sum(t) AS BIGINT) AS sum_tri,
-                CAST(sum(ccm) AS BIGINT) AS sum_cc_micro
-         FROM b GROUP BY 1 ORDER BY 1""",
-
-    "graph_common_neighbors" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              sym AS (SELECT u AS c, v AS x FROM e
-                      UNION ALL SELECT v, u FROM e),
-              okc AS (SELECT c FROM (SELECT c, count(*) AS dc FROM sym
-                                     GROUP BY 1)
-                      WHERE dc <= 32),
-              w AS (SELECT s1.x AS x, s2.x AS y
-                    FROM sym s1
-                    JOIN sym s2 ON s1.c = s2.c AND s1.x < s2.x
-                    WHERE s1.c IN (SELECT c FROM okc)),
-              cn AS (SELECT x, y, count(*) AS cn FROM w GROUP BY 1, 2),
-              nz AS (SELECT cn.x, cn.y, cn.cn FROM cn
-                     WHERE NOT EXISTS (SELECT 1 FROM e
-                                       WHERE e.u = cn.x AND e.v = cn.y))
-         SELECT x, y, cn FROM nz
-         ORDER BY cn DESC, x, y LIMIT 20""",
-
-    "graph_jaccard_links" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              sym AS (SELECT u AS c, v AS x FROM e
-                      UNION ALL SELECT v, u FROM e),
-              deg AS (SELECT c, count(*) AS dc FROM sym GROUP BY 1),
-              w AS (SELECT s1.x AS x, s2.x AS y
-                    FROM sym s1
-                    JOIN sym s2 ON s1.c = s2.c AND s1.x < s2.x
-                    WHERE s1.c IN (SELECT c FROM deg WHERE dc <= 64)),
-              cn AS (SELECT x, y, count(*) AS cn FROM w GROUP BY 1, 2),
-              nz AS (SELECT cn.x, cn.y, cn.cn FROM cn
-                     WHERE NOT EXISTS (SELECT 1 FROM e
-                                       WHERE e.u = cn.x AND e.v = cn.y))
-         SELECT nz.x, nz.y, nz.cn, dx.dc AS du, dy.dc AS dv,
-                CAST(nz.cn AS DOUBLE)
-                  / CAST(dx.dc + dy.dc - nz.cn AS DOUBLE) AS jaccard
-         FROM nz
-         JOIN deg dx ON dx.c = nz.x
-         JOIN deg dy ON dy.c = nz.y
-         ORDER BY jaccard DESC, x, y LIMIT 20""",
-
-    // the same 2-round LPA unroll as graph_label_prop, extended with the
-    // exact rational modularity of the resulting partition
-    "graph_modularity" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
-              c1 AS (SELECT e.dst AS node, l.label, count(*) AS c
-                     FROM e JOIN l0 l ON l.node = e.src GROUP BY 1, 2),
-              l1 AS (SELECT node, label FROM
-                       (SELECT node, label,
-                               row_number() OVER (PARTITION BY node
-                                 ORDER BY c DESC, label ASC) AS rn
-                        FROM c1) WHERE rn = 1),
-              c2 AS (SELECT e.dst AS node, l.label, count(*) AS c
-                     FROM e JOIN l1 l ON l.node = e.src GROUP BY 1, 2),
-              l2 AS (SELECT node, label FROM
-                       (SELECT node, label,
-                               row_number() OVER (PARTITION BY node
-                                 ORDER BY c DESC, label ASC) AS rn
-                        FROM c2) WHERE rn = 1),
-              mm AS (SELECT CAST(count(*) AS BIGINT) AS m_edges FROM pairs),
-              intra AS (SELECT CAST(sum(CASE WHEN la.label = lb.label
-                                             THEN 1 ELSE 0 END) AS BIGINT)
-                               AS intra_edges
-                        FROM pairs p
-                        JOIN l2 la ON la.node = p.l_partkey * 2
-                        JOIN l2 lb ON lb.node = p.l_suppkey * 2 + 1),
-              deg AS (SELECT src AS node, count(*) AS d FROM e GROUP BY 1),
-              dc AS (SELECT l.label, CAST(sum(deg.d) AS BIGINT) AS dsum
-                     FROM l2 l JOIN deg ON deg.node = l.node GROUP BY 1),
-              ds AS (SELECT count(*) AS n_communities,
-                            CAST(sum(dsum * dsum) AS BIGINT) AS sum_dc2
-                     FROM dc)
-         SELECT ds.n_communities, mm.m_edges, intra.intra_edges,
-                CAST(4 * mm.m_edges * intra.intra_edges - ds.sum_dc2
-                     AS BIGINT) AS q_num,
-                CAST(4 * mm.m_edges * mm.m_edges AS BIGINT) AS q_den,
-                CAST(CAST(4 * mm.m_edges * intra.intra_edges - ds.sum_dc2
-                          AS BIGINT) AS DOUBLE)
-                  / CAST(CAST(4 * mm.m_edges * mm.m_edges AS BIGINT)
-                         AS DOUBLE) AS modularity
-         FROM mm, intra, ds""",
-
-    "mine_event_trigrams" ->
-      """WITH s AS (SELECT event_type AS e1,
-                           lead(event_type, 1) OVER w AS e2,
-                           lead(event_type, 2) OVER w AS e3
-                    FROM events
-                    WINDOW w AS (PARTITION BY user_id
-                                 ORDER BY ts, event_id))
-         SELECT e1, e2, e3, count(*) AS n FROM s
-         WHERE e3 IS NOT NULL
-         GROUP BY 1, 2, 3
-         ORDER BY n DESC, e1, e2, e3 LIMIT 10""",
-
-    "olap_audience_overlap" ->
-      """WITH m AS (SELECT DISTINCT user_id, event_type FROM events),
-              sz AS (SELECT event_type, count(*) AS sz FROM m GROUP BY 1),
-              ov AS (SELECT a.event_type AS type_a, b.event_type AS type_b,
-                            count(*) AS n_shared
-                     FROM m a JOIN m b ON a.user_id = b.user_id
-                     WHERE a.event_type <= b.event_type
-                     GROUP BY 1, 2)
-         SELECT ov.type_a, ov.type_b, ov.n_shared,
-                CAST(ov.n_shared AS DOUBLE)
-                  / CAST(sa.sz + sb.sz - ov.n_shared AS DOUBLE) AS jaccard
-         FROM ov
-         JOIN sz sa ON sa.event_type = ov.type_a
-         JOIN sz sb ON sb.event_type = ov.type_b
-         ORDER BY type_a, type_b""",
-
-    // the same portable register emulation as sketch_hll_distinct,
-    // restricted to the two sets, plus the register-wise union merge
-    "sketch_hll_intersection" ->
-      """WITH f0 AS (SELECT event_type, user_id FROM events
-                     WHERE event_type IN ('click', 'view')),
-              f AS (SELECT event_type, user_id,
-                      list_reduce(list_prepend(CAST(0 AS BIGINT),
-                        list_transform(string_split(CAST(user_id AS VARCHAR), ''),
-                          ch -> CAST(ascii(ch) AS BIGINT))),
-                        (a, c) -> (a * 31 + c) % 2147483647) AS h0
-                    FROM f0),
-              m1 AS (SELECT event_type, user_id,
-                       (h0 * 1103515245 + 12345) % 2147483647 AS h1 FROM f),
-              m2 AS (SELECT event_type, user_id, (h1 * h1) % 2147483647 AS h2
-                     FROM m1),
-              m3 AS (SELECT event_type, user_id,
-                       (h2 * 69069 + 362437) % 2147483647 AS hv FROM m2),
-              r AS (SELECT event_type, hv % 512 AS bucket,
-                      CASE WHEN hv // 512 = 0 THEN 23
-                           ELSE 23 - length(bin(hv // 512)) END AS rho
-                    FROM m3),
-              regs AS (SELECT event_type, bucket, max(rho) AS r
-                       FROM r GROUP BY 1, 2),
-              sq AS (SELECT event_type,
-                       CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
-                         + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s
-                     FROM regs GROUP BY 1),
-              rall AS (SELECT bucket, max(rho) AS r FROM r GROUP BY 1),
-              squ AS (SELECT
-                        CAST(sum(CAST(1 AS BIGINT) << (32 - r)) AS BIGINT)
-                          + (512 - count(*)) * CAST(4294967296 AS BIGINT) AS s
-                      FROM rall),
-              e AS (SELECT event_type,
-                      (((CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE)
-                          + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
-                        * CAST(512 AS DOUBLE)) * CAST(512 AS DOUBLE))
-                        * CAST(4294967296 AS DOUBLE) / CAST(s AS DOUBLE)
-                        AS est
-                    FROM sq),
-              eu AS (SELECT
-                       (((CAST(0.7213 AS DOUBLE) / (CAST(1 AS DOUBLE)
-                           + CAST(1.079 AS DOUBLE) / CAST(512 AS DOUBLE)))
-                         * CAST(512 AS DOUBLE)) * CAST(512 AS DOUBLE))
-                         * CAST(4294967296 AS DOUBLE) / CAST(s AS DOUBLE)
-                         AS est_union
-                     FROM squ),
-              es AS (SELECT
-                       max(CASE WHEN event_type = 'click' THEN est END)
-                         AS est_a,
-                       max(CASE WHEN event_type = 'view' THEN est END)
-                         AS est_b
-                     FROM e),
-              ex AS (SELECT
-                       count(DISTINCT CASE WHEN event_type = 'click'
-                                           THEN user_id END) AS n_a,
-                       count(DISTINCT CASE WHEN event_type = 'view'
-                                           THEN user_id END) AS n_b
-                     FROM f0),
-              xi AS (SELECT count(*) AS n_inter_exact FROM
-                       (SELECT DISTINCT a.user_id
-                        FROM f0 a JOIN f0 b ON a.user_id = b.user_id
-                        WHERE a.event_type = 'click'
-                          AND b.event_type = 'view'))
-         SELECT es.est_a, es.est_b, eu.est_union,
-                es.est_a + es.est_b - eu.est_union AS est_inter,
-                ex.n_a, ex.n_b, xi.n_inter_exact
-         FROM es, eu, ex, xi""",
-
-    "olap_period_over_period" ->
-      """WITH w AS (SELECT event_type,
-                           CAST(date_trunc('week', ts) AS DATE) AS week,
-                           CAST(sum(CAST(round(value * 100, 0) AS BIGINT))
-                                AS BIGINT) AS cents
-                    FROM events GROUP BY 1, 2),
-              l AS (SELECT event_type, week, cents,
-                           lag(cents, 1) OVER (PARTITION BY event_type
-                                               ORDER BY week) AS prev_cents
-                    FROM w)
-         SELECT event_type, week, cents, prev_cents,
-                CASE WHEN prev_cents IS NOT NULL AND prev_cents <> 0
-                     THEN CAST(cents - prev_cents AS DOUBLE)
-                            / CAST(prev_cents AS DOUBLE)
-                END AS growth
-         FROM l ORDER BY event_type, week""",
-
-    "olap_distinct_rollup" ->
-      """WITH g AS (SELECT user_id,
-                           epoch_us(ts) // 86400000000 AS day,
-                           CAST(date_trunc('week', ts) AS DATE) AS week,
-                           CAST(date_trunc('month', ts) AS DATE) AS month
-                    FROM events)
-         SELECT CASE WHEN day IS NOT NULL THEN '1_day'
-                     WHEN week IS NOT NULL THEN '2_week'
-                     ELSE '3_month' END AS grain,
-                coalesce(CAST(day AS VARCHAR), CAST(week AS VARCHAR),
-                         CAST(month AS VARCHAR)) AS bucket,
-                count(DISTINCT user_id) AS n_users,
-                count(*) AS n_events
-         FROM g GROUP BY GROUPING SETS ((day), (week), (month))
-         ORDER BY grain, bucket""",
-
-    "mine_transition_matrix" ->
-      """WITH s AS (SELECT event_type AS e_from,
-                           lead(event_type, 1) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS e_to
-                    FROM events),
-              p AS (SELECT e_from, e_to, count(*) AS n FROM s
-                    WHERE e_to IS NOT NULL GROUP BY 1, 2),
-              t AS (SELECT e_from, CAST(sum(n) AS BIGINT) AS row_n
-                    FROM p GROUP BY 1)
-         SELECT p.e_from, p.e_to, p.n,
-                CAST(p.n AS DOUBLE) / CAST(t.row_n AS DOUBLE) AS prob
-         FROM p JOIN t ON t.e_from = p.e_from
-         ORDER BY p.e_from, p.e_to""",
-
-    "graph_hits" ->
-      """WITH e AS (SELECT DISTINCT l_partkey AS p, l_suppkey AS sk
-                    FROM lineitem),
-              h0 AS (SELECT DISTINCT p, CAST(1 AS BIGINT) AS hv FROM e),
-              a1r AS (SELECT e.sk, CAST(sum(h0.hv) AS BIGINT) AS av
-                      FROM e JOIN h0 ON h0.p = e.p GROUP BY 1),
-              a1m AS (SELECT max(av) AS mx FROM a1r),
-              a1 AS (SELECT sk, (av * 4096) // mx AS av FROM a1r, a1m),
-              h1r AS (SELECT e.p, CAST(sum(a1.av) AS BIGINT) AS hv
-                      FROM e JOIN a1 ON a1.sk = e.sk GROUP BY 1),
-              h1m AS (SELECT max(hv) AS mx FROM h1r),
-              h1 AS (SELECT p, (hv * 4096) // mx AS hv FROM h1r, h1m),
-              a2r AS (SELECT e.sk, CAST(sum(h1.hv) AS BIGINT) AS av
-                      FROM e JOIN h1 ON h1.p = e.p GROUP BY 1),
-              a2m AS (SELECT max(av) AS mx FROM a2r),
-              a2 AS (SELECT sk, (av * 4096) // mx AS av FROM a2r, a2m),
-              h2r AS (SELECT e.p, CAST(sum(a2.av) AS BIGINT) AS hv
-                      FROM e JOIN a2 ON a2.sk = e.sk GROUP BY 1),
-              h2m AS (SELECT max(hv) AS mx FROM h2r),
-              h2 AS (SELECT p, (hv * 4096) // mx AS hv FROM h2r, h2m),
-              top AS (SELECT 'hub' AS role, p AS node,
-                             CAST(hv AS BIGINT) AS score
-                      FROM h2 ORDER BY score DESC, node LIMIT 10),
-              topa AS (SELECT 'authority' AS role, sk AS node,
-                              CAST(av AS BIGINT) AS score
-                       FROM a2 ORDER BY score DESC, node LIMIT 10)
-         SELECT * FROM (SELECT * FROM top UNION ALL SELECT * FROM topa)
-         ORDER BY role, score DESC, node""",
-
-    "graph_katz_centrality" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              v0 AS (SELECT DISTINCT src AS node, CAST(1 AS BIGINT) AS katz
-                     FROM e),
-              v1 AS (SELECT e.src AS node,
-                            CAST(1 + CAST(sum(v0.katz) AS BIGINT) // 4
-                                 AS BIGINT) AS katz
-                     FROM e JOIN v0 ON v0.node = e.dst GROUP BY e.src),
-              v2 AS (SELECT e.src AS node,
-                            CAST(1 + CAST(sum(v1.katz) AS BIGINT) // 4
-                                 AS BIGINT) AS katz
-                     FROM e JOIN v1 ON v1.node = e.dst GROUP BY e.src),
-              v3 AS (SELECT e.src AS node,
-                            CAST(1 + CAST(sum(v2.katz) AS BIGINT) // 4
-                                 AS BIGINT) AS katz
-                     FROM e JOIN v2 ON v2.node = e.dst GROUP BY e.src)
-         SELECT node, katz FROM v3
-         ORDER BY katz DESC, node LIMIT 20""",
-
-    "mine_association_rules" ->
-      """WITH i AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-                    FROM lineitem),
-              nb AS (SELECT count(DISTINCT ok) AS n_baskets FROM i),
-              ic AS (SELECT pk, count(*) AS n_item FROM i GROUP BY 1),
-              lbw AS (SELECT ok FROM i GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT i.ok, i.pk FROM i JOIN lbw USING (ok)),
-              p AS (SELECT a.pk AS part_a, b.pk AS part_b,
-                           count(*) AS n_pair
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.pk < b.pk
-                    GROUP BY 1, 2 HAVING count(*) >= 3)
-         SELECT p.part_a, p.part_b, p.n_pair,
-                ia.n_item AS n_a, ib.n_item AS n_b, nb.n_baskets,
-                CAST(p.n_pair AS DOUBLE) / CAST(ia.n_item AS DOUBLE)
-                  AS conf_a_b,
-                CAST(p.n_pair AS DOUBLE) / CAST(ib.n_item AS DOUBLE)
-                  AS conf_b_a,
-                CAST(CAST(CAST(p.n_pair AS HUGEINT) * nb.n_baskets AS BIGINT) AS DOUBLE)
-                  / CAST(CAST(CAST(ia.n_item AS HUGEINT) * ib.n_item AS BIGINT) AS DOUBLE)
-                  AS lift,
-                CAST(CAST(CAST(p.n_pair AS HUGEINT) * nb.n_baskets
-                     - CAST(ia.n_item AS HUGEINT) * ib.n_item AS BIGINT) AS DOUBLE)
-                  / CAST(CAST(CAST(nb.n_baskets AS HUGEINT) * nb.n_baskets AS BIGINT) AS DOUBLE) AS leverage
-         FROM p
-         JOIN ic ia ON ia.pk = p.part_a
-         JOIN ic ib ON ib.pk = p.part_b
-         CROSS JOIN nb
-         ORDER BY lift DESC, part_a, part_b LIMIT 25""",
-
-    "olap_peak_concurrency" ->
-      """WITH h AS (SELECT CAST(ts AS DATE) AS dt,
-                           date_trunc('hour', ts) AS hr,
-                           count(DISTINCT user_id) AS u
-                    FROM events GROUP BY 1, 2)
-         SELECT dt, count(*) AS n_active_hours,
-                CAST(max(u) AS BIGINT) AS peak_hourly_users,
-                CAST(sum(u) AS BIGINT) AS user_hours
-         FROM h GROUP BY 1 ORDER BY 1""",
-
-    "olap_intervisit_gap" ->
-      """WITH o AS (SELECT event_type, user_id, ts,
-                           lag(ts) OVER (PARTITION BY event_type, user_id
-                             ORDER BY ts, event_id) AS pts
-                    FROM events),
-              g AS (SELECT event_type,
-                           CAST(datediff('microsecond', pts, ts)
-                                // 60000000 AS BIGINT) AS gap_min
-                    FROM o WHERE pts IS NOT NULL),
-              h AS (SELECT event_type, gap_min, count(*) AS m
-                    FROM g GROUP BY 1, 2),
-              c AS (SELECT event_type, gap_min, m,
-                           CAST(sum(m) OVER (PARTITION BY event_type
-                             ORDER BY gap_min ROWS BETWEEN UNBOUNDED
-                             PRECEDING AND CURRENT ROW) AS BIGINT) AS cum,
-                           CAST(sum(m) OVER (PARTITION BY event_type)
-                                AS BIGINT) AS n
-                    FROM h)
-         SELECT event_type, max(n) AS n_gaps,
-                CAST(min(CASE WHEN cum * 2 >= n + 1 THEN gap_min END)
-                     AS BIGINT) AS median_gap_min,
-                CAST(min(CASE WHEN cum * 10 >= n * 9 THEN gap_min END)
-                     AS BIGINT) AS p90_gap_min
-         FROM c GROUP BY 1 ORDER BY 1""",
-
-    "mine_markov_stationary" ->
-      """WITH s AS (SELECT event_type AS e_from,
-                           lead(event_type, 1) OVER (PARTITION BY user_id
-                             ORDER BY ts, event_id) AS e_to
-                    FROM events),
-              p AS (SELECT e_from, e_to, count(*) AS n FROM s
-                    WHERE e_to IS NOT NULL GROUP BY 1, 2),
-              t AS (SELECT e_from, CAST(sum(n) AS BIGINT) AS row_n
-                    FROM p GROUP BY 1),
-              st AS (SELECT DISTINCT e_from AS event_type FROM p),
-              pi0 AS (SELECT event_type, CAST(65536 AS BIGINT) AS v FROM st),
-              pi1 AS (SELECT st.event_type,
-                             coalesce(CAST(sum((pi0.v * p.n) // t.row_n)
-                               AS BIGINT), 0) AS v
-                      FROM st
-                      LEFT JOIN p ON p.e_to = st.event_type
-                      LEFT JOIN pi0 ON pi0.event_type = p.e_from
-                      LEFT JOIN t ON t.e_from = p.e_from
-                      GROUP BY 1),
-              pi2 AS (SELECT st.event_type,
-                             coalesce(CAST(sum((pi1.v * p.n) // t.row_n)
-                               AS BIGINT), 0) AS v
-                      FROM st
-                      LEFT JOIN p ON p.e_to = st.event_type
-                      LEFT JOIN pi1 ON pi1.event_type = p.e_from
-                      LEFT JOIN t ON t.e_from = p.e_from
-                      GROUP BY 1),
-              pi3 AS (SELECT st.event_type,
-                             coalesce(CAST(sum((pi2.v * p.n) // t.row_n)
-                               AS BIGINT), 0) AS v
-                      FROM st
-                      LEFT JOIN p ON p.e_to = st.event_type
-                      LEFT JOIN pi2 ON pi2.event_type = p.e_from
-                      LEFT JOIN t ON t.e_from = p.e_from
-                      GROUP BY 1),
-              z AS (SELECT CAST(sum(v) AS BIGINT) AS total FROM pi3)
-         SELECT pi3.event_type, pi3.v AS pi_q16,
-                CAST(pi3.v AS DOUBLE) / CAST(z.total AS DOUBLE) AS pi_share
-         FROM pi3, z ORDER BY event_type""",
-
-    "graph_adamic_adar" -> {
-      val lg = graft.functions.FixedLog2.sql("dc")
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                      FROM lineitem),
-               lbw AS (SELECT ok FROM li GROUP BY ok
-                       HAVING count(*) <= 256),
-               lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-               e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                     FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-               sym AS (SELECT u AS c, v AS x FROM e
-                       UNION ALL SELECT v, u FROM e),
-               deg AS (SELECT c, CAST(count(*) AS BIGINT) AS dc
-                       FROM sym GROUP BY 1),
-               term AS (SELECT c,
-                          CAST(1099511627776 // $lg AS BIGINT) AS aa_term
-                        FROM deg WHERE dc <= 64 AND dc >= 2),
-               w AS (SELECT s1.x AS x, s2.x AS y, term.aa_term
-                     FROM sym s1
-                     JOIN sym s2 ON s1.c = s2.c AND s1.x < s2.x
-                     JOIN term ON term.c = s1.c),
-               sc AS (SELECT x, y, count(*) AS cn,
-                             CAST(sum(aa_term) AS BIGINT) AS aa_q20
-                      FROM w GROUP BY 1, 2),
-               nz AS (SELECT sc.* FROM sc
-                      WHERE NOT EXISTS (SELECT 1 FROM e
-                                        WHERE e.u = sc.x AND e.v = sc.y))
-          SELECT x, y, cn, aa_q20,
-                 CAST(aa_q20 AS DOUBLE) / CAST(1048576 AS DOUBLE)
-                   AS adamic_adar
-          FROM nz ORDER BY aa_q20 DESC, x, y LIMIT 20"""
-    },
-
-    // first-in-window difference array: user-day (d, prev) is first inside
-    // windows ending e in [max(d, prev+7), d+6]; +1/-1 at the bounds,
-    // prefix sum over the bounded day axis = exact sliding distinct
-    "olap_wau_sliding_distinct" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-                     FROM events),
-              lagd AS (SELECT user_id, d,
-                              lag(d) OVER (PARTITION BY user_id
-                                           ORDER BY d) AS prev
-                       FROM ud),
-              seg AS (SELECT CASE WHEN prev IS NULL THEN d
-                                  ELSE greatest(d, prev + 7) END AS e_start,
-                             d + 7 AS e_next
-                      FROM lagd),
-              delta AS (SELECT e_start AS e, 1 AS v FROM seg
-                        UNION ALL SELECT e_next, -1 FROM seg),
-              dd AS (SELECT e, CAST(sum(v) AS BIGINT) AS dv
-                     FROM delta GROUP BY 1),
-              bounds AS (SELECT min(CAST(ts AS DATE)) AS mn,
-                                max(CAST(ts AS DATE)) AS mx FROM events),
-              days AS (SELECT CAST(unnest(generate_series(mn, mx,
-                                INTERVAL 1 DAY)) AS DATE) AS day
-                       FROM bounds),
-              cum AS (SELECT days.day, coalesce(dd.dv, 0) AS dv
-                      FROM days LEFT JOIN dd ON dd.e = days.day)
-         SELECT day, CAST(sum(dv) OVER (ORDER BY day
-                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                AS BIGINT) AS wau
-         FROM cum ORDER BY day""",
-
-    "graph_path3_census" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              sym AS (SELECT u AS c, v AS x FROM e
-                      UNION ALL SELECT v, u FROM e),
-              deg AS (SELECT c, CAST(count(*) AS BIGINT) AS d
-                      FROM sym GROUP BY 1),
-              ord AS (SELECT e.u, e.v, du.d AS du, dv.d AS dv
-                      FROM e JOIN deg du ON du.c = e.u
-                             JOIN deg dv ON dv.c = e.v),
-              dir AS (SELECT CASE WHEN du < dv OR (du = dv AND u < v)
-                                  THEN u ELSE v END AS a,
-                             CASE WHEN du < dv OR (du = dv AND u < v)
-                                  THEN v ELSE u END AS b
-                      FROM ord),
-              tri AS (SELECT CAST(count(*) AS BIGINT) AS t
-                      FROM dir d1
-                      JOIN dir d2 ON d2.a = d1.b
-                      JOIN dir d3 ON d3.a = d1.a AND d3.b = d2.b),
-              w AS (SELECT CAST(sum(d * (d - 1) // 2) AS BIGINT) AS wedges
-                    FROM deg),
-              p3 AS (SELECT CAST(sum((du.d - 1) * (dv.d - 1)) AS BIGINT)
-                       AS pp
-                     FROM e JOIN deg du ON du.c = e.u
-                            JOIN deg dv ON dv.c = e.v),
-              ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM e),
-              nv AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM deg)
-         SELECT nv.n_nodes, ne.n_edges, w.wedges AS n_wedges,
-                tri.t AS n_triangles, p3.pp - 3 * tri.t AS n_path3
-         FROM nv, ne, w, tri, p3""",
-
-    // triangle multiset is method-independent, so the wedge-free support
-    // census here matches Spark's compact-forward enumeration exactly
-    "graph_truss_support" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              sym AS (SELECT u AS c, v AS x FROM e
-                      UNION ALL SELECT v, u FROM e),
-              deg AS (SELECT c, CAST(count(*) AS BIGINT) AS d
-                      FROM sym GROUP BY 1),
-              ord AS (SELECT e.u, e.v, du.d AS du, dv.d AS dv
-                      FROM e JOIN deg du ON du.c = e.u
-                             JOIN deg dv ON dv.c = e.v),
-              dir AS (SELECT CASE WHEN du < dv OR (du = dv AND u < v)
-                                  THEN u ELSE v END AS a,
-                             CASE WHEN du < dv OR (du = dv AND u < v)
-                                  THEN v ELSE u END AS b
-                      FROM ord),
-              tri AS (SELECT d1.a AS x, d1.b AS y, d2.b AS z
-                      FROM dir d1
-                      JOIN dir d2 ON d2.a = d1.b
-                      JOIN dir d3 ON d3.a = d1.a AND d3.b = d2.b),
-              sup AS (SELECT u, v, CAST(count(*) AS BIGINT) AS support
-                      FROM (SELECT least(x, y) AS u, greatest(x, y) AS v
-                            FROM tri
-                            UNION ALL SELECT least(y, z), greatest(y, z)
-                            FROM tri
-                            UNION ALL SELECT least(x, z), greatest(x, z)
-                            FROM tri)
-                      GROUP BY 1, 2),
-              alle AS (SELECT coalesce(s.support, 0) AS support
-                       FROM e LEFT JOIN sup s ON s.u = e.u AND s.v = e.v)
-         SELECT support, CAST(count(*) AS BIGINT) AS n_edges
-         FROM alle GROUP BY 1 ORDER BY 1""",
-
-    "graph_random_walk_visits" -> {
-      def step(t: Int) =
-        s"""w$t AS (SELECT w.seed, adj.x AS node
-           |        FROM w${t - 1} w
-           |        JOIN deg d ON d.c = w.node
-           |        JOIN adj ON adj.c = w.node
-           |         AND adj.idx = (w.seed * 1000003 + ${t * 7919 + 12345}
-           |                        + w.node * 31) % 2147483647 % d.d)"""
-          .stripMargin
-      s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                      FROM lineitem),
-               lbw AS (SELECT ok FROM li GROUP BY ok
-                       HAVING count(*) <= 256),
-               lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-               e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                     FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-               sym AS (SELECT u AS c, v AS x FROM e
-                       UNION ALL SELECT v, u FROM e),
-               deg AS (SELECT c, CAST(count(*) AS BIGINT) AS d
-                       FROM sym GROUP BY 1),
-               adj AS (SELECT c, x,
-                              row_number() OVER (PARTITION BY c
-                                                 ORDER BY x) - 1 AS idx
-                       FROM sym),
-               seeds AS (SELECT c FROM deg ORDER BY d DESC, c LIMIT 64),
-               w0 AS (SELECT c AS seed, c AS node FROM seeds),
-               ${step(1)},
-               ${step(2)},
-               ${step(3)},
-               ${step(4)},
-               ${step(5)},
-               ${step(6)},
-               visits AS (SELECT node FROM w1 UNION ALL SELECT node FROM w2
-                          UNION ALL SELECT node FROM w3
-                          UNION ALL SELECT node FROM w4
-                          UNION ALL SELECT node FROM w5
-                          UNION ALL SELECT node FROM w6)
-          SELECT node, CAST(count(*) AS BIGINT) AS visits
-          FROM visits GROUP BY 1 ORDER BY visits DESC, node LIMIT 20"""
-    },
-
-    "olap_dau_mau_stickiness" ->
-      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS d
-                     FROM events),
-              dau AS (SELECT d, CAST(count(*) AS BIGINT) AS dau
-                      FROM ud GROUP BY 1),
-              lagd AS (SELECT user_id, d,
-                              lag(d) OVER (PARTITION BY user_id
-                                           ORDER BY d) AS prev
-                       FROM ud),
-              seg AS (SELECT CASE WHEN prev IS NULL THEN d
-                                  ELSE greatest(d, prev + 30) END AS e_start,
-                             d + 30 AS e_next
-                      FROM lagd),
-              delta AS (SELECT e_start AS e, 1 AS v FROM seg
-                        UNION ALL SELECT e_next, -1 FROM seg),
-              dd AS (SELECT e, CAST(sum(v) AS BIGINT) AS dv
-                     FROM delta GROUP BY 1),
-              bounds AS (SELECT min(CAST(ts AS DATE)) AS mn,
-                                max(CAST(ts AS DATE)) AS mx FROM events),
-              days AS (SELECT CAST(unnest(generate_series(mn, mx,
-                                INTERVAL 1 DAY)) AS DATE) AS day
-                       FROM bounds),
-              cum AS (SELECT days.day, coalesce(dd.dv, 0) AS dv
-                      FROM days LEFT JOIN dd ON dd.e = days.day),
-              mau AS (SELECT day, CAST(sum(dv) OVER (ORDER BY day
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                        AS BIGINT) AS mau
-                      FROM cum)
-         SELECT m.day, coalesce(da.dau, 0) AS dau, m.mau,
-                CASE WHEN m.mau > 0 THEN CAST(coalesce(da.dau, 0) AS DOUBLE)
-                       / CAST(m.mau AS DOUBLE) END AS stickiness
-         FROM mau m LEFT JOIN dau da ON da.d = m.day
-         ORDER BY m.day""",
-
-    "olap_attribution_lasttouch" ->
-      """WITH e AS (SELECT user_id, event_id, event_type, ts,
-                           epoch_us(ts) AS us FROM events),
-              w AS (SELECT event_type, us,
-                           last_value(CASE WHEN event_type <> 'purchase'
-                                      THEN event_type END IGNORE NULLS)
-                             OVER pre AS channel,
-                           last_value(CASE WHEN event_type <> 'purchase'
-                                      THEN us END IGNORE NULLS)
-                             OVER pre AS ch_us
-                    FROM e
-                    WINDOW pre AS (PARTITION BY user_id
-                                   ORDER BY ts, event_id
-                                   ROWS BETWEEN UNBOUNDED PRECEDING
-                                   AND 1 PRECEDING)),
-              p AS (SELECT coalesce(channel, 'none') AS channel,
-                           CASE WHEN channel IS NOT NULL
-                                THEN (us - ch_us) // 1000000 END AS lag_s
-                    FROM w WHERE event_type = 'purchase')
-         SELECT channel, CAST(count(*) AS BIGINT) AS n_purchases,
-                CAST(coalesce(sum(lag_s), 0) AS BIGINT) AS lag_seconds_sum,
-                CASE WHEN channel <> 'none'
-                     THEN CAST(sum(lag_s) AS DOUBLE)
-                            / CAST(count(*) AS DOUBLE)
-                END AS avg_lag_seconds
-         FROM p GROUP BY 1 ORDER BY 1""",
-
-    // component labels via recursive min-label closure: the label SET is
-    // method-independent, so sizes match Spark's pointer jumping exactly
-    "graph_lcc_share" ->
-      """WITH RECURSIVE
-              li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-              lbw AS (SELECT ok FROM li GROUP BY ok
-                      HAVING count(*) <= 256),
-              lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-              e AS (SELECT DISTINCT a.p AS u, b.p AS v
-                    FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-              sym AS (SELECT u AS a, v AS b FROM e
-                      UNION ALL SELECT v, u FROM e),
-              reach(node, label) AS (
-                SELECT a, a FROM (SELECT DISTINCT a FROM sym)
-                UNION
-                SELECT s.b, r.label FROM reach r JOIN sym s ON s.a = r.node
-                WHERE r.label < s.b),
-              lab AS (SELECT node, min(label) AS label
-                      FROM reach GROUP BY 1),
-              comp AS (SELECT label, CAST(count(*) AS BIGINT) AS sz
-                       FROM lab GROUP BY 1)
-         SELECT CAST(sum(sz) AS BIGINT) AS n_nodes,
-                CAST(count(*) AS BIGINT) AS n_components,
-                CAST(max(sz) AS BIGINT) AS lcc_size,
-                CAST(max(sz) AS DOUBLE) / CAST(sum(sz) AS DOUBLE)
-                  AS lcc_share
-         FROM comp""",
-
-    "olap_cumulative_distinct" ->
-      """WITH fd AS (SELECT event_type, user_id,
-                            min(CAST(ts AS DATE)) AS dt
-                     FROM events GROUP BY 1, 2),
-              nw AS (SELECT event_type, dt, count(*) AS new_users
-                     FROM fd GROUP BY 1, 2)
-         SELECT event_type, dt, CAST(new_users AS BIGINT) AS new_users,
-                CAST(sum(new_users) OVER (PARTITION BY event_type
-                  ORDER BY dt ROWS BETWEEN UNBOUNDED PRECEDING AND
-                  CURRENT ROW) AS BIGINT) AS cum_users
-         FROM nw ORDER BY event_type, dt""",
-
-    "graph_rich_club" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              deg AS (SELECT u AS n, count(*) AS d FROM e GROUP BY 1),
-              em AS (SELECT least(du.d, dv.d) AS m
-                     FROM e JOIN deg du ON du.n = e.u
-                            JOIN deg dv ON dv.n = e.v),
-              ec AS (SELECT
-                       CAST(sum(CASE WHEN m > 2 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS e0,
-                       CAST(sum(CASE WHEN m > 4 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS e1,
-                       CAST(sum(CASE WHEN m > 8 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS e2,
-                       CAST(sum(CASE WHEN m > 16 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS e3
-                     FROM em),
-              nc AS (SELECT
-                       CAST(sum(CASE WHEN d > 2 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n0,
-                       CAST(sum(CASE WHEN d > 4 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n1,
-                       CAST(sum(CASE WHEN d > 8 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n2,
-                       CAST(sum(CASE WHEN d > 16 THEN 1 ELSE 0 END)
-                            AS BIGINT) AS n3
-                     FROM deg),
-              r AS (SELECT CAST(2 AS BIGINT) AS k, n0 AS n_rich,
-                           e0 AS e_rich FROM ec CROSS JOIN nc
-                    UNION ALL
-                    SELECT 4, n1, e1 FROM ec CROSS JOIN nc
-                    UNION ALL
-                    SELECT 8, n2, e2 FROM ec CROSS JOIN nc
-                    UNION ALL
-                    SELECT 16, n3, e3 FROM ec CROSS JOIN nc)
-         SELECT k, n_rich, e_rich,
-                CASE WHEN n_rich > 1 THEN
-                  CAST(e_rich AS DOUBLE)
-                    / CAST(CAST(CAST(n_rich AS HUGEINT) * (n_rich - 1) AS BIGINT) AS DOUBLE)
-                END AS phi
-         FROM r ORDER BY k""",
-
-    "graph_degree_gini" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS u, l_suppkey * 2 + 1 AS v
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              deg AS (SELECT u, count(*) AS d FROM e GROUP BY 1),
-              hist AS (SELECT d, count(*) AS m FROM deg GROUP BY 1),
-              cum AS (SELECT d, m,
-                             CAST(coalesce(sum(m) OVER (ORDER BY d
-                               ROWS BETWEEN UNBOUNDED PRECEDING AND
-                               1 PRECEDING), 0) AS BIGINT) AS cumm
-                      FROM hist),
-              agg AS (SELECT CAST(sum(m) AS BIGINT) AS n_nodes,
-                             CAST(sum(CAST(d AS HUGEINT) * m) AS HUGEINT)
-                               AS sum_deg,
-                             CAST(sum(CAST(d AS HUGEINT)
-                               * (CAST(m AS HUGEINT) * cumm * 2
-                                  + CAST(m AS HUGEINT) * (m + 1)))
-                               AS HUGEINT) AS tw
-                      FROM cum)
-         SELECT n_nodes, CAST(sum_deg AS BIGINT) AS sum_degree,
-                CAST(CAST(tw - CAST(n_nodes + 1 AS HUGEINT) * sum_deg AS BIGINT) AS DOUBLE)
-                  / CAST(CAST(CAST(n_nodes AS HUGEINT) * sum_deg AS BIGINT) AS DOUBLE)
-                  AS gini
-         FROM agg""",
-
-    "graph_harmonic_sample" ->
-      """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-              e AS (SELECT l_partkey * 2 AS src, l_suppkey * 2 + 1 AS dst
-                    FROM pairs
-                    UNION ALL
-                    SELECT l_suppkey * 2 + 1, l_partkey * 2 FROM pairs),
-              srcs AS (SELECT src AS s FROM (SELECT DISTINCT src FROM e
-                         WHERE src % 2 = 0 ORDER BY src LIMIT 4)),
-              d1 AS (SELECT DISTINCT srcs.s, e.dst AS node
-                     FROM e JOIN srcs ON e.src = srcs.s
-                     WHERE e.dst <> srcs.s),
-              d2 AS (SELECT DISTINCT d1.s, e.dst AS node
-                     FROM e JOIN d1 ON e.src = d1.node
-                     WHERE e.dst <> d1.s
-                       AND NOT EXISTS (SELECT 1 FROM d1 y
-                                       WHERE y.s = d1.s AND y.node = e.dst)),
-              c1 AS (SELECT s, count(*) AS n1 FROM d1 GROUP BY 1),
-              c2 AS (SELECT s, count(*) AS n2 FROM d2 GROUP BY 1)
-         SELECT srcs.s AS source,
-                CAST(coalesce(c1.n1, 0) AS BIGINT) AS n1,
-                CAST(coalesce(c2.n2, 0) AS BIGINT) AS n2,
-                CAST(coalesce(c1.n1, 0) * 2 + coalesce(c2.n2, 0) AS BIGINT)
-                  AS h2,
-                CAST(coalesce(c1.n1, 0) * 2 + coalesce(c2.n2, 0) AS DOUBLE)
-                  / 2.0 AS harmonic
-         FROM srcs LEFT JOIN c1 ON c1.s = srcs.s
-                   LEFT JOIN c2 ON c2.s = srcs.s
-         ORDER BY source""",
-
-    "mine_transition_entropy" -> {
-      val li = graft.functions.FixedLog2.sql("row_n")
-      val lj = graft.functions.FixedLog2.sql("n")
-      s"""WITH s AS (SELECT event_type AS e_from,
-                            lead(event_type, 1) OVER (PARTITION BY user_id
-                              ORDER BY ts, event_id) AS e_to
-                     FROM events),
-               p AS (SELECT e_from, e_to, count(*) AS n FROM s
-                     WHERE e_to IS NOT NULL GROUP BY 1, 2),
-               t AS (SELECT e_from, CAST(sum(n) AS BIGINT) AS row_n
-                     FROM p GROUP BY 1),
-               terms AS (SELECT p.e_from, p.n, t.row_n
-                         FROM p JOIN t ON t.e_from = p.e_from)
-          SELECT e_from, any_value(row_n) AS n_out,
-                 CAST(CAST(sum(CAST(n AS HUGEINT) * ($li - $lj)) AS BIGINT) AS DOUBLE)
-                   / CAST(any_value(row_n) AS DOUBLE) / 1048576.0
-                   AS h_next_bits
-          FROM terms GROUP BY 1 ORDER BY 1"""
-    },
-
-    "sketch_ddsketch_quantiles" -> {
-      val lg = graft.functions.FixedLog2.sql("cents")
-      s"""WITH v AS (SELECT event_type,
-                            CAST(round(value * 100, 0) AS BIGINT) AS cents
-                     FROM events
-                     WHERE CAST(round(value * 100, 0) AS BIGINT) > 0),
-               l AS (SELECT event_type, cents, $lg AS lg FROM v),
-               bc AS (SELECT event_type, lg // 65536 AS bucket,
-                             count(*) AS cnt,
-                             CAST(min(cents) AS BIGINT) AS lo
-                      FROM l GROUP BY 1, 2),
-               cm AS (SELECT event_type, bucket, cnt, lo,
-                             CAST(sum(cnt) OVER (PARTITION BY event_type
-                               ORDER BY bucket) AS BIGINT) AS cum
-                      FROM bc),
-               n AS (SELECT event_type, count(*) AS n FROM v GROUP BY 1),
-               ps AS (SELECT event_type, n,
-                             CAST(unnest([50, 90, 99]) AS BIGINT) AS p
-                      FROM n),
-               ks AS (SELECT event_type, p, (n * p + 99) // 100 AS k
-                      FROM ps),
-               est AS (SELECT c.event_type, k.p,
-                              CAST(min(c.bucket) AS BIGINT) AS bucket
-                       FROM cm c JOIN ks k
-                         ON k.event_type = c.event_type AND c.cum >= k.k
-                       GROUP BY 1, 2),
-               eb AS (SELECT e.event_type, e.p, e.bucket,
-                             CAST(b.lo AS DOUBLE) / 100.0 AS est_value
-                      FROM est e JOIN bc b
-                        ON b.event_type = e.event_type
-                       AND b.bucket = e.bucket),
-               rk AS (SELECT event_type, cents,
-                             row_number() OVER (PARTITION BY event_type
-                               ORDER BY cents) AS rn
-                      FROM v),
-               ex AS (SELECT r.event_type, k.p,
-                             CAST(r.cents AS DOUBLE) / 100.0 AS exact_value
-                      FROM rk r JOIN ks k
-                        ON k.event_type = r.event_type AND r.rn = k.k)
-          SELECT eb.event_type, eb.p, eb.bucket, eb.est_value,
-                 ex.exact_value
-          FROM eb JOIN ex ON ex.event_type = eb.event_type
-                         AND ex.p = eb.p
-          ORDER BY 1, 2"""
-    },
-
-    "olap_window_funnel" ->
-      """WITH v AS (SELECT user_id, min(ts) AS t1 FROM events
-                    WHERE event_type = 'view' GROUP BY 1),
-              c2 AS (SELECT e.user_id, min(e.ts) AS t2
-                     FROM events e JOIN v ON v.user_id = e.user_id
-                     WHERE e.event_type = 'click' AND e.ts >= v.t1
-                       AND e.ts <= v.t1 + INTERVAL 3 DAY
-                     GROUP BY 1),
-              p3 AS (SELECT e.user_id, min(e.ts) AS t3
-                     FROM events e JOIN v ON v.user_id = e.user_id
-                                   JOIN c2 ON c2.user_id = e.user_id
-                     WHERE e.event_type = 'purchase' AND e.ts >= c2.t2
-                       AND e.ts <= v.t1 + INTERVAL 3 DAY
-                     GROUP BY 1)
-         SELECT * FROM (
-           SELECT CAST(1 AS BIGINT) AS stage, 'view' AS stage_name,
-                  (SELECT count(*) FROM v) AS n_users
-           UNION ALL
-           SELECT 2, 'click_in_window', (SELECT count(*) FROM c2)
-           UNION ALL
-           SELECT 3, 'purchase_in_window', (SELECT count(*) FROM p3))
-         ORDER BY stage""",
-
-    "olap_sequence_match" ->
-      """WITH u AS (SELECT user_id,
-                  string_agg(substr(event_type, 1, 1), ''
-                             ORDER BY ts, event_id) AS s
-           FROM events GROUP BY 1),
-     pats AS (SELECT * FROM (VALUES
-        ('funnel_ordered', 'v.*c.*p'),
-        ('click_purchase_adjacent', 'cp'),
-        ('starts_with_signup', '^s'),
-        ('repeat_purchase', 'pp'),
-        ('error_mid_funnel', 'v[^p]*e[^p]*p'))
-        p(pattern_name, pattern))
-         SELECT p.pattern_name, p.pattern,
-                CAST(sum(CASE WHEN regexp_matches(u.s, p.pattern)
-                              THEN 1 ELSE 0 END) AS BIGINT) AS n_users,
-                CAST(sum(CASE WHEN regexp_matches(u.s, p.pattern)
-                              THEN 1 ELSE 0 END) AS DOUBLE)
-                  / CAST(count(*) AS DOUBLE) AS frac
-         FROM u CROSS JOIN pats p GROUP BY 1, 2 ORDER BY pattern_name""",
-
-    "mine_transition_lift" ->
-      """WITH p AS (SELECT event_type AS a,
-                  lead(event_type) OVER (PARTITION BY user_id
-                    ORDER BY ts, event_id) AS b
-           FROM events),
-     pp AS (SELECT a, b FROM p WHERE b IS NOT NULL),
-     cab AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
-             FROM pp GROUP BY 1, 2),
-     ca AS (SELECT a, CAST(count(*) AS BIGINT) AS c_a FROM pp GROUP BY 1),
-     cb AS (SELECT b, CAST(count(*) AS BIGINT) AS c_b FROM pp GROUP BY 1),
-     n AS (SELECT CAST(count(*) AS BIGINT) AS n_trans FROM pp)
-         SELECT cab.a, cab.b, cab.c_ab, ca.c_a, cb.c_b, n.n_trans,
-                CAST((CAST(cab.c_ab AS HUGEINT) * n.n_trans * 1000000)
-                  // (CAST(ca.c_a AS HUGEINT) * cb.c_b) AS BIGINT)
-                  AS lift_ppm,
-                CAST(CAST(CAST(cab.c_ab AS HUGEINT) * n.n_trans AS BIGINT) AS DOUBLE)
-                  / CAST(CAST(CAST(ca.c_a AS HUGEINT) * cb.c_b AS BIGINT) AS DOUBLE)
-                  AS lift
-         FROM cab JOIN ca ON ca.a = cab.a
-                  JOIN cb ON cb.b = cab.b
-                  CROSS JOIN n
-         ORDER BY cab.a, cab.b""",
-
-    "graph_butterflies" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-     lbw AS (SELECT ok FROM li GROUP BY ok HAVING count(*) <= 256),
-     lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-     w AS (SELECT a.p AS x, b.p AS y
-           FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-     cn AS (SELECT x, y, CAST(count(*) AS BIGINT) AS cnt
-            FROM w GROUP BY 1, 2)
-         SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-                CAST(sum(cnt) AS BIGINT) AS n_wedges,
-                CAST(sum(cnt * (cnt - 1) // 2) AS BIGINT) AS n_butterflies,
-                CAST(max(cnt) AS BIGINT) AS max_copairs
-         FROM cn""",
-
-    "layout_ttl_sweep" ->
-      """WITH d AS (SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS dt,
-                  CAST(count(*) AS BIGINT) AS n_rows
-           FROM events GROUP BY 1),
-     c AS (SELECT CAST(max(CAST(dt AS DATE)) - 9 AS DATE) AS cutoff FROM d)
-         SELECT d.dt, d.n_rows,
-                CASE WHEN CAST(d.dt AS DATE) >= c.cutoff THEN 'kept'
-                     ELSE 'dropped' END AS action,
-                CASE WHEN CAST(d.dt AS DATE) >= c.cutoff THEN d.n_rows
-                     ELSE 0 END AS n_kept
-         FROM d CROSS JOIN c ORDER BY dt""",
-
-    "sketch_linear_counting" -> {
-      val lm = graft.functions.FixedLog2.sql("1024")
-      val lz = graft.functions.FixedLog2.sql("z")
-      s"""WITH h AS (SELECT event_type, user_id,
-                  ((((user_id % 2147483647) * 1103515245 + 12345)
-                     % 2147483647)
-                   * (((user_id % 2147483647) * 1103515245 + 12345)
-                     % 2147483647)) % 2147483647 AS hm
-           FROM events),
-     p AS (SELECT event_type, user_id,
-                  ((hm * 69069 + 362437) % 2147483647) % 1024 AS p
-           FROM h),
-     o AS (SELECT event_type,
-                  CAST(count(DISTINCT p) AS BIGINT) AS occupied,
-                  CAST(count(DISTINCT user_id) AS BIGINT) AS n_true
-           FROM p GROUP BY 1),
-     z AS (SELECT event_type, n_true, 1024 - occupied AS z FROM o),
-     e AS (SELECT event_type, n_true, z,
-                  CASE WHEN z > 0 THEN 1024 * ($lm - $lz) END AS est_bits
-           FROM z)
-         SELECT event_type, CAST(1024 AS BIGINT) AS m,
-                CAST(z AS BIGINT) AS z, n_true,
-                CAST(est_bits AS DOUBLE) * 0.6931471805599453 / 1048576.0
-                  AS est_lc
-         FROM e ORDER BY event_type"""
-    },
-
-    "graph_transition_reciprocity" ->
-      """WITH pr AS (SELECT user_id, event_type AS a,
-                  lead(event_type) OVER (PARTITION BY user_id
-                    ORDER BY ts, event_id) AS b
-           FROM events),
-     c AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
-           FROM pr WHERE b IS NOT NULL AND b <> a GROUP BY 1, 2),
-     j AS (SELECT c.a, c.b, c.c_ab, r.c_ab AS c_ba
-           FROM c LEFT JOIN c r ON r.a = c.b AND r.b = c.a)
-         SELECT CAST(count(*) AS BIGINT) AS n_directed,
-                CAST(sum(CASE WHEN c_ba IS NOT NULL THEN 1 ELSE 0 END)
-                  AS BIGINT) AS n_reciprocated,
-                CAST((1000000 * sum(CASE WHEN c_ba IS NOT NULL
-                       THEN 1 ELSE 0 END)) // count(*) AS BIGINT)
-                  AS r_binary_ppm,
-                CAST(sum(c_ab) AS BIGINT) AS w_total,
-                CAST(sum(least(c_ab, coalesce(c_ba, 0))) AS BIGINT)
-                  AS w_min,
-                CAST((1000000 * sum(least(c_ab, coalesce(c_ba, 0))))
-                  // sum(c_ab) AS BIGINT) AS r_weighted_ppm
-         FROM j""",
-
-    "olap_abc_migration" ->
-      """WITH li AS (SELECT l_partkey,
-                  CAST(round(l_extendedprice * 100, 0) AS BIGINT) AS c,
-                  l_shipdate
-           FROM lineitem),
-     r1 AS (SELECT l_partkey, CAST(sum(c) AS BIGINT) AS cents
-            FROM li WHERE l_shipdate < DATE '1995-01-01' GROUP BY 1),
-     t1 AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents FROM r1),
-     c1 AS (SELECT r1.l_partkey,
-                   CASE WHEN CAST(sum(r1.cents) OVER (ORDER BY r1.cents
-                       DESC, r1.l_partkey ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) * 100 <= t1.total_cents * 80 THEN 'A'
-                        WHEN CAST(sum(r1.cents) OVER (ORDER BY r1.cents
-                       DESC, r1.l_partkey ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) * 100 <= t1.total_cents * 95 THEN 'B'
-                        ELSE 'C' END AS class_h1
-            FROM r1 CROSS JOIN t1),
-     r2 AS (SELECT l_partkey, CAST(sum(c) AS BIGINT) AS cents
-            FROM li WHERE l_shipdate >= DATE '1995-01-01' GROUP BY 1),
-     t2 AS (SELECT CAST(sum(cents) AS BIGINT) AS total_cents FROM r2),
-     c2 AS (SELECT r2.l_partkey,
-                   CASE WHEN CAST(sum(r2.cents) OVER (ORDER BY r2.cents
-                       DESC, r2.l_partkey ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) * 100 <= t2.total_cents * 80 THEN 'A'
-                        WHEN CAST(sum(r2.cents) OVER (ORDER BY r2.cents
-                       DESC, r2.l_partkey ROWS UNBOUNDED PRECEDING)
-                       AS BIGINT) * 100 <= t2.total_cents * 95 THEN 'B'
-                        ELSE 'C' END AS class_h2
-            FROM r2 CROSS JOIN t2)
-         SELECT c1.class_h1, c2.class_h2,
-                CAST(count(*) AS BIGINT) AS n_parts
-         FROM c1 JOIN c2 ON c2.l_partkey = c1.l_partkey
-         GROUP BY 1, 2 ORDER BY class_h1, class_h2""",
-
-    "graph_knn_degree_curve" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                     FROM lineitem),
-     lbw AS (SELECT ok FROM li GROUP BY ok HAVING count(*) <= 256),
-     lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-     e AS (SELECT DISTINCT a.p AS u, b.p AS v
-           FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p),
-     sym AS (SELECT u AS c, v AS x FROM e
-             UNION ALL SELECT v, u FROM e),
-     deg AS (SELECT c, CAST(count(*) AS BIGINT) AS dc
-             FROM sym GROUP BY 1),
-     j AS (SELECT d1.dc AS deg_c, d2.dc AS deg_x
-           FROM sym s JOIN deg d1 ON d1.c = s.c
-                      JOIN deg d2 ON d2.c = s.x),
-     g AS (SELECT CAST(length(bin(deg_c)) - 1 AS BIGINT)
-                    AS log2_degree,
-                  CAST(count(*) AS BIGINT) AS n_edges,
-                  CAST(sum(deg_x) AS BIGINT) AS sum_nb_deg
-           FROM j GROUP BY 1)
-         SELECT log2_degree, n_edges, sum_nb_deg,
-                sum_nb_deg // n_edges AS knn_floor,
-                CAST(sum_nb_deg AS DOUBLE) / CAST(n_edges AS DOUBLE)
-                  AS knn
-         FROM g ORDER BY log2_degree""",
-
-    "mine_transition_2step" ->
-      """WITH p AS (SELECT event_type AS a,
-                  lead(event_type) OVER (PARTITION BY user_id
-                    ORDER BY ts, event_id) AS b
-           FROM events),
-     c1 AS (SELECT a, b, CAST(count(*) AS BIGINT) AS c_ab
-            FROM p WHERE b IS NOT NULL GROUP BY 1, 2),
-     n2 AS (SELECT x.a, y.b AS c,
-                   CAST(sum(CAST(x.c_ab AS HUGEINT) * y.c_ab) AS BIGINT)
-                     AS n2
-            FROM c1 x JOIN c1 y ON y.a = x.b
-            GROUP BY 1, 2),
-     rt AS (SELECT a, CAST(sum(n2) AS BIGINT) AS row_total
-            FROM n2 GROUP BY 1)
-         SELECT n2.a, n2.c, n2.n2,
-                CAST((1000000 * CAST(n2.n2 AS HUGEINT)) // rt.row_total
-                  AS BIGINT) AS p2_ppm,
-                CAST(n2.n2 AS DOUBLE) / CAST(rt.row_total AS DOUBLE)
-                  AS p2
-         FROM n2 JOIN rt ON rt.a = n2.a
-         ORDER BY n2.a, n2.c""",
-
-    // the 12-step q20 absorption iteration is UNROLLED per scenario
-    // (base + one removal per channel) by the Scala generator below —
-    // every step is sum(cnt * p) // tot on integers, mirroring the
-    // engine's exact Long algebra bit for bit
-    "olap_attribution_markov" -> {
+      // the 12-step q20 absorption iteration is UNROLLED per scenario
+      // (base + one removal per channel) by the Scala generator below —
+      // every step is sum(cnt * p) // tot on integers, mirroring the
+      // engine's exact Long algebra bit for bit
+      Some {
       val channels = Seq("click", "error", "signup", "view")
       val scenarios = ("base" -> None) +:
         channels.map(c => c -> (Some(c): Option[String]))
@@ -3891,10 +3499,52 @@ object GraphOlapQueries {
                           THEN (1000000 * diff) // p_base_q20 ELSE 0 END
                      AS DOUBLE) / 1e6 AS removal
          FROM r2 CROSS JOIN sd ORDER BY channel"""
-    },
+      }),
 
-    "olap_rfm_segments" ->
-      """WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d,
+    // RFM segmentation over purchase events: per-user recency /
+    // frequency / monetary coded into FIXED bands — the production
+    // shape at fact scale, where global quantile codes would cost a
+    // users-sized total sort and re-drift with every batch; fixed bands
+    // are partial-aggregable end to end (one groupBy(user), a 1-row
+    // global-clock scalar, one groupBy(code) census with exact-cent
+    // revenue shares). Band edges are part of the operator's contract.
+    Query("olap_rfm_segments", (s, dir) => {
+      val ev = Tables.events(s, dir)
+        .filter(col("event_type") === "purchase")
+        .select(col("user_id"), to_date(col("ts")).as("d"),
+          Exact.cents(col("value")).as("c"))
+        .tracked // per-user rollup AND the global clock
+      val u = ev.groupBy("user_id")
+        .agg(max("d").as("last_d"), count(lit(1)).as("freq"),
+          sum("c").cast("long").as("mon"))
+      val clock = ev.agg(max("d").as("ref_d"))
+      val coded = u.crossJoin(broadcast(clock))
+        .withColumn("rec_days",
+          datediff(col("ref_d"), col("last_d")).cast("long"))
+        .withColumn("r_code",
+          when(col("rec_days") <= 2, 1L).when(col("rec_days") <= 5, 2L)
+            .when(col("rec_days") <= 10, 3L)
+            .when(col("rec_days") <= 20, 4L).otherwise(5L))
+        .withColumn("f_code",
+          when(col("freq") >= 20, 1L).when(col("freq") >= 15, 2L)
+            .when(col("freq") >= 12, 3L).when(col("freq") >= 8, 4L)
+            .otherwise(5L))
+        .withColumn("m_code",
+          when(col("mon") >= 100000L, 1L).when(col("mon") >= 80000L, 2L)
+            .when(col("mon") >= 60000L, 3L).when(col("mon") >= 40000L, 4L)
+            .otherwise(5L))
+      val tot = coded.agg(sum("mon").cast("long").as("grand_mon"))
+      coded.groupBy("r_code", "f_code", "m_code")
+        .agg(count(lit(1)).as("n_users"),
+          sum("mon").cast("long").as("revenue_cents"))
+        .crossJoin(broadcast(tot))
+        .select(col("r_code"), col("f_code"), col("m_code"),
+          col("n_users"), col("revenue_cents"),
+          (col("revenue_cents").cast("double")
+            / col("grand_mon").cast("double")).as("revenue_share"))
+        .orderBy("r_code", "f_code", "m_code")
+    },
+      Some("""WITH ev AS (SELECT user_id, CAST(ts AS DATE) AS d,
                        CAST(round(value * 100, 0) AS BIGINT) AS c
                      FROM events WHERE event_type = 'purchase'),
               u AS (SELECT user_id, max(d) AS last_d, count(*) AS freq,
@@ -3924,53 +3574,37 @@ object GraphOlapQueries {
                 CAST(sum(mon) AS DOUBLE) / CAST(grand_mon AS DOUBLE)
                   AS revenue_share
          FROM kc CROSS JOIN tot
-         GROUP BY 1, 2, 3, grand_mon ORDER BY 1, 2, 3""",
+         GROUP BY 1, 2, 3, grand_mon ORDER BY 1, 2, 3""")),
 
-    // same quantized-lattice recurrence as graph_pagerank, with the
-    // teleport CASE'd onto the seed set (node_id % 100 = 0) and base rank
-    // 1/|S| on seeds / 0 elsewhere
-    "graph_ppr_seeded" -> {
-      def iter(i: Int, prev: String): String =
-        s"""c$i AS (SELECT src,
-                      CAST(floor(rank / CAST(d AS DOUBLE)
-                        * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS c
-                    FROM $prev JOIN outdeg ON node_id = src),
-             s$i AS (SELECT dst AS node_id, CAST(sum(c) AS BIGINT) AS sc
-                     FROM edges JOIN c$i USING (src) GROUP BY 1),
-             r$i AS (SELECT n2.node_id, n2.is_seed,
-                       CASE WHEN n2.is_seed THEN CAST(0.15 AS DOUBLE)
-                         * (CAST(1 AS DOUBLE) / CAST(ns AS DOUBLE))
-                       ELSE CAST(0 AS DOUBLE) END
-                       + CAST(0.85 AS DOUBLE)
-                         * (CAST(coalesce(sc, 0) AS DOUBLE)
-                            / CAST(1000000000000 AS DOUBLE)) AS rank
-                     FROM nodes n2 CROSS JOIN sn LEFT JOIN s$i USING (node_id))"""
-      s"""WITH e0 AS (SELECT DISTINCT l_partkey * 2 AS src,
-                        l_suppkey * 2 + 1 AS dst FROM lineitem),
-              edges AS (SELECT src, dst FROM e0
-                        UNION ALL SELECT e0.dst AS src, e0.src AS dst FROM e0),
-              nodes AS (SELECT node_id, node_id % 100 = 0 AS is_seed
-                        FROM (SELECT DISTINCT src AS node_id FROM edges)),
-              sn AS (SELECT count(*) AS ns FROM nodes WHERE is_seed),
-              outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1),
-              r0 AS (SELECT node_id, is_seed,
-                       CASE WHEN is_seed
-                         THEN CAST(1 AS DOUBLE) / CAST(ns AS DOUBLE)
-                         ELSE CAST(0 AS DOUBLE) END AS rank
-                     FROM nodes CROSS JOIN sn),
-              ${iter(1, "r0")},
-              ${iter(2, "r1")},
-              ${iter(3, "r2")}
-         SELECT node_id,
-                CASE WHEN node_id % 2 = 0 THEN 'part' ELSE 'supplier' END
-                  AS node_type,
-                is_seed, rank
-         FROM r3 ORDER BY rank DESC, node_id LIMIT 30"""
+    // Sequential-pattern mining with GAPS: ordered event-type pairs
+    // (a, then b) with 1–3 intervening events per user — the
+    // non-contiguous complement of mine_event_trigrams (contiguous
+    // n-grams miss "view … later purchase" motifs that skip chatter).
+    // One keyed window per gap (lead over the user's ordered stream —
+    // state bounded by the gap, never the session), then a
+    // partial-aggregable pair count with per-gap support.
+    Query("mine_seq_gap_pairs", (s, dir) => {
+      // leads 2–4 come off the PINNED shared event-sequence frame — one
+      // cached scan per gap instead of three window passes (§2.4; r11)
+      val seq = Shared.eventSeqLeads(s, dir)
+      val pairs = (2 to 4).map(g => seq
+        .filter(col(s"l$g").isNotNull)
+        .select(col("et").as("a_type"), col(s"l$g").as("b_type"),
+          lit(g.toLong - 1).as("gap")))
+        .reduce(_ unionByName _)
+      val tot = pairs.groupBy("gap").agg(count(lit(1)).as("n_gap"))
+      pairs.groupBy("a_type", "b_type", "gap")
+        .agg(count(lit(1)).as("n"))
+        .join(broadcast(tot), "gap")
+        .select(col("a_type"), col("b_type"), col("gap"), col("n"),
+          (col("n").cast("double") / col("n_gap").cast("double"))
+            .as("support"))
+        .filter(col("n") >= 20L)
+        .orderBy("a_type", "b_type", "gap")
     },
-
-    // lead() per gap over the user's (ts, event_id) order mirrors the
-    // engine's keyed windows exactly
-    "mine_seq_gap_pairs" -> {
+      // lead() per gap over the user's (ts, event_id) order mirrors the
+      // engine's keyed windows exactly
+      Some {
       def gapSel(g: Int): String =
         s"""SELECT a_type,
               lead(a_type, $g) OVER (PARTITION BY user_id
@@ -3995,82 +3629,28 @@ object GraphOlapQueries {
          FROM agg JOIN tot USING (gap)
          WHERE agg.n >= 20
          ORDER BY agg.a_type, agg.b_type, agg.gap"""
+      }),
+
+    // KMV set-DIFFERENCE estimate — completes the sketch set algebra
+    // (union: sketch_kmv_union; intersection share: sketch_kmv_jaccard):
+    // est(A\B) = est(A∪B) − est(B) by inclusion–exclusion, from the two
+    // k-min sketches alone (≤ k rows each, never re-touching the raw
+    // sets — the shard-merge contract). Exact |A\B| rides along via an
+    // anti-join so the estimator error is visible.
+    Query("sketch_kmv_difference", (s, dir) => {
+      val li = Tables.lineitem(s, dir)
+      val a = li.filter(col("l_returnflag") === "R")
+      val b = li.filter(col("l_returnflag") === "A")
+      val sk = graft.olap.Sketch.kmvDifference(a, col("l_partkey"),
+        b, col("l_partkey"), k = 128)
+      val aK = a.select(col("l_partkey").as("k")).distinct()
+      val bK = b.select(col("l_partkey").as("k")).distinct()
+      sk.crossJoin(aK.join(bK, Seq("k"), "left_anti")
+        .agg(count(lit(1)).as("n_exact_diff")))
     },
-
-    // width histogram + implied pair mass over the distinct item sets
-    "graph_basket_width_stats" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-                     FROM lineitem),
-              bw AS (SELECT ok, CAST(count(*) AS BIGINT) AS w
-                     FROM it GROUP BY 1)
-         SELECT w, count(*) AS n_orders,
-                ((w * (w - 1)) // 2) * count(*) AS pair_mass
-         FROM bw GROUP BY w ORDER BY w""",
-
-    // the cap mirrored at the binding literal bound (5): wide baskets
-    // drop whole, surviving pair weights are the plain per-order join
-    "graph_copurchase_capped" ->
-      """WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
-                     FROM lineitem),
-              bw AS (SELECT ok, CAST(count(*) AS BIGINT) AS bw_w
-                     FROM it GROUP BY 1),
-              keep AS (SELECT it.ok, it.pk
-                       FROM it JOIN bw USING (ok) WHERE bw.bw_w <= 5),
-              e AS (SELECT a.pk AS u, b.pk AS v,
-                           CAST(count(*) AS BIGINT) AS w
-                    FROM keep a JOIN keep b
-                      ON a.ok = b.ok AND a.pk < b.pk
-                    GROUP BY 1, 2)
-         SELECT w, count(*) AS n_edges FROM e GROUP BY w ORDER BY w""",
-
-    // per-node argmax under the symmetric (w desc, edge-id asc) order;
-    // components via the recursive closure (the dedup_cc_canonical CTE)
-    "graph_mst_boruvka_round" ->
-      """WITH RECURSIVE
-            li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
-                   FROM lineitem),
-            lbw AS (SELECT ok FROM li GROUP BY ok
-                    HAVING count(*) <= 256),
-            lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
-            we AS (SELECT a.p AS u, b.p AS v,
-                          CAST(count(*) AS BIGINT) AS w
-                   FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p
-                   GROUP BY 1, 2),
-            sym AS (SELECT u AS i, v AS j, w FROM we
-                    UNION ALL SELECT v, u, w FROM we),
-            pick AS (SELECT i, j, w,
-                       row_number() OVER (PARTITION BY i
-                         ORDER BY w DESC, least(i, j) ASC,
-                                  greatest(i, j) ASC) AS rn
-                     FROM sym),
-            chosen AS (SELECT DISTINCT least(i, j) AS a, greatest(i, j)
-                         AS b
-                       FROM pick WHERE rn = 1),
-            e2 AS (SELECT a, b FROM chosen
-                   UNION SELECT b, a FROM chosen),
-            reach(n, m) AS (
-              SELECT a, a FROM e2
-              UNION
-              SELECT a, b FROM e2
-              UNION
-              SELECT r.n, e.b FROM reach r JOIN e2 e ON r.m = e.a),
-            cl AS (SELECT n AS node, CAST(min(m) AS BIGINT)
-                     AS canonical_id
-                   FROM reach GROUP BY 1),
-            cs AS (SELECT canonical_id, CAST(count(*) AS BIGINT) AS sz
-                   FROM cl GROUP BY 1),
-            nn AS (SELECT CAST(count(DISTINCT i) AS BIGINT) AS n_nodes
-                   FROM sym),
-            ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges
-                   FROM chosen)
-         SELECT sz, count(*) AS n_components, n_nodes, n_edges
-         FROM cs CROSS JOIN nn CROSS JOIN ne
-         GROUP BY 1, 3, 4 ORDER BY 1""",
-
-    // inclusion–exclusion over the three KMV estimates; the estimator
-    // is the same (cnt-1)·H/kth chain as sketch_kmv_union's
-    "sketch_kmv_difference" ->
-      """WITH f0 AS (SELECT DISTINCT l_returnflag AS scope, l_partkey
+      // inclusion–exclusion over the three KMV estimates; the estimator
+      // is the same (cnt-1)·H/kth chain as sketch_kmv_union's
+      Some("""WITH f0 AS (SELECT DISTINCT l_returnflag AS scope, l_partkey
                      FROM lineitem WHERE l_returnflag IN ('R', 'A')),
               f AS (SELECT scope, l_partkey,
                       list_reduce(list_prepend(CAST(0 AS BIGINT),
@@ -4111,13 +3691,46 @@ object GraphOlapQueries {
                         SELECT l_partkey FROM f0 WHERE scope = 'A'))
          SELECT est_a, est_b, est_union, est_union - est_b
                   AS est_a_minus_b, n_exact_diff
-         FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN xd""",
+         FROM ea CROSS JOIN eb CROSS JOIN eu CROSS JOIN xd""")),
 
-    // singleton-init synchronized sweep: argmax over neighbors of the
-    // exact integer gain 2m - k_i*k_j (w_ij = 1), ties to lower j; nodes
-    // with no positive gain stay singleton
-    "graph_louvain_step" ->
-      """WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+    // One synchronized Louvain sweep (phase 1, singleton init) over the
+    // co-purchase graph: each node moves to the neighbor whose community
+    // maximizes the modularity gain — at singleton init the gain of
+    // i→{j} has EXACT integer sign/order via gain_num = 2m·w_ij − k_i·k_j
+    // (w in edge-count units), so the argmax is a partial-aggregable
+    // struct-max with deterministic ties (higher gain, then lower
+    // neighbor id) and no floats anywhere. All nodes move simultaneously
+    // (the distributed variant — sequential Louvain doesn't parallelize);
+    // output is the resulting community-size histogram. One edges⋈degrees
+    // join + two node-sized groupBys.
+    Query("graph_louvain_step", (s, dir) => {
+      val G = graft.olap.GraphFrames
+      val deg = G.coPurchaseDegrees(s, dir) // (n, d)
+      val e = G.coPurchaseEdges(s, dir) // undirected (u, v), u < v
+      // pinned symmetric co-purchase frame (§2.4; r11)
+      val sym = G.coPurchaseSym(s, dir)
+        .select(col("u").as("i"), col("v").as("j"))
+      val m2 = e.agg((count(lit(1)) * 2L).as("two_m")) // 2m = Σ degrees
+      val gains = sym
+        .join(deg.select(col("n").as("i"), col("d").as("k_i")), "i")
+        .join(deg.select(col("n").as("j"), col("d").as("k_j")), "j")
+        .crossJoin(broadcast(m2))
+        // w_ij = 1 on this simple graph; gain_num = 2m·1 − k_i·k_j
+        .withColumn("gain_num", col("two_m") - col("k_i") * col("k_j"))
+      val moved = gains.groupBy("i")
+        .agg(max(struct(col("gain_num"), (-col("j")).as("nj")))
+          .as("best"))
+        .select(col("i").as("node"),
+          when(col("best.gain_num") > 0L, -col("best.nj"))
+            .otherwise(col("i")).as("community"))
+      moved.groupBy("community").agg(count(lit(1)).as("sz"))
+        .groupBy("sz").agg(count(lit(1)).as("n_communities"))
+        .orderBy("sz")
+    },
+      // singleton-init synchronized sweep: argmax over neighbors of the
+      // exact integer gain 2m - k_i*k_j (w_ij = 1), ties to lower j; nodes
+      // with no positive gain stay singleton
+      Some("""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
                      FROM lineitem),
               lbw AS (SELECT ok FROM li GROUP BY ok
                       HAVING count(*) <= 256),
@@ -4148,13 +3761,255 @@ object GraphOlapQueries {
               cs AS (SELECT community, CAST(count(*) AS BIGINT) AS sz
                      FROM mv GROUP BY 1)
          SELECT sz, count(*) AS n_communities
-         FROM cs GROUP BY 1 ORDER BY 1""",
+         FROM cs GROUP BY 1 ORDER BY 1""")),
 
-    // 62-bit words keep every per-word mask positive (DuckDB range-checks
-    // << into bit 63); bit_or / bit_count / sum mirror the engine's
-    // mergeable-segment arithmetic exactly
-    "olap_bitmap_distinct" ->
-      """WITH seg AS (SELECT event_type, CAST(ts AS DATE) AS event_date,
+    // One Borůvka round of the MAXIMUM-weight spanning forest over the
+    // weighted co-purchase graph (weight = shared-order count): every
+    // node picks its best incident edge under a GLOBAL total order
+    // (weight desc, then lexicographic edge id — SYMMETRIC, so both
+    // endpoints rank edges identically and the chosen set is provably a
+    // forest: cycles other than mutual picks are impossible, hence
+    // n_edges = n_nodes − n_components, the identity the spec pins).
+    // This is the distributed-MST primitive (Borůvka parallelizes;
+    // Prim/Kruskal don't): argmax is a partial-aggregable struct-max per
+    // node, components come from the engine's pointer-jumping CC.
+    Query("graph_mst_boruvka_round", (s, dir) => {
+      // shared-order weights come off the pinned weighted edge frame —
+      // the same per-order self-join the rest of the co-purchase family
+      // derives from, built once per process+SF (VERDICT r8 item 6)
+      val w = graft.olap.GraphFrames.coPurchaseWeighted(s, dir)
+      // NOT persisted (r11): with the node count off the pinned degree
+      // frame the argmax is sym's ONLY consumer, and caching a
+      // read-once edge-scale union is pure write overhead — it's a
+      // cheap projection of the pinned weighted frame either way
+      val sym = w.select(col("u").as("i"), col("v").as("j"), col("w"))
+        .unionByName(w.select(col("v").as("i"), col("u").as("j"),
+          col("w")))
+      val chosen = sym
+        .select(col("i"), struct(col("w"),
+          (-least(col("i"), col("j"))).as("na"),
+          (-greatest(col("i"), col("j"))).as("nb")).as("k"))
+        .groupBy("i").agg(max(col("k")).as("b"))
+        .select((-col("b.na")).as("ea"), (-col("b.nb")).as("eb"))
+        .distinct()
+        .tracked // edge count + CC both scan it
+      val labels = graft.dedup.Components.canonicalLabels(
+        chosen, "ea", "eb")
+      // node count off the pinned node-sized degree frame — the weighted
+      // graph's node set ≡ the edge set's endpoints (r11; was an
+      // edge-scale distinct over sym)
+      val nNodes = graft.olap.GraphFrames.coPurchaseDegrees(s, dir)
+        .agg(count(lit(1)).as("n_nodes"))
+      val nChosen = chosen.agg(count(lit(1)).as("n_edges"))
+      labels.groupBy("canonical_id").agg(count(lit(1)).as("sz"))
+        .groupBy("sz").agg(count(lit(1)).as("n_components"))
+        .crossJoin(broadcast(nNodes))
+        .crossJoin(broadcast(nChosen))
+        .orderBy("sz")
+    },
+      // per-node argmax under the symmetric (w desc, edge-id asc) order;
+      // components via the recursive closure (the dedup_cc_canonical CTE)
+      Some("""WITH RECURSIVE
+            li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS p
+                   FROM lineitem),
+            lbw AS (SELECT ok FROM li GROUP BY ok
+                    HAVING count(*) <= 256),
+            lcp AS (SELECT li.ok, li.p FROM li JOIN lbw USING (ok)),
+            we AS (SELECT a.p AS u, b.p AS v,
+                          CAST(count(*) AS BIGINT) AS w
+                   FROM lcp a JOIN lcp b ON a.ok = b.ok AND a.p < b.p
+                   GROUP BY 1, 2),
+            sym AS (SELECT u AS i, v AS j, w FROM we
+                    UNION ALL SELECT v, u, w FROM we),
+            pick AS (SELECT i, j, w,
+                       row_number() OVER (PARTITION BY i
+                         ORDER BY w DESC, least(i, j) ASC,
+                                  greatest(i, j) ASC) AS rn
+                     FROM sym),
+            chosen AS (SELECT DISTINCT least(i, j) AS a, greatest(i, j)
+                         AS b
+                       FROM pick WHERE rn = 1),
+            e2 AS (SELECT a, b FROM chosen
+                   UNION SELECT b, a FROM chosen),
+            reach(n, m) AS (
+              SELECT a, a FROM e2
+              UNION
+              SELECT a, b FROM e2
+              UNION
+              SELECT r.n, e.b FROM reach r JOIN e2 e ON r.m = e.a),
+            cl AS (SELECT n AS node, CAST(min(m) AS BIGINT)
+                     AS canonical_id
+                   FROM reach GROUP BY 1),
+            cs AS (SELECT canonical_id, CAST(count(*) AS BIGINT) AS sz
+                   FROM cl GROUP BY 1),
+            nn AS (SELECT CAST(count(DISTINCT i) AS BIGINT) AS n_nodes
+                   FROM sym),
+            ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges
+                   FROM chosen)
+         SELECT sz, count(*) AS n_components, n_nodes, n_edges
+         FROM cs CROSS JOIN nn CROSS JOIN ne
+         GROUP BY 1, 3, 4 ORDER BY 1""")),
+
+    // Basket-width OBSERVABILITY — the graph twin of
+    // dedup_lsh_bucket_stats: the order→item-set width histogram plus
+    // the implied pair mass Σ n_orders·w(w−1)/2. This is the census a
+    // pipeline runs BEFORE the per-order pair join: one mega-basket (a
+    // crawler account, a bot order) makes the join quadratic exactly
+    // like the LSH hot bucket the scaling study measured, and this one
+    // cheap partial-aggregable pass predicts it without running the
+    // join. Two groupBys, no self-join anywhere.
+    Query("graph_basket_width_stats", (s, dir) => {
+      graft.olap.GraphFrames.orderPartItems(s, dir)
+        .groupBy("ok").agg(count(lit(1)).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("n_orders"))
+        .withColumn("pair_mass",
+          expr("((w * (w - 1)) div 2) * n_orders"))
+        .orderBy("w")
+    },
+      // width histogram + implied pair mass over the distinct item sets
+      Some("""WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+                     FROM lineitem),
+              bw AS (SELECT ok, CAST(count(*) AS BIGINT) AS w
+                     FROM it GROUP BY 1)
+         SELECT w, count(*) AS n_orders,
+                ((w * (w - 1)) // 2) * count(*) AS pair_mass
+         FROM bw GROUP BY w ORDER BY w""")),
+
+    // The basket-width guard exercised AT a binding bound: cap 5 is
+    // BELOW the fixture max width, so whole wide baskets actually drop
+    // here and the ORACLE mirrors the cap — the guard's semantics
+    // (offending orders vanish entirely; surviving pairs and their
+    // shared-order weights are untouched) are pinned bitwise, not just
+    // the no-op case (the default-256 production path, which
+    // ScaleOpsSpec pins as the identity on this corpus). Output is the
+    // edge-weight histogram of the capped graph.
+    Query("graph_copurchase_capped", (s, dir) => {
+      val items = graft.olap.GraphFrames.capBaskets(
+          graft.olap.GraphFrames.orderPartItems(s, dir), "ok", 5)
+        .tracked // both self-join sides read the capped frame once
+      items.as("a").join(items.as("b"),
+          col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
+        .groupBy(col("a.pk").as("u"), col("b.pk").as("v"))
+        .agg(count(lit(1)).as("w"))
+        .groupBy("w").agg(count(lit(1)).as("n_edges"))
+        .orderBy("w")
+    },
+      // the cap mirrored at the binding literal bound (5): wide baskets
+      // drop whole, surviving pair weights are the plain per-order join
+      Some("""WITH it AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk
+                     FROM lineitem),
+              bw AS (SELECT ok, CAST(count(*) AS BIGINT) AS bw_w
+                     FROM it GROUP BY 1),
+              keep AS (SELECT it.ok, it.pk
+                       FROM it JOIN bw USING (ok) WHERE bw.bw_w <= 5),
+              e AS (SELECT a.pk AS u, b.pk AS v,
+                           CAST(count(*) AS BIGINT) AS w
+                    FROM keep a JOIN keep b
+                      ON a.ok = b.ok AND a.pk < b.pk
+                    GROUP BY 1, 2)
+         SELECT w, count(*) AS n_edges FROM e GROUP BY w ORDER BY w""")),
+
+    // Personalized PageRank from a seed set (every 50th part node): the
+    // "similar to these" walk primitive behind related-item recs and
+    // seed-expansion labeling. Same bitwise-portable quantized-lattice
+    // iteration as graph_pagerank (floor-scaled contributions sum as
+    // integers); the teleport mass lands on the seeds instead of
+    // uniformly, so rank decays with graph distance from them. Edge frame
+    // pre-shuffles once and persists across the 3 iterations; seeds is a
+    // node-sized predicate — no collect, no windows.
+    Query("graph_ppr_seeded", (s, dir) => {
+      // pinned pre-partitioned symmetric edges + pinned degree frame
+      // (nodes, out-degrees, and the seed predicate's node universe all
+      // read the node-sized cached frame — guide §2.1/§2.4; r11)
+      val G = graft.olap.GraphFrames
+      val deg = G.partSuppDegrees(s, dir)
+      // seeds: part nodes whose partkey is a multiple of 50 — node ids are
+      // partkey*2, so the predicate is node_id % 100 == 0 (also implies
+      // the part side of the bipartite encoding)
+      val seeds = deg.select(col("n").as("node_id"))
+        .filter(col("node_id") % 100 === 0)
+      graft.olap.PageRank.runPersonalized(G.partSuppSym(s, dir), "src",
+          "dst", seeds, iterations = 3, edgesPinned = true,
+          nodesOpt = Some(deg.select(col("n").as("node_id"))),
+          outdegOpt = Some(deg.select(col("n").as("src"),
+            col("d").as("outdeg"))))
+        .withColumn("node_type",
+          when(col("node_id") % 2 === 0, "part").otherwise("supplier"))
+        .select(col("node_id"), col("node_type"), col("is_seed"),
+          col("rank"))
+        .orderBy(col("rank").desc, col("node_id"))
+        .limit(30)
+    },
+      // same quantized-lattice recurrence as graph_pagerank, with the
+      // teleport CASE'd onto the seed set (node_id % 100 = 0) and base rank
+      // 1/|S| on seeds / 0 elsewhere
+      Some {
+      def iter(i: Int, prev: String): String =
+        s"""c$i AS (SELECT src,
+                      CAST(floor(rank / CAST(d AS DOUBLE)
+                        * CAST(1000000000000 AS DOUBLE)) AS BIGINT) AS c
+                    FROM $prev JOIN outdeg ON node_id = src),
+             s$i AS (SELECT dst AS node_id, CAST(sum(c) AS BIGINT) AS sc
+                     FROM edges JOIN c$i USING (src) GROUP BY 1),
+             r$i AS (SELECT n2.node_id, n2.is_seed,
+                       CASE WHEN n2.is_seed THEN CAST(0.15 AS DOUBLE)
+                         * (CAST(1 AS DOUBLE) / CAST(ns AS DOUBLE))
+                       ELSE CAST(0 AS DOUBLE) END
+                       + CAST(0.85 AS DOUBLE)
+                         * (CAST(coalesce(sc, 0) AS DOUBLE)
+                            / CAST(1000000000000 AS DOUBLE)) AS rank
+                     FROM nodes n2 CROSS JOIN sn LEFT JOIN s$i USING (node_id))"""
+      s"""WITH e0 AS (SELECT DISTINCT l_partkey * 2 AS src,
+                        l_suppkey * 2 + 1 AS dst FROM lineitem),
+              edges AS (SELECT src, dst FROM e0
+                        UNION ALL SELECT e0.dst AS src, e0.src AS dst FROM e0),
+              nodes AS (SELECT node_id, node_id % 100 = 0 AS is_seed
+                        FROM (SELECT DISTINCT src AS node_id FROM edges)),
+              sn AS (SELECT count(*) AS ns FROM nodes WHERE is_seed),
+              outdeg AS (SELECT src, count(*) AS d FROM edges GROUP BY 1),
+              r0 AS (SELECT node_id, is_seed,
+                       CASE WHEN is_seed
+                         THEN CAST(1 AS DOUBLE) / CAST(ns AS DOUBLE)
+                         ELSE CAST(0 AS DOUBLE) END AS rank
+                     FROM nodes CROSS JOIN sn),
+              ${iter(1, "r0")},
+              ${iter(2, "r1")},
+              ${iter(3, "r2")}
+         SELECT node_id,
+                CASE WHEN node_id % 2 = 0 THEN 'part' ELSE 'supplier' END
+                  AS node_type,
+                is_seed, rank
+         FROM r3 ORDER BY rank DESC, node_id LIMIT 30"""
+      }),
+
+    // Exact distinct via mergeable BITMAP segments — the production-exact
+    // counterpart to the HLL/KMV sketches: the user-id space is cut into
+    // 62-bit words (bit 62/63 stay clear so the per-word mask is a
+    // positive BIGINT on engines that range-check shifts), each
+    // (group, word) row ORs its members' bits, and distinct = Σ
+    // bit_count(word). Both stages are partial-aggregable (bit_or and sum
+    // are order-free), segments merge across shards/days by OR — the
+    // Roaring-bitmap idiom with state ∝ id-space/62 per group, not rows.
+    Query("olap_bitmap_distinct", (s, dir) => {
+      val seg = Tables.events(s, dir)
+        .select(col("event_type"), to_date(col("ts")).as("event_date"),
+          col("user_id"))
+        .groupBy(col("event_type"), col("event_date"),
+          expr("user_id DIV 62").as("word_idx"))
+        .agg(expr("bit_or(shiftleft(CAST(1 AS BIGINT), " +
+          "CAST(pmod(user_id, 62) AS INT)))").as("bits"))
+      seg.groupBy("event_type", "event_date")
+        .agg(sum(bit_count(col("bits")).cast("long")).as("n_distinct"),
+          count(lit(1)).as("n_segments"))
+        .withColumn("density",
+          col("n_distinct").cast("double")
+            / (col("n_segments") * 62L).cast("double"))
+        .orderBy("event_type", "event_date")
+    },
+      // 62-bit words keep every per-word mask positive (DuckDB range-checks
+      // << into bit 63); bit_or / bit_count / sum mirror the engine's
+      // mergeable-segment arithmetic exactly
+      Some("""WITH seg AS (SELECT event_type, CAST(ts AS DATE) AS event_date,
                         user_id // 62 AS word_idx,
                         bit_or(CAST(1 AS BIGINT) << CAST(user_id % 62 AS INT))
                           AS bits
@@ -4164,6 +4019,6 @@ object GraphOlapQueries {
                 count(*) AS n_segments,
                 CAST(sum(bit_count(bits)) AS DOUBLE)
                   / CAST(count(*) * 62 AS DOUBLE) AS density
-         FROM seg GROUP BY 1, 2 ORDER BY 1, 2""",
+         FROM seg GROUP BY 1, 2 ORDER BY 1, 2""")),
   )
 }

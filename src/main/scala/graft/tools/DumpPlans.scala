@@ -44,8 +44,7 @@ object DumpPlans {
         G.walkStep(spark, sfDir, seeds, 1L)
       // ---- r11 per-round shapes (the real queries eagerly checkpoint,
       // which truncates lineage — these expose the per-iteration subtree
-      // the bench actually pays; `_r10` variants reconstruct the
-      // pre-r11 shape verbatim for the before/after plan diff) ----
+      // the bench actually pays) ----
       case "cc_incremental_input" =>
         // the CC input of dedup_cc_incremental after r11: star edges off
         // the pinned label table ∪ delta off the pinned pair index
@@ -56,37 +55,6 @@ object DumpPlans {
           .filter(col("doc_a") % 5 === 0 || col("doc_b") % 5 === 0)
           .select(col("doc_a").as("a"), col("doc_b").as("b"))
         oldArm.unionByName(delta)
-      case "cc_incremental_input_r10" =>
-        // pre-r11: old-corpus re-cluster (star edges of a full CC run
-        // over re-banded old docs) ∪ a re-built banded delta self-join
-        import graft.dedup.{Components, SimHash}
-        import org.apache.spark.sql.functions.{array, bit_count, explode, shiftright}
-        val docs = graft.Tables.documents(spark, sfDir)
-        val isNewId = col("doc_id") % 5 === 0
-        val oldPairs = SimHash.bandedNearDupPairs(docs.filter(!isNewId),
-          "doc_id", "text", maxHamming = 1, bands = 2)
-        val oldLabels = Components.canonicalLabels(oldPairs,
-            "doc_a", "doc_b")
-          .select(col("doc_id").as("a"), col("canonical_id").as("b"))
-        val bk = docs
-          .select(col("doc_id"), SimHash.simhash32(col("text")).as("sh"))
-          .select(col("doc_id"), col("sh"), explode(array(
-              struct(lit(0).as("band"),
-                col("sh").bitwiseAND(lit(65535L)).as("key")),
-              struct(lit(1).as("band"),
-                shiftright(col("sh"), 16).bitwiseAND(lit(65535L))
-                  .as("key")))).as("bk"))
-          .select(col("doc_id"), col("sh"),
-            col("bk.band").as("band"), col("bk.key").as("key"))
-        val delta = bk.as("x").join(bk.as("y"),
-            col("x.band") === col("y.band") &&
-              col("x.key") === col("y.key") &&
-              col("x.doc_id") < col("y.doc_id") &&
-              (col("x.doc_id") % 5 === 0 || col("y.doc_id") % 5 === 0))
-          .filter(bit_count(col("x.sh").bitwiseXOR(col("y.sh"))) <= 1)
-          .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-          .distinct()
-        oldLabels.unionByName(delta)
       case "katz_iter" =>
         // one matvec round, r11: pinned pre-partitioned sym frame,
         // join keyed on the cached partitioning column (src)
@@ -97,38 +65,9 @@ object DumpPlans {
           .groupBy(col("dst").as("n2")).agg(fsum(col("katz")).as("m"))
           .select(col("n2").as("node"),
             (lit(1L) + expr("m DIV 4")).as("katz"))
-      case "katz_iter_r10" =>
-        // pre-r11: inline symmetrize (unpartitioned persist), join on dst
-        val pairs = G.partSuppPairs(spark, sfDir)
-        val e = pairs.select((col("l_partkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .unionAll(pairs.select((col("l_suppkey") * 2 + 1).as("src"),
-            (col("l_partkey") * 2).as("dst")))
-        val ec = graft.CacheRegistry.cached(e)
-        val v = ec.select(col("src").as("node")).distinct()
-          .withColumn("katz", lit(1L))
-        ec.join(v, col("dst") === col("node"))
-          .groupBy(col("src").as("n2")).agg(fsum(col("katz")).as("m"))
-          .select(col("n2").as("node"),
-            (lit(1L) + expr("m DIV 4")).as("katz"))
       case "labelprop_round" =>
         // one LPA round over the pinned pre-partitioned sym frame
         val e = G.partSuppSym(spark, sfDir)
-        val l = e.select(col("src").as("node")).distinct()
-          .withColumn("label", col("node"))
-        e.join(l, e("src") === l("node"))
-          .groupBy(col("dst").as("n2"), col("label"))
-          .agg(fcount(lit(1)).as("c"))
-          .groupBy(col("n2").as("node"))
-          .agg(max_by(col("label"), struct(col("c"), negate(col("label"))))
-            .as("label"))
-      case "labelprop_round_r10" =>
-        val pairs = G.partSuppPairs(spark, sfDir)
-        val e0 = pairs.select((col("l_partkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .unionAll(pairs.select((col("l_suppkey") * 2 + 1).as("src"),
-            (col("l_partkey") * 2).as("dst")))
-        val e = graft.CacheRegistry.cached(e0)
         val l = e.select(col("src").as("node")).distinct()
           .withColumn("label", col("node"))
         e.join(l, e("src") === l("node"))
@@ -144,16 +83,6 @@ object DumpPlans {
           .agg(fmin(col("n")).as("node"))
         e.join(frontier.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node")).distinct()
-      case "bfs_hop_r10" =>
-        val pairs = G.partSuppPairs(spark, sfDir)
-        val e0 = pairs.select((col("l_partkey") * 2).as("src"),
-            (col("l_suppkey") * 2 + 1).as("dst"))
-          .unionAll(pairs.select((col("l_suppkey") * 2 + 1).as("src"),
-            (col("l_partkey") * 2).as("dst")))
-        val e = graft.CacheRegistry.cached(e0)
-        val frontier = e.agg(fmin(col("src")).as("node"))
-        e.join(frontier.withColumnRenamed("node", "src"), "src")
-          .select(col("dst").as("node")).distinct()
       case "cc_seed" =>
         // Components' seed aggregation over the pinned symInput frame —
         // the r11 fast path: no symmetrize union, no Exchange before the
@@ -161,16 +90,6 @@ object DumpPlans {
         G.coPurchaseSym(spark, sfDir)
           .select(col("u").cast("long").as("a"),
             col("v").cast("long").as("b"))
-          .groupBy(col("a").as("node")).agg(fmin(col("b")).as("nmin"))
-      case "cc_seed_r10" =>
-        // pre-r11: inline symmetrize + repartition inside canonicalLabels
-        val e = G.coPurchaseEdges(spark, sfDir)
-          .select(col("u").cast("long").as("a"),
-            col("v").cast("long").as("b"))
-        val sym = e.unionByName(
-            e.select(col("b").as("a"), col("a").as("b")))
-          .repartition(col("a")).sortWithinPartitions("a")
-        graft.CacheRegistry.cached(sym)
           .groupBy(col("a").as("node")).agg(fmin(col("b")).as("nmin"))
       case "hits_matvec" =>
         // one HITS matvec + rescale (the per-round unit; the query's own

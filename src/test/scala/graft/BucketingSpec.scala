@@ -69,8 +69,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("compaction collapses splinter files and preserves content exactly") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_compact_spec").toString
+    val base = graft.io.WorkDir.create("graft_compact_spec").toString
     val ev = Tables.events(spark, sf).select("event_id", "event_type", "value")
     ev.repartition(64).write.mode("overwrite").parquet(s"$base/frag")
     def parquetFiles(d: String) =

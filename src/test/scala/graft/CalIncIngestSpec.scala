@@ -129,7 +129,7 @@ class CalIncIngestSpec extends AnyFunSuite {
 
   test("idempotent append: running twice equals running once") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_inc").toString
+    val dir = graft.io.WorkDir.create("graft_inc").toString
     val sink = s"$dir/sink"
     val batch1 = Seq((1, "a"), (2, "b")).toDF("k", "v")
     val batch2 = Seq((2, "B"), (3, "c")).toDF("k", "v") // k=2 is a replay

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.LocalDate
 
 import org.apache.spark.sql.DataFrame
@@ -34,7 +33,7 @@ class DailyTickSpec extends AnyFunSuite {
     * file-system subprocesses the whole tick started.
     */
   private def tick(history: Int): (Map[String, Int], Seq[String]) = {
-    val dir = Files.createTempDirectory("graft_tick")
+    val dir = graft.io.WorkDir.create("graft_tick")
     val price = dir.resolve("price").toString
     val fx = dir.resolve("fx").toString
     Watermark.appendIdempotent(spark, bars(0, history, 100.0), price,

@@ -72,7 +72,7 @@ class GoldenPipelineSpec extends AnyFunSuite {
       Seq("2026-08-04", "2026-08-05", "2026-08-06", "2026-08-07"))
     // idempotent append: a retried load (FetchPlan.retry semantics)
     // cannot double-insert
-    val sink = java.nio.file.Files.createTempDirectory("graft_fx").toString + "/t"
+    val sink = graft.io.WorkDir.create("graft_fx").toString + "/t"
     Watermark.appendIdempotent(spark, fresh, sink, Seq("date"))
     Watermark.appendIdempotent(spark, fresh, sink, Seq("date"))
     assert(spark.read.parquet(sink).count() == 4)

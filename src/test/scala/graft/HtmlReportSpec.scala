@@ -79,7 +79,7 @@ class HtmlReportSpec extends AnyFunSuite {
     val a = graft.report.HtmlReport.render(frame, "t", "date", cols)
     val b = graft.report.HtmlReport.render(frame, "t", "date", cols)
     assert(a == b)
-    val out = java.nio.file.Files.createTempDirectory("graft-report")
+    val out = graft.io.WorkDir.create("graft-report")
       .resolve("report.html").toString
     val len = graft.report.HtmlReport.write(frame, out, "t", "date", cols)
     assert(java.nio.file.Files.size(java.nio.file.Paths.get(out)) == len)

@@ -13,7 +13,7 @@ class LiveFetchSpec extends AnyFunSuite {
   import graft.ingest.{AvJson, LiveFetch}
 
   test("fetched payload parses identically to the fixture-frame path") {
-    val f = java.nio.file.Files.createTempFile("graft-av", ".json")
+    val f = graft.io.WorkDir.create("graft-av").resolve("av.json")
     java.nio.file.Files.write(f,
       AvJson.equityFixture.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val body = LiveFetch.fetchJson(f.toUri.toString)

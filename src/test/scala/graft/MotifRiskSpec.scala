@@ -60,7 +60,7 @@ class MotifRiskSpec extends AnyFunSuite {
       .select(col("user_id"), to_timestamp(col("ds")).as("ts"),
         lit(1L).as("event_id"), lit("x").as("event_type"),
         lit(1.0).as("value"), lit("").as("props"))
-    val tmp = java.nio.file.Files.createTempDirectory("wau").toString
+    val tmp = graft.io.WorkDir.create("wau").toString
     syn.write.mode("overwrite").parquet(s"$tmp/events.parquet")
     val sout = SparkEntry.queries("olap_wau_sliding_distinct")(spark, tmp)
       .collect()

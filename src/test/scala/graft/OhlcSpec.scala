@@ -48,7 +48,7 @@ class OhlcSpec extends AnyFunSuite {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val dir = java.nio.file.Files.createTempDirectory("graft_sma").toString
+    val dir = graft.io.WorkDir.create("graft_sma").toString
     val day0 = java.time.LocalDate.parse("2024-01-01")
     def series(name: String, f: Int => Double): String = {
       val path = s"$dir/$name"
@@ -124,7 +124,7 @@ class OhlcSpec extends AnyFunSuite {
     // spec-checked contract instead (PropertySpec fidelity/determinism).
     // Anything else without an oracle fails here before it can silently
     // become a weaker rows-only row in the driver's ledger.
-    val oracleExempt = SparkEntry.oracleExempt // the one registry
+    val oracleExempt = SparkEntry.oracleExempt // the records with no oracle
     assert(oracleExempt == Set("mm_jpeg_decode", "mm_mjpeg_scene_cut"),
       "exemption registry changed — re-justify each entry here")
     assert(oracleExempt.subsetOf(SparkEntry.queries.keySet))

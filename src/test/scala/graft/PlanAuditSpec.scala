@@ -315,49 +315,11 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("no silently-shadowed query keys in the source map literals") {
-    // Scala Map literals keep the LAST duplicate key with no warning — a
-    // duplicated query name silently clobbers the original (round 5
-    // shipped-and-caught exactly this with ts_seasonality_dow). Pin the
-    // source text against the runtime maps.
-    // post-split, definitions live in the graft.queries.* family modules
-    // — and the ++ merge in SparkEntry makes a key duplicated ACROSS
-    // modules clobber silently too, so scan the concatenation of all of
-    // them (plus SparkEntry itself, should anything move back)
-    import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Paths.get("src/main/scala/graft/queries")
-    val files = java.nio.file.Files.list(dir).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString) :+
-      java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")
-    val src = files.map(p => new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8)).mkString("\n")
-    val closureNames = """"([a-z0-9_]+)" -> \(\(s, dir\)""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    val dups = closureNames.groupBy(identity).filter(_._2.size > 1).keys
-    assert(dups.isEmpty, s"duplicated query closures: ${dups.mkString(", ")}")
-    assert(closureNames.size == SparkEntry.queries.size,
-      "closure count != queries map size (a key is shadowed or unparsed)")
-    assert(closureNames.toSet == SparkEntry.queries.keySet)
-    // oracle entries: `"name" ->` at end of line (triple-quoted SQL on the
-    // next line), `"name" -> {` (computed SQL), or `"name" -> ident,`
-    // (shared oracle val) — all at 4-space indent, which no SQL-embedded
-    // lambda arrow matches
-    val oracleNames =
-      """(?m)^    "([a-z0-9_]+)" ->\s*(\{\s*|[A-Za-z][A-Za-z0-9_]*,\s*)?$""".r
-        .findAllMatchIn(src).map(_.group(1)).toSeq
-    val odups = oracleNames.groupBy(identity).filter(_._2.size > 1).keys
-    assert(odups.isEmpty, s"duplicated oracle entries: ${odups.mkString(", ")}")
-    assert(oracleNames.size == SparkEntry.oracleSql.size,
-      "oracle count != oracleSql map size (a key is shadowed or unparsed)")
-    assert(oracleNames.toSet == SparkEntry.oracleSql.keySet)
-  }
-
-  /** Every source file under src/main/scala, by path relative to it, with
-    * its comments removed.
+  /** Every source file under `root`, by path relative to it, with its
+    * comments removed.
     */
-  private lazy val mainCode: Seq[(String, String)] = {
+  private def code(root: java.nio.file.Path): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
-    val root = java.nio.file.Paths.get("src/main/scala")
     val comment = """(?s)/\*.*?\*/|//[^\n]*""".r
     java.nio.file.Files.walk(root).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
@@ -365,6 +327,8 @@ class PlanAuditSpec extends AnyFunSuite {
         new String(java.nio.file.Files.readAllBytes(p),
           java.nio.charset.StandardCharsets.UTF_8), ""))
   }
+
+  private lazy val mainCode = code(java.nio.file.Paths.get("src/main/scala"))
 
   test("bounded streams start, drain and stop only in BoundedRun") {
     // one lifecycle for every bounded stream: outside comments, the
@@ -391,6 +355,15 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(forks.isEmpty, s"process starts in ${forks.mkString(", ")}")
     val temp = mainCode.filter(_._2.contains("createTempDirectory")).map(_._1)
     assert(temp == Seq("graft/io/WorkDir.scala"))
+  }
+
+  test("specs make scratch directories only through WorkDir") {
+    // a spec's sinks and checkpoints are deleted at JVM exit like a
+    // query's; a bare temp directory would outlive every test run
+    val temp = """createTempDirectory\s*\(""".r
+    val hits = code(java.nio.file.Paths.get("src/test/scala"))
+      .filter(c => temp.findFirstIn(c._2).isDefined).map(_._1)
+    assert(hits.isEmpty, s"createTempDirectory in ${hits.mkString(", ")}")
   }
 
   test("every class core-site.xml names loads") {

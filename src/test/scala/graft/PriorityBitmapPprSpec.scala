@@ -574,7 +574,7 @@ class PriorityBitmapPprSpec extends AnyFunSuite {
     // crafted two-file replay: the watermark advances mid-stream, so
     // evictions happen across batch boundaries — the emitted set must
     // still equal the final-watermark threshold formula the oracle uses
-    val dir = java.nio.file.Files.createTempDirectory("sslj").toString
+    val dir = graft.io.WorkDir.create("sslj").toString
     def ts(m: Long) = new java.sql.Timestamp(1700000000000L + m * 60000L)
     // trailing-hour semantics: a view matches only if it PRECEDES the
     // purchase within 1h. purchases at minutes 20, 30, 300, 301; views
@@ -597,7 +597,7 @@ class PriorityBitmapPprSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$dir/f2")
     // one data dir, chronological mtimes so the file source replays in
     // event-time order (no artificial late data)
-    val data = java.nio.file.Files.createTempDirectory("sslj_in").toString
+    val data = graft.io.WorkDir.create("sslj_in").toString
     var i = 0
     for (sub <- Seq("f1", "f2")) {
       val src = new java.io.File(s"$dir/$sub").listFiles()

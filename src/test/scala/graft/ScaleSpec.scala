@@ -10,7 +10,7 @@ class ScaleSpec extends AnyFunSuite {
   val sf = "/root/testdata/sf0.001"
 
   test("year-partitioned sink prunes partitions under a date predicate") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = graft.io.WorkDir.create("graft_part").toString
     val li = Tables.lineitem(spark, sf)
       .withColumn("ship_date", to_date(col("l_shipdate")))
     PartitionedSink.writeYearPartitioned(
@@ -30,7 +30,7 @@ class ScaleSpec extends AnyFunSuite {
     import graft.olap.Bucketing
     val li = Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity")
     val ord = Tables.orders(spark, sf).select("o_orderkey", "o_totalprice")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bucket").toString
+    val tmp = graft.io.WorkDir.create("graft_bucket").toString
     Bucketing.writeBucketed(li, "graft_li_b", "l_orderkey", 8,
       Some(s"$tmp/li"))
     Bucketing.writeBucketed(ord, "graft_ord_b", "o_orderkey", 8,

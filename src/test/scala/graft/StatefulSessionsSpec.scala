@@ -39,8 +39,7 @@ class StatefulSessionsSpec extends AnyFunSuite {
     val viaMemory = StatefulSessions.runOverFixture(spark, sf)
       .select("user_id", "session_start", "session_end", "n_events",
               "sum_value")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_scaling_sink").toString
+    val dir = graft.io.WorkDir.create("graft_scaling_sink").toString
     spark.conf.set("spark.graft.stream.scalingSink", dir)
     try {
       val viaParquet = StatefulSessions.runOverFixture(spark, sf)
@@ -55,7 +54,7 @@ class StatefulSessionsSpec extends AnyFunSuite {
 
   test("event-time timeout closes the open session on watermark advance") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_ss").toString
+    val dir = graft.io.WorkDir.create("graft_ss").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
     // batch 1: one event; batch 2: an event 3 days later for another user,
     // pushing the watermark far past user 1's session timeout

@@ -139,7 +139,7 @@ class StreamAsofSpec extends AnyFunSuite {
   test("streaming append mode emits only watermark-closed windows") {
     import graft.streaming.EventStream
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = graft.io.WorkDir.create("graft_stream").toString
     // batch 1: two days of events; batch 2: a third day (advances the
     // watermark past day 1 and 2)
     Seq((1L, ts("2024-01-01 10:00:00"), 1L, "a", 1.0, "{}"),

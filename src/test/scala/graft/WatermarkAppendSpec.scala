@@ -17,7 +17,7 @@ class WatermarkAppendSpec extends AnyFunSuite {
   import graft.inc.Watermark
   lazy val spark = SparkTestSession.spark
 
-  private def tmp(): Path = Files.createTempDirectory("graft_append")
+  private def tmp(): Path = graft.io.WorkDir.create("graft_append")
 
   private def batch(ks: Int*) = {
     import spark.implicits._

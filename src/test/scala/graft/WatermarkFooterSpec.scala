@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Path
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -19,7 +19,7 @@ class WatermarkFooterSpec extends AnyFunSuite {
   private val LoggerName = "graft.inc.Watermark"
 
   private def tmp(): Path =
-    Files.createTempDirectory("graft_wm").resolve("sink")
+    graft.io.WorkDir.create("graft_wm").resolve("sink")
 
   /** Rows (d DATE, i INT, l BIGINT, v STRING) for day offsets `days`;
     * None is an all-null key row.
