@@ -1,55 +1,24 @@
 package graft
 
 /** Driver-run benchmark: one JSON line with per-query and total seconds.
-  *
-  * Each query is fully materialized through the noop sink — `count()` would
-  * let Catalyst prune the projected columns and under-measure
-  * expression-heavy queries (e.g. fingerprints), whereas noop executes the
-  * complete physical plan including every output column, without sink I/O.
+  * Each query runs through [[Harness.run]], materialized by [[Harness.noop]].
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = GraftSession.build(GraftSession.cpus())
     // JIT/classload warmup outside the timed region (tiny SF)
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] warm-up failed: ${e.getMessage}") }
-    // min of 2 runs per query: steady-state timing, robust to shared-host
-    // noise and first-run JIT of query-specific generated code
-    // optional arg: comma list of query-name substrings (dev loop only;
-    // the driver always calls with no args = full run)
-    val only = args.headOption.map(_.split(",").toSeq)
-    def keep(name: String): Boolean = only.forall(_.exists(name.contains))
+    Harness.run(spark, "warmup")(Harness.noop(SparkEntry.entry(spark)))
+      .result.left.foreach(e =>
+        System.err.println(s"[bench] warm-up failed: ${e.getMessage}"))
     // Host-noise instrumentation (BENCH_r05 recorded 527 s where the same
     // code measures 241 s on a quiet host — the artifact could not prove
     // that about itself). Two in-artifact signals make contention
     // self-diagnosing:
-    //  (a) per-query PROCESS CPU seconds next to wall seconds — a
-    //      descheduled JVM accrues wall but not CPU, so contended queries
-    //      show wall >> cpu while genuinely heavy ones show cpu ≈
-    //      parallelism × wall;
+    //  (a) per-query PROCESS CPU and GC seconds next to wall seconds
+    //      (Harness.Run);
     //  (b) a fixed CALIBRATION query re-timed every 25 queries — constant
     //      work, so any drift in its reading is the host, not the engine.
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def cpuSec(): Double = {
-      val t = osBean.getProcessCpuTime
-      if (t < 0) 0.0 else t / 1e9
-    }
-    // JVM GC seconds (all collectors): the wall/cpu pair alone cannot
-    // separate "GC pressure inflated this query" from "foreign load or
-    // frequency scaling inflated it" — both raise cpu WITH wall, the
-    // blind spot BENCH_r07 exposed (queries 3-13x over the committed map
-    // on a run whose wall-vs-cpu stats were clean). Per-query GC time is
-    // the engine-side half of that separation; the committed-map cpu
-    // regression below is the environment-side half.
-    def gcSec(): Double = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum / 1e3
-    }
     // committed per-query PROCESS-CPU reference map (classpath resource,
     // refreshed each round from the quiet-host artifact): process CPU is
     // load-independent evidence — a descheduled JVM accrues wall but not
@@ -76,53 +45,28 @@ object Bench {
     // contention accrues cpu without wall). r6 measured cpw 3.2-4.4 on
     // a quiet full run vs 3.2-8.1 with a concurrent build — the
     // envelope, not the direction, is the signal.
-    def calibrate(): (Double, Double) = {
-      val t0 = System.nanoTime()
-      val c0 = cpuSec()
-      spark.range(0L, 20000000L, 1L, 8)
-        // mod before summing: 2e7 raw 64-bit hashes overflow an ANSI sum
-        .selectExpr("sum(pmod(xxhash64(id), 1000000)) AS h")
-        .write.format("noop").mode("overwrite").save()
-      ((System.nanoTime() - t0) / 1e9, cpuSec() - c0)
+    def calibrate(after: Int): (Int, Double, Double) = {
+      val r = Harness.run(spark, "calibration")(Harness.noop(
+        spark.range(0L, 20000000L, 1L, 8)
+          // mod before summing: 2e7 raw 64-bit hashes overflow an ANSI sum
+          .selectExpr("sum(pmod(xxhash64(id), 1000000)) AS h")))
+      r.result.toTry.get
+      (after, r.wallSec, r.cpuSec)
     }
-    val calibration =
-      scala.collection.mutable.ArrayBuffer[(Int, Double, Double)]()
+    calibrate(0) // discard: first run JIT-compiles the calibration path
+    val calibration = scala.collection.mutable.ArrayBuffer(calibrate(0))
     var done = 0
     val cacheCensus = scala.collection.mutable.LinkedHashMap[String, Int]()
-    val cpuByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    val gcByQuery = scala.collection.mutable.LinkedHashMap[String, Double]()
-    calibrate() // discard: first run JIT-compiles the calibration path
-    val c0 = calibrate(); calibration += ((0, c0._1, c0._2))
-    val results = SparkEntry.queries.toSeq.filter(e => keep(e._1))
-      .sortBy(_._1).map { case (name, fn) =>
-      // pinned-build attribution + readable UI (guide §1.5): any pinned
-      // frame built during this query's runs is charged to `name` in the
-      // pinned ledger below
-      CacheRegistry.setContext(name)
-      spark.sparkContext.setJobDescription(name)
-      val times = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        val c0 = cpuSec()
-        val g0 = gcSec()
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          val dc = cpuSec() - c0
-          val dg = gcSec() - g0
-          // release the frames the closure registered — 241 queries x2 in
-          // one JVM; leaked caches evict each other and poison later
-          // queries (round 4's sketch_bloom_join 12x regression). Release
-          // sits OUTSIDE the timed region: each run re-executes its full
-          // plan, so run-2 "min" is steady-state JIT, not a warm cache.
-          CacheRegistry.releaseAll()
-          (dt, dc, dg)
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          CacheRegistry.releaseAll()
-          // sentinel: a failed run must not pose as a measurement
-          (-1.0, 0.0, 0.0)
-        }
-      }
+    // (name, wall, cpu, gc) per query, in run order; optional arg: comma
+    // list of query-name substrings (dev loop only; a full run passes none)
+    val results = Harness.select(args.headOption).map {
+        case Query(name, run, _) =>
+      // min of 2 runs per query: steady-state timing, robust to shared-host
+      // noise and first-run JIT of query-specific generated code
+      val runs = (1 to 2).map(_ =>
+        Harness.run(spark, name)(Harness.noop(run(spark, sfDir))))
+      runs.flatMap(_.result.left.toOption).foreach(e =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}"))
       // per-query cache census AFTER release: a nonzero residual is either
       // a leak (bug — visible in the artifact now, not inferred from a
       // later query's regression) or a localCheckpoint block awaiting the
@@ -130,20 +74,17 @@ object Bench {
       // reclaim those so genuine leaks stand out as monotone growth.
       cacheCensus(name) = CacheRegistry.census(spark)
       done += 1
-      if (done % 25 == 0) {
-        System.gc(); val c = calibrate(); calibration += ((done, c._1, c._2))
-      }
-      val ok = times.filter(_._1 >= 0)
+      if (done % 25 == 0) { System.gc(); calibration += calibrate(done) }
       // report the min-wall run's CPU (and GC) next to its wall: the
       // triple from ONE run is the contention diagnostic (a mixed
-      // min-of-each would not be)
-      val best = if (ok.isEmpty) (-1.0, 0.0, 0.0) else ok.minBy(_._1)
-      cpuByQuery(name) = best._2
-      gcByQuery(name) = best._3
-      name -> best._1
+      // min-of-each would not be); a failed run must not pose as a
+      // measurement, so an all-failed query reports the -1 sentinel
+      val best = runs.filter(_.result.isRight).minByOption(_.wallSec)
+      (name, best.fold(-1.0)(_.wallSec), best.fold(0.0)(_.cpuSec),
+        best.fold(0.0)(_.gcSec))
     }
-    val cN = calibrate(); calibration += ((done, cN._1, cN._2))
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + v }
+    calibration += calibrate(done)
+    val qs = results.map { case (k, v, _, _) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     // failed queries (-1 sentinel) are excluded from the total so a broken
     // query can't make the bench look healthy with a bogus timing
@@ -152,9 +93,9 @@ object Bench {
     // run, and graph queries carry fixed iterative cost — split both out so
     // batch regressions aren't masked by either
     val streaming = results.collect {
-      case (n, v) if n.startsWith("stream_") && v >= 0 => v }.sum
+      case (n, v, _, _) if n.startsWith("stream_") && v >= 0 => v }.sum
     val graph = results.collect {
-      case (n, v) if n.startsWith("graph_") && v >= 0 => v }.sum
+      case (n, v, _, _) if n.startsWith("graph_") && v >= 0 => v }.sum
     val batch = total - streaming - graph
     def f(d: Double): String = "%.3f".format(d)
     val groups =
@@ -162,9 +103,9 @@ object Bench {
     val census = cacheCensus.map { case (k, v) => "\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val cacheMax = if (cacheCensus.isEmpty) 0 else cacheCensus.values.max
-    val cpuMap = cpuByQuery.map { case (k, v) => "\"" + k + "\":" + f(v) }
+    val cpuMap = results.map { case (k, _, c, _) => "\"" + k + "\":" + f(c) }
       .mkString("{", ",", "}")
-    val cpuTotal = cpuByQuery.values.sum
+    val cpuTotal = results.map(_._3).sum
     val calArr = calibration.map { case (i, s, c) =>
       s"""{"after":$i,"sec":${f(s)},"cpu":${f(c)}}""" }
       .mkString("[", ",", "]")
@@ -185,8 +126,8 @@ object Bench {
     val calCpuPerWall = calibration.map(t => t._3 / t._2)
     val calWallRatio =
       if (calibration.isEmpty) 1.0 else calMax / math.max(calMin, 1e-9)
-    val nWallGtCpu = results.count { case (k, v) =>
-      v >= 0.5 && v > cpuByQuery.getOrElse(k, 0.0) * 1.1 }
+    val nWallGtCpu = results.count { case (_, v, c, _) =>
+      v >= 0.5 && v > c * 1.1 }
     // CPU-inflation detector (VERDICT r7 item 1): process CPU is
     // load-independent — identical code doing identical work burns the
     // same cpu-seconds on a quiet host, so cpu > 2x the committed
@@ -197,17 +138,17 @@ object Bench {
     // added after the committed map simply have no reference and are
     // skipped. n_cpu_inflated > 0 means: read this artifact's walls
     // through the contamination lens; the committed map is the basis.
-    val cpuInflated = results.collect { case (k, v)
+    val cpuInflated = results.collect { case (k, v, c, _)
       if v >= 0.5 && refCpu.contains(k) &&
-        cpuByQuery.getOrElse(k, 0.0) > 2.0 * math.max(refCpu(k), 0.2) =>
-      k -> (cpuByQuery(k) / math.max(refCpu(k), 0.2)) }
+        c > 2.0 * math.max(refCpu(k), 0.2) =>
+      k -> (c / math.max(refCpu(k), 0.2)) }
     val nCpuInflated = cpuInflated.size
     val inflatedArr = cpuInflated.sortBy(-_._2).take(20)
       .map { case (k, r) => s"""{"q":"$k","x":${f(r)}}""" }
       .mkString("[", ",", "]")
-    val gcMap = gcByQuery.map { case (k, v) => "\"" + k + "\":" + f(v) }
+    val gcMap = results.map { case (k, _, _, g) => "\"" + k + "\":" + f(g) }
       .mkString("{", ",", "}")
-    val gcTotal = gcByQuery.values.sum
+    val gcTotal = results.map(_._4).sum
     // pinned-build ledger (VERDICT r9 item 3): per pinned frame, the
     // query that paid for its build and the build wall — first-payer
     // cost shifts after a pinned-frame refactor are now attributable

@@ -11,9 +11,10 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * evict each other, and poison later queries (round 4 shipped a 12x
   * regression on an unchanged query exactly this way).
   *
-  * So: closures persist through [[cached]], which registers the frame; the
-  * harnesses (Bench, Verify, spec helpers) call [[releaseAll]] immediately
-  * after each query's single materialization. Release is idempotent —
+  * So: closures persist through [[cached]], which registers the frame;
+  * [[Harness.run]], which runs each query for Bench, Verify and the tools,
+  * calls [[releaseAll]] immediately after the query's single
+  * materialization. Release is idempotent —
   * frames a closure already unpersisted eagerly (the iterative per-round
   * discipline in KCore/HITS/Components) are harmless no-ops here.
   */
@@ -63,7 +64,7 @@ object CacheRegistry {
     * projection of the new coPurchaseWeighted frame, so it became the
     * first payer of a different build), and nothing in the artifact can
     * prove a wall move is attribution, not regression. `context` is set
-    * by the harness (Bench/Verify) to the query it is about to run.
+    * by [[Harness.run]] to the query it is about to run.
     */
   final case class PinnedBuild(key: String, payer: String, buildSec: Double)
   private val pinnedBuilds =

@@ -61,36 +61,30 @@ object Verify {
     // the driver always calls with 2 args = full run)
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, None)
-      case Array(a, b, f) => (a, b, Some(f.split(",").toSeq))
+      case Array(a, b, f) => (a, b, Some(f))
     }
-    def keep(name: String): Boolean =
-      only.forall(_.exists(name.contains))
-    // the bench's own session (GraftSession): the oracle gate certifies
-    // exactly the plans and partitionings graft.Bench times
+    // the bench's own session (GraftSession) and query order
+    // (Harness.select): the oracle gate certifies exactly the plans,
+    // partitionings and pinned-frame payers graft.Bench times
     val spark = GraftSession.build(GraftSession.cpus())
     new java.io.File(outDir).mkdirs()
-    val ran = SparkEntry.queries.filter(e => keep(e._1)).toSeq.map {
-      case (name, fn) =>
-        CacheRegistry.setContext(name) // pinned-build payer attribution
-        val t0 = System.nanoTime()
-        val entry = try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
-          // row count READ BACK from what was actually written (parquet
-          // footer metadata — no plan re-execution): the ledger certifies
-          // the artifact on disk, not the plan that was supposed to
-          // produce it
-          val rows = spark.read.parquet(s"$outDir/$name").count()
-          (name, "ok", rows, (System.nanoTime() - t0) / 1e9)
-        } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-          (name, "fail", -1L, (System.nanoTime() - t0) / 1e9)
-        }
-        // each query's registered caches die with the query (see Bench)
-        CacheRegistry.releaseAll()
-        entry
+    val selected = Harness.select(only)
+    val ran = selected.map { case Query(name, run, _) =>
+      val r = Harness.run(spark, name) {
+        run(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+        // row count READ BACK from what was actually written (parquet
+        // footer metadata — no plan re-execution): the ledger certifies
+        // the artifact on disk, not the plan that was supposed to
+        // produce it
+        spark.read.parquet(s"$outDir/$name").count()
+      }
+      r.result.fold({ e =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        (name, "fail", -1L, r.wallSec)
+      }, rows => (name, "ok", rows, r.wallSec))
     }
-    val oracles = SparkEntry.oracleSql.filter(e => keep(e._1))
+    val oracles = selected.collect { case Query(n, _, Some(sql)) => n -> sql }
     val json = oracles
       .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
       .mkString("{", ",", "}")

@@ -51,10 +51,11 @@ object KCore {
     *
     * Caller contract: this function does NOT release the degree caches it
     * registers — one per round, `rounds + 1` in all. The caller must run
-    * [[graft.CacheRegistry.releaseAll]] after materializing the result,
-    * as the harnesses (Bench, Verify, graftbench, the spec helpers) do
-    * after every query. A caller outside a harness that skips it leaks
-    * the cached degree frames until the session ends.
+    * [[graft.CacheRegistry.releaseAll]] after materializing the result;
+    * [[graft.Harness.run]] does so after every query it runs (Bench,
+    * Verify, the tools), and graftbench and the spec helpers call it
+    * themselves. A caller that skips it leaks the cached degree frames
+    * until the session ends.
     */
   def peelStats(e0: DataFrame, rounds: Int): DataFrame = {
     // The degree frame is the round's ONLY full edge scan, and it is

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import graft.SparkEntry
+import graft.{Harness, SparkEntry}
 
 /** Plan-evidence dumper for the optimization rounds: writes each named
   * query's `explain("formatted")` output to `<outDir>/<query>_<tag>.txt`
@@ -106,12 +106,9 @@ object DumpPlans {
       case _ => SparkEntry.queries(q)(spark, sfDir)
     }
     for (q <- qcsv.split(",").toSeq) {
-      graft.CacheRegistry.setContext(q)
-      val df = frame(q)
-      val txt = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val txt = Harness.run(spark, q)(frame(q).queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode)).result.toTry.get
       Files.writeString(Paths.get(s"$outDir/${q}_$tag.txt"), txt)
-      graft.CacheRegistry.releaseAll()
       println(s"[plans] wrote $outDir/${q}_$tag.txt")
     }
     spark.stop()

@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Harness
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
 /** Dev-loop floor profiler: where does the fixed per-query bench cost
@@ -29,18 +30,20 @@ object ProfileFloor {
     for (name <- args(0).split(",")) {
       for (i <- 1 to 3) {
         jobs = 0; stages = 0; tasks = 0; taskTimeMs = 0L
-        val t0 = System.nanoTime()
-        val df = graft.SparkEntry.queries(name)(spark, sfDir)
-        df.queryExecution.executedPlan // force planning
-        val t1 = System.nanoTime()
-        df.write.format("noop").mode("overwrite").save()
-        val t2 = System.nanoTime()
-        graft.CacheRegistry.releaseAll()
+        val r = Harness.run(spark, name) {
+          val t0 = System.nanoTime()
+          val df = graft.SparkEntry.queries(name)(spark, sfDir)
+          df.queryExecution.executedPlan // force planning
+          val planMs = (System.nanoTime() - t0) / 1e6
+          Harness.noop(df)
+          planMs
+        }
+        val planMs = r.result.toTry.get
         // give the listener bus a beat to drain
         Thread.sleep(200)
-        println(f"$name%-32s run$i plan=${(t1 - t0) / 1e6}%6.0fms " +
-          f"exec=${(t2 - t1) / 1e6}%6.0fms jobs=$jobs%2d stages=$stages%2d " +
-          f"tasks=$tasks%4d taskTime=${taskTimeMs}%5dms")
+        println(f"$name%-32s run$i plan=$planMs%6.0fms " +
+          f"exec=${r.wallSec * 1e3 - planMs}%6.0fms jobs=$jobs%2d " +
+          f"stages=$stages%2d tasks=$tasks%4d taskTime=${taskTimeMs}%5dms")
       }
     }
     spark.stop()

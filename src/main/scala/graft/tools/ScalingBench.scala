@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{CacheRegistry, SparkEntry}
+import graft.{CacheRegistry, Harness, SparkEntry}
 
 /** Scaling-curve runner (VERDICT r7 item 2): times the headline
   * scale-sensitive queries at each supplied SF directory and prints one
@@ -48,41 +48,18 @@ object ScalingBench {
     spark.conf.set("spark.graft.stream.scalingSink",
       sys.env.getOrElse("SPARK_GRAFT_STREAM_SINKDIR",
         "/tmp/graft_scaling_sink"))
-    val osBean = java.lang.management.ManagementFactory
-      .getOperatingSystemMXBean
-      .asInstanceOf[com.sun.management.OperatingSystemMXBean]
-    def cpuSec(): Double = {
-      val t = osBean.getProcessCpuTime
-      if (t < 0) 0.0 else t / 1e9
-    }
-    def gcSec(): Double = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum / 1e3
-    }
     def f(d: Double): String = "%.3f".format(d)
+    def query(q: String, dir: String) =
+      Harness.run(spark, q)(Harness.noop(SparkEntry.queries(q)(spark, dir)))
     // one JIT warmup at the smallest dir so the first measured point
     // isn't paying classload for the whole engine
-    for (q <- queries)
-      try SparkEntry.queries(q)(spark, dirs.head)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[scaling] warmup $q: ${e.getMessage}") }
-    CacheRegistry.releaseAll()
+    for (q <- queries) query(q, dirs.head).result.left.foreach(e =>
+      System.err.println(s"[scaling] warmup $q: ${e.getMessage}"))
     CacheRegistry.releasePinned()
     for (dir <- dirs; q <- queries) {
-      val t0 = System.nanoTime(); val c0 = cpuSec(); val g0 = gcSec()
+      val r = query(q, dir)
       val status =
-        try {
-          SparkEntry.queries(q)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          "ok"
-        } catch { case e: Throwable =>
-          s"fail: ${e.getClass.getSimpleName}" }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val dc = cpuSec() - c0
-      val dg = gcSec() - g0
-      CacheRegistry.releaseAll()
+        r.result.fold(e => s"fail: ${e.getClass.getSimpleName}", _ => "ok")
       // localCheckpoint blocks (CC/pagerank rounds) are reclaimed by the
       // ASYNC ContextCleaner only after their RDDs are GC'd — without a
       // nudge, a multi-GB sf10 query inherits the previous query's stale
@@ -91,7 +68,8 @@ object ScalingBench {
       // timed region, same rationale as Bench's periodic GC.
       System.gc()
       println(s"""{"scaling":true,"dir":"$dir","query":"$q",""" +
-        s""""wall":${f(dt)},"cpu":${f(dc)},"gc":${f(dg)},""" +
+        s""""wall":${f(r.wallSec)},"cpu":${f(r.cpuSec)},""" +
+        s""""gc":${f(r.gcSec)},""" +
         s""""status":"$status"}""")
       if (q == queries.last) CacheRegistry.releasePinned()
     }

@@ -50,15 +50,18 @@ class BitwiseInvarianceSpec extends AnyFunSuite {
     "sim_mmr_rerank", "text_ccnet_buckets", "text_dsir_weights",
     "dedup_semdedup", "text_boilerplate_spans")
 
-  /** Runs `q` with `confs` set, then restores the session's values and
-    * releases the run's tracked caches.
+  /** Runs `q` through [[Harness.run]] (which releases its tracked caches)
+    * with `confs` set, then restores the session's values.
     */
   private def run(q: String, confs: (String, String)*): Seq[String] = {
     val old = confs.map { case (k, _) => k -> spark.conf.get(k) }
     def set(kvs: Seq[(String, String)]): Unit =
       kvs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try { set(confs); rows(SparkEntry.queries(q)(spark, sf)) }
-    finally { set(old); CacheRegistry.releaseAll() }
+    try {
+      set(confs)
+      Harness.run(spark, q)(rows(SparkEntry.queries(q)(spark, sf)))
+        .result.toTry.get
+    } finally set(old)
   }
 
   test("new operator families are bitwise partitioning-invariant") {

@@ -346,6 +346,22 @@ class PlanAuditSpec extends AnyFunSuite {
       calls.map(c => ("graft/streaming/BoundedRun.scala", c, 1)).sortBy(_._2))
   }
 
+  test("the query-run lifecycle is written only in Harness") {
+    // payer context, job description, cache release and CPU/GC timing
+    // around a query run: outside comments each occurs in src/main only in
+    // graft/Harness.scala (CacheRegistry defines the first and third), so
+    // a hand-written copy of the loop anywhere else fails here
+    val calls = Seq("CacheRegistry.setContext(", ".setJobDescription(",
+      "CacheRegistry.releaseAll()", "getProcessCpuTime",
+      "getGarbageCollectorMXBeans")
+    val hits = for {
+      (path, code) <- mainCode if path != "graft/CacheRegistry.scala"
+      c <- calls if code.contains(c)
+    } yield (c, path)
+    assert(hits.sorted ==
+      calls.map(c => (c, "graft/Harness.scala")).sorted)
+  }
+
   test("src/main starts no process and makes temp directories only in WorkDir") {
     // a fork costs milliseconds and books as no Spark layer; work
     // directories go through the one helper that deletes them at exit
