@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -9,26 +9,19 @@ import graft.dedup.{GramHashesExpr, IntersectCountSortedExpr, JaccardSortedExpr,
 import graft.functions.{CharFoldHashExpr, DocFingerprintExpr, DotProductExpr, FixedLog2Expr, TextStatsExpr}
 import graft.text.TextAnalysis
 
-/** SQL surface for graft's custom Catalyst expressions.
-  *
-  * Attach at session build time:
-  * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  * }}}
-  * or install into an existing session with [[GraftExtensions.registerAll]].
-  * Either way `SELECT busday_count(d1, d2)`, `doc_fingerprint(text)`, … work
-  * from plain SQL with the same codegen'd expressions the DataFrame API
-  * uses.
+/** graft's Catalyst surface, installed by [[GraftSession.build]] and by
+  * nothing else: the custom expressions as SQL functions, so
+  * `SELECT busday_count(d1, d2)`, `doc_fingerprint(text)`, … work from
+  * plain SQL with the same codegen'd expressions the DataFrame API uses;
+  * `PresentSortRule`; and the as-of join's planner strategy.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, info, builder) =>
       e.injectFunction((FunctionIdentifier(name), info, builder))
     }
-    // optimizer surface: provably-safe rewrites over graft's expressions
-    e.injectOptimizerRule(_ => graft.plans.IntersectCountRewrite)
-    e.injectOptimizerRule(_ => graft.plans.PresentSortRule)
+    // once, after the operator-optimization fixed point
+    e.injectPreCBORule(_ => graft.plans.PresentSortRule)
     // planner surface: whole-operator plan nodes (as-of join)
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
   }
@@ -105,16 +98,4 @@ object GraftExtensions {
       case other => throw new IllegalArgumentException(
         s"expected integer literal argument, got $other")
     }
-
-  /** Install the functions an already-built session is missing; a name
-    * the session already has is left as it is (a second call replaces
-    * nothing and logs nothing).
-    */
-  def registerAll(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    functions.foreach { case (name, _, builder) =>
-      if (!registry.functionExists(FunctionIdentifier(name)))
-        registry.createOrReplaceTempFunction(name, builder, "scala_udf")
-    }
-  }
 }

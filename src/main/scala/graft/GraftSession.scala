@@ -4,7 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session builder: Bench, Verify, the tools and the specs all
   * get their session here, so the oracle gate (Verify) certifies exactly
-  * the plans the bench (Bench) times.
+  * the plans the bench (Bench) times. It is also the one place graft's
+  * Catalyst surface is installed: [[GraftExtensions]] (the SQL functions,
+  * `PresentSortRule` and the as-of join strategy) goes in through the
+  * builder's `withExtensions`, so every session Spark derives from this
+  * one (`newSession`, a stream's cloned session) carries it too.
   */
 object GraftSession {
 
@@ -14,12 +18,13 @@ object GraftSession {
   def cpus(): Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(Runtime.getRuntime.availableProcessors)
 
-  /** A `local[cpus]` session (or the live one `getOrCreate` returns) with
-    * `PresentSortRule` installed exactly once.
+  /** A `local[cpus]` session with [[GraftExtensions]], or the live one
+    * `getOrCreate` returns (built here, so it has them already).
     */
   def build(cpus: Int): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = org.apache.spark.sql.classic.SparkSession.builder()
       .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
       // Base shuffle-partition count: threads/4 (floor 8), NOT thread
       // count. The suite's shuffles are mostly dimension-sized (bars,
       // nodes, sketch cells), where 32 post-shuffle partitions are pure
@@ -48,14 +53,6 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // root presentation sorts execute single-partition when provably
-    // small — kills the range-exchange sampling re-execution (see
-    // graft.plans.PresentSortRule). Installed only when missing:
-    // getOrCreate hands back a live session whose rule list already has it.
-    if (!spark.experimental.extraOptimizations
-          .contains(graft.plans.PresentSortRule))
-      spark.experimental.extraOptimizations ++=
-        Seq(graft.plans.PresentSortRule)
     spark
   }
 }

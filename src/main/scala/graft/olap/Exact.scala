@@ -16,8 +16,6 @@ import org.apache.spark.sql.types.DecimalType
   * any engine agree bitwise.
   */
 object Exact {
-  def money(c: Column): Column = c.cast(DecimalType(18, 2))
-
   /** THE driver-side collect for frames that are SMALL BY CONSTRUCTION
     * (schema-bounded transition matrices, dimension-bounded gram cells,
     * 1-row scalar probes). Every scalar `collect()` in queries/ routes

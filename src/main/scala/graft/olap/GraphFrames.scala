@@ -52,8 +52,7 @@ object GraphFrames {
       Seq(keyCol), "left_anti")
   }
 
-  /** The configured basket-width bound (`spark.graft.copurchase
-    * .maxBasket`, default 256): far above any fixture width (≤ 7), so on
+  /** The basket-width bound: far above any fixture width (≤ 7), so on
     * the test corpus the guard is the identity — ScaleOpsSpec pins that —
     * while a production mega-basket is dropped before it can go
     * quadratic.
@@ -62,10 +61,9 @@ object GraphFrames {
     * contract — all 16 co-purchase oracle SQLs spell the same ≤256 keep
     * filter (`lbw`/`lcp` CTEs), so cap semantics are identical in both
     * engines at ANY basket width, not just where the cap is the
-    * identity. Overriding the conf away from 256 deviates from the
-    * declared contract and the oracle will fail loudly — by design. */
-  def maxBasket(s: SparkSession): Int =
-    s.conf.get("spark.graft.copurchase.maxBasket", "256").toInt
+    * identity. A different bound breaks that declared contract, and the
+    * oracles fail loudly — by design. */
+  val MaxBasket: Int = 256
 
   /** WEIGHTED co-purchase edges `(u, v, w)` with `u < v`, w = number of
     * shared orders: the ONE per-order self-join the whole co-purchase
@@ -77,9 +75,8 @@ object GraphFrames {
     * frame. Basket-width capped (see [[capBaskets]]).
     */
   def coPurchaseWeighted(s: SparkSession, dir: String): DataFrame = {
-    val cap = maxBasket(s)
-    val li = capBaskets(orderPartItems(s, dir), "ok", cap)
-    CacheRegistry.pinned(s"copurchase_w:$cap:$dir") {
+    val li = capBaskets(orderPartItems(s, dir), "ok", MaxBasket)
+    CacheRegistry.pinned(s"copurchase_w:$MaxBasket:$dir") {
       li.as("a")
         .join(li.as("b"),
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))

@@ -13,9 +13,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 
 /** Whole-operator as-of join as a first-class plan node — the (c) route of
   * SURVEY §7.0's custom-operator preference order: custom `LogicalPlan` +
-  * `SparkStrategy` + `SparkPlan`, registered through
-  * `SparkSessionExtensions` (GraftExtensions) or
-  * `spark.experimental.extraStrategies`.
+  * `SparkStrategy` + `SparkPlan`; `AsOfJoinStrategy` is injected by
+  * [[graft.GraftExtensions]], so every `GraftSession` plans the node.
   *
   * Semantics (identical to graft.ts.AsOfJoin.asOf and DuckDB `ASOF LEFT
   * JOIN`): for each left row, the single right row with equal keys and the
@@ -153,9 +152,6 @@ object AsOfJoinPlan {
            leftKeyCols: Seq[String], rightKeyCols: Seq[String],
            leftTimeCol: String, rightTimeCol: String): DataFrame = {
     val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsOfJoinStrategy
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -24,8 +24,8 @@ import org.apache.spark.sql.internal.SQLConf
   * (`spark.graft.presentSort.maxBytes`, default 32 MB — a frame small
   * enough to broadcast is small enough to sort on one partition); and
   * (b) when the child's row count is KNOWN, it must also be under
-  * `spark.graft.presentSort.maxRows` (default 131072). `sizeInBytes`
-  * alone is an ESTIMATE that can lie low — schema-default column widths
+  * 131072 rows (`MaxRows`). `sizeInBytes` alone is an ESTIMATE that can
+  * lie low — schema-default column widths
   * (a string column estimates ~20 bytes regardless of content) and
   * un-materialized cached relations both under-report, which would
   * silently funnel a large result through one partition at exactly the
@@ -37,6 +37,9 @@ import org.apache.spark.sql.internal.SQLConf
   * stays — exactly the plan a billion-row ORDER BY needs. Only the ROOT
   * sort is eligible: interior sorts (window framing, sort-merge joins)
   * carry semantics the executor picked deliberately.
+  *
+  * Installed by [[graft.GraftExtensions]] as a pre-CBO rule: one pass right
+  * after the operator-optimization fixed point.
   */
 object PresentSortRule extends Rule[LogicalPlan] {
 
@@ -45,14 +48,11 @@ object PresentSortRule extends Rule[LogicalPlan] {
       .getConfString("spark.graft.presentSort.maxBytes", "33554432")
       .toLong
 
-  private def maxRows: Long =
-    SQLConf.get
-      .getConfString("spark.graft.presentSort.maxRows", "131072")
-      .toLong
+  private val MaxRows: Long = 131072L
 
   private def rewrite(s: Sort): LogicalPlan = {
     val st = s.child.stats
-    val rowsOk = st.rowCount.forall(_ <= BigInt(maxRows))
+    val rowsOk = st.rowCount.forall(_ <= BigInt(MaxRows))
     // a child already in one partition needs no exchange under the global
     // sort; the rewrite would only add a second single-partition shuffle
     if (s.global && !OnePartition.endsIn(s.child) &&

@@ -451,13 +451,12 @@ object StreamIngestQueries {
                 CAST(sum(CAST(props->>'$.k' AS BIGINT)) AS BIGINT) AS sum_k
          FROM events GROUP BY 1 ORDER BY 1""")),
 
-    // The pure-SQL entry path: the registered function surface
-    // (GraftExtensions.registerAll) driving a query through spark.sql —
+    // The pure-SQL entry path: the function surface GraftSession installs
+    // (GraftExtensions) driving a query through spark.sql —
     // the engine's custom codegen expressions are first-class SQL
     // citizens, not just DataFrame helpers. Same plan as the DataFrame
     // formulation (the parser resolves to the identical expressions).
     Query("sql_api_dedup_report", (s, dir) => {
-      GraftExtensions.registerAll(s)
       Tables.documents(s, dir).createOrReplaceTempView("documents_v")
       s.sql("""
         SELECT simhash32(text) AS sh,
@@ -1855,7 +1854,6 @@ object StreamIngestQueries {
     // portable lattice primitives the DataFrame API uses, oracle-checked
     // end-to-end.
     Query("sql_api_lattice_report", (s, dir) => {
-      GraftExtensions.registerAll(s)
       Tables.events(s, dir).createOrReplaceTempView("events_v")
       s.sql("""
         SELECT event_type,

@@ -57,7 +57,6 @@ class FixedLog2Spec extends AnyFunSuite {
   }
 
   test("log2_fp is a first-class SQL function") {
-    GraftExtensions.registerAll(spark)
     val got = spark.sql("SELECT log2_fp(CAST(1000 AS BIGINT)) AS f")
       .collect().head.getLong(0)
     assert(got == FixedLog2.log2fp(1000L))

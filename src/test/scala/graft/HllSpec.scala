@@ -53,7 +53,6 @@ class HllSpec extends AnyFunSuite {
   }
 
   test("SQL surface: hll_estimate(hll_sketch(h)) == DataFrame form") {
-    GraftExtensions.registerAll(spark)
     import spark.implicits._
     (1L to 2000L).toDF("id")
       .select(Sketch.spreadHash(col("id")).as("hv"))

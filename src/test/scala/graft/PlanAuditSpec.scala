@@ -362,6 +362,16 @@ class PlanAuditSpec extends AnyFunSuite {
       calls.map(c => (c, "graft/Harness.scala")).sorted)
   }
 
+  test("session extensions are installed only by GraftSession") {
+    // one install path: GraftSession.build installs GraftExtensions;
+    // outside comments no src/main file appends to a live session's
+    // experimental rule lists or registers functions by hand
+    def files(s: String) = mainCode.filter(_._2.contains(s)).map(_._1)
+    assert(files("experimental.").isEmpty)
+    assert(files("registerAll").isEmpty)
+    assert(files("withExtensions") == Seq("graft/GraftSession.scala"))
+  }
+
   test("src/main starts no process and makes temp directories only in WorkDir") {
     // a fork costs milliseconds and books as no Spark layer; work
     // directories go through the one helper that deletes them at exit

@@ -276,7 +276,7 @@ class ScaleOpsSpec extends AnyFunSuite {
     // dir, so a future wider fixture fails HERE with the invariant named
     // instead of flipping the whole family red at the oracle gate.
     val G = graft.olap.GraphFrames
-    val cap = G.maxBasket(spark)
+    val cap = G.MaxBasket
     for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
         "/root/testdata/sf0.1")) {
       val maxW = G.orderPartItems(spark, dir)
