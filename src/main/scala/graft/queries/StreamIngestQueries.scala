@@ -379,7 +379,7 @@ object StreamIngestQueries {
     // complete-mode monthly aggregate converges to the batch answer —
     // one declarative transform, two execution modes.
     Query("stream_dsv2_source", (s, dir) =>
-      BoundedRun.toMemory(s.readStream.format("graft-series")
+      BoundedRun.toParquet(s.readStream.format("graft-series")
           .option("symbols", "SPY,QQQ")
           .option("start", "2026-01-05")
           .option("end", "2026-02-27")
@@ -564,7 +564,7 @@ object StreamIngestQueries {
          FROM l, g ORDER BY l.event_type""")),
 
     // North-star streaming: tumbling daily windows + watermark over the
-    // events stream (Structured Streaming, memory sink; batch-equivalent
+    // events stream (Structured Streaming, parquet sink; batch-equivalent
     // by construction, which is exactly what the oracle checks).
     Query("stream_tumbling_daily", (s, dir) =>
       graft.streaming.EventStream.runTumblingDaily(s, dir)

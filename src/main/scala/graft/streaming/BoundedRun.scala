@@ -1,12 +1,13 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+import org.apache.spark.sql.graftshim.ColumnBridge
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 /** The one way a bounded stream runs: start the query on the calling
   * thread, drain every available input with `processAllAvailable`, stop
-  * it. Callers pick the sink; the lifecycle and the state-partition scope
-  * live here once.
+  * it. The lifecycle and the state-partition scope live here once.
   *
   * Streaming state partitions are fixed per query at start (they live
   * in the checkpoint for the query's lifetime), and every state store
@@ -23,12 +24,32 @@ object BoundedRun {
 
   private val StatePartitions = 8
 
-  /** Run `df` into a memory sink named `name` with output mode `mode`
-    * and return the sink's table.
+  /** Run `df` with output mode `mode` into a parquet table in a fresh
+    * [[graft.io.WorkDir]] named after `name` (also the query's name) and
+    * return that table. Each micro-batch is written from the executors:
+    * append mode appends it, complete mode overwrites the table with it.
+    * The driver holds none of the emitted rows, so the result's size is
+    * bounded by disk, not by driver memory.
+    *
+    * The table is read back under `df`'s own schema (no footer is read to
+    * infer one). A file source reads every column as nullable, so each
+    * top-level column `df` declares non-nullable is wrapped in a checked
+    * `AssertNotNull`: the result keeps the stream's nullability, and a
+    * null there fails the query instead of passing silently.
     */
-  def toMemory(df: DataFrame, name: String, mode: String): DataFrame = {
-    run(df)(_.outputMode(mode).format("memory").queryName(name))
-    df.sparkSession.table(name)
+  def toParquet(df: DataFrame, name: String, mode: String): DataFrame = {
+    val dir = graft.io.WorkDir.create(name).toString
+    val save = if (mode == "complete") "overwrite" else "append"
+    val write: (DataFrame, Long) => Unit =
+      (batch, _) => batch.write.mode(save).parquet(dir)
+    run(df)(_.outputMode(mode).queryName(name).foreachBatch(write))
+    val table = df.sparkSession.read.schema(df.schema).parquet(dir)
+    table.select(df.schema.map { f =>
+      val c = table.col(s"`${f.name}`")
+      if (f.nullable) c
+      else ColumnBridge.column(AssertNotNull(ColumnBridge.expression(c)))
+        .as(f.name)
+    }: _*)
   }
 
   /** Run `df` in append mode, handing each micro-batch and its id to `f`. */

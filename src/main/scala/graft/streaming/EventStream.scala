@@ -27,27 +27,25 @@ object EventStream {
   def rawSchema(spark: SparkSession, dir: String): StructType =
     graft.Tables.load(spark, dir, "events").schema // memoized, glob-safe
 
+  /** Event files per micro-batch in [[readEvents]]. */
+  private val FilesPerTrigger = 4
+
   /** Unbounded events source from a fixture dir. The glob admits both
     * the driver's single-file layout (`events.parquet`) and the scaled
     * multi-part layout (`events-0000.parquet`…) ScaleGen emits so the
-    * scaling study can replay k files as k bounded micro-batches instead
+    * scaling study can replay k files as bounded micro-batches instead
     * of one 10 M-row batch (VERDICT r8 item 5 — worst-case state
-    * pressure was a fixture artifact, not an engine property). When no
-    * explicit cap is passed, `spark.graft.stream.maxFilesPerTrigger`
-    * supplies one (ScalingBench sets it); unset + single-file fixtures
-    * ⇒ the exact pre-r9 behavior.
+    * pressure was a fixture artifact, not an engine property). Each
+    * trigger takes at most [[FilesPerTrigger]] files, so the watermark
+    * advances between batches and state evicts mid-run; a single-file
+    * fixture replays as one batch.
     */
-  def readEvents(spark: SparkSession, dir: String,
-                 maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+  def readEvents(spark: SparkSession, dir: String): DataFrame =
     // file streams need a directory source; glob-filter to the events file(s)
-    val r = spark.readStream.schema(rawSchema(spark, dir))
+    graft.Tables.normalizeTs(spark.readStream.schema(rawSchema(spark, dir))
       .option("pathGlobFilter", "events*.parquet")
-    val cap = maxFilesPerTrigger.orElse(
-      spark.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
-        .map(_.toInt))
-    val r2 = cap.fold(r)(n => r.option("maxFilesPerTrigger", n))
-    graft.Tables.normalizeTs(r2.parquet(dir), "ts")
-  }
+      .option("maxFilesPerTrigger", FilesPerTrigger)
+      .parquet(dir), "ts")
 
   /** Tumbling daily windows per event_type: count + exact decimal sum.
     * The watermark bounds state: windows older than (max event time - delay)
@@ -119,7 +117,7 @@ object EventStream {
               graft.olap.Hll.zeroRegs(col("sk")).as("zero_regs"))
 
   def runHllDaily(spark: SparkSession, dir: String): DataFrame =
-    BoundedRun.toMemory(hllDaily(readEvents(spark, dir), "1 hour"),
+    BoundedRun.toParquet(hllDaily(readEvents(spark, dir), "1 hour"),
       "graft_stream_hll", "complete")
 
   /** Streaming quantiles — the production "p95 latency per window" need:
@@ -148,13 +146,12 @@ object EventStream {
       .groupBy(window(col("ts"), "1 day"), col("event_type"),
         col("bucket"))
       .agg(count(lit(1)).as("cnt"), min("cents").as("lo"))
-    val t = BoundedRun.toMemory(sketch, "graft_stream_ddsk", "complete")
+    val t = BoundedRun.toParquet(sketch, "graft_stream_ddsk", "complete")
       .select(to_date(col("window.start")).as("date"), col("event_type"),
         col("bucket"), col("cnt"), col("lo"))
     // post-stream pick over the day-cell × type × bucket sketch table.
-    // n rides a full-partition window (not a self-join back onto the
-    // memory view — two branches of one streaming view trip Spark's
-    // conflicting-reference resolution)
+    // n rides a full-partition window: one pass over the sink table, no
+    // self-join back onto it
     val W = org.apache.spark.sql.expressions.Window
     val w = W.partitionBy("date", "event_type").orderBy("bucket")
     t.withColumn("cum", sum("cnt").over(
@@ -183,7 +180,7 @@ object EventStream {
     val doubled = readEvents(spark, dir)
       .withColumn("attempt", explode(array(lit(1), lit(2))))
       .drop("attempt")
-    BoundedRun.toMemory(doubled
+    BoundedRun.toParquet(doubled
       .withWatermark("ts", "1 hour")
       .dropDuplicates("event_id")
       .groupBy(col("event_type"))
@@ -206,7 +203,7 @@ object EventStream {
       .select("event_id", "ts", "event_type")
       .withColumn("attempt", explode(array(lit(1), lit(2))))
       .drop("attempt")
-    BoundedRun.toMemory(doubled
+    BoundedRun.toParquet(doubled
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("event_id"),
       "graft_stream_dedup_ttl", "append")
@@ -225,7 +222,7 @@ object EventStream {
     * this pins its STREAMING state machine (merge + watermark eviction).
     */
   def runSessionWindow(spark: SparkSession, dir: String): DataFrame =
-    BoundedRun.toMemory(readEvents(spark, dir)
+    BoundedRun.toParquet(readEvents(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(col("user_id"),
         session_window(col("ts"), "30 minutes").as("sw"))
@@ -255,7 +252,7 @@ object EventStream {
       .select(col("user_id"), col("ts").as("view_ts"),
               col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    BoundedRun.toMemory(p.join(v,
+    BoundedRun.toParquet(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"))
@@ -285,7 +282,7 @@ object EventStream {
     val v = ev.filter(col("event_type") === "view")
       .select(col("user_id"), col("ts").as("view_ts"))
       .withWatermark("view_ts", "1 hour")
-    BoundedRun.toMemory(p.join(v,
+    BoundedRun.toParquet(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"),
@@ -319,7 +316,7 @@ object EventStream {
       .select(col("user_id"), col("ts").as("view_ts"),
               col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    BoundedRun.toMemory(p.join(v,
+    BoundedRun.toParquet(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"),
@@ -351,7 +348,7 @@ object EventStream {
       .select(col("event_id").as("view_id"), col("user_id"),
               col("ts").as("view_ts"), col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    BoundedRun.toMemory(p.join(v,
+    BoundedRun.toParquet(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"),
@@ -373,7 +370,7 @@ object EventStream {
   def runStaticEnrich(spark: SparkSession, dir: String): DataFrame = {
     val dim = graft.Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"))
-    BoundedRun.toMemory(readEvents(spark, dir)
+    BoundedRun.toParquet(readEvents(spark, dir)
       .join(broadcast(dim), col("user_id") === col("c_custkey"))
       .groupBy(col("c_mktsegment"), col("event_type"))
       .agg(count(lit(1)).as("n"),
@@ -492,12 +489,12 @@ object EventStream {
   }
 
   /** Run the daily aggregation over the fixture as a bounded streaming
-    * query (complete mode → memory sink) and return the result table.
+    * query (complete mode → parquet sink) and return the result table.
     * Append-mode watermark semantics are exercised in the spec with a
     * 2-batch replay.
     */
   def runTumblingDaily(spark: SparkSession, dir: String): DataFrame =
-    BoundedRun.toMemory(tumblingDaily(readEvents(spark, dir), "1 hour"),
+    BoundedRun.toParquet(tumblingDaily(readEvents(spark, dir), "1 hour"),
       "graft_stream_daily", "complete")
 
   /** Windowed top-k in streaming: the stream maintains per-(day, series)
@@ -509,7 +506,7 @@ object EventStream {
     * day-sized groups — never global state in the stream.
     */
   def runWindowedTopk(spark: SparkSession, dir: String): DataFrame = {
-    val counts = BoundedRun.toMemory(
+    val counts = BoundedRun.toParquet(
       tumblingDaily(readEvents(spark, dir), "1 hour"),
       "graft_stream_wtopk", "complete")
     val w = org.apache.spark.sql.expressions.Window
@@ -529,7 +526,7 @@ object EventStream {
     * agg_entropy_by_group, so streamed == batch bitwise.
     */
   def runEntropyDaily(spark: SparkSession, dir: String): DataFrame = {
-    val counts = BoundedRun.toMemory(readEvents(spark, dir)
+    val counts = BoundedRun.toParquet(readEvents(spark, dir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 day"), col("event_type"))
       .agg(count(lit(1)).as("c"))
@@ -568,6 +565,6 @@ object EventStream {
               col("event_type"), col("n"), col("sum_value"))
 
   def runSlidingTwoDay(spark: SparkSession, dir: String): DataFrame =
-    BoundedRun.toMemory(slidingTwoDay(readEvents(spark, dir), "1 hour"),
+    BoundedRun.toParquet(slidingTwoDay(readEvents(spark, dir), "1 hour"),
       "graft_stream_sliding", "complete")
 }

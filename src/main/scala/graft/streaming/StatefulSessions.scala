@@ -95,7 +95,7 @@ object StatefulSessions {
   }
 
   /** Replay the fixture events through the stateful sessionizer (bounded
-    * source → memory sink). Emitted: every gap-closed session, plus each
+    * source → parquet sink). Emitted: every gap-closed session, plus each
     * user's final session iff its event-time timeout (session_end + gap)
     * falls below the final watermark (max ts - 1 hour) — those fire in the
     * no-data micro-batch after the last data batch. Final sessions inside
@@ -103,31 +103,8 @@ object StatefulSessions {
     * This emitted set is deterministic and SQL-expressible (see the
     * stream_sessionize_stateful oracle in SparkEntry).
     */
-  def runOverFixture(spark: SparkSession, dir: String): DataFrame = {
-    val emitted = sessions(EventStream.readEvents(spark, dir), 1800).toDF()
-    spark.conf.getOption("spark.graft.stream.scalingSink")
-        .filter(_.nonEmpty) match {
-      case Some(sinkRoot) =>
-        // ScalingBench-only measurement path (VERDICT r9 item 5): the
-        // memory sink accumulates EVERY emitted session at the driver,
-        // which capped the r9 scaling study at sf10 ("needs > 8 GiB —
-        // the MEMORY SINK holds the full emitted session set"). A
-        // foreachBatch parquet append keeps each batch's rows on the
-        // executors' write path instead; the emitted row SET is
-        // identical (StatefulSessionsSpec pins it at fixture scale), and the
-        // driver holds nothing. The driver surface never sets this
-        // conf, so Bench/Verify/oracle runs use the memory sink
-        // unchanged.
-        val out = s"$sinkRoot/stateful_sessions"
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          spark.sparkContext.hadoopConfiguration)
-        fs.delete(new org.apache.hadoop.fs.Path(out), true)
-        BoundedRun.foreachBatch(emitted) { (b, _) =>
-          b.write.mode("append").parquet(out)
-        }
-        spark.read.parquet(out)
-      case None =>
-        BoundedRun.toMemory(emitted, "graft_stream_sessions", "append")
-    }
-  }
+  def runOverFixture(spark: SparkSession, dir: String): DataFrame =
+    BoundedRun.toParquet(
+      sessions(EventStream.readEvents(spark, dir), 1800).toDF(),
+      "graft_stream_sessions", "append")
 }

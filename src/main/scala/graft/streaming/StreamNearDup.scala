@@ -99,7 +99,7 @@ object StreamNearDup {
       .option("pathGlobFilter", "documents*.parquet")
       .parquet(dir)
     // a pair whose members share BOTH bands emits once per band group
-    BoundedRun.toMemory(detect(banded(src)).toDF(), "graft_stream_neardup",
+    BoundedRun.toParquet(detect(banded(src)).toDF(), "graft_stream_neardup",
       "append").distinct()
   }
 }

@@ -30,18 +30,21 @@ object DumpPlans {
     // virtual entry: the walk query eagerly localCheckpoints each step,
     // which TRUNCATES lineage — the committed final plan would not show
     // the per-step join at all. This explains ONE un-checkpointed
-    // node-partitioned-tier step (ceiling forced to 1) so the plan
-    // evidence shows the actual per-step shape.
+    // node-partitioned-tier step (ceiling forced to 1 while walkStep picks
+    // its tier, then restored, so later entries keep the broadcast tier
+    // Bench times) so the plan evidence shows the actual per-step shape.
     import org.apache.spark.sql.functions.{broadcast, expr, lit, sum => fsum, count => fcount, max_by, struct, negate, min => fmin}
     val G = graft.olap.GraphFrames
     def frame(q: String) = q match {
       case "walk_step_node_tier" =>
-        sys.props("graft.walk.maxBroadcastRows") = "1"
         val seeds = G.coPurchaseDegrees(spark, sfDir)
           .orderBy(col("d").desc, col("n")).limit(64)
           .select(col("n").cast("long").as("seed"),
             col("n").cast("long").as("node"))
-        G.walkStep(spark, sfDir, seeds, 1L)
+        val ceiling = "graft.walk.maxBroadcastRows"
+        val old = sys.props.put(ceiling, "1")
+        try G.walkStep(spark, sfDir, seeds, 1L)
+        finally old.fold(sys.props.remove(ceiling))(sys.props.put(ceiling, _))
       // ---- r11 per-round shapes (the real queries eagerly checkpoint,
       // which truncates lineage — these expose the per-iteration subtree
       // the bench actually pays) ----

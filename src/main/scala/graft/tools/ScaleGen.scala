@@ -98,10 +98,10 @@ object ScaleGen {
       * fixture artifact: real file streams arrive as many files over
       * time. Range-partitioning on `rangeCol` (event time) + ascending
       * mtimes makes FileStreamSource replay the parts in arrival order,
-      * and `maxFilesPerTrigger` (ScalingBench sets
-      * spark.graft.stream.maxFilesPerTrigger) bounds each micro-batch so
-      * the watermark advances BETWEEN batches and state actually evicts
-      * mid-run — the regime a production stream lives in.
+      * and `EventStream.readEvents`' cap of 4 files per trigger bounds
+      * each micro-batch so the watermark advances BETWEEN batches and
+      * state actually evicts mid-run — the regime a production stream
+      * lives in.
       */
     def writeParts(df: DataFrame, name: String, parts: Int,
                    rangeCol: String): Unit = {

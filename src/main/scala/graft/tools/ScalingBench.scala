@@ -12,8 +12,11 @@ import graft.{CacheRegistry, Harness, SparkEntry}
   * The session is graft.GraftSession, the one graft.Bench times under,
   * so the sf0.1 point of the curve is comparable with the committed bench
   * artifact. `$SPARK_GRAFT_SHUFFLE` overrides its shuffle width (the sf10
-  * sweep runs at 64); `$SPARK_GRAFT_STREAM_SINKDIR` sets the streaming
-  * sink directory.
+  * sweep runs at 64). Streaming queries run as everywhere else: the
+  * scaled multi-part event files replay 4 per micro-batch
+  * (`EventStream.readEvents`), and each result lands in a work-directory
+  * parquet table (`BoundedRun.toParquet`), so the driver holds none of
+  * the emitted rows.
   *
   * Usage:
   *   runMain graft.tools.ScalingBench <dir1,dir2,...> [q1,q2,...]
@@ -33,21 +36,6 @@ object ScalingBench {
     val spark = graft.GraftSession.build(graft.GraftSession.cpus())
     sys.env.get("SPARK_GRAFT_SHUFFLE")
       .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
-    // bounded micro-batches over the multi-part scaled stream fixtures
-    // (VERDICT r8 item 5): 4 files per trigger so the watermark
-    // advances between batches and state evicts mid-run instead of the
-    // whole scaled table landing as one batch. Single-file fixtures
-    // are unaffected (1 file = 1 batch either way).
-    spark.conf.set("spark.graft.stream.maxFilesPerTrigger", "4")
-    // streaming measured through a foreachBatch parquet sink instead
-    // of format("memory") (VERDICT r9 item 5): the memory sink holds
-    // the FULL emitted row set in the Spark driver, which is what
-    // blocked the sf10 sessionize point at the 8 GiB protocol — a
-    // harness artifact, not state growth. Bench and Verify never set
-    // this conf and keep the memory sink.
-    spark.conf.set("spark.graft.stream.scalingSink",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_SINKDIR",
-        "/tmp/graft_scaling_sink"))
     def f(d: Double): String = "%.3f".format(d)
     def query(q: String, dir: String) =
       Harness.run(spark, q)(Harness.noop(SparkEntry.queries(q)(spark, dir)))

@@ -135,7 +135,7 @@ class LocalFsSpec extends AnyFunSuite {
     val key = "spark.sql.streaming.checkpointLocation"
     spark.conf.set(key, dir.resolve("checkpoints").toString)
     val (counts, streamForks) = try SparkProbes.subprocesses(dir) {
-      BoundedRun.toMemory(mem.toDF().groupBy(col("value") % 3).count(),
+      BoundedRun.toParquet(mem.toDF().groupBy(col("value") % 3).count(),
         "localfs_spec_counts", "complete").collect()
     } finally spark.conf.unset(key)
     assert(counts.map(_.getLong(1)).toSeq == Seq(10L, 10L, 10L))

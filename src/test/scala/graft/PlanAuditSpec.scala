@@ -331,14 +331,16 @@ class PlanAuditSpec extends AnyFunSuite {
   private lazy val mainCode = code(java.nio.file.Paths.get("src/main/scala"))
 
   test("bounded streams start, drain and stop only in BoundedRun") {
-    // one lifecycle for every bounded stream: outside comments, the
-    // stream-writing calls occur once each in src/main, all in
-    // streaming/BoundedRun.scala — a hand-written lifecycle anywhere
-    // else fails here
-    val calls = Seq("writeStream", "processAllAvailable", "format(\"memory\")")
+    // one lifecycle and one sink for every bounded stream: outside
+    // comments, the stream-writing calls occur once each in src/main, all
+    // in streaming/BoundedRun.scala — a hand-written lifecycle anywhere
+    // else fails here — and neither a memory sink nor a graft stream conf
+    // key (a knob that picks a second path) occurs at all
+    val calls = Seq("writeStream", "processAllAvailable")
+    val banned = Seq("format(\"memory\")", "spark.graft.stream.")
     val hits = for {
       (path, code) <- mainCode
-      c <- calls
+      c <- calls ++ banned
       n = code.split(java.util.regex.Pattern.quote(c), -1).length - 1
       if n > 0
     } yield (path, c, n)

@@ -620,7 +620,7 @@ class PriorityBitmapPprSpec extends AnyFunSuite {
       .select(col("user_id"), col("ts").as("view_ts"),
         col("value").as("view_value"))
       .withWatermark("view_ts", "1 hour")
-    val got = graft.streaming.BoundedRun.toMemory(p.join(v,
+    val got = graft.streaming.BoundedRun.toParquet(p.join(v,
         col("p_user") === col("user_id") &&
           col("view_ts") >= col("p_ts") - expr("INTERVAL 1 HOUR") &&
           col("view_ts") <= col("p_ts"), "leftOuter")

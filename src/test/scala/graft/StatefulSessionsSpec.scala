@@ -30,28 +30,6 @@ class StatefulSessionsSpec extends AnyFunSuite {
     assert(missing.filter(col("session_end") < lit(horizon)).count() == 0)
   }
 
-  test("scaling sink (foreachBatch parquet) emits the same row set as" +
-      " the memory sink") {
-    // VERDICT r9 item 5: ScalingBench measures streaming through a
-    // foreachBatch parquet sink so the driver never accumulates the
-    // emitted set. The sink must be measurement plumbing ONLY — pin the
-    // emitted row SET equal to the memory-sink run on the fixture.
-    val viaMemory = StatefulSessions.runOverFixture(spark, sf)
-      .select("user_id", "session_start", "session_end", "n_events",
-              "sum_value")
-    val dir = graft.io.WorkDir.create("graft_scaling_sink").toString
-    spark.conf.set("spark.graft.stream.scalingSink", dir)
-    try {
-      val viaParquet = StatefulSessions.runOverFixture(spark, sf)
-        .select("user_id", "session_start", "session_end", "n_events",
-                "sum_value")
-      assert(viaMemory.count() > 0)
-      assert(viaParquet.count() === viaMemory.count())
-      assert(viaParquet.exceptAll(viaMemory).count() == 0)
-      assert(viaMemory.exceptAll(viaParquet).count() == 0)
-    } finally spark.conf.unset("spark.graft.stream.scalingSink")
-  }
-
   test("event-time timeout closes the open session on watermark advance") {
     import spark.implicits._
     val dir = graft.io.WorkDir.create("graft_ss").toString
@@ -67,7 +45,7 @@ class StatefulSessionsSpec extends AnyFunSuite {
         .toDF("ts", "user_id", "value").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/b*")
-    val emitted = graft.streaming.BoundedRun.toMemory(
+    val emitted = graft.streaming.BoundedRun.toParquet(
       StatefulSessions.sessions(src, 1800).toDF(), "graft_ss_timeout_test",
       "append").collect()
     // user 1's session must have been closed by timeout, not by a gap event

@@ -154,7 +154,7 @@ class StreamAsofSpec extends AnyFunSuite {
         .toDF("event_id", "ts", "user_id", "event_type", "value", "props").schema)
       .option("maxFilesPerTrigger", 1)
       .parquet(s"$dir/b*")
-    val emitted = graft.streaming.BoundedRun.toMemory(
+    val emitted = graft.streaming.BoundedRun.toParquet(
         EventStream.tumblingDaily(src, "1 hour"), "graft_stream_append_test",
         "append")
       .select("date").collect().map(_.getDate(0).toString).sorted
